@@ -17,10 +17,12 @@ import org.apache.spark.storage.StorageLevel
   *   - dstf — dstpart + narrow (src,dst) cache with `pr div outdeg`
   *     computed per NODE before the join instead of per edge
   *
-  * Usage: runMain graft.tools.SuperstepProbe [sfDir] [iters]
+  * Usage: runMain graft.tools.SuperstepProbe [--explain=<dir>] [sfDir] [iters] [modes]
   */
 object SuperstepProbe {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    // flags may come anywhere; `args` are the positional arguments
+    val args = argv.filterNot(_.startsWith("--"))
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.drop(1).headOption.map(_.toInt).getOrElse(5)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -115,7 +117,7 @@ object SuperstepProbe {
     // --explain=<dir>: dump the formatted 2-superstep plans (classic =
     // the r17 shape = the shuffle-regime fallback; dstpart = the r18
     // broadcast-regime shape) as the committed before/after evidence
-    args.collectFirst { case a if a.startsWith("--explain=") => a.drop(10) }
+    argv.collectFirst { case a if a.startsWith("--explain=") => a.drop(10) }
       .foreach { d =>
         new java.io.File(d).mkdirs()
         def dump(mode: String, file: String): Unit = {

@@ -1,21 +1,27 @@
 package graft
 
-import java.io.File
+import java.io.{ByteArrayOutputStream, File}
+import java.nio.ByteBuffer
 import java.nio.file.Files
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.file.DataFileReader
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.avro.Schema
+import org.apache.avro.file.{DataFileReader, DataFileWriter}
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.io.EncoderFactory
+import org.apache.spark.SparkException
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, expr, udf}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.args.AvroSinkArgs
-import graft.jobs.{ExportJob, FailedValidationException}
+import graft.jobs.{ExitCodes, ExportJob, FailedValidationException}
 import graft.schema.AvroSchemaGen
-import graft.sink.AvroSink
+import graft.sink.{AvroBlockWriter, AvroSink, RowBinaryEncoder}
+import graft.sources.AvroSource
 
 /** Avro round-trip + output-contract tests, mirroring the reference's
   * `avro/JdbcAvroRecordTest.java:187-249` (value equality through the file)
@@ -277,5 +283,224 @@ class AvroSinkSpec extends AnyFunSuite {
     val avro2 = AvroSchemaGen.generate(schema, AvroSchemaGen.Config(nullableArrayItems = true))
     val m = AvroSink.write(df, avro2, dir2, "deflate1", nullableArrayItems = true)
     assert(m.recordCount == 1)
+  }
+
+  // ---- the block-pipelined container writer ----
+
+  private val blockCodecs = Seq("deflate1", "deflate9", "snappy", "zstandard1")
+  private val fixedSync = Array.tabulate[Byte](16)(i => (31 * i + 7).toByte)
+
+  /** A `Row` value as Avro's generic datum writer takes it, with the sink's
+    * conversions (timestamp → epoch millis, decimal → string).
+    */
+  private def avroValue(v: Any): AnyRef = v match {
+    case null => null
+    case s: Seq[_] => s.map(avroValue).asJava
+    case b: Array[Byte] => ByteBuffer.wrap(b)
+    case t: Timestamp => java.lang.Long.valueOf(t.getTime)
+    case d: java.math.BigDecimal => d.toString
+    case other => other.asInstanceOf[AnyRef]
+  }
+
+  private def records(avro: Schema, rows: Seq[Row]): Seq[GenericRecord] = rows.map { r =>
+    val rec = new GenericData.Record(avro)
+    (0 until r.length).foreach(i => rec.put(i, avroValue(r.get(i))))
+    rec
+  }
+
+  /** Stock container: Avro's own datum writer encodes each record and
+    * `DataFileWriter.appendEncoded` appends it. Also returns the
+    * uncompressed row bytes.
+    */
+  private def stockContainer(avro: Schema, codec: String, sync: Array[Byte],
+      recs: Seq[GenericRecord]): (Array[Byte], Long) = {
+    val out = new ByteArrayOutputStream()
+    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avro))
+    w.setCodec(AvroSink.codecFactory(codec)).setSyncInterval(1 << 20)
+    w.setMeta("created_by", "dbeamspark")
+    w.create(avro, out, sync)
+    val datum = new GenericDatumWriter[GenericRecord](avro)
+    val row = new ByteArrayOutputStream()
+    val enc = EncoderFactory.get.directBinaryEncoder(row, null)
+    var raw = 0L
+    recs.foreach { r =>
+      row.reset()
+      datum.write(r, enc)
+      enc.flush()
+      raw += row.size
+      w.appendEncoded(ByteBuffer.wrap(row.toByteArray))
+    }
+    w.close()
+    (out.toByteArray, raw)
+  }
+
+  /** Comparable form of a value read back by either reader. */
+  private def norm(v: Any): Any = v match {
+    case b: ByteBuffer =>
+      val a = new Array[Byte](b.remaining)
+      b.duplicate().get(a)
+      a.toSeq
+    case b: Array[Byte] => b.toSeq
+    case l: java.util.List[_] => l.asScala.map(norm).toSeq
+    case s: scala.collection.Seq[_] => s.map(norm).toSeq
+    case s: CharSequence => s.toString
+    case other => other
+  }
+
+  /** For every codec: the block writer's bytes equal stock `DataFileWriter`'s
+    * under one fixed sync marker; `AvroSink.write` equals stock under the
+    * marker it generated (the last 16 bytes of any container); and both
+    * `DataFileReader` and `AvroSource` read the sink's rows back.
+    */
+  private def assertMatchesStock(name: String, sparkSchema: StructType, rows: Seq[Row],
+      minRawBytes: Long = 0L): Unit = {
+    val avro = AvroSchemaGen.generate(sparkSchema, AvroSchemaGen.Config(tableName = name))
+    val recs = records(avro, rows)
+    val expected = recs.map(r => (0 until r.getSchema.getFields.size).map(i => norm(r.get(i))))
+    val df = spark.createDataFrame(rows.asJava, sparkSchema).coalesce(1)
+    val internal = df.queryExecution.toRdd.map(_.copy()).collect().toSeq
+    val fns = RowBinaryEncoder.compile(sparkSchema)
+    blockCodecs.foreach { codec =>
+      val (stock, raw) = stockContainer(avro, codec, fixedSync, recs)
+      assert(raw >= minRawBytes, s"$name: only $raw raw bytes")
+      val out = new ByteArrayOutputStream()
+      val w = new AvroBlockWriter(out, avro, codec, fixedSync)
+      internal.foreach(w.append(_, fns))
+      w.close()
+      assert(java.util.Arrays.equals(out.toByteArray, stock),
+        s"$name/$codec: block writer differs from DataFileWriter (${out.size} vs ${stock.length} bytes)")
+
+      val dir = tmpDir(s"avro-stock-$name-$codec")
+      assert(AvroSink.write(df, avro, dir, codec).recordCount == rows.size)
+      val part = Files.readAllBytes(new File(dir, "part-00000-of-00001.avro").toPath)
+      assert(java.util.Arrays.equals(part, stockContainer(avro, codec, part.takeRight(16), recs)._1),
+        s"$name/$codec: AvroSink part differs from DataFileWriter")
+      assert(readAvro(dir).map(r => (0 until r.getSchema.getFields.size).map(i => norm(r.get(i)))) == expected,
+        s"$name/$codec: DataFileReader read-back differs")
+      assert(AvroSource.read(spark, dir).collect().map(_.toSeq.map(norm)).toSeq == expected,
+        s"$name/$codec: AvroSource read-back differs")
+    }
+  }
+
+  private val mixedSchema = StructType(Seq(
+    StructField("id", LongType),
+    StructField("qty", IntegerType),
+    StructField("price", DoubleType),
+    StructField("ratio", FloatType),
+    StructField("flag", BooleanType),
+    StructField("name", StringType),
+    StructField("tags", ArrayType(StringType, containsNull = false)),
+    StructField("nums", ArrayType(LongType, containsNull = false)),
+    StructField("payload", BinaryType),
+    StructField("ts", TimestampType),
+    StructField("amount", DecimalType(12, 2))))
+
+  /** Rows of every sink type; about one value in ten is null; strings mix
+    * 1- to 4-byte UTF-8 characters.
+    */
+  private def mixedRows(n: Int, seed: Long): Seq[Row] = {
+    val rnd = new scala.util.Random(seed)
+    val chars = Seq("a", "q", "Z", " ", "é", "ß", "Ж", "日", "€", "\uD83D\uDE42")
+    def text(): String = Seq.fill(rnd.nextInt(40))(chars(rnd.nextInt(chars.size))).mkString
+    def orNull(v: => Any): Any = if (rnd.nextInt(10) == 0) null else v
+    (0 until n).map { i =>
+      Row(i * 7919L - 1000000L, orNull(rnd.nextInt()), orNull(rnd.nextDouble() * 1e6),
+        orNull(rnd.nextFloat()), orNull(rnd.nextBoolean()), orNull(text()),
+        orNull(Seq.fill(rnd.nextInt(4))(text())), orNull(Seq.fill(rnd.nextInt(5))(rnd.nextLong())),
+        orNull(Array.fill(rnd.nextInt(12))(rnd.nextInt(256).toByte)),
+        orNull(new Timestamp(1500000000000L + rnd.nextInt(1000000000))),
+        orNull(java.math.BigDecimal.valueOf(rnd.nextInt(100000000).toLong - 50000000L, 2)))
+    }
+  }
+
+  test("block writer = DataFileWriter bytes: empty partition (header only)") {
+    assertMatchesStock("empty", mixedSchema, Nil)
+  }
+
+  test("block writer = DataFileWriter bytes: one partial block") {
+    assertMatchesStock("partial", mixedSchema, mixedRows(500, 1L))
+  }
+
+  test("block writer = DataFileWriter bytes: a row lands exactly on the 1 MiB threshold") {
+    // an n-char ASCII string row encodes to 1 (union branch) + 2 (length,
+    // for 64 <= n < 8192) + n bytes: 1045 rows of 1003 bytes and one of 441
+    // fill the first block to exactly 1 MiB, and the rest open the second
+    assert(1045 * 1003 + 441 == AvroBlockWriter.SyncInterval)
+    val rows = (0 until 1045).map(i => Row(("%04d".format(i)) * 250)) ++
+      Seq(Row("y" * 438)) ++ (0 until 10).map(i => Row(s"$i" * 1000))
+    assertMatchesStock("threshold", StructType(Seq(StructField("s", StringType))), rows)
+  }
+
+  test("block writer = DataFileWriter bytes: >= 3 MiB of mixed-type rows") {
+    assertMatchesStock("mixed", mixedSchema, mixedRows(24000, 2L), minRawBytes = 3L << 20)
+  }
+
+  test("block writer = DataFileWriter bytes: a single row larger than 1 MiB") {
+    val rnd = new scala.util.Random(3L)
+    val big = Seq.fill(1500000)(('a' + rnd.nextInt(26)).toChar).mkString
+    val rows = Seq(Row(1L, "before"), Row(2L, big), Row(3L, "after"), Row(4L, big.take(1000)))
+    assertMatchesStock("big", StructType(Seq(StructField("id", LongType), StructField("s", StringType))),
+      rows, minRawBytes = 1L << 20)
+  }
+
+  private def leftovers(dir: String): Seq[String] =
+    Option(new File(dir).list()).getOrElse(Array.empty[String]).toSeq
+      .filter(n => n.startsWith(".tmp-part-") || n.startsWith("part-")).sorted
+
+  /** Polls until `cond` holds or `seconds` pass: a cancelled job returns to
+    * the caller before its killed task has finished cleaning up.
+    */
+  private def eventually(seconds: Int)(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + seconds * 1000000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(50)
+    cond
+  }
+
+  /** A fresh multi-block export still runs on the shared compression pool. */
+  private def assertPoolServesFreshExport(): Unit = {
+    val df = spark.range(0, 300000, 1, 1).selectExpr("id", "repeat(CAST(id AS STRING), 3) AS s")
+    val avro = AvroSchemaGen.generate(df.schema, AvroSchemaGen.Config(tableName = "fresh"))
+    val dir = tmpDir("avro-fresh")
+    assert(AvroSink.write(df, avro, dir, "deflate1").recordCount == 300000)
+    assert(AvroSource.read(spark, dir).count() == 300000)
+  }
+
+  test("an encoder failure in block >= 3 surfaces, leaving no file and no block in flight") {
+    // about 18 bytes a row: the null item at row 350,000 comes after six
+    // full 1 MiB blocks have been handed to the pool; deflate9 on hashed
+    // ints is slower than encoding, so blocks are still compressing then
+    val df = spark.range(0, 400000, 1, 1).selectExpr("id",
+      "IF(id = 350000, array(1, NULL), array(hash(id), hash(id, 1), 3)) AS arr")
+    val avro = AvroSchemaGen.generate(df.schema, AvroSchemaGen.Config(tableName = "bad"))
+    val dir = tmpDir("avro-fail-late")
+    val e = intercept[SparkException](AvroSink.write(df, avro, dir, "deflate9"))
+    assert(ExitCodes.forThrowable(e) == 47)
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[RuntimeException] &&
+      c.getMessage == "Null array item found; export with nullableArrayItems to support them"),
+      s"original exception not in the chain: ${causes.map(_.toString)}")
+    // the task cleans up before it reports the failure
+    assert(leftovers(dir).isEmpty, s"left behind: ${leftovers(dir)}")
+    assert(AvroBlockWriter.blocksInFlight == 0, "blocks still in flight")
+    assertPoolServesFreshExport()
+  }
+
+  test("an export timeout mid-write leaves no file and no block in flight") {
+    // ~205-byte rows, a 1 ms pause every 200 rows: a 1 MiB block takes
+    // about 30 ms to produce, the whole export about 10 s; the job group
+    // is cancelled after 1.5 s with interruptOnCancel
+    val pause = udf { (id: Long) => if (id % 200 == 0) Thread.sleep(1); id }
+    val df = spark.range(0, 2000000, 1, 1).select(pause(col("id")).as("id"), expr("repeat('x', 200)").as("pad"))
+    val dir = tmpDir("avro-timeout")
+    val e = intercept[SparkException] {
+      ExportJob.run(spark, df, dir, sinkArgs = AvroSinkArgs(codec = "deflate1"),
+        schemaCfg = AvroSchemaGen.Config(tableName = "slow"),
+        exportTimeout = java.time.Duration.ofMillis(1500))
+    }
+    assert(e.getMessage.contains("cancelled"), e.getMessage)
+    assert(ExitCodes.forThrowable(e) == 47)
+    assert(eventually(30)(leftovers(dir).isEmpty), s"left behind: ${leftovers(dir)}")
+    assert(eventually(30)(AvroBlockWriter.blocksInFlight == 0), "blocks still in flight")
+    assertPoolServesFreshExport()
   }
 }
