@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics over the trade graph the TPC-H-ish fixture
@@ -17,24 +19,30 @@ import org.apache.spark.storage.StorageLevel
   * summation order, or engine — the same money-in-cents discipline the
   * relational family uses, applied to iterative state.
   *
-  * Scale notes (100 TB thinking):
-  *   - the edge table (src, dst, outdeg) is built ONCE, hash-partitioned
-  *     on `src`, and persisted; every iteration reuses that layout so the
-  *     per-iteration cost is one shuffle of the (node, rank) pairs to the
-  *     edge partitioning plus one aggregation exchange on `dst` — the
-  *     classic two-exchange Pregel superstep, rows never wider than
-  *     24 bytes
-  *   - iteration count is a bounded parameter; lineage is truncated with
-  *     a localCheckpoint every `checkpointEvery` supersteps so the plan
-  *     does not deepen linearly with iterations (the classic iterative-
-  *     Spark OOM trap)
+  * The node universe is the `nodes` frame, exactly as in the oracle
+  * (`r0 FROM nodes`, then `nodes LEFT JOIN`): every node gets one output
+  * row, an edge whose src or dst is not a node contributes nothing, and
+  * `outdeg` still counts every edge. Duplicate node ids fail loudly.
+  *
+  * Scale notes:
+  *   - the edge table (src, dst, outdeg) is built ONCE from a cached
+  *     distinct pair table and persisted in the layout its regime needs
+  *   - up to [[BroadcastableNodes]] nodes, PageRank and components run on
+  *     [[arraySupersteps]]: state is one long per node on the driver, the
+  *     edges are cached as per-partition primitive arrays partitioned on
+  *     `dst`, and a superstep is one broadcast plus one single-stage job
+  *     that returns one partial per node — no SQL plan per superstep, no
+  *     exchange, no lineage to truncate
+  *   - past the gate, the shuffle regime joins the state to src-partitioned
+  *     edges and aggregates on `dst`, one exchange per superstep, with a
+  *     localCheckpoint every `checkpointEvery` supersteps so the plan does
+  *     not deepen linearly with iterations
   *   - rank SCALE must satisfy `N · SCALE · dampPct < 2^63`: the default
-  *     1e9 is safe to ~10^8 nodes; callers at larger N pass a smaller
-  *     scale (documented, asserted nowhere at runtime — the overflow
-  *     would need a single node absorbing the whole graph's mass)
+  *     1e9 is safe to ~10^8 nodes; [[pageRankCore]] asserts it on the
+  *     runtime node count
   *   - truncating division leaks ≤ outdeg−1 nano-units per node per
-  *     superstep ("dropped mass" semantics, identical in the oracle);
-  *     dangling nodes cannot exist here because edges are symmetric
+  *     superstep, and mass sent along an edge to a non-node is dropped
+  *     ("dropped mass" semantics, identical in the oracle)
   */
 object Graph {
 
@@ -96,8 +104,17 @@ object Graph {
       .unionAll(t(spark, dir, "supplier")
         .select((col("s_suppkey") * 2 + 1).as("node")))
 
+  /** The node set of the hub-skew twins: customers plus the `hubMod`
+    * supplier super-nodes `(s_suppkey % hubMod)·2+1`. */
+  private[graft] def hubNodes(spark: SparkSession, dir: String, hubMod: Long): DataFrame =
+    t(spark, dir, "customer").select((col("c_custkey") * 2).as("node"))
+      .unionAll(t(spark, dir, "supplier")
+        .select(((col("s_suppkey") % hubMod) * 2 + 1).as("node")).distinct())
+
   /** Fixed-iteration integer PageRank:
-    * `pr' = SCALE·(100−dampPct)/100 + dampPct · Σ_in (pr div outdeg) div 100`.
+    * `pr' = SCALE·(100−dampPct)/100 + dampPct · Σ_in (pr div outdeg) div 100`,
+    * over the nodes of [[tradeNodes]]. `checkpointEvery` applies to the
+    * shuffle regime only (past [[BroadcastableNodes]]).
     */
   def pageRank(spark: SparkSession, dir: String, iters: Int = 5,
       dampPct: Long = 85, scale: Long = Scale,
@@ -112,127 +129,199 @@ object Graph {
     * `l_suppkey % hubMod` — `hubMod` supplier super-nodes absorb EVERY
     * customer edge, so the max degree is ~(suppliers/hubMod)× the natural
     * fixture's. A green oracle row proves the superstep survives hot keys:
-    * the neighbor sum is a partial-aggregating `groupBy` (map-side combine
-    * shrinks the hub's contribution stream before the exchange), never a
-    * window or a collected neighbor list, so a 10^6-degree hub costs one
-    * combiner cell per upstream partition — the property that matters when
-    * a real 100 TB graph has power-law hubs.
+    * the neighbor sum is folded per partition before anything leaves it
+    * (the array regime sends one partial per dst; the shuffle regime's
+    * `groupBy` combines map-side before the exchange), never a window or a
+    * collected neighbor list — the property that matters when a real graph
+    * has power-law hubs.
     */
   def pageRankHubSkew(spark: SparkSession, dir: String, iters: Int = 5,
       hubMod: Long = 8, dampPct: Long = 85, scale: Long = Scale,
       checkpointEvery: Int = 4): DataFrame = {
     require(hubMod >= 1, s"hubMod must be >= 1, got $hubMod")
     val (pairs, edges) = tradeEdgesFrom(spark, dir, (col("l_suppkey") % hubMod) * 2 + 1)
-    val nodes = t(spark, dir, "customer").select((col("c_custkey") * 2).as("node"))
-      .unionAll(t(spark, dir, "supplier")
-        .select(((col("s_suppkey") % hubMod) * 2 + 1).as("node")).distinct())
-    pageRankCore(spark, edges, nodes, iters, dampPct, scale, checkpointEvery,
-      extraCaches = Seq(pairs))
+    pageRankCore(spark, edges, hubNodes(spark, dir, hubMod), iters, dampPct, scale,
+      checkpointEvery, extraCaches = Seq(pairs))
   }
 
-  /** Node count under which the per-superstep (node, state) vector is
-    * BROADCAST and the edge cache is partitioned by `dst` so the superstep
-    * aggregate needs NO exchange (r18 opt, guide §2.4/§3.1): a 2^20-node
-    * vector of two longs hashes to ~50 MB — comfortably broadcastable —
-    * while past the gate the cores fall back to the classic shuffle-join
-    * superstep (edges partitioned by `src`, ranks exchanged), which is the
-    * correct regime when the rank vector itself is cluster-sized. The gate
-    * reads the RUNTIME node count (already measured for the overflow
-    * check), so the choice is data-adaptive, not a local[32] constant.
+  /** Node count up to which the superstep state lives on the driver as
+    * two arrays (sorted node ids, one long of state per node) and each
+    * superstep is one single-stage job over the array edge cache
+    * ([[arraySupersteps]]): a 2^20-node state array is 8 MiB, cheap to
+    * broadcast once per superstep. Past the gate the cores run the
+    * shuffle-join superstep ([[shuffleSupersteps]]), the regime for a
+    * state vector that is itself cluster-sized. The gate reads the runtime
+    * node count, so the choice follows the data.
     */
   val BroadcastableNodes: Long = 1L << 20
 
-  /** The broadcast-regime loop support shared by [[pageRankCore]] and
-    * [[componentsCore]] (r18): the dst-partitioned edge cache, the
-    * connected (= src) node set, and the isolated remainder. REQUIRES
-    * symmetric edges (src-set == dst-set) — both builders materialize every
-    * undirected pair in both directions, so a node has in-edges iff it has
-    * out-edges; isolated nodes can then leave the superstep loop entirely
-    * (their state is constant) and re-attach once at the end, which is
-    * what lets the loop run without the per-superstep zero-row union that
-    * destroyed the aggregate's partitioning.
+  /** The node universe, read once: the node count, plus the sorted ids
+    * when there are at most `gate` of them (the array regime). One job
+    * either way below the gate — the `limit` collect both picks the regime
+    * and counts. Duplicate ids fail loudly in both regimes: the recurrences
+    * (and the oracle's `nodes LEFT JOIN`) assume one state per node.
     */
-  private def broadcastRegimeEdges(spark: SparkSession, edges0: DataFrame,
-      nodes: DataFrame, shuffleN: Int): (DataFrame, DataFrame, DataFrame) = {
-    val edges = edges0
-      .repartition(shuffleN, col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the distinct's scan fills the edge cache as a side effect
-    val connected = edges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    connected.count()
-    val isolated = nodes.join(connected, Seq("node"), "left_anti")
-      .localCheckpoint(true)
-    (edges, connected, isolated)
+  private def nodeUniverse(nodes: DataFrame, gate: Long): (Long, Option[Array[Long]]) = {
+    require(gate >= 0 && gate < Int.MaxValue, s"node gate must be in [0, 2^31-1), got $gate")
+    val ids = nodes.select(col("node").cast("long")).limit(gate.toInt + 1)
+      .as(Encoders.scalaLong).collect()
+    if (ids.length <= gate) {
+      java.util.Arrays.sort(ids)
+      val dup = (1 until ids.length).find(i => ids(i) == ids(i - 1))
+      require(dup.isEmpty, s"duplicate node id ${dup.map(ids(_)).getOrElse(0L)} in the node set")
+      (ids.length.toLong, Some(ids))
+    } else {
+      val r = nodes.groupBy("node").agg(count(lit(1)).as("c"))
+        .agg(sum("c"), max("c")).head()
+      require(r.getLong(1) == 1L, "duplicate node id in the node set")
+      (r.getLong(0), None)
+    }
   }
 
-  private def pageRankCore(spark: SparkSession, edges0: DataFrame, nodes0: DataFrame,
-      iters: Int, dampPct: Long, scale: Long, checkpointEvery: Int,
-      extraCaches: Seq[DataFrame] = Nil): DataFrame = {
-    require(dampPct >= 1 && dampPct <= 100, s"dampPct must be in [1, 100], got $dampPct")
-    val shuffleN = spark.conf.get("spark.sql.shuffle.partitions").toInt
+  /** One partition of the array engine's edge cache: edge `k` runs from
+    * node index `src(k)` into local slot `slot(k)`, whose node index is
+    * `dst(slot(k))`; `outdeg(k)` is the source's out-degree over ALL edges
+    * (empty for the min fold, which does not divide by it). Edges are
+    * partitioned on `dst`, so every dst owns one slot in one partition.
+    */
+  private final case class EdgeBlock(src: Array[Int], slot: Array[Int],
+      outdeg: Array[Long], dst: Array[Int])
+
+  /** The small-graph superstep engine shared by [[pageRankCore]] and
+    * [[componentsCore]], returning the materialized (node, `name`) frame.
+    * State is one long per node on the driver, indexed by position in the
+    * sorted `ids`. The edges are mapped once to primitive [[EdgeBlock]]s
+    * and persisted; an edge whose src or dst is not a node is dropped there
+    * (it contributes nothing, as in the oracle's joins), while `outdeg`
+    * keeps counting it. Per superstep the state is broadcast, one
+    * single-stage job folds each partition's edges into per-dst partials —
+    * Σ `state(src) div outdeg`, or min `state(src)` when `byMin` — and the
+    * driver applies `update(old, partial)` to every node, passing the
+    * fold's identity (0 or `Long.MaxValue`) where a node has no in-edge.
+    * All-integer, so the result does not depend on partitioning or
+    * summation order; state on the driver means no lineage to truncate.
+    */
+  private def arraySupersteps(spark: SparkSession, edges0: DataFrame, ids: Array[Long],
+      name: String, init: Array[Long], iters: Int, byMin: Boolean,
+      extraCaches: Seq[DataFrame])(update: (Long, Long) => Long): DataFrame = {
+    val sc = spark.sparkContext
+    val idsB = sc.broadcast(ids)
+    val cols = Seq(col("src"), col("dst")) ++ (if (byMin) Nil else Seq(col("outdeg")))
+    val blocks = edges0.select(cols.map(_.cast("long")): _*)
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("dst"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val ids = idsB.value
+        val src, slot, dst = Array.newBuilder[Int]
+        val deg = Array.newBuilder[Long]
+        val slotOf = scala.collection.mutable.HashMap.empty[Int, Int]
+        rows.foreach { r =>
+          val s = java.util.Arrays.binarySearch(ids, r.getLong(0))
+          val d = java.util.Arrays.binarySearch(ids, r.getLong(1))
+          if (s >= 0 && d >= 0) {
+            src += s
+            slot += slotOf.getOrElseUpdate(d, { dst += d; slotOf.size }) // next free slot
+            if (!byMin) deg += r.getLong(2)
+          }
+        }
+        Iterator.single(EdgeBlock(src.result(), slot.result(), deg.result(), dst.result()))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    val state = try {
+      blocks.count()
+      val zero = if (byMin) Long.MaxValue else 0L
+      (1 to iters).foldLeft(init) { (state, _) =>
+        val stateB = sc.broadcast(state)
+        val partials = try blocks.map { b =>
+          val st = stateB.value
+          val acc = Array.fill(b.dst.length)(zero)
+          var k = 0
+          while (k < b.src.length) {
+            val v = st(b.src(k))
+            val j = b.slot(k)
+            if (byMin) { if (v < acc(j)) acc(j) = v }
+            else acc(j) += v / b.outdeg(k)
+            k += 1
+          }
+          (b.dst, acc)
+        }.collect() finally stateB.destroy()
+        val in = Array.fill(ids.length)(zero)
+        for ((dst, acc) <- partials; j <- dst.indices) in(dst(j)) = acc(j)
+        Array.tabulate(ids.length)(i => update(state(i), in(i)))
+      }
+    } finally {
+      blocks.unpersist(false)
+      idsB.destroy()
+    }
+    val schema = StructType(Seq(StructField("node", LongType, false),
+      StructField(name, LongType, false)))
+    val rows = sc.parallelize(ids.indices.map(i => Row(ids(i), state(i))))
+    Dedup.materializeAndRelease(extraCaches, spark.createDataFrame(rows, schema))
+  }
+
+  /** The shuffle regime, past the node gate, returning the materialized
+    * (node, `name`) frame. The edges are persisted partitioned on `src`, so
+    * each superstep's join exchanges only the state, with dsts outside the
+    * node set dropped once up front (srcs outside it never meet a state
+    * row), after `outdeg` counted every edge. `step(state, edges, nodes)`
+    * is one superstep; lineage is cut by a localCheckpoint every
+    * `checkpointEvery` supersteps, released once the result is materialized.
+    */
+  private def shuffleSupersteps(spark: SparkSession, edges0: DataFrame, nodes0: DataFrame,
+      name: String, init: Column, iters: Int, checkpointEvery: Int,
+      extraCaches: Seq[DataFrame])(
+      step: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
     val nodes = nodes0.persist(StorageLevel.MEMORY_AND_DISK)
-    // Overflow precondition, asserted at RUNTIME on the actual node count
-    // (the count also warms the persisted node set): a node's inbound sum
-    // is bounded by the total mass N·scale, which the damping step then
-    // multiplies by dampPct before the div — so N·scale·dampPct must fit
-    // in a Long. The default scale is safe to ~10^8 nodes; beyond that
-    // this fails loudly instead of wrapping silently.
-    val nNodes = nodes.count()
+    val edges = edges0.join(nodes, edges0("dst") === nodes("node"), "left_semi")
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val checkpoints = Seq.newBuilder[DataFrame]
+    var state = nodes.withColumn(name, init)
+    for (i <- 1 to iters) {
+      state = step(state, edges, nodes)
+      if (i % checkpointEvery == 0 && i < iters) {
+        state = state.localCheckpoint()
+        checkpoints += state
+      }
+    }
+    val out = Dedup.materializeAndRelease(Seq(edges, nodes) ++ extraCaches,
+      state.select(col("node").cast("bigint").as("node"), col(name).cast("bigint").as(name)))
+    checkpoints.result().foreach(_.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(false)
+      case _ =>
+    })
+    out
+  }
+
+  private[graft] def pageRankCore(spark: SparkSession, edges0: DataFrame, nodes0: DataFrame,
+      iters: Int, dampPct: Long, scale: Long, checkpointEvery: Int,
+      extraCaches: Seq[DataFrame] = Nil,
+      broadcastNodes: Long = BroadcastableNodes): DataFrame = {
+    require(dampPct >= 1 && dampPct <= 100, s"dampPct must be in [1, 100], got $dampPct")
+    val (nNodes, small) = nodeUniverse(nodes0, broadcastNodes)
+    // Overflow precondition, asserted at RUNTIME on the actual node count:
+    // a node's inbound sum is bounded by the total mass N·scale, which the
+    // damping step then multiplies by dampPct before the div — so
+    // N·scale·dampPct must fit in a Long. The default scale is safe to
+    // ~10^8 nodes; beyond that this fails loudly instead of wrapping.
     require(nNodes == 0 || scale <= Long.MaxValue / nNodes / dampPct,
       s"integer PageRank overflow: $nNodes nodes × scale=$scale × dampPct=$dampPct " +
         "exceeds 2^63 — pass a smaller scale")
     val base = scale * (100L - dampPct) / 100L
-    if (nNodes <= BroadcastableNodes) {
-      // BROADCAST REGIME (r18 opt, measured 1.2-1.4× on the probe and
-      // bit-identical by checksum): the rank vector rides a broadcast into
-      // the dst-partitioned edge cache, so the superstep aggregate's
-      // ENSURE_REQUIREMENTS is already satisfied by the cache layout — the
-      // whole superstep is ONE map stage, zero exchanges (was: one
-      // exchange of ~375k partial-sum rows per superstep at sf0.1 plus the
-      // zero-contribution union). Isolated nodes sit at the base rank from
-      // superstep 1 on (no in-edges ⇒ pr = base + damp·0), so they join
-      // once at the end instead of riding every superstep.
-      val (edges, connected, isolated) =
-        broadcastRegimeEdges(spark, edges0, nodes, shuffleN)
-      var ranks = connected.withColumn("pr", lit(scale))
-      for (i <- 1 to iters) {
-        val contrib = broadcast(ranks)
-          .join(edges, ranks("node") === edges("src"))
-          .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
-        ranks = contrib.groupBy("node")
-          .agg((lit(base) + expr(s"($dampPct * sum(c)) div 100")).as("pr"))
-        if (i % checkpointEvery == 0 && i < iters)
-          ranks = ranks.localCheckpoint()
-      }
-      val out = ranks
-        .unionAll(isolated.withColumn("pr", lit(if (iters == 0) scale else base)))
-        .select(col("node").cast("bigint").as("node"),
-          col("pr").cast("bigint").as("pr"))
-      return Dedup.materializeAndRelease(
-        Seq(edges, connected, nodes) ++ extraCaches, out)
+    small match {
+      case Some(ids) =>
+        arraySupersteps(spark, edges0, ids, "pr", Array.fill(ids.length)(scale), iters,
+          byMin = false, extraCaches)((_, in) => base + dampPct * in / 100L)
+      case None =>
+        shuffleSupersteps(spark, edges0, nodes0, "pr", lit(scale), iters, checkpointEvery,
+          extraCaches) { (ranks, edges, nodes) =>
+          // nodes ride the aggregate as zero-contribution rows instead of a
+          // post-agg left join — ONE exchange per superstep, not two
+          ranks.join(edges, ranks("node") === edges("src"))
+            .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
+            .unionAll(nodes.select(col("node"), lit(0L).as("c")))
+            .groupBy("node")
+            .agg((lit(base) + expr(s"($dampPct * sum(c)) div 100")).as("pr"))
+        }
     }
-    // SHUFFLE REGIME — the rank vector is too big to broadcast: edges stay
-    // src-partitioned so the per-superstep join exchanges only the ranks,
-    // and nodes ride the aggregate as zero-contribution rows instead of a
-    // post-agg left join — ONE exchange per superstep, not two.
-    val edges = edges0
-      .repartition(shuffleN, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.withColumn("pr", lit(scale))
-    for (i <- 1 to iters) {
-      val contrib = ranks
-        .join(edges, ranks("node") === edges("src"))
-        .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
-        .unionAll(nodes.select(col("node"), lit(0L).as("c")))
-      ranks = contrib.groupBy("node")
-        .agg((lit(base) + expr(s"($dampPct * sum(c)) div 100")).as("pr"))
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
-    }
-    val out = ranks.select(col("node").cast("bigint").as("node"),
-      col("pr").cast("bigint").as("pr"))
-    Dedup.materializeAndRelease(Seq(edges, nodes) ++ extraCaches, out)
   }
 
   /** Min-label propagation — connected components once converged (k ≥
@@ -244,12 +333,10 @@ object Graph {
     * uses; the [[graft.operators.Dedup]] cluster path applies the same
     * idea edge-wise for unbounded diameters.
     *
-    * Scale: same two-exchange superstep as [[pageRank]] over the same
-    * persisted src-partitioned edges; labels are 16-byte rows.
+    * Scale: the [[pageRank]] regimes with a min fold in place of the sum;
+    * `checkpointEvery` applies to the shuffle regime only.
     */
   def components(spark: SparkSession, dir: String, iters: Int = 4,
-      // probe-measured (CompProbe): materializing every 2 supersteps beats
-      // one deep 4-superstep lineage by ~30% — AQE re-plans shallower trees
       checkpointEvery: Int = 2): DataFrame = {
     val (pairs, edges) = tradeEdgesFrom(spark, dir, col("l_suppkey") * 2 + 1)
     componentsCore(spark, edges.select("src", "dst"),
@@ -259,78 +346,39 @@ object Graph {
   /** Hub-heavy degree-skew twin of [[components]] (the
     * [[pageRankHubSkew]] pattern): suppliers collapse to `l_suppkey %
     * hubMod` super-nodes, so every min-label superstep funnels nearly the
-    * whole customer label set into `hubMod` aggregate keys — the hot-key
-    * stress the plain fixture's even degree distribution never exercises.
-    * Same recurrence, same oracle shape; partial aggregation (map-side
-    * min combine) is what keeps the hot keys safe, which is exactly the
-    * property the green twin row certifies.
+    * whole customer label set into `hubMod` keys — the hot-key stress the
+    * plain fixture's even degree distribution never exercises. Same
+    * recurrence, same oracle shape; the min fold combines per partition
+    * before anything leaves it, which is the property the green twin row
+    * certifies.
     */
   def componentsHubSkew(spark: SparkSession, dir: String, iters: Int = 4,
       hubMod: Long = 8, checkpointEvery: Int = 2): DataFrame = {
     require(hubMod >= 1, s"hubMod must be >= 1, got $hubMod")
-    val (pairs, edges0) = tradeEdgesFrom(spark, dir, (col("l_suppkey") % hubMod) * 2 + 1)
-    val edges = edges0.select("src", "dst")
-    val nodes = t(spark, dir, "customer").select((col("c_custkey") * 2).as("node"))
-      .unionAll(t(spark, dir, "supplier")
-        .select(((col("s_suppkey") % hubMod) * 2 + 1).as("node")).distinct())
-    componentsCore(spark, edges, nodes, iters, checkpointEvery, extraCaches = Seq(pairs))
+    val (pairs, edges) = tradeEdgesFrom(spark, dir, (col("l_suppkey") % hubMod) * 2 + 1)
+    componentsCore(spark, edges.select("src", "dst"), hubNodes(spark, dir, hubMod),
+      iters, checkpointEvery, extraCaches = Seq(pairs))
   }
 
-  private def componentsCore(spark: SparkSession, edges0: DataFrame,
+  private[graft] def componentsCore(spark: SparkSession, edges0: DataFrame,
       nodes0: DataFrame, iters: Int, checkpointEvery: Int,
-      extraCaches: Seq[DataFrame] = Nil): DataFrame = {
-    val shuffleN = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val nodes = nodes0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nNodes = nodes.count()
-    if (nNodes <= BroadcastableNodes) {
-      // BROADCAST REGIME (r18 opt — the [[pageRankCore]] treatment): label
-      // vector broadcast into the dst-partitioned edge cache, neighbor-min
-      // aggregate exchange-free, and `min(self ∪ nbrs)` recovered as
-      // `least(self, min(nbrs))` via a co-partitioned node-scale join
-      // instead of the per-superstep zero-row union (which destroyed the
-      // aggregate's partitioning). Isolated nodes keep their own label by
-      // definition and re-attach once at the end. The inner join is total:
-      // symmetric edges ⇒ every connected node has in-edges ⇒ nbrMin
-      // covers exactly the connected set.
-      val (edges, connected, isolated) =
-        broadcastRegimeEdges(spark, edges0, nodes, shuffleN)
-      var labels = connected.withColumn("label", col("node"))
-      for (i <- 1 to iters) {
-        val nbrMin = broadcast(labels)
-          .join(edges, labels("node") === edges("src"))
-          .select(col("dst").as("node"), col("label").as("lbl"))
-          .groupBy("node").agg(min(col("lbl")).as("nm"))
-        labels = labels.join(nbrMin, Seq("node"))
-          .select(col("node"), least(col("label"), col("nm")).as("label"))
-        if (i % checkpointEvery == 0 && i < iters)
-          labels = labels.localCheckpoint()
-      }
-      val out = labels
-        .unionAll(isolated.withColumn("label", col("node")))
-        .select(col("node").cast("bigint").as("node"),
-          col("label").cast("bigint").as("label"))
-      return Dedup.materializeAndRelease(
-        Seq(edges, connected, nodes) ++ extraCaches, out)
+      extraCaches: Seq[DataFrame] = Nil,
+      broadcastNodes: Long = BroadcastableNodes): DataFrame =
+    nodeUniverse(nodes0, broadcastNodes)._2 match {
+      case Some(ids) =>
+        arraySupersteps(spark, edges0, ids, "label", ids.clone(), iters, byMin = true,
+          extraCaches)(math.min)
+      case None =>
+        shuffleSupersteps(spark, edges0, nodes0, "label", col("node"), iters,
+          checkpointEvery, extraCaches) { (labels, edges, _) =>
+          // min(self ∪ neighbor labels) in ONE aggregate — the self rows ride
+          // the union, so there is no post-agg join back to the node set
+          labels.join(edges, labels("node") === edges("src"))
+            .select(col("dst").as("node"), col("label").as("lbl"))
+            .unionAll(labels.select(col("node"), col("label").as("lbl")))
+            .groupBy("node").agg(min(col("lbl")).as("label"))
+        }
     }
-    // SHUFFLE REGIME — label vector too big to broadcast (see pageRankCore)
-    val edges = edges0
-      .repartition(shuffleN, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = nodes.withColumn("label", col("node"))
-    for (i <- 1 to iters) {
-      // min(self ∪ neighbor labels) in ONE aggregate — the self rows ride
-      // the union, so there is no post-agg join back to the node set
-      val cand = labels.join(edges, labels("node") === edges("src"))
-        .select(col("dst").as("node"), col("label").as("lbl"))
-        .unionAll(labels.select(col("node"), col("label").as("lbl")))
-      labels = cand.groupBy("node").agg(min(col("lbl")).as("label"))
-      if (i % checkpointEvery == 0 && i < iters)
-        labels = labels.localCheckpoint()
-    }
-    val out = labels.select(col("node").cast("bigint").as("node"),
-      col("label").cast("bigint").as("label"))
-    Dedup.materializeAndRelease(Seq(edges, nodes) ++ extraCaches, out)
-  }
 
   /** Bounded-hop BFS reachability: minimum hop count (≤ maxHops) from the
     * seed set — customers of one nation — over the symmetric trade graph.

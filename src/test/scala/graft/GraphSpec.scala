@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.Graph
 
 /** Iterative graph family: PageRank and bounded BFS over the trade graph.
   * The driver oracle covers the real fixture; these specs pin the exact
@@ -15,14 +20,24 @@ class GraphSpec extends AnyFunSuite {
     * holds only c1. Written as minimal parquet tables so the operator
     * runs its real scan path.
     */
-  private lazy val pathDir: String = {
+  private lazy val pathDir: String = pathGraph(Nil, Nil)
+
+  /** [[pathDir]] plus trades with endpoints outside the node set: order 4
+    * names customer 0, which `customer` lacks, and trades with s2; order 3
+    * also buys from supplier 0, which `supplier` lacks. Both strays have
+    * the smallest ids (nodes 0 and 1), so a stray that leaked into the
+    * recurrence would show in every component label.
+    */
+  private lazy val strayDir: String = pathGraph(Seq(4L -> 0L), Seq(4L -> 2L, 3L -> 0L))
+
+  private def pathGraph(moreOrders: Seq[(Long, Long)], moreLines: Seq[(Long, Long)]): String = {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graphfx").toString
     // orders: order k by customer k; lineitem rows wire supplier trades
-    Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("o_orderkey", "o_custkey")
+    (Seq((1L, 1L), (2L, 2L), (3L, 3L)) ++ moreOrders).toDF("o_orderkey", "o_custkey")
       .write.parquet(s"$tmp/orders.parquet")
     // s1 trades with c1,c2 (orders 1,2); s2 with c2,c3 (orders 2,3)
-    Seq((1L, 1L), (2L, 1L), (2L, 2L), (3L, 2L))
+    (Seq((1L, 1L), (2L, 1L), (2L, 2L), (3L, 2L)) ++ moreLines)
       .toDF("l_orderkey", "l_suppkey")
       .write.parquet(s"$tmp/lineitem.parquet")
     Seq((1L, 1), (2L, 2), (3L, 2), (4L, 3)) // c4 isolated, no orders
@@ -93,5 +108,109 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // after 1 step c3 (node 6) has only seen s2's label (5), not the chain min
     assert(got(6L) == 5L && got(2L) == 2L, s"$got")
+  }
+
+  private def pairs(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def supplierNode(hubMod: Option[Long]): Column =
+    hubMod.fold(col("l_suppkey") * 2 + 1)(m => (col("l_suppkey") % m) * 2 + 1)
+
+  private def nodeSet(dir: String, hubMod: Option[Long]): DataFrame =
+    hubMod.fold(Graph.tradeNodes(spark, dir))(Graph.hubNodes(spark, dir, _))
+
+  /** PageRank through its core, with the node gate at `gate`. */
+  private def rankCore(dir: String, gate: Long, hubMod: Option[Long] = None,
+      nodes: Option[DataFrame] = None): Map[Long, Long] = {
+    val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(hubMod))
+    pairs(Graph.pageRankCore(spark, edges, nodes.getOrElse(nodeSet(dir, hubMod)),
+      iters = 5, dampPct = 85, scale = Graph.Scale, checkpointEvery = 4,
+      extraCaches = Seq(cache), broadcastNodes = gate))
+  }
+
+  /** Components through its core, with the node gate at `gate`. */
+  private def labelCore(dir: String, gate: Long, hubMod: Option[Long] = None,
+      nodes: Option[DataFrame] = None): Map[Long, Long] = {
+    val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(hubMod))
+    pairs(Graph.componentsCore(spark, edges.select("src", "dst"),
+      nodes.getOrElse(nodeSet(dir, hubMod)), iters = 4, checkpointEvery = 2,
+      extraCaches = Seq(cache), broadcastNodes = gate))
+  }
+
+  test("array and shuffle regimes agree on every PageRank and components twin") {
+    for (dir <- Seq(SparkSpec.testDataDir, pathDir)) {
+      assert(pairs(Graph.pageRank(spark, dir)) == rankCore(dir, gate = 0), dir)
+      assert(pairs(Graph.components(spark, dir)) == labelCore(dir, gate = 0), dir)
+      assert(pairs(Graph.pageRankHubSkew(spark, dir)) ==
+        rankCore(dir, gate = 0, hubMod = Some(8L)), dir)
+      assert(pairs(Graph.componentsHubSkew(spark, dir)) ==
+        labelCore(dir, gate = 0, hubMod = Some(8L)), dir)
+    }
+  }
+
+  test("both regimes rank exactly the node set, as the oracle does, when edges name non-nodes") {
+    import spark.implicits._
+    val t = (name: String) => spark.read.parquet(s"$strayDir/$name.parquet")
+    val traded = t("orders").join(t("lineitem"), col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey") * 2, col("l_suppkey") * 2 + 1).distinct()
+      .as[(Long, Long)].collect().toSeq
+    val e = traded ++ traded.map(_.swap)
+    val outdeg = e.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+    val nodes = Graph.tradeNodes(spark, strayDir).as[Long].collect().toSeq
+    // the oracle's joins: a stray src has no state row, a stray dst no output row
+    var pr = nodes.map(_ -> Graph.Scale).toMap
+    var lbl = nodes.map(n => n -> n).toMap
+    for (i <- 1 to 5) {
+      val in = e.filter { case (s, d) => pr.contains(s) && pr.contains(d) }
+        .groupBy(_._2).map { case (d, es) => d -> es.map { case (s, _) => pr(s) / outdeg(s) }.sum }
+      pr = nodes.map(n => n -> (Graph.Scale * 15L / 100L + 85L * in.getOrElse(n, 0L) / 100L)).toMap
+      if (i <= 4) {
+        val nbr = e.filter { case (s, d) => lbl.contains(s) && lbl.contains(d) }
+          .groupBy(_._2).map { case (d, es) => d -> es.map(x => lbl(x._1)).min }
+        lbl = nodes.map(n => n -> math.min(lbl(n), nbr.getOrElse(n, n))).toMap
+      }
+    }
+    assert(outdeg(5L) == 3L && !nodes.contains(0L) && !nodes.contains(1L),
+      "s2 trades with the stray customer, which is not a node")
+    for (gate <- Seq(0L, Graph.BroadcastableNodes)) {
+      assert(rankCore(strayDir, gate) == pr, s"gate=$gate")
+      assert(labelCore(strayDir, gate) == lbl, s"gate=$gate")
+    }
+    assert(pairs(Graph.pageRank(spark, strayDir)) == pr)
+    assert(pairs(Graph.components(spark, strayDir)) == lbl)
+  }
+
+  test("duplicate node ids fail loudly in both regimes") {
+    val twice = () => Graph.tradeNodes(spark, pathDir).unionAll(Graph.tradeNodes(spark, pathDir))
+    for (gate <- Seq(0L, Graph.BroadcastableNodes)) {
+      val pr = intercept[IllegalArgumentException](rankCore(pathDir, gate, nodes = Some(twice())))
+      assert(pr.getMessage.contains("duplicate node id"), s"gate=$gate")
+      val cc = intercept[IllegalArgumentException](labelCore(pathDir, gate, nodes = Some(twice())))
+      assert(cc.getMessage.contains("duplicate node id"), s"gate=$gate")
+    }
+  }
+
+  test("PageRank and components release every cache and broadcast they make") {
+    val sc = spark.sparkContext
+    for (gate <- Seq(0L, Graph.BroadcastableNodes); rank <- Seq(true, false)) {
+      val cached = sc.getPersistentRDDs.keySet
+      val arrays = org.apache.spark.graft.LiveBroadcasts.ofLongArrays()
+      val (cache, edges) = Graph.tradeEdgesFrom(spark, SparkSpec.testDataDir, supplierNode(None))
+      val nodes = Graph.tradeNodes(spark, SparkSpec.testDataDir)
+      val out =
+        if (rank) Graph.pageRankCore(spark, edges, nodes, 5, 85, Graph.Scale, 4, Seq(cache), gate)
+        else Graph.componentsCore(spark, edges.select("src", "dst"), nodes, 4, 2, Seq(cache), gate)
+      // the result itself is a local checkpoint: its RDD is the one new cache
+      val own = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(own.size == 1)
+      assert(sc.getPersistentRDDs.keySet == cached ++ own, s"gate=$gate rank=$rank")
+      own.foreach(id => sc.getPersistentRDDs(id).unpersist(true))
+      // broadcast removal is asynchronous
+      val deadline = System.nanoTime() + 10000000000L
+      while (!(org.apache.spark.graft.LiveBroadcasts.ofLongArrays() subsetOf arrays) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      assert(org.apache.spark.graft.LiveBroadcasts.ofLongArrays() subsetOf arrays,
+        s"gate=$gate rank=$rank: an engine broadcast is still live")
+    }
   }
 }
