@@ -49,7 +49,7 @@ object Bench {
     * archaeology into a field comparison. Best-effort: absent /proc (non-
     * Linux) reports "n/a" rather than failing the bench.
     */
-  private def readLoadAvg(): String =
+  private[graft] def readLoadAvg(): String =
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.trim.split(" ").take(3).mkString(" ") finally src.close()
@@ -86,7 +86,7 @@ object Bench {
     * runs the same loop on every core, pinning contention under foreign
     * load — the regime the Spark rows actually execute in.
     */
-  private object Calib {
+  private[graft] object Calib {
     private val N = 1 << 19 // 512k longs = 4 MiB, L2/L3-resident
     private val buf: Array[Long] = {
       val a = new Array[Long](N)

@@ -240,18 +240,6 @@ object Dedup {
   /** Max docs per LSH bucket before the bucket is considered noise. */
   val MaxBucketSize = 2000
 
-  /** Probe accessor (CorpusScaleProbe): how many band buckets exceed
-    * `maxBucketSize` on this corpus with the default banding — i.e. the
-    * size of the crowded prune list the de-hinted anti-join consumes.
-    */
-  def crowdedBucketCount(spark: SparkSession, dir: String,
-      maxBucketSize: Int = MaxBucketSize): Long =
-    bandedSignatures(signaturesFrom(docShingleArrays(spark, dir)))
-      .groupBy("band", "k1", "k2")
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucketSize)
-      .count()
-
   /** Exact-verified near-dup pairs: LSH candidates whose TRUE word-3-gram
     * Jaccard ≥ `threshold`. Intersection via equi-join on shingles.
     *

@@ -74,11 +74,7 @@ object Graph {
     * edge materialization even with exchange reuse.
     */
   private[graft] def tradeEdgesFrom(spark: SparkSession, dir: String,
-      snode: org.apache.spark.sql.Column,
-      // plan-inspection seam (ADVICE r17, the marginIvfCandidates pattern):
-      // PlanGrab dumps the edge plan without paying the orders ⋈ lineitem
-      // materialization the eager fill would run
-      fillCache: Boolean = true): (DataFrame, DataFrame) = {
+      snode: org.apache.spark.sql.Column): (DataFrame, DataFrame) = {
     // dedupe (order, supplier) BEFORE the join: the distinct shuffles on
     // l_orderkey — the join key the rows need anyway — and shrinks the
     // join output ~4x (multi-lineitem orders) ahead of the wide pair
@@ -90,7 +86,7 @@ object Graph {
       .select((col("o_custkey") * 2).as("cnode"), snode.as("snode"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (fillCache) pairs.count() // eager fill — four consumers below (cache-before-AQE rule)
+    pairs.count() // eager fill — four consumers below (cache-before-AQE rule)
     val directed = pairs.select(col("cnode").as("src"), col("snode").as("dst"))
       .unionAll(pairs.select(col("snode").as("src"), col("cnode").as("dst")))
     val deg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))

@@ -55,7 +55,7 @@ object Similarity {
 
   /** Boolean floor over an `(q_id, n_hits)` frame — the final select of
     * every `*RecallFloor` driver gate. Split out of the gates (r17) so
-    * GateMarginProbe can read the RAW hit counts each gate computes
+    * `Probe margins` can read the RAW hit counts each gate computes
     * through its paired `*RecallHits` seam: the PQ knife-edge (a gate
     * sitting at exactly its floor until one in-contract corpus vector
     * flipped it) was invisible precisely because the boolean discards the
@@ -63,6 +63,16 @@ object Similarity {
     */
   private[graft] def floorOverHits(hits: DataFrame, minHits: Int): DataFrame =
     hits.select(col("q_id"), (col("n_hits") >= minHits).as("recall_floor_met"))
+
+  /** Default `minHits` of the `*RecallFloor` gates, one per family (a
+    * family's store and append gates share its floor). Named once so
+    * `Probe margins` audits the floor each gate actually applies.
+    */
+  val SqMinHits = 5
+  val IvfMinHits = 3
+  val IvfClusteredMinHits = 2
+  val PqMinHits = 5
+  val IvfPqMinHits = 3
 
   /** Per-query top-k selection via the bounded-heap `graft_topk` aggregate
     * — the scale path for every ranked output in this family. The previous
@@ -371,7 +381,7 @@ object Similarity {
   }
 
   /** Raw (n, covered, partner_agree, mutual_flips) counts behind
-    * [[marginMiningIvfAgreement]] (GateMarginProbe seam — the agreement
+    * [[marginMiningIvfAgreement]] (`Probe margins` seam — the agreement
     * permille `agree*1000/n` is the margin the boolean gate discards).
     */
   private[graft] def marginMiningIvfStats(spark: SparkSession, dir: String, k: Int = 4,
@@ -811,11 +821,11 @@ object Similarity {
     * lossless end to end.
     */
   def ivfStoreRecallFloor(spark: SparkSession, dir: String, k: Int = 10,
-      nQueries: Int = 5, minHits: Int = 3): DataFrame =
+      nQueries: Int = 5, minHits: Int = IvfMinHits): DataFrame =
     floorOverHits(ivfStoreRecallHits(spark, dir, k, nQueries), minHits)
 
   /** Raw per-query hit counts behind [[ivfStoreRecallFloor]], materialized
-    * within the temp-store lifetime (GateMarginProbe seam).
+    * within the temp-store lifetime (`Probe margins` seam).
     */
   private[graft] def ivfStoreRecallHits(spark: SparkSession, dir: String, k: Int = 10,
       nQueries: Int = 5): DataFrame = {
@@ -909,11 +919,11 @@ object Similarity {
     * generous floor, not equality; the oracle asserts TRUE per query.
     */
   def ivfRecallFloor(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
-      minHits: Int = 3, numCentroids: Int = NumCentroids,
+      minHits: Int = IvfMinHits, numCentroids: Int = NumCentroids,
       numProbes: Int = NumProbes): DataFrame =
     floorOverHits(ivfRecallHits(spark, dir, k, nQueries, numCentroids, numProbes), minHits)
 
-  /** Raw per-query hit counts behind [[ivfRecallFloor]] (GateMarginProbe
+  /** Raw per-query hit counts behind [[ivfRecallFloor]] (`Probe margins`
     * seam — see [[floorOverHits]]).
     */
   private[graft] def ivfRecallHits(spark: SparkSession, dir: String, k: Int = 10,
@@ -978,12 +988,12 @@ object Similarity {
     * The isotropic corpus keeps the full 3/10 floor via `ann_ivf_check`.
     */
   def ivfRecallFloorClustered(spark: SparkSession, dir: String, k: Int = 10,
-      nQueries: Int = 5, minHits: Int = 2,
+      nQueries: Int = 5, minHits: Int = IvfClusteredMinHits,
       clusterPermille: Int = 900): DataFrame =
     floorOverHits(ivfClusteredRecallHits(spark, dir, k, nQueries, clusterPermille), minHits)
 
   /** Raw per-query hit counts behind [[ivfRecallFloorClustered]]
-    * (GateMarginProbe seam).
+    * (`Probe margins` seam).
     */
   private[graft] def ivfClusteredRecallHits(spark: SparkSession, dir: String, k: Int = 10,
       nQueries: Int = 5, clusterPermille: Int = 900): DataFrame = {
@@ -1350,11 +1360,11 @@ object Similarity {
     * lossless end to end.
     */
   def pqStoreRecallFloor(spark: SparkSession, dir: String, k: Int = 10,
-      nQueries: Int = 5, minHits: Int = 5): DataFrame =
+      nQueries: Int = 5, minHits: Int = PqMinHits): DataFrame =
     floorOverHits(pqStoreRecallHits(spark, dir, k, nQueries), minHits)
 
   /** Raw per-query hit counts behind [[pqStoreRecallFloor]], materialized
-    * within the temp-store lifetime (GateMarginProbe seam).
+    * within the temp-store lifetime (`Probe margins` seam).
     */
   private[graft] def pqStoreRecallHits(spark: SparkSession, dir: String, k: Int = 10,
       nQueries: Int = 5): DataFrame = {
@@ -1378,11 +1388,11 @@ object Similarity {
     * TRUE per query.
     */
   def pqRecallFloor(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
-      minHits: Int = 5, pqCentroids: Int = PqCentroids,
+      minHits: Int = PqMinHits, pqCentroids: Int = PqCentroids,
       pqShortlist: Int = PqShortlist): DataFrame =
     floorOverHits(pqRecallHits(spark, dir, k, nQueries, pqCentroids, pqShortlist), minHits)
 
-  /** Raw per-query hit counts behind [[pqRecallFloor]] (GateMarginProbe
+  /** Raw per-query hit counts behind [[pqRecallFloor]] (`Probe margins`
     * seam).
     */
   private[graft] def pqRecallHits(spark: SparkSession, dir: String, k: Int = 10,
@@ -1514,10 +1524,10 @@ object Similarity {
     * means), oracle asserts TRUE per query.
     */
   def ivfPqRecallFloor(spark: SparkSession, dir: String, k: Int = 10,
-      nQueries: Int = 5, minHits: Int = 3): DataFrame =
+      nQueries: Int = 5, minHits: Int = IvfPqMinHits): DataFrame =
     floorOverHits(ivfPqRecallHits(spark, dir, k, nQueries), minHits)
 
-  /** Raw per-query hit counts behind [[ivfPqRecallFloor]] (GateMarginProbe
+  /** Raw per-query hit counts behind [[ivfPqRecallFloor]] (`Probe margins`
     * seam).
     */
   private[graft] def ivfPqRecallHits(spark: SparkSession, dir: String, k: Int = 10,
@@ -1671,11 +1681,11 @@ object Similarity {
     * [[ivfPqStoreRecallFloor]] contract applied across the append seam.
     */
   def ivfPqAppendRecallFloor(spark: SparkSession, dir: String, k: Int = 10,
-      nQueries: Int = 5, minHits: Int = 3): DataFrame =
+      nQueries: Int = 5, minHits: Int = IvfPqMinHits): DataFrame =
     floorOverHits(ivfPqAppendRecallHits(spark, dir, k, nQueries), minHits)
 
   /** Raw per-query hit counts behind [[ivfPqAppendRecallFloor]],
-    * materialized within the temp-store lifetime (GateMarginProbe seam).
+    * materialized within the temp-store lifetime (`Probe margins` seam).
     */
   private[graft] def ivfPqAppendRecallHits(spark: SparkSession, dir: String, k: Int = 10,
       nQueries: Int = 5): DataFrame = {
@@ -1744,11 +1754,11 @@ object Similarity {
     * green row proves the full compressed-index round trip is lossless.
     */
   def ivfPqStoreRecallFloor(spark: SparkSession, dir: String, k: Int = 10,
-      nQueries: Int = 5, minHits: Int = 3): DataFrame =
+      nQueries: Int = 5, minHits: Int = IvfPqMinHits): DataFrame =
     floorOverHits(ivfPqStoreRecallHits(spark, dir, k, nQueries), minHits)
 
   /** Raw per-query hit counts behind [[ivfPqStoreRecallFloor]],
-    * materialized within the temp-store lifetime (GateMarginProbe seam).
+    * materialized within the temp-store lifetime (`Probe margins` seam).
     */
   private[graft] def ivfPqStoreRecallHits(spark: SparkSession, dir: String, k: Int = 10,
       nQueries: Int = 5): DataFrame = {
@@ -1915,10 +1925,10 @@ object Similarity {
     * shortlist + re-rank. Oracle asserts TRUE per query.
     */
   def sqRecallFloor(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
-      minHits: Int = 5): DataFrame =
+      minHits: Int = SqMinHits): DataFrame =
     floorOverHits(sqRecallHits(spark, dir, k, nQueries), minHits)
 
-  /** Raw per-query hit counts behind [[sqRecallFloor]] (GateMarginProbe
+  /** Raw per-query hit counts behind [[sqRecallFloor]] (`Probe margins`
     * seam).
     */
   private[graft] def sqRecallHits(spark: SparkSession, dir: String, k: Int = 10,
@@ -1932,11 +1942,11 @@ object Similarity {
     * read back → query ([[pqStoreRecallFloor]] contract).
     */
   def sqStoreRecallFloor(spark: SparkSession, dir: String, k: Int = 10,
-      nQueries: Int = 5, minHits: Int = 5): DataFrame =
+      nQueries: Int = 5, minHits: Int = SqMinHits): DataFrame =
     floorOverHits(sqStoreRecallHits(spark, dir, k, nQueries), minHits)
 
   /** Raw per-query hit counts behind [[sqStoreRecallFloor]], materialized
-    * within the temp-store lifetime (GateMarginProbe seam).
+    * within the temp-store lifetime (`Probe margins` seam).
     */
   private[graft] def sqStoreRecallHits(spark: SparkSession, dir: String, k: Int = 10,
       nQueries: Int = 5): DataFrame = {

@@ -5,16 +5,17 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Relational, Similarity, TextAnalysis}
 
-/** Operating-margin audit of every TOLERANCE gate in the catalog — the
-  * systematic form of what the r17 sf0.1 adversarial sweep found by
-  * accident: `ann_pq_check`'s worst query sat at EXACTLY its minHits
-  * floor, so one in-contract corpus vector flipped the gate. Each boolean
-  * gate discards the distance between the measured value and its bound;
-  * this probe reads the raw values through the `*RecallHits` /
+/** `Probe margins`: operating-margin audit of every TOLERANCE gate in the
+  * catalog — the systematic form of what the r17 sf0.1 adversarial sweep
+  * found by accident: `ann_pq_check`'s worst query sat at EXACTLY its
+  * minHits floor, so one in-contract corpus vector flipped the gate. Each
+  * boolean gate discards the distance between the measured value and its
+  * bound; this audit reads the raw values through the `*RecallHits` /
   * `marginMiningIvfStats` seams (and re-expresses the sketch/bloom bound
   * arithmetic with the boolean cast removed) and prints, per gate, how
   * much of the error budget the current operating point actually
-  * consumes.
+  * consumes. The recall floors are the `Similarity.*MinHits` constants the
+  * gates themselves default to, so a recalibrated floor is audited as is.
   *
   * Output: one `GATEMARGIN` line per gate per fixture dir —
   * `used_permille` = 1000 · consumed/budget (0 = dead center, 1000 = on
@@ -22,11 +23,8 @@ import graft.operators.{Dedup, Relational, Similarity, TextAnalysis}
   * a gate that close to its bound is a coin flip on the next corpus and
   * should be recalibrated (the PqShortlist 200→400 treatment) BEFORE a
   * sweep trips it.
-  *
-  * Usage: `runMain graft.tools.GateMarginProbe [dir ...]` (defaults to
-  * sf0.1 plus the adversarial twin if present).
   */
-object GateMarginProbe {
+object GateMargins {
   private def line(dir: String, gate: String, metric: String,
       usedPermille: Long, detail: String): Unit = {
     val flag = if (usedPermille >= 1000) " FAIL"
@@ -48,32 +46,20 @@ object GateMarginProbe {
     line(dir, gate, s"min_hits=$mn floor=$floor", used, s"hits=[${v.mkString(",")}]")
   }
 
-  def main(args: Array[String]): Unit = {
-    val dirs =
-      if (args.nonEmpty) args.toSeq
-      else Seq("/root/testdata/sf0.1") ++
-        Seq("/tmp/testdata-adv01-nobig").filter(d => new java.io.File(d).isDirectory)
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("gate-margin-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(spark: SparkSession, dirs: Seq[String]): Unit = {
     graft.functions.GraftFunctions.register(spark)
-
     for (dir <- dirs) {
-      // --- ANN recall-floor family (floors from the SparkEntry defaults) --
-      recallGate(dir, "ann_sq_check", 5, Similarity.sqRecallHits(spark, dir))
-      recallGate(dir, "ann_sq_store_check", 5, Similarity.sqStoreRecallHits(spark, dir))
-      recallGate(dir, "ann_ivf_check", 3, Similarity.ivfRecallHits(spark, dir))
-      recallGate(dir, "ann_ivf_skew_check", 2, Similarity.ivfClusteredRecallHits(spark, dir))
-      recallGate(dir, "ann_ivf_store_check", 3, Similarity.ivfStoreRecallHits(spark, dir))
-      recallGate(dir, "ann_pq_check", 5, Similarity.pqRecallHits(spark, dir))
-      recallGate(dir, "ann_pq_store_check", 5, Similarity.pqStoreRecallHits(spark, dir))
-      recallGate(dir, "ann_ivfpq_check", 3, Similarity.ivfPqRecallHits(spark, dir))
-      recallGate(dir, "ann_ivfpq_store_check", 3, Similarity.ivfPqStoreRecallHits(spark, dir))
-      recallGate(dir, "ann_ivfpq_append_check", 3, Similarity.ivfPqAppendRecallHits(spark, dir))
+      // --- ANN recall-floor family (floors: the gates' own defaults) -----
+      recallGate(dir, "ann_sq_check", Similarity.SqMinHits, Similarity.sqRecallHits(spark, dir))
+      recallGate(dir, "ann_sq_store_check", Similarity.SqMinHits, Similarity.sqStoreRecallHits(spark, dir))
+      recallGate(dir, "ann_ivf_check", Similarity.IvfMinHits, Similarity.ivfRecallHits(spark, dir))
+      recallGate(dir, "ann_ivf_skew_check", Similarity.IvfClusteredMinHits, Similarity.ivfClusteredRecallHits(spark, dir))
+      recallGate(dir, "ann_ivf_store_check", Similarity.IvfMinHits, Similarity.ivfStoreRecallHits(spark, dir))
+      recallGate(dir, "ann_pq_check", Similarity.PqMinHits, Similarity.pqRecallHits(spark, dir))
+      recallGate(dir, "ann_pq_store_check", Similarity.PqMinHits, Similarity.pqStoreRecallHits(spark, dir))
+      recallGate(dir, "ann_ivfpq_check", Similarity.IvfPqMinHits, Similarity.ivfPqRecallHits(spark, dir))
+      recallGate(dir, "ann_ivfpq_store_check", Similarity.IvfPqMinHits, Similarity.ivfPqStoreRecallHits(spark, dir))
+      recallGate(dir, "ann_ivfpq_append_check", Similarity.IvfPqMinHits, Similarity.ivfPqAppendRecallHits(spark, dir))
 
       // --- margin-mining IVF agreement: floor 700 permille ---------------
       locally {
@@ -276,6 +262,5 @@ object GateMarginProbe {
       }
     }
     println("GATEMARGIN DONE")
-    spark.stop()
   }
 }
