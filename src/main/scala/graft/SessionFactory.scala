@@ -10,6 +10,7 @@ import org.apache.spark.sql.SparkSession
   * jobs, probes — now builds through here; per-entry settings (and any
   * deliberate divergence, e.g. a probe enabling the UI) layer on top of
   * the returned builder, since a later `.config` overrides an earlier one.
+  * The CLI jobs size their session to the host through [[cli]].
   */
 object SessionFactory {
 
@@ -39,4 +40,16 @@ object SessionFactory {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.ui.enabled", "false")
+
+  /** The production CLI session (`jobs.ExportCli`, `jobs.BenchJob`), logging
+    * at WARN: `local[N]` with N shuffle partitions, N the available
+    * processors, so the session never oversubscribes its host.
+    * `SPARK_MASTER` overrides the master; the shuffle width stays N.
+    */
+  def cli(appName: String): SparkSession = {
+    val n = Runtime.getRuntime.availableProcessors().toString
+    val spark = builder(sys.env.getOrElse("SPARK_MASTER", s"local[$n]"), appName, n).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -89,24 +89,11 @@ object ArrayMode {
   }
 }
 
-/** Avro sink configuration — reference `JdbcAvroArgs.java`. */
-final case class AvroSinkArgs(
-    codec: String = "deflate6",
-    fetchSize: Int = 10000,
-    avroSchemaName: Option[String] = None,
-    avroSchemaNamespace: String = "dbeam_generated",
-    avroDoc: Option[String] = None,
-    useAvroLogicalTypes: Boolean = false,
-    preCommands: Seq[String] = Nil
-) {
-  require(
-    AvroSinkArgs.isValidCodec(codec),
-    s"Avro codec should be snappy or deflate1 to deflate9 or zstandard1 to zstandard9. Found $codec")
-}
-
-object AvroSinkArgs {
-  /** `snappy|deflate[1-9]|zstandard[1-9]` — reference `JdbcAvroArgs.java:92-94`. */
-  def isValidCodec(c: String): Boolean = c.matches("snappy|deflate[1-9]|zstandard[1-9]")
+/** Avro sink configuration — reference `JdbcAvroArgs.java`: the codec,
+  * validated on construction by [[graft.sink.AvroSink.codecFactory]].
+  */
+final case class AvroSinkArgs(codec: String = "deflate6") {
+  graft.sink.AvroSink.codecFactory(codec)
 }
 
 /** Query-shaping arguments + query-plan construction — reference
@@ -184,6 +171,19 @@ object QueryArgs {
   * `JdbcExportArgsFactory.java:47-59,87-176`.
   */
 object ArgParsers {
+
+  /** `--key=value` → `key -> value` and a bare `--flag` → `flag -> "true"`;
+    * arguments without `--` are ignored and a repeated key keeps its last
+    * value (collect repeatable flags such as `--preCommand` from the raw
+    * arguments).
+    */
+  def parseFlags(args: Array[String]): Map[String, String] =
+    args.filter(_.startsWith("--")).map { a =>
+      a.stripPrefix("--").split("=", 2) match {
+        case Array(k, v) => k -> v
+        case Array(k) => k -> "true"
+      }
+    }.toMap
 
   private val instantParser = new DateTimeFormatterBuilder()
     .parseCaseInsensitive()

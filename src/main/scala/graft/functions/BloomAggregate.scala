@@ -49,17 +49,6 @@ object BloomCodec {
     }
   }
 
-  def mightContain(bits: Array[Long], numBits: Int, numHashes: Int, key: Long): Boolean = {
-    val a = h1(key); val b = h2(key)
-    var i = 0
-    while (i < numHashes) {
-      val idx = ((a + i * b) & Long.MaxValue) % numBits
-      if ((bits((idx >>> 6).toInt) & (1L << (idx & 63))) == 0L) return false
-      i += 1
-    }
-    true
-  }
-
   def serialize(bits: Array[Long], numBits: Int, numHashes: Int): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(12 + bits.length * 8)
     bb.putInt(Magic).putInt(numBits).putInt(numHashes)

@@ -28,13 +28,6 @@ object Portable {
   def polyHash(col: String, base: Int = 31, mod: Long = P1): Column =
     expr(s"aggregate(transform(split($col, ''), c -> CAST(ascii(c) AS BIGINT)), 0L, (acc, x) -> (acc * $base + x) % $mod)")
 
-  /** 60-bit portable hash: two independent poly-hashes packed as
-    * `h31 * 2^30 + (h37 mod 2^30)`.
-    */
-  def polyHash60(col: String): Column =
-    expr(s"(aggregate(transform(split($col, ''), c -> CAST(ascii(c) AS BIGINT)), 0L, (acc, x) -> (acc * 31 + x) % $P1) * 1073741824L) + " +
-      s"(aggregate(transform(split($col, ''), c -> CAST(ascii(c) AS BIGINT)), 0L, (acc, x) -> (acc * 37 + x) % $P2) % 1073741824L)")
-
   /** Whitespace tokens of trimmed text. */
   def tokens(col: String): Column = expr(s"split(trim($col), '\\\\s+')")
 
@@ -122,7 +115,4 @@ object Portable {
     */
   def dotProduct(a: String, b: String): Column =
     expr(s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)")
-
-  def l2Norm(a: String): Column =
-    sqrt(expr(s"aggregate(transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"))
 }

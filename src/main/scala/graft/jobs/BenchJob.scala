@@ -18,23 +18,13 @@ object BenchJob {
     "recordCount", "writeElapsedMs", "msPerMillionRows", "bytesWritten", "KbWritePerSec")
 
   def main(args: Array[String]): Unit = {
-    val opts = args.filter(_.startsWith("--")).map { a =>
-      a.stripPrefix("--").split("=", 2) match {
-        case Array(k, v) => k -> v
-        case Array(k) => k -> "true"
-      }
-    }.toMap
+    val opts = graft.args.ArgParsers.parseFlags(args)
     val input = opts("input")
     val output = opts("output")
     val executions = opts.getOrElse("executions", "3").toInt
     val codec = opts.getOrElse("avroCodec", "deflate1")
 
-    // shared engine session config (r18, VERDICT r17 #3)
-    val spark = graft.SessionFactory
-      .builder(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
-        "graft-bench-job", "32")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionFactory.cli("graft-bench-job")
 
     val runs = (0 until executions).map { i =>
       val df = spark.read.parquet(input)
@@ -48,20 +38,15 @@ object BenchJob {
     runs.zipWithIndex.foreach { case (m, i) =>
       println(Columns.map(m(_)).mkString(s"$i\t", "\t", ""))
     }
-    def stats(vals: Seq[Double]): (Double, Double, Double, Double) = {
-      val mean = vals.sum / vals.size
-      val variance = vals.map(v => (v - mean) * (v - mean)).sum / vals.size
-      (vals.max, mean, vals.min, math.sqrt(variance))
-    }
-    Seq("max", "mean", "min", "stddev").zipWithIndex.foreach { case (label, idx) =>
-      val row = Columns.map { c =>
-        val s = stats(runs.map(_(c).toDouble))
-        val v = idx match { case 0 => s._1; case 1 => s._2; case 2 => s._3; case _ => s._4 }
-        // locale-pinned like Bench's JSON line (the `f` interpolator uses
-        // the JVM default locale; a comma-decimal locale breaks the TSV)
-        String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-      }
-      println(row.mkString(s"$label\t", "\t", ""))
+    def mean(v: Seq[Double]): Double = v.sum / v.size
+    val stats = Seq[(String, Seq[Double] => Double)](
+      "max" -> (_.max), "mean" -> mean, "min" -> (_.min),
+      "stddev" -> { v => val m = mean(v); math.sqrt(mean(v.map(x => (x - m) * (x - m)))) })
+    for ((label, stat) <- stats) {
+      // locale-pinned like Bench's JSON line (the `f` interpolator uses
+      // the JVM default locale; a comma-decimal locale breaks the TSV)
+      println(Columns.map(c => String.format(java.util.Locale.ROOT, "%.1f",
+        Double.box(stat(runs.map(_(c).toDouble))))).mkString(s"$label\t", "\t", ""))
     }
     spark.stop()
   }

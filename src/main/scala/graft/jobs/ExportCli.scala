@@ -1,14 +1,17 @@
 package graft.jobs
 
+import org.apache.spark.sql.SparkSession
 
-import graft.args.{ArgParsers, AvroSinkArgs, QueryArgs}
+import graft.SessionFactory
+import graft.args.{ArgParsers, ArrayMode, AvroSinkArgs, ConnectionArgs, PasswordReader, QueryArgs}
 import graft.schema.AvroSchemaGen
-import graft.sources.ParquetSource
+import graft.sink.AvroSink
+import graft.sources.{FileSource, JdbcSource, Source}
 import graft.sql.QueryBuilder
 
 /** CLI entry point — the Spark-native analogue of the reference's
-  * `jobs/JdbcAvroJob.main` (`JdbcAvroJob.java:195-201`) for the file-source
-  * path. Same option names as the reference CLI where they apply.
+  * `jobs/JdbcAvroJob.main` (`JdbcAvroJob.java:195-201`). Same option names
+  * as the reference CLI where they apply.
   *
   * Usage:
   * {{{
@@ -16,226 +19,173 @@ import graft.sql.QueryBuilder
   *   [--table=name] [--avroCodec=deflate6] [--limit=n] [--minRows=n] [--dataOnly] \
   *   [--partitionColumn=c --partition=2026-08-01 [--partitionPeriod=P1D]] \
   *   [--useAvroLogicalTypes] [--avroSchemaNamespace=ns] [--avroDoc=..]
-  *   [--avroSchemaFilePath=/path/schema.avsc]
+  *   [--avroSchemaFilePath=/path/schema.avsc] [--sqlFile=/path/query.sql]
   *   [--incrementalColumn=c --stateDir=/path/state]   # high-watermark deltas
- *   [--partitionOutputBy=col [--maxOutputPartitions=n]]  # hive-layout output
- *   [--inputFormat=parquet|csv|json|avro]             # default: by extension
+  *   [--partitionOutputBy=col [--maxOutputPartitions=n]]  # hive-layout output
+  *   [--inputFormat=parquet|csv|json|avro]             # default: by extension
+  *   [--connectionUrl=jdbc:... [--splitColumn=c --queryParallelism=n]]  # JDBC input
   * }}}
   *
-  * `--incrementalColumn` switches to the high-watermark delta mode
-  * ([[IncrementalExport]]) and is mutually exclusive with the
-  * `--sqlFile` / `--partitionColumn` / `--limit` query-shaping options
-  * (the watermark filter IS the query).
+  * [[run]] does all routing on a caller's session; [[main]] wraps it in a
+  * host-sized session ([[SessionFactory.cli]]) and exits with the
+  * reference's exit codes (`ExceptionHandling.java:37-59`).
   *
-  * Exits with the reference's exit codes (`ExceptionHandling.java:37-59`).
+  * `--incrementalColumn` switches to the high-watermark delta mode
+  * ([[IncrementalExport]]) over a parquet input, where the watermark filter
+  * IS the query. Each mode refuses, before any write, the flags it would
+  * otherwise drop (`ModeDrops`).
   */
 object ExportCli {
 
+  /** Per mode flag, the flags that mode would silently ignore. */
+  private val ModeDrops = Seq(
+    "incrementalColumn" -> Seq("connectionUrl", "sqlFile", "partitionColumn", "partition", "limit",
+      "queryParallelism", "avroSchemaFilePath", "exportTimeout", "partitionOutputBy"),
+    "partitionOutputBy" -> Seq("avroSchemaFilePath", "exportTimeout"))
+
   def main(args: Array[String]): Unit = {
-    val opts = args.filter(_.startsWith("--")).map { a =>
-      a.stripPrefix("--").split("=", 2) match {
-        case Array(k, v) => k -> v
-        case Array(k) => k -> "true"
-      }
-    }.toMap
+    val opts = ArgParsers.parseFlags(args)
+    val spark = SessionFactory.cli(s"dbeamspark-${opts.getOrElse("table", "export")}")
+    val code =
+      try { println(run(spark, args)); ExitCodes.Success }
+      catch {
+        case t: Throwable =>
+          System.err.println(s"Export failed: ${t.getMessage}")
+          ExitCodes.forThrowable(t)
+      } finally spark.stop()
+    if (code != ExitCodes.Success) sys.exit(code)
+  }
 
-    try {
-      val connectionUrl = opts.get("connectionUrl")
-      val input = opts.getOrElse("input",
-        connectionUrl.getOrElse(throw new IllegalArgumentException(
-          "either --input (file source) or --connectionUrl (JDBC source) is required")))
-      val output = opts.getOrElse("output", throw new IllegalArgumentException("--output is required"))
-      val table = opts.getOrElse("table",
-        input.split("/").last.stripSuffix(".parquet"))
+  /** Runs the export the flags describe on `spark` and returns its metrics
+    * line. Leaves the session running.
+    */
+  def run(spark: SparkSession, args: Array[String]): String = {
+    val opts = ArgParsers.parseFlags(args)
+    for ((mode, drops) <- ModeDrops if opts.contains(mode); flag <- drops.find(opts.contains))
+      throw new IllegalArgumentException(s"--$mode does not support --$flag")
+    val connectionUrl = opts.get("connectionUrl")
+    val input = opts.getOrElse("input",
+      connectionUrl.getOrElse(throw new IllegalArgumentException(
+        "either --input (file source) or --connectionUrl (JDBC source) is required")))
+    val output = opts.getOrElse("output", throw new IllegalArgumentException("--output is required"))
+    val table = opts.getOrElse("table", input.split("/").last.stripSuffix(".parquet"))
+    // --inputFormat=parquet|csv|json|avro (default: by extension)
+    val inputFormat = FileSource.detectFormat(input, opts.get("inputFormat"))
+    val sinkArgs = AvroSinkArgs(codec = opts.getOrElse("avroCodec", "deflate6"))
+    val schemaCfg = AvroSchemaGen.Config(
+      tableName = table,
+      schemaName = opts.get("avroSchemaName"),
+      namespace = opts.getOrElse("avroSchemaNamespace", "dbeam_generated"),
+      doc = opts.get("avroDoc"),
+      connectionUrl = connectionUrl.getOrElse(s"parquet:$input"),
+      useLogicalTypes = opts.contains("useAvroLogicalTypes"),
+      nullableArrayItems = opts.contains("nullableArrayItems"))
+    val minRows = opts.get("minRows").fold(-1L)(_.toLong)
+    val dataOnly = opts.contains("dataOnly")
 
-      val sinkArgs = AvroSinkArgs(
-        codec = opts.getOrElse("avroCodec", "deflate6"),
-        avroSchemaName = opts.get("avroSchemaName"),
-        avroSchemaNamespace = opts.getOrElse("avroSchemaNamespace", "dbeam_generated"),
-        avroDoc = opts.get("avroDoc"),
-        useAvroLogicalTypes = opts.contains("useAvroLogicalTypes"),
-        // repeatable, like the reference's --preCommand; consumed by the
-        // JDBC source path (sessionInitStatement / the writer protocol in
-        // JdbcSource.executeQueryWithPreCommands) — a parquet input has no
-        // session to run them against
-        preCommands = args.filter(_.startsWith("--preCommand="))
-          .map(_.stripPrefix("--preCommand=")).toSeq)
-
-      // shared engine session config (r18, VERDICT r17 #3): the CLI now
-      // gets the same optimizer settings the bench measures under —
-      // before this, canChangeCachedPlanOutputPartitioning was
-      // harness-private and a CLI user ran unoptimized cache plans.
-      val spark = graft.SessionFactory
-        .builder(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
-          s"dbeamspark-$table", "32")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-
-      // --incrementalColumn + --stateDir: high-watermark delta export —
-      // only rows strictly above the persisted max; state written after
-      // success (see IncrementalExport for the exactly-once argument).
-      // NOTE: handled as an if/else, NOT an early return — a `return`
-      // inside this `try` would throw NonLocalReturnControl into the
-      // catch-all and exit 49.
-      if (opts.contains("incrementalColumn")) {
-        val incCol = opts("incrementalColumn")
+    opts.get("incrementalColumn") match {
+      case Some(incCol) =>
+        // high-watermark delta export — only rows strictly above the
+        // persisted max; state written after success (see IncrementalExport
+        // for the exactly-once argument)
+        require(inputFormat == "parquet",
+          s"--incrementalColumn reads parquet input only, got --inputFormat $inputFormat")
         val stateDir = opts.getOrElse("stateDir",
           throw new IllegalArgumentException("--incrementalColumn requires --stateDir"))
-        val schemaCfgInc = AvroSchemaGen.Config(
-          tableName = table,
-          schemaName = sinkArgs.avroSchemaName,
-          namespace = sinkArgs.avroSchemaNamespace,
-          doc = sinkArgs.avroDoc,
-          connectionUrl = s"parquet:$input",
-          useLogicalTypes = sinkArgs.useAvroLogicalTypes,
-          nullableArrayItems = opts.contains("nullableArrayItems"))
-        val result = IncrementalExport.run(
-          spark, input, output, stateDir, incCol,
-          sinkArgs = sinkArgs, schemaCfg = schemaCfgInc,
-          minRows = opts.get("minRows").map(_.toLong).getOrElse(-1L),
-          dataOnly = opts.contains("dataOnly"))
-        println(ExportJob.metricsJson(result.metrics.toMap))
-        spark.stop()
-      } else {
+        val result = IncrementalExport.run(spark, input, output, stateDir, incCol,
+          sinkArgs = sinkArgs, schemaCfg = schemaCfg, minRows = minRows, dataOnly = dataOnly)
+        ExportJob.metricsJson(result.metrics.toMap)
+      case None =>
+        // --sqlFile: dbeam's user-query path (exactly one of --table /
+        // --sqlFile drives the base query, reference
+        // `JdbcExportArgsFactory.java:154-156`).
+        val userSql = opts.get("sqlFile")
+          .map(p => ExportJob.readSqlFile(spark.sparkContext.hadoopConfiguration, p))
+        // JDBC mode takes the reference's split options (--splitColumn +
+        // --queryParallelism, X3-coupled); the file path keeps its write-
+        // parallelism analogue below.
+        val jdbcMode = connectionUrl.isDefined
+        val qArgs = QueryArgs(
+          base = userSql.fold(QueryBuilder.fromTable(table))(QueryBuilder.fromSqlQuery),
+          limit = opts.get("limit").map(_.toLong),
+          partitionColumn = opts.get("partitionColumn"),
+          partition = opts.get("partition").map(ArgParsers.parseInstant),
+          partitionPeriod = opts.get("partitionPeriod").map(ArgParsers.parsePeriodOrDuration)
+            .getOrElse(java.time.Period.ofDays(1)),
+          splitColumn = if (jdbcMode) opts.get("splitColumn") else None,
+          queryParallelism = if (jdbcMode) opts.get("queryParallelism").map(_.toInt) else None)
+        ArgParsers.validatePartitionFreshness(
+          qArgs.partition, qArgs.partitionColumn, qArgs.partitionPeriod,
+          skipCheck = opts.contains("skipPartitionCheck"),
+          minPartitionPeriod = opts.get("minPartitionPeriod").map(ArgParsers.parseInstant))
 
-      // --sqlFile: dbeam's user-query path (exactly one of --table /
-      // --sqlFile drives the base query, reference
-      // `JdbcExportArgsFactory.java:154-156`).
-      val userSql = opts.get("sqlFile")
-        .map(p => ExportJob.readSqlFile(spark.sparkContext.hadoopConfiguration, p))
-      val base = userSql.map(QueryBuilder.fromSqlQuery).getOrElse(QueryBuilder.fromTable(table))
+        val source: Source = connectionUrl match {
+          case Some(url) =>
+            // the reference's primary input: a JDBC database. Credentials per
+            // PasswordReader priority (U9); the scheme→driver map validates
+            // the URL (JdbcConnectionUtil.java:30-48). A postgres partition
+            // export runs the replication-lag pre-flight first, like
+            // PsqlAvroJob (`jobs/PsqlAvroJob.java:36-57`).
+            val connArgs = ConnectionArgs(url,
+              username = opts.getOrElse("username", "dbeam-extractor"),
+              password = PasswordReader.read(opts.get("password"), opts.get("passwordFile")))
+            if (url.startsWith("jdbc:postgresql") && qArgs.partition.isDefined
+                && !opts.contains("skipReplicationDelayCheck")) {
+              val c = connArgs.createConnection()
+              try ReplicationCheck.checkLive(c, qArgs.partition.get, qArgs.partitionPeriod)
+              finally c.close()
+            }
+            JdbcSource(connArgs, qArgs,
+              fetchSize = opts.get("fetchSize").fold(10000)(_.toInt),
+              // repeatable, like the reference's --preCommand
+              preCommands = args.filter(_.startsWith("--preCommand="))
+                .map(_.stripPrefix("--preCommand=")).toSeq,
+              // --arrayMode=bytes|typed_first_row|typed_postgres (reference
+              // `JdbcExportPipelineOptions.java:90-94`, default typed_first_row)
+              arrayMode = opts.get("arrayMode").fold[ArrayMode](ArrayMode.TypedFirstRow)(ArrayMode.parse))
+          case None => FileSource(input, inputFormat, table, qArgs)
+        }
+        val df0 = (source, userSql) match {
+          case (file: FileSource, Some(sql)) =>
+            // the user query runs over the stored input registered as a
+            // view; the partition window and limit apply to its output,
+            // like the table path
+            file.base(spark).createOrReplaceTempView(table)
+            FileSource.window(spark.sql(qArgs.base.build), qArgs)
+          case _ => source.read(spark)
+        }
+        // --queryParallelism=n: in JDBC mode the split predicates already set
+        // the partitioning (one partition per generated query); for file
+        // sources ensure at least n write partitions (dbeam X1 analogue for
+        // unsplittable file layouts).
+        val df = opts.get("queryParallelism").filter(_ => !jdbcMode)
+          .fold(df0)(n => AvroSink.ensureWriteParallelism(df0, n.toInt))
 
-      // JDBC mode takes the reference's split options (--splitColumn +
-      // --queryParallelism, X3-coupled); the file path keeps its write-
-      // parallelism analogue below.
-      val jdbcMode = connectionUrl.isDefined
-      val qArgs = QueryArgs(
-        base = base,
-        limit = opts.get("limit").map(_.toLong),
-        partitionColumn = opts.get("partitionColumn"),
-        partition = opts.get("partition").map(ArgParsers.parseInstant),
-        partitionPeriod = opts.get("partitionPeriod").map(ArgParsers.parsePeriodOrDuration)
-          .getOrElse(java.time.Period.ofDays(1)),
-        splitColumn = if (jdbcMode) opts.get("splitColumn") else None,
-        queryParallelism = if (jdbcMode) opts.get("queryParallelism").map(_.toInt) else None)
-
-      ArgParsers.validatePartitionFreshness(
-        qArgs.partition, qArgs.partitionColumn, qArgs.partitionPeriod,
-        skipCheck = opts.contains("skipPartitionCheck"),
-        minPartitionPeriod = opts.get("minPartitionPeriod").map(ArgParsers.parseInstant))
-
-      // --inputFormat=parquet|csv|json|avro (default: by extension) —
-      // the multi-format ingest path; parquet stays the default
-      val inputFormat = graft.sources.FileSource.detectFormat(input, opts.get("inputFormat"))
-      val source: graft.sources.Source = connectionUrl match {
-        case Some(url) =>
-          // the reference's primary input: a JDBC database. Credentials per
-          // PasswordReader priority (U9); the scheme→driver map validates
-          // the URL (JdbcConnectionUtil.java:30-48). A postgres partition
-          // export runs the replication-lag pre-flight first, like
-          // PsqlAvroJob (`jobs/PsqlAvroJob.java:36-57`).
-          val connArgs = graft.args.ConnectionArgs(
-            url,
-            username = opts.getOrElse("username", "dbeam-extractor"),
-            password = graft.args.PasswordReader.read(
-              opts.get("password"), opts.get("passwordFile")))
-          if (url.startsWith("jdbc:postgresql") && qArgs.partition.isDefined
-              && !opts.contains("skipReplicationDelayCheck")) {
-            // same direct driver-instantiation path as every other product
-            // connection (ConnectionArgs.createConnection) — the reference
-            // loads the scheme's driver class then connects
-            // (JdbcConnectionUtil.java:50-59)
-            val c = connArgs.createConnection()
-            try ReplicationCheck.checkLive(c, qArgs.partition.get, qArgs.partitionPeriod)
-            finally c.close()
-          }
-          graft.sources.JdbcSource(connArgs, qArgs,
-            fetchSize = opts.get("fetchSize").map(_.toInt).getOrElse(10000),
-            preCommands = sinkArgs.preCommands,
-            // --arrayMode=bytes|typed_first_row|typed_postgres (reference
-            // `JdbcExportPipelineOptions.java:90-94`, default typed_first_row)
-            arrayMode = opts.get("arrayMode").map(graft.args.ArrayMode.parse)
-              .getOrElse(graft.args.ArrayMode.TypedFirstRow))
-        case None =>
-          if (inputFormat == "parquet") ParquetSource(input, table, qArgs)
-          else graft.sources.FileSource(input, inputFormat, table, qArgs)
-      }
-      val schemaCfg = AvroSchemaGen.Config(
-        tableName = table,
-        schemaName = sinkArgs.avroSchemaName,
-        namespace = sinkArgs.avroSchemaNamespace,
-        doc = sinkArgs.avroDoc,
-        connectionUrl = connectionUrl.getOrElse(s"parquet:$input"),
-        useLogicalTypes = sinkArgs.useAvroLogicalTypes,
-        nullableArrayItems = opts.contains("nullableArrayItems"))
-
-      val df0 = userSql.filter(_ => !jdbcMode) match {
-        case Some(sql) =>
-          // run the wrapped user query over the input registered as a view,
-          // then apply partition filter / limit like the table path
-          // RAW read for the view (no query-arg filter/limit here — those
-          // apply to the user query's OUTPUT below, like the table path)
-          graft.sources.FileSource(input, inputFormat, table, QueryArgs(base = base))
-            .read(spark).createOrReplaceTempView(table)
-          val wrapped = spark.sql(QueryBuilder.fromSqlQuery(sql).build)
-          val filtered = (qArgs.partitionColumn, qArgs.partition) match {
-            case (Some(c), Some(p)) =>
-              val (start, end) = graft.args.QueryArgs.partitionWindow(p, qArgs.partitionPeriod)
-              import org.apache.spark.sql.functions.{col, lit}
-              wrapped.filter(col(c) >= lit(start).cast("timestamp") && col(c) < lit(end).cast("timestamp"))
-            case _ => wrapped
-          }
-          qArgs.limit.map(n => filtered.limit(n.toInt)).getOrElse(filtered)
-        case None => source.read(spark)
-      }
-      // --queryParallelism=n: in JDBC mode the split predicates already set
-      // the partitioning (one partition per generated query); for file
-      // sources ensure at least n write partitions (dbeam X1 analogue for
-      // unsplittable file layouts).
-      val df = opts.get("queryParallelism").filter(_ => !jdbcMode)
-        .map(n => graft.sink.AvroSink.ensureWriteParallelism(df0, n.toInt))
-        .getOrElse(df0)
-
-      // --avroSchemaFilePath: pin the output schema to a user .avsc instead
-      // of inferring (reference `README.md:138-148`).
-      val userSchema = opts.get("avroSchemaFilePath")
-        .map(p => AvroSchemaGen.parseInputAvroSchemaFile(spark.sparkContext.hadoopConfiguration, p))
-
-      // --partitionOutputBy=col: hive-layout partitioned export — one
-      // sub-export (full side-output contract) per distinct value, plus a
-      // top-level _PARTITIONS.json manifest. Low-cardinality by contract.
-      opts.get("partitionOutputBy") match {
-        case Some(pcol) =>
-          val result = PartitionedExport.run(
-            spark, df, output, pcol,
-            sinkArgs = sinkArgs, schemaCfg = schemaCfg,
-            minRows = opts.get("minRows").map(_.toLong).getOrElse(-1L),
-            dataOnly = opts.contains("dataOnly"),
-            maxPartitions = opts.get("maxOutputPartitions").map(_.toInt).getOrElse(64))
-          println(ExportJob.metricsJson(
-            Map("partitions" -> result.partitions.length.toLong,
-              "recordCount" -> result.totalRecords)))
-        case None =>
-          val result = ExportJob.run(
-            spark,
-            df,
-            output,
-            sinkArgs = sinkArgs,
-            schemaCfg = schemaCfg,
-            queries = if (jdbcMode) source.queries(spark)
-              else qArgs.buildQueries(_ => (0L, 0L)),
-            minRows = opts.get("minRows").map(_.toLong).getOrElse(-1L),
-            dataOnly = opts.contains("dataOnly"),
-            exportTimeout = java.time.Duration.parse(opts.getOrElse("exportTimeout", "P7D")),
-            userSchema = userSchema)
-          println(ExportJob.metricsJson(result.metrics.toMap))
-      }
-      spark.stop()
-      }
-    } catch {
-      case t: Throwable =>
-        System.err.println(s"Export failed: ${t.getMessage}")
-        sys.exit(ExitCodes.forThrowable(t))
+        opts.get("partitionOutputBy") match {
+          case Some(pcol) =>
+            // hive-layout partitioned export — one sub-export (full
+            // side-output contract) per distinct value, plus a top-level
+            // _PARTITIONS.json manifest. Low-cardinality by contract.
+            val result = PartitionedExport.run(spark, df, output, pcol,
+              sinkArgs = sinkArgs, schemaCfg = schemaCfg, minRows = minRows, dataOnly = dataOnly,
+              maxPartitions = opts.get("maxOutputPartitions").fold(64)(_.toInt))
+            ExportJob.metricsJson(Map(
+              "partitions" -> result.partitions.length.toLong,
+              "recordCount" -> result.totalRecords))
+          case None =>
+            val result = ExportJob.run(spark, df, output,
+              sinkArgs = sinkArgs,
+              schemaCfg = schemaCfg,
+              queries = source.queries(spark),
+              minRows = minRows,
+              dataOnly = dataOnly,
+              exportTimeout = java.time.Duration.parse(opts.getOrElse("exportTimeout", "P7D")),
+              // --avroSchemaFilePath: pin the output schema to a user .avsc
+              // instead of inferring (reference `README.md:138-148`)
+              userSchema = opts.get("avroSchemaFilePath").map(p =>
+                AvroSchemaGen.parseInputAvroSchemaFile(spark.sparkContext.hadoopConfiguration, p)))
+            ExportJob.metricsJson(result.metrics.toMap)
+        }
     }
   }
 }
@@ -267,7 +217,7 @@ object PsqlExportCli {
       case None | Some("true") =>
         throw new IllegalArgumentException("Partition parameter must be defined")
       case Some(v) =>
-        require(scala.util.Try(graft.args.ArgParsers.parseInstant(v)).isSuccess,
+        require(scala.util.Try(ArgParsers.parseInstant(v)).isSuccess,
           s"Partition parameter '$v' is not a valid date/instant")
     }
     require(!opts.contains("skipReplicationDelayCheck"),
@@ -275,13 +225,7 @@ object PsqlExportCli {
   }
 
   def main(args: Array[String]): Unit = {
-    val opts = args.filter(_.startsWith("--")).map { a =>
-      a.stripPrefix("--").split("=", 2) match {
-        case Array(k, v) => k -> v
-        case Array(k) => k -> "true"
-      }
-    }.toMap
-    try validate(opts)
+    try validate(ArgParsers.parseFlags(args))
     catch {
       case t: IllegalArgumentException =>
         System.err.println(s"Export failed: ${t.getMessage}")

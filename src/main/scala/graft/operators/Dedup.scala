@@ -152,12 +152,6 @@ object Dedup {
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), Portable.wordShingles("toks", 3).as("shingles"))
 
-  /** (doc_id, shingle) pairs — the exploded form, used only by the exact
-    * Jaccard verification join.
-    */
-  def docShingles(spark: SparkSession, dir: String): DataFrame =
-    docShingleArrays(spark, dir).select(col("doc_id"), explode(col("shingles")).as("shingle"))
-
   // 32 bands × 2 rows: P(miss | jaccard=0.6) = (1-0.36)^32 ≈ 6e-7, and
   // false positives are removed by exact verification — so halving the
   // signature width vs the classic 128 costs nothing in output.
@@ -181,14 +175,6 @@ object Dedup {
       col("doc_id"),
       expr(s"graft_minhash(graft_poly_hash_array(shingles, 31, ${Portable.P1}L), $numHashes)")
         .as("sig"))
-  }
-
-  /** LSH candidate pairs: docs sharing at least one band (r=2 consecutive
-    * minhashes). Self-equi-join on the band key — no cross product.
-    */
-  def candidatePairs(spark: SparkSession, dir: String): DataFrame = {
-    val (cand, banded) = candidatesFrom(minhashSignatures(spark, dir))
-    materializeAndRelease(Seq(banded), cand)
   }
 
   /** Returns (candidates, the cached banded intermediate) — the caller

@@ -1792,51 +1792,6 @@ object TextAnalysis {
       .coalesce(1).write.mode("overwrite").parquet(s"$storeDir/dsir_cost.parquet")
   }
 
-  /** Content-defined chunking (the storage-dedup / RAG-ingest variable
-    * chunker): a boundary falls AFTER position `i` wherever the poly-hash
-    * of the trailing `w`-char window at `i` is ≡ 0 mod `divisor` — so
-    * boundaries are a function of CONTENT, not position, and inserting a
-    * prefix re-aligns every chunk after the first boundary (fixed-stride
-    * chunks shift forever — ChunkSpec demonstrates both). Expected chunk
-    * length ≈ `divisor` chars. Output: one row per chunk with its exact
-    * poly-hash fingerprint, ready for chunk-level dedup.
-    *
-    * Scale: map-only generator (HOF transform/filter + posexplode — no
-    * UDF, no shuffle, partitioning preserved); per-doc work is
-    * O(len × w). The DuckDB oracle recomputes boundaries and hashes from
-    * the identical integer arithmetic, so the operator is bit-exact.
-    * Docs shorter than `w` produce one whole-doc chunk; empty docs
-    * produce none.
-    */
-  def cdcChunks(spark: SparkSession, dir: String, w: Int = 8,
-      divisor: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val hashWin = s"graft_poly_hash(substring(text, i - ${w - 1}, $w), 31, 1000000007L)"
-    docs(spark, dir)
-      .filter(length(col("text")) > 0)
-      .withColumn("bounds", expr(
-        s"""concat(
-           | array(0),
-           | CASE WHEN length(text) >= $w THEN
-           |  filter(transform(sequence($w, length(text)),
-           |   i -> IF($hashWin % $divisor = 0, i, -1)), p -> p != -1)
-           | ELSE CAST(array() AS array<int>) END,
-           | array(length(text)))""".stripMargin))
-      .select(col("doc_id"), col("text"),
-        posexplode(expr(
-          """filter(transform(sequence(2, size(bounds)),
-            | j -> struct(element_at(bounds, j - 1) + 1 AS start,
-            |  element_at(bounds, j) - element_at(bounds, j - 1) AS len)),
-            | c -> c.len > 0)""".stripMargin)).as(Seq("chunk_idx", "c")))
-      .select(
-        col("doc_id"),
-        col("chunk_idx").cast("long").as("chunk_idx"),
-        col("c.start").cast("long").as("chunk_start"),
-        col("c.len").cast("long").as("chunk_len"),
-        expr("graft_poly_hash(substring(text, c.start, c.len), 31, 1000000007L)")
-          .as("chunk_hash"))
-  }
-
   /** Word-type table (word, cnt) — BPE's working set. The crucial scale
     * property of classic BPE training: after this one corpus scan the
     * iteration works on VOCABULARY-sized data (distinct word forms with

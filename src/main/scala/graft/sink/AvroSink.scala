@@ -73,7 +73,8 @@ object AvroSink {
   }
 
   /** `snappy | deflate1-9 | zstandard1-9` → avro `CodecFactory`
-    * (reference `JdbcAvroArgs.java:54-63`).
+    * (reference `JdbcAvroArgs.java:54-63`); any other name throws
+    * `IllegalArgumentException` (reference `JdbcAvroArgs.java:92-94`).
     */
   def codecFactory(codec: String): CodecFactory = codec match {
     case "snappy" => CodecFactory.snappyCodec()
@@ -255,14 +256,11 @@ object AvroSink {
   */
 object RowBinaryEncoder {
 
-  /** ByteArrayOutputStream with buffer exposed to avoid a copy per row —
-    * same trick as the reference (`JdbcAvroRecordConverter.java:34-46`) —
-    * for callers that encode single rows into a stream. The sink itself
-    * encodes into [[AvroBlockWriter]]'s block arrays.
+  /** A 64 KiB-presized ByteArrayOutputStream for callers that encode single
+    * rows into a stream. The sink itself encodes into [[AvroBlockWriter]]'s
+    * block arrays.
     */
-  final class ExposedByteArrayOutputStream extends ByteArrayOutputStream(64 * 1024) {
-    def rawBuffer: Array[Byte] = buf
-  }
+  final class ExposedByteArrayOutputStream extends ByteArrayOutputStream(64 * 1024)
 
   type FieldEncoder = (InternalRow, Int, Encoder) => Unit
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.Properties
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.args.{ArrayMode, ConnectionArgs, QueryArgs}
@@ -15,8 +15,8 @@ import graft.sql.ParallelRanges
   *     generated range predicates (each Spark partition issues exactly one of
   *     the reference's generated queries — reference
   *     `jobs/JdbcAvroJob.java:138-143` maps one query to one writer).
-  *   - [[ParquetSource]] — the offline-testable path: same query semantics
-  *     applied as Catalyst `Column` predicates over parquet (filters push
+  *   - [[FileSource]] — parquet, CSV, JSON or Avro files: the same query
+  *     semantics applied as Catalyst `Column` predicates (filters push
   *     down to the scan).
   */
 trait Source {
@@ -174,32 +174,37 @@ final case class JdbcSource(conn: ConnectionArgs, args: QueryArgs, fetchSize: In
     if (row.isNullAt(i)) 0L else row.getLong(i)
 }
 
-/** Parquet-backed source applying the same query semantics as Catalyst
-  * predicates. Filters and limits push down to the parquet scan (verified in
-  * `PlanSpec` via `PushedFilters`).
+/** The one file source: parquet, CSV (header + schema inference,
+  * microsecond-tolerant timestamp parse), JSON lines, and the engine's own
+  * Avro container output (via [[AvroSource]] — no spark-avro on this
+  * classpath). dbeam's query semantics apply as Catalyst predicates
+  * ([[FileSource.window]]), so filters and limits push down to the scan
+  * (verified in `PlanSpec` via `PushedFilters`) and every downstream stage
+  * (schema gen, sink, side outputs, gates) is format-agnostic.
+  *
+  * Scale note: CSV/JSON scans push the partition predicate but not into
+  * row-group statistics (text formats have none) — filters still prune
+  * AFTER parse; columnar inputs remain the 100 TB path, the text formats
+  * are the ingest/one-off escape hatch.
   */
-final case class ParquetSource(path: String, tableName: String, args: QueryArgs) extends Source {
+final case class FileSource(path: String, format: String, tableName: String,
+    args: QueryArgs) extends Source {
 
-  /** dbeam's partition filter F1 as a Catalyst predicate. */
-  private def partitionFilter: Option[Column] =
-    (args.partitionColumn, args.partition) match {
-      case (Some(c), Some(p)) =>
-        val (start, end) = QueryArgs.partitionWindow(p, args.partitionPeriod)
-        Some(col(c) >= lit(start).cast("timestamp") && col(c) < lit(end).cast("timestamp"))
-      case _ => None
-    }
-
-  override def read(spark: SparkSession): DataFrame = {
-    val base = spark.read.parquet(path)
-    val filtered = partitionFilter.map(base.filter).getOrElse(base)
-    args.limit match {
-      case Some(n) =>
-        // Engine-native exact limit (SURVEY §7.5 risk 2: the reference's
-        // limit/k-per-split can undershoot; Spark's limit is exact).
-        filtered.limit(n.toInt)
-      case None => filtered
-    }
+  /** The input as stored, before any query argument applies. */
+  def base(spark: SparkSession): DataFrame = format match {
+    case "parquet" => spark.read.parquet(path)
+    case "csv" => spark.read
+      .option("header", "true")
+      .option("inferSchema", "true")
+      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
+      .csv(path)
+    case "json" => spark.read.json(path)
+    case "avro" => AvroSource.read(spark, path)
+    case other => throw new IllegalArgumentException(
+      s"--inputFormat must be parquet|csv|json|avro, got $other")
   }
+
+  override def read(spark: SparkSession): DataFrame = FileSource.window(base(spark), args)
 
   /** STRICT-PARITY read: reproduces the reference's split semantics exactly
     * — ranges from [[ParallelRanges]] with the inclusive last bound, and the
@@ -209,11 +214,11 @@ final case class ParquetSource(path: String, tableName: String, args: QueryArgs)
     */
   def readParityMode(spark: SparkSession): DataFrame = {
     import graft.args.SplitColumn
-    val base = spark.read.parquet(path)
-    val filtered = partitionFilter.map(base.filter).getOrElse(base)
+    val b = base(spark)
     (args.queryParallelism, args.splitColumn) match {
       case (Some(k), Some(sp)) =>
-        SplitColumn.validate(base, sp)
+        SplitColumn.validate(b, sp)
+        val filtered = FileSource.window(b, args.copy(limit = None))
         val bounds = filtered.agg(min(col(sp)), max(col(sp))).head()
         val ranges = ParallelRanges.generate(
           toLong(bounds.get(0)), toLong(bounds.get(1)), k)
@@ -235,63 +240,31 @@ final case class ParquetSource(path: String, tableName: String, args: QueryArgs)
     case other => throw new IllegalArgumentException(s"non-integral split bound: $other")
   }
 
-  override def queries(spark: SparkSession): Seq[String] = {
+  override def queries(spark: SparkSession): Seq[String] =
     args.buildQueries { sp =>
       val row = read(spark).agg(min(col(sp)), max(col(sp))).head()
       (toLong(row.get(0)), toLong(row.get(1)))
     }
-  }
-}
-
-/** Multi-format file source — the parquet path generalized to the other
-  * self-describing (or header-carrying) file formats a batch export needs
-  * to ingest: CSV (header + schema inference, microsecond-tolerant
-  * timestamp parse), JSON lines, and the engine's own Avro container
-  * output (via [[AvroSource]] — no spark-avro on this classpath). Shares
-  * the partition-filter/limit semantics with [[ParquetSource]] verbatim,
-  * so every downstream stage (schema gen, sink, side outputs, gates) is
-  * format-agnostic.
-  *
-  * Scale note: CSV/JSON scans push the partition predicate but not into
-  * row-group statistics (text formats have none) — filters still prune
-  * AFTER parse; columnar inputs remain the 100 TB path, the text formats
-  * are the ingest/one-off escape hatch.
-  */
-final case class FileSource(path: String, format: String, tableName: String,
-    args: QueryArgs) extends Source {
-
-  private def base(spark: SparkSession): DataFrame = format match {
-    case "parquet" => spark.read.parquet(path)
-    case "csv" => spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
-      .csv(path)
-    case "json" => spark.read.json(path)
-    case "avro" => AvroSource.read(spark, path)
-    case other => throw new IllegalArgumentException(
-      s"--inputFormat must be parquet|csv|json|avro, got $other")
-  }
-
-  private def partitionFilter: Option[Column] =
-    (args.partitionColumn, args.partition) match {
-      case (Some(c), Some(p)) =>
-        val (start, end) = QueryArgs.partitionWindow(p, args.partitionPeriod)
-        Some(col(c) >= lit(start).cast("timestamp") && col(c) < lit(end).cast("timestamp"))
-      case _ => None
-    }
-
-  override def read(spark: SparkSession): DataFrame = {
-    val b = base(spark)
-    val filtered = partitionFilter.map(b.filter).getOrElse(b)
-    args.limit.map(n => filtered.limit(n.toInt)).getOrElse(filtered)
-  }
-
-  override def queries(spark: SparkSession): Seq[String] =
-    Seq(s"-- $format source: $path")
 }
 
 object FileSource {
+
+  /** dbeam's partition filter F1 as a Catalyst predicate, then the
+    * engine-native exact limit (SURVEY §7.5 risk 2: the reference's
+    * limit/k-per-split can undershoot; Spark's limit is exact). Applied to
+    * a file's rows by [[FileSource.read]] and to a `--sqlFile` query's
+    * output by the CLI.
+    */
+  def window(df: DataFrame, args: QueryArgs): DataFrame = {
+    val filtered = (args.partitionColumn, args.partition) match {
+      case (Some(c), Some(p)) =>
+        val (start, end) = QueryArgs.partitionWindow(p, args.partitionPeriod)
+        df.filter(col(c) >= lit(start).cast("timestamp") && col(c) < lit(end).cast("timestamp"))
+      case _ => df
+    }
+    args.limit.map(n => filtered.limit(n.toInt)).getOrElse(filtered)
+  }
+
   /** Format from an explicit option or the path extension (default parquet). */
   def detectFormat(path: String, explicit: Option[String]): String =
     explicit.getOrElse {
@@ -301,4 +274,10 @@ object FileSource {
       else if (name.endsWith(".avro")) "avro"
       else "parquet"
     }
+}
+
+/** The parquet [[FileSource]]. */
+object ParquetSource {
+  def apply(path: String, tableName: String, args: QueryArgs): FileSource =
+    FileSource(path, "parquet", tableName, args)
 }
