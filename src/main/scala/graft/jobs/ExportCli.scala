@@ -33,15 +33,20 @@ import graft.sql.QueryBuilder
   * `--incrementalColumn` switches to the high-watermark delta mode
   * ([[IncrementalExport]]) over a parquet input, where the watermark filter
   * IS the query. Each mode refuses, before any write, the flags it would
-  * otherwise drop (`ModeDrops`).
+  * otherwise drop (`ModeDrops`); a file export refuses the JDBC-only flags.
   */
 object ExportCli {
 
-  /** Per mode flag, the flags that mode would silently ignore. */
+  private val FileMode = "file input (no --connectionUrl)"
+
+  /** Per mode, the flags that mode would silently ignore. A flag's mode is
+    * on when the flag is given, [[FileMode]] when `--connectionUrl` is not. */
   private val ModeDrops = Seq(
-    "incrementalColumn" -> Seq("connectionUrl", "sqlFile", "partitionColumn", "partition", "limit",
-      "queryParallelism", "avroSchemaFilePath", "exportTimeout", "partitionOutputBy"),
-    "partitionOutputBy" -> Seq("avroSchemaFilePath", "exportTimeout"))
+    "--incrementalColumn" -> Seq("connectionUrl", "sqlFile", "partitionColumn", "partition",
+      "limit", "queryParallelism", "avroSchemaFilePath", "exportTimeout", "partitionOutputBy"),
+    "--partitionOutputBy" -> Seq("avroSchemaFilePath", "exportTimeout"),
+    FileMode -> Seq("splitColumn", "fetchSize", "arrayMode", "preCommand", "username",
+      "password", "passwordFile", "skipReplicationDelayCheck"))
 
   def main(args: Array[String]): Unit = {
     val opts = ArgParsers.parseFlags(args)
@@ -61,8 +66,9 @@ object ExportCli {
     */
   def run(spark: SparkSession, args: Array[String]): String = {
     val opts = ArgParsers.parseFlags(args)
-    for ((mode, drops) <- ModeDrops if opts.contains(mode); flag <- drops.find(opts.contains))
-      throw new IllegalArgumentException(s"--$mode does not support --$flag")
+    val modes = opts.keySet.map("--" + _) ++ Option.when(!opts.contains("connectionUrl"))(FileMode)
+    for ((mode, drops) <- ModeDrops if modes(mode); flag <- drops.find(opts.contains))
+      throw new IllegalArgumentException(s"$mode does not support --$flag")
     val connectionUrl = opts.get("connectionUrl")
     val input = opts.getOrElse("input",
       connectionUrl.getOrElse(throw new IllegalArgumentException(
@@ -77,7 +83,7 @@ object ExportCli {
       schemaName = opts.get("avroSchemaName"),
       namespace = opts.getOrElse("avroSchemaNamespace", "dbeam_generated"),
       doc = opts.get("avroDoc"),
-      connectionUrl = connectionUrl.getOrElse(s"parquet:$input"),
+      connectionUrl = connectionUrl.getOrElse(s"$inputFormat:$input"),
       useLogicalTypes = opts.contains("useAvroLogicalTypes"),
       nullableArrayItems = opts.contains("nullableArrayItems"))
     val minRows = opts.get("minRows").fold(-1L)(_.toLong)
@@ -102,8 +108,8 @@ object ExportCli {
         val userSql = opts.get("sqlFile")
           .map(p => ExportJob.readSqlFile(spark.sparkContext.hadoopConfiguration, p))
         // JDBC mode takes the reference's split options (--splitColumn +
-        // --queryParallelism, X3-coupled); the file path keeps its write-
-        // parallelism analogue below.
+        // --queryParallelism, X3-coupled); file mode refuses --splitColumn
+        // and keeps a write-parallelism analogue of the other below.
         val jdbcMode = connectionUrl.isDefined
         val qArgs = QueryArgs(
           base = userSql.fold(QueryBuilder.fromTable(table))(QueryBuilder.fromSqlQuery),
@@ -112,7 +118,7 @@ object ExportCli {
           partition = opts.get("partition").map(ArgParsers.parseInstant),
           partitionPeriod = opts.get("partitionPeriod").map(ArgParsers.parsePeriodOrDuration)
             .getOrElse(java.time.Period.ofDays(1)),
-          splitColumn = if (jdbcMode) opts.get("splitColumn") else None,
+          splitColumn = opts.get("splitColumn"),
           queryParallelism = if (jdbcMode) opts.get("queryParallelism").map(_.toInt) else None)
         ArgParsers.validatePartitionFreshness(
           qArgs.partition, qArgs.partitionColumn, qArgs.partitionPeriod,

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics over the trade graph the TPC-H-ish fixture
@@ -19,24 +18,29 @@ import org.apache.spark.storage.StorageLevel
   * summation order, or engine — the same money-in-cents discipline the
   * relational family uses, applied to iterative state.
   *
-  * The node universe is the `nodes` frame, exactly as in the oracle
-  * (`r0 FROM nodes`, then `nodes LEFT JOIN`): every node gets one output
-  * row, an edge whose src or dst is not a node contributes nothing, and
-  * `outdeg` still counts every edge. Duplicate node ids fail loudly.
+  * The node universe of PageRank and components is the `nodes` frame,
+  * exactly as in the oracle (`r0 FROM nodes`, then `nodes LEFT JOIN`):
+  * every node gets one output row, an edge whose src or dst is not a node
+  * contributes nothing, and `outdeg` still counts every edge. Reach takes
+  * every edge endpoint plus the seeds, LPA its backbone's endpoints, as
+  * their oracles do. Duplicate node ids fail loudly.
   *
   * Scale notes:
-  *   - the edge table (src, dst, outdeg) is built ONCE from a cached
-  *     distinct pair table and persisted in the layout its regime needs
-  *   - up to [[BroadcastableNodes]] nodes, PageRank and components run on
-  *     [[arraySupersteps]]: state is one long per node on the driver, the
-  *     edges are cached as per-partition primitive arrays partitioned on
-  *     `dst`, and a superstep is one broadcast plus one single-stage job
-  *     that returns one partial per node — no SQL plan per superstep, no
-  *     exchange, no lineage to truncate
+  *   - PageRank, components, reach and LPA share ONE superstep engine,
+  *     [[supersteps]]: each brings its state init, array kernel (sum, min
+  *     or mode) and shuffle step; the node count picks the regime once
+  *   - the edge table is built ONCE from a cached pair table and
+  *     persisted in the layout its regime needs
+  *   - up to [[BroadcastableNodes]] nodes, [[arraySupersteps]]: state is
+  *     one long per node on the driver, the edges are cached as
+  *     per-partition primitive arrays partitioned on `dst`, and a
+  *     superstep is one broadcast plus one single-stage job that returns
+  *     one partial per node — no SQL plan per superstep, no exchange, no
+  *     lineage to truncate
   *   - past the gate, the shuffle regime joins the state to src-partitioned
-  *     edges and aggregates on `dst`, one exchange per superstep, with a
-  *     localCheckpoint every `checkpointEvery` supersteps so the plan does
-  *     not deepen linearly with iterations
+  *     edges and aggregates on `dst`, one or two exchanges per superstep,
+  *     with a localCheckpoint every `checkpointEvery` supersteps so the
+  *     plan does not deepen linearly with iterations
   *   - rank SCALE must satisfy `N · SCALE · dampPct < 2^63`: the default
   *     1e9 is safe to ~10^8 nodes; [[pageRankCore]] asserts it on the
   *     runtime node count
@@ -74,21 +78,19 @@ object Graph {
     * edge materialization even with exchange reuse.
     */
   private[graft] def tradeEdgesFrom(spark: SparkSession, dir: String,
-      snode: org.apache.spark.sql.Column): (DataFrame, DataFrame) = {
+      snode: Column): (DataFrame, DataFrame) = {
     // dedupe (order, supplier) BEFORE the join: the distinct shuffles on
     // l_orderkey — the join key the rows need anyway — and shrinks the
     // join output ~4x (multi-lineitem orders) ahead of the wide pair
     // distinct; at fact-table scale this is the difference between
     // shuffling lineitem once and shuffling the joined pairs too
     val pairs = t(spark, dir, "orders").select("o_orderkey", "o_custkey")
-      .join(t(spark, dir, "lineitem").select("l_orderkey", "l_suppkey").distinct(),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("cnode"), snode.as("snode"))
+      .join(orderSuppliers(spark, dir), col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("u"), snode.as("v")) // customer, supplier node
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     pairs.count() // eager fill — four consumers below (cache-before-AQE rule)
-    val directed = pairs.select(col("cnode").as("src"), col("snode").as("dst"))
-      .unionAll(pairs.select(col("snode").as("src"), col("cnode").as("dst")))
+    val directed = bothWays(pairs, "src", "dst")
     val deg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))
     (pairs, directed.join(deg, "src"))
   }
@@ -151,21 +153,23 @@ object Graph {
     */
   val BroadcastableNodes: Long = 1L << 20
 
-  /** The node universe, read once: the node count, plus the sorted ids
-    * when there are at most `gate` of them (the array regime). One job
-    * either way below the gate — the `limit` collect both picks the regime
-    * and counts. Duplicate ids fail loudly in both regimes: the recurrences
-    * (and the oracle's `nodes LEFT JOIN`) assume one state per node.
+  /** The node universe, read once: the node count, plus the sorted ids and
+    * their `init` values when there are at most `gate` of them (the array
+    * regime) — one job either way below the gate. Duplicate ids fail loudly
+    * in both regimes: the recurrences (and the oracle's `nodes LEFT JOIN`)
+    * assume one state per node.
     */
-  private def nodeUniverse(nodes: DataFrame, gate: Long): (Long, Option[Array[Long]]) = {
+  private def nodeUniverse(nodes: DataFrame, init: Column,
+      gate: Long): (Long, Option[(Array[Long], Array[Long])]) = {
     require(gate >= 0 && gate < Int.MaxValue, s"node gate must be in [0, 2^31-1), got $gate")
-    val ids = nodes.select(col("node").cast("long")).limit(gate.toInt + 1)
-      .as(Encoders.scalaLong).collect()
-    if (ids.length <= gate) {
-      java.util.Arrays.sort(ids)
+    val rows = nodes.select(col("node").cast("long").as("id"), init.cast("long").as("init"))
+      .limit(gate.toInt + 1)
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).collect()
+    if (rows.length <= gate) {
+      val (ids, init) = rows.sortBy(_._1).unzip
       val dup = (1 until ids.length).find(i => ids(i) == ids(i - 1))
       require(dup.isEmpty, s"duplicate node id ${dup.map(ids(_)).getOrElse(0L)} in the node set")
-      (ids.length.toLong, Some(ids))
+      (ids.length.toLong, Some((ids, init)))
     } else {
       val r = nodes.groupBy("node").agg(count(lit(1)).as("c"))
         .agg(sum("c"), max("c")).head()
@@ -177,33 +181,99 @@ object Graph {
   /** One partition of the array engine's edge cache: edge `k` runs from
     * node index `src(k)` into local slot `slot(k)`, whose node index is
     * `dst(slot(k))`; `outdeg(k)` is the source's out-degree over ALL edges
-    * (empty for the min fold, which does not divide by it). Edges are
-    * partitioned on `dst`, so every dst owns one slot in one partition.
+    * (empty unless the edge frame carries it). Edges are partitioned on
+    * `dst`, so every dst owns one slot in one partition and sees all its
+    * in-edges there: any per-dst fold is partition-local and exact.
     */
   private final case class EdgeBlock(src: Array[Int], slot: Array[Int],
       outdeg: Array[Long], dst: Array[Int])
 
-  /** The small-graph superstep engine shared by [[pageRankCore]] and
-    * [[componentsCore]], returning the materialized (node, `name`) frame.
-    * State is one long per node on the driver, indexed by position in the
-    * sorted `ids`. The edges are mapped once to primitive [[EdgeBlock]]s
-    * and persisted; an edge whose src or dst is not a node is dropped there
-    * (it contributes nothing, as in the oracle's joins), while `outdeg`
-    * keeps counting it. Per superstep the state is broadcast, one
-    * single-stage job folds each partition's edges into per-dst partials —
-    * Σ `state(src) div outdeg`, or min `state(src)` when `byMin` — and the
-    * driver applies `update(old, partial)` to every node, passing the
-    * fold's identity (0 or `Long.MaxValue`) where a node has no in-edge.
-    * All-integer, so the result does not depend on partitioning or
-    * summation order; state on the driver means no lineage to truncate.
+  /** An array-regime kernel: `fold(b, state)(j)` folds slot `j`'s in-neighbour states. */
+  private type Fold = (EdgeBlock, Array[Long]) => Array[Long]
+
+  /** Σ `state(src) div outdeg` (PageRank). */
+  private val sumIn: Fold = (b, st) => {
+    val acc = new Array[Long](b.dst.length)
+    var k = 0
+    while (k < b.src.length) {
+      acc(b.slot(k)) += st(b.src(k)) / b.outdeg(k)
+      k += 1
+    }
+    acc
+  }
+
+  /** min `state(src)` (components, reach). */
+  private val minIn: Fold = (b, st) => {
+    val acc = Array.fill(b.dst.length)(Long.MaxValue)
+    var k = 0
+    while (k < b.src.length) {
+      val v = st(b.src(k))
+      val j = b.slot(k)
+      if (v < acc(j)) acc(j) = v
+      k += 1
+    }
+    acc
+  }
+
+  /** The most frequent `state(src)`, ties to the smallest (LPA): each slot's
+    * states, bucketed by a counting sort, are sorted; the first longest run wins. */
+  private val modeIn: Fold = (b, st) => {
+    val start = new Array[Int](b.dst.length + 1) // slot j: lbl(start(j) until start(j + 1))
+    b.slot.foreach(j => start(j + 1) += 1)
+    for (j <- b.dst.indices) start(j + 1) += start(j)
+    val next = start.clone()
+    val lbl = new Array[Long](b.src.length)
+    for (k <- b.src.indices) { lbl(next(b.slot(k))) = st(b.src(k)); next(b.slot(k)) += 1 }
+    Array.tabulate(b.dst.length) { j =>
+      java.util.Arrays.sort(lbl, start(j), start(j + 1))
+      var best, bestRun, run = 0L
+      for (i <- start(j) until start(j + 1)) {
+        run = if (i > start(j) && lbl(i) == lbl(i - 1)) run + 1 else 1
+        if (run > bestRun) { best = lbl(i); bestRun = run }
+      }
+      best
+    }
+  }
+
+  /** A recurrence over the state column `name`, starting at `init`: the array
+    * regime sets each node to `update(old, fold partial or zero)`, the shuffle
+    * regime runs `step(state, edges, nodes)`; `finish` shapes the (node, name)
+    * result before it is materialized. */
+  private final case class Recurrence(name: String, init: Column, zero: Long, fold: Fold,
+      update: (Long, Long) => Long, step: (DataFrame, DataFrame, DataFrame) => DataFrame,
+      finish: DataFrame => DataFrame = identity)
+
+  /** The superstep engine of all four recurrences: the materialized (node,
+    * `rec.name`) frame after `iters` supersteps over (src, dst[, outdeg]) edges.
+    * [[nodeUniverse]] reads the nodes once; `checkNodes` sees their count, which
+    * picks [[arraySupersteps]] up to `gate`, else [[shuffleSupersteps]]. */
+  private def supersteps(spark: SparkSession, edges0: DataFrame, nodes0: DataFrame,
+      rec: Recurrence, iters: Int, checkpointEvery: Int, gate: Long,
+      extraCaches: Seq[DataFrame], checkNodes: Long => Unit = _ => ()): DataFrame = {
+    val (nNodes, small) = nodeUniverse(nodes0, rec.init, gate)
+    checkNodes(nNodes)
+    small match {
+      case Some((ids, init)) => arraySupersteps(spark, edges0, ids, init, rec, iters, extraCaches)
+      case None => shuffleSupersteps(spark, edges0, nodes0, rec, iters, checkpointEvery, extraCaches)
+    }
+  }
+
+  /** The small-graph regime: one long of state per node on the driver,
+    * indexed by position in the sorted `ids`. The edges are mapped once to
+    * persisted [[EdgeBlock]]s, dropping an edge whose src or dst is not a
+    * node (as the oracle's joins do; `outdeg` still counts it). Per
+    * superstep the state is broadcast, one single-stage job folds each block
+    * into per-dst partials, and the driver updates every node. All-integer,
+    * so partitioning and summation order do not matter; no lineage to cut.
     */
   private def arraySupersteps(spark: SparkSession, edges0: DataFrame, ids: Array[Long],
-      name: String, init: Array[Long], iters: Int, byMin: Boolean,
-      extraCaches: Seq[DataFrame])(update: (Long, Long) => Long): DataFrame = {
+      init: Array[Long], rec: Recurrence, iters: Int, extraCaches: Seq[DataFrame]): DataFrame = {
     val sc = spark.sparkContext
     val idsB = sc.broadcast(ids)
-    val cols = Seq(col("src"), col("dst")) ++ (if (byMin) Nil else Seq(col("outdeg")))
-    val blocks = edges0.select(cols.map(_.cast("long")): _*)
+    val fold = rec.fold
+    // outdeg rides along when the frame has it: only the sum divides by it
+    val blocks = edges0.select(Seq("src", "dst", "outdeg").filter(edges0.columns.contains)
+        .map(col(_).cast("long")): _*)
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("dst"))
       .queryExecution.toRdd.mapPartitions { rows =>
         val ids = idsB.value
@@ -216,74 +286,55 @@ object Graph {
           if (s >= 0 && d >= 0) {
             src += s
             slot += slotOf.getOrElseUpdate(d, { dst += d; slotOf.size }) // next free slot
-            if (!byMin) deg += r.getLong(2)
+            if (r.numFields > 2) deg += r.getLong(2)
           }
         }
         Iterator.single(EdgeBlock(src.result(), slot.result(), deg.result(), dst.result()))
       }.persist(StorageLevel.MEMORY_AND_DISK)
     val state = try {
       blocks.count()
-      val zero = if (byMin) Long.MaxValue else 0L
       (1 to iters).foldLeft(init) { (state, _) =>
         val stateB = sc.broadcast(state)
-        val partials = try blocks.map { b =>
-          val st = stateB.value
-          val acc = Array.fill(b.dst.length)(zero)
-          var k = 0
-          while (k < b.src.length) {
-            val v = st(b.src(k))
-            val j = b.slot(k)
-            if (byMin) { if (v < acc(j)) acc(j) = v }
-            else acc(j) += v / b.outdeg(k)
-            k += 1
-          }
-          (b.dst, acc)
-        }.collect() finally stateB.destroy()
-        val in = Array.fill(ids.length)(zero)
+        val partials = try blocks.map(b => (b.dst, fold(b, stateB.value))).collect()
+          finally stateB.destroy()
+        val in = Array.fill(ids.length)(rec.zero)
         for ((dst, acc) <- partials; j <- dst.indices) in(dst(j)) = acc(j)
-        Array.tabulate(ids.length)(i => update(state(i), in(i)))
+        Array.tabulate(ids.length)(i => rec.update(state(i), in(i)))
       }
     } finally {
       blocks.unpersist(false)
       idsB.destroy()
     }
-    val schema = StructType(Seq(StructField("node", LongType, false),
-      StructField(name, LongType, false)))
-    val rows = sc.parallelize(ids.indices.map(i => Row(ids(i), state(i))))
-    Dedup.materializeAndRelease(extraCaches, spark.createDataFrame(rows, schema))
+    Dedup.materializeAndRelease(extraCaches, rec.finish(
+      spark.createDataFrame(ids.indices.map(i => (ids(i), state(i)))).toDF("node", rec.name)))
   }
 
-  /** The shuffle regime, past the node gate, returning the materialized
-    * (node, `name`) frame. The edges are persisted partitioned on `src`, so
-    * each superstep's join exchanges only the state, with dsts outside the
-    * node set dropped once up front (srcs outside it never meet a state
-    * row), after `outdeg` counted every edge. `step(state, edges, nodes)`
-    * is one superstep; lineage is cut by a localCheckpoint every
-    * `checkpointEvery` supersteps, released once the result is materialized.
-    */
+  /** The shuffle regime, past the node gate. The edges are persisted
+    * partitioned on `src`, so a superstep's join exchanges only the state;
+    * dsts outside the node set are dropped once up front (srcs outside it
+    * never meet a state row). A localCheckpoint every `checkpointEvery`
+    * supersteps cuts lineage and is released with the result. */
   private def shuffleSupersteps(spark: SparkSession, edges0: DataFrame, nodes0: DataFrame,
-      name: String, init: Column, iters: Int, checkpointEvery: Int,
-      extraCaches: Seq[DataFrame])(
-      step: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
+      rec: Recurrence, iters: Int, checkpointEvery: Int,
+      extraCaches: Seq[DataFrame]): DataFrame = {
     val nodes = nodes0.persist(StorageLevel.MEMORY_AND_DISK)
     val edges = edges0.join(nodes, edges0("dst") === nodes("node"), "left_semi")
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val checkpoints = Seq.newBuilder[DataFrame]
-    var state = nodes.withColumn(name, init)
+    var state = nodes.withColumn(rec.name, rec.init)
     for (i <- 1 to iters) {
-      state = step(state, edges, nodes)
+      state = rec.step(state, edges, nodes)
       if (i % checkpointEvery == 0 && i < iters) {
         state = state.localCheckpoint()
         checkpoints += state
       }
     }
     val out = Dedup.materializeAndRelease(Seq(edges, nodes) ++ extraCaches,
-      state.select(col("node").cast("bigint").as("node"), col(name).cast("bigint").as(name)))
-    checkpoints.result().foreach(_.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(false)
-      case _ =>
-    })
+      rec.finish(state.select(col("node").cast("bigint").as("node"),
+        col(rec.name).cast("bigint").as(rec.name))))
+    checkpoints.result().flatMap(_.queryExecution.logical.collect { case r: LogicalRDD => r.rdd })
+      .foreach(_.unpersist(false))
     out
   }
 
@@ -292,33 +343,39 @@ object Graph {
       extraCaches: Seq[DataFrame] = Nil,
       broadcastNodes: Long = BroadcastableNodes): DataFrame = {
     require(dampPct >= 1 && dampPct <= 100, s"dampPct must be in [1, 100], got $dampPct")
-    val (nNodes, small) = nodeUniverse(nodes0, broadcastNodes)
+    val base = scale * (100L - dampPct) / 100L
+    val rank = Recurrence("pr", lit(scale), 0L, sumIn, (_, in) => base + dampPct * in / 100L,
+      (ranks, edges, nodes) =>
+        // nodes ride the aggregate as zero-contribution rows instead of a
+        // post-agg left join — ONE exchange per superstep, not two
+        ranks.join(edges, ranks("node") === edges("src"))
+          .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
+          .unionAll(nodes.select(col("node"), lit(0L).as("c")))
+          .groupBy("node")
+          .agg((lit(base) + expr(s"($dampPct * sum(c)) div 100")).as("pr")))
     // Overflow precondition, asserted at RUNTIME on the actual node count:
     // a node's inbound sum is bounded by the total mass N·scale, which the
     // damping step then multiplies by dampPct before the div — so
     // N·scale·dampPct must fit in a Long. The default scale is safe to
     // ~10^8 nodes; beyond that this fails loudly instead of wrapping.
-    require(nNodes == 0 || scale <= Long.MaxValue / nNodes / dampPct,
-      s"integer PageRank overflow: $nNodes nodes × scale=$scale × dampPct=$dampPct " +
-        "exceeds 2^63 — pass a smaller scale")
-    val base = scale * (100L - dampPct) / 100L
-    small match {
-      case Some(ids) =>
-        arraySupersteps(spark, edges0, ids, "pr", Array.fill(ids.length)(scale), iters,
-          byMin = false, extraCaches)((_, in) => base + dampPct * in / 100L)
-      case None =>
-        shuffleSupersteps(spark, edges0, nodes0, "pr", lit(scale), iters, checkpointEvery,
-          extraCaches) { (ranks, edges, nodes) =>
-          // nodes ride the aggregate as zero-contribution rows instead of a
-          // post-agg left join — ONE exchange per superstep, not two
-          ranks.join(edges, ranks("node") === edges("src"))
-            .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
-            .unionAll(nodes.select(col("node"), lit(0L).as("c")))
-            .groupBy("node")
-            .agg((lit(base) + expr(s"($dampPct * sum(c)) div 100")).as("pr"))
-        }
-    }
+    supersteps(spark, edges0, nodes0, rank, iters, checkpointEvery, broadcastNodes, extraCaches,
+      checkNodes = n => require(n == 0 || scale <= Long.MaxValue / n / dampPct,
+        s"integer PageRank overflow: $n nodes × scale=$scale × dampPct=$dampPct " +
+          "exceeds 2^63 — pass a smaller scale"))
   }
+
+  /** `x' = min(x, min over in-edges of x(src) + add)`, an unreached
+    * (`Long.MaxValue`) source sending nothing: components (`add = 0`) and
+    * reach (`add = 1`). The shuffle step is ONE aggregate — the self rows ride
+    * the union, so there is no post-agg join back to the node set. */
+  private def minPlus(name: String, init: Column, add: Long): Recurrence =
+    Recurrence(name, init, Long.MaxValue, minIn,
+      (old, in) => if (in == Long.MaxValue) old else math.min(old, in + add),
+      (state, edges, _) =>
+        state.join(edges, state("node") === edges("src")).where(col(name) < Long.MaxValue)
+          .select(col("dst").as("node"), (col(name) + add).as("m"))
+          .unionAll(state.select(col("node"), col(name).as("m")))
+          .groupBy("node").agg(min(col("m")).as(name)))
 
   /** Min-label propagation — connected components once converged (k ≥
     * graph diameter; the dense trade graph converges in 2-3 supersteps,
@@ -360,80 +417,117 @@ object Graph {
       nodes0: DataFrame, iters: Int, checkpointEvery: Int,
       extraCaches: Seq[DataFrame] = Nil,
       broadcastNodes: Long = BroadcastableNodes): DataFrame =
-    nodeUniverse(nodes0, broadcastNodes)._2 match {
-      case Some(ids) =>
-        arraySupersteps(spark, edges0, ids, "label", ids.clone(), iters, byMin = true,
-          extraCaches)(math.min)
-      case None =>
-        shuffleSupersteps(spark, edges0, nodes0, "label", col("node"), iters,
-          checkpointEvery, extraCaches) { (labels, edges, _) =>
-          // min(self ∪ neighbor labels) in ONE aggregate — the self rows ride
-          // the union, so there is no post-agg join back to the node set
-          labels.join(edges, labels("node") === edges("src"))
-            .select(col("dst").as("node"), col("label").as("lbl"))
-            .unionAll(labels.select(col("node"), col("label").as("lbl")))
-            .groupBy("node").agg(min(col("lbl")).as("label"))
-        }
-    }
+    supersteps(spark, edges0, nodes0, minPlus("label", col("node"), 0L), iters,
+      checkpointEvery, broadcastNodes, extraCaches)
 
   /** Bounded-hop BFS reachability: minimum hop count (≤ maxHops) from the
-    * seed set — customers of one nation — over the symmetric trade graph.
-    * Per superstep the frontier is the NEWLY reached nodes only
-    * (anti-join against the visited set), so work per hop is proportional
-    * to the frontier, not the graph.
+    * seed set — customers of one nation — over EVERY trade edge, as the
+    * oracle does (a node missing from its table is still reached). It is
+    * [[minPlus]] with `add = 1` over the edge endpoints and seeds: hop 0 at
+    * the seeds, `Long.MaxValue` elsewhere; after `maxHops` supersteps every
+    * node within `maxHops` holds its BFS hop, and only those are emitted.
     */
   def reachability(spark: SparkSession, dir: String, maxHops: Int = 3,
       nation: String = "NATION_1"): DataFrame = {
-    val (pairs, edges0) = tradeEdgesFrom(spark, dir, col("l_suppkey") * 2 + 1)
-    val edges = edges0.select("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (pairs, edges) = tradeEdgesFrom(spark, dir, col("l_suppkey") * 2 + 1)
     val seeds = t(spark, dir, "customer")
       .join(t(spark, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
       .filter(col("n_name") === nation)
       .select((col("c_custkey") * 2).as("node"))
-    val caches = scala.collection.mutable.ArrayBuffer[DataFrame](pairs, edges)
-    var visited = seeds.withColumn("hop", lit(0L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    caches += visited
-    var frontier = visited.select("node")
-    for (h <- 1 to maxHops) {
-      val next = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("hop", lit(h.toLong))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      caches += next
-      visited = visited.unionAll(next).persist(StorageLevel.MEMORY_AND_DISK)
-      caches += visited
-      frontier = next.select("node")
-    }
-    val out = visited.select(col("node").cast("bigint").as("node"), col("hop"))
-    Dedup.materializeAndRelease(caches.toSeq, out)
+    reachCore(spark, edges.select("src", "dst"), seeds, maxHops, extraCaches = Seq(pairs))
   }
 
-  /** TRIANGLE COUNT + global clustering coefficient (round 10) over the
-    * supplier CO-SERVICE projection: suppliers are adjacent when they
-    * served at least `minOrders` common orders (the bipartite trade graph
-    * itself is triangle-free, so the one-mode projection is where
-    * community structure lives; the strength threshold is also the
-    * density control — the sf0.1 projection thins 453k raw pairs to 48k
-    * edges at the default).
+  private[graft] def reachCore(spark: SparkSession, edges0: DataFrame, seeds: DataFrame,
+      maxHops: Int, extraCaches: Seq[DataFrame] = Nil,
+      broadcastNodes: Long = BroadcastableNodes): DataFrame = {
+    val nodes = edges0.select(explode(array(col("src"), col("dst"))).as("node"),
+        lit(Long.MaxValue).as("h0"))
+      .unionAll(seeds.select(col("node"), lit(0L).as("h0")))
+      .groupBy("node").agg(min("h0").as("h0"))
+    supersteps(spark, edges0, nodes,
+      minPlus("hop", col("h0"), 1L).copy(finish = _.where(col("hop") < Long.MaxValue)), maxHops,
+      checkpointEvery = 2, broadcastNodes, extraCaches)
+  }
+
+  /** LABEL-PROPAGATION COMMUNITIES (round-10 continuation) — synchronous
+    * LPA (Raghavan et al. 2007) over the top-decile co-service backbone
+    * ([[sparsifiedCoServiceEdgesFrom]]): every node starts as its own
+    * label; each superstep every node adopts the most frequent label among
+    * its neighbors, ties to the SMALLEST label — the deterministic variant,
+    * so the fixed `steps` supersteps produce one well-defined labeling on
+    * any engine (async LPA's order-dependence is exactly what's excluded).
+    * Output: each supplier's community after `steps` rounds plus the
+    * community size.
     *
-    * The count is the classic oriented two-join: with every edge stored
-    * once as `u < v`, a triangle `a<b<c` is found EXACTLY once as
-    * e(a,b) ⋈ e(b,c) ⋈ e(a,c) — two hash equi-joins, no direction
-    * double-counting, no cartesian anywhere. Wedges come from the degree
-    * table (`Σ d(d−1)/2`, integers), so the global clustering
-    * coefficient `3·triangles / wedges` lands in exact permille.
-    *
-    * Scale: per-order supplier pairs are bounded by (suppliers/order)²
-    * — a fan-out the fixture caps at ~50, and real procurement data
-    * keeps small; the edge aggregate shuffles (u, v) pairs once; the
-    * triangle join's intermediate is the wedge set, Σ d² — the
-    * threshold parameter is the knob that keeps it subquadratic, which
-    * is exactly how production triangle counts run (strength-thresholded
-    * or degree-ordered).
+    * Scale: the [[supersteps]] engine over the backbone's endpoints — the
+    * array regime takes each node's mode in its edge block; the shuffle
+    * regime's argmax is an aggregate (`min(struct(-c, lbl))`), NOT a
+    * per-node window, so no degree-sized partition materializes.
     */
+  def lpaCommunities(spark: SparkSession, dir: String, steps: Int = 3,
+      cutPermille: Int = 900): DataFrame = {
+    require(steps >= 1, s"steps must be >= 1, got $steps")
+    val (ew, e) = sparsifiedCoServiceEdgesFrom(orderSuppliers(spark, dir), cutPermille)
+    lpaCore(spark, bothWays(e, "src", "dst"), steps, extraCaches = Seq(ew))
+  }
+
+  /** LPA over SYMMETRIC edges; their endpoints are the nodes (the oracle's `l0`). */
+  private[graft] def lpaCore(spark: SparkSession, edges0: DataFrame, steps: Int,
+      extraCaches: Seq[DataFrame] = Nil,
+      broadcastNodes: Long = BroadcastableNodes): DataFrame = {
+    val lpa = Recurrence("lbl", col("node"), Long.MaxValue, modeIn, (_, in) => in,
+      (labels, edges, _) =>
+        labels.join(edges, labels("node") === edges("src"))
+          .groupBy(col("dst").as("node"), col("lbl")).agg(count(lit(1)).as("c"))
+          .groupBy("node").agg(min(struct((-col("c")).as("negc"), col("lbl"))).as("m"))
+          .select(col("node"), col("m.lbl").as("lbl")),
+      labels => labels.join(labels.groupBy("lbl").agg(count(lit(1)).as("sz")), "lbl")
+        .select(col("node").as("supplier"), col("lbl").as("community"),
+          col("sz").cast("bigint").as("community_size")))
+    supersteps(spark, edges0, edges0.select(col("dst").as("node")).distinct(),
+      lpa, steps, checkpointEvery = 2, broadcastNodes, extraCaches)
+  }
+
+  /** Distinct (order, supplier) pairs; the hub twins pass `l_suppkey % hubMod`. */
+  private def orderSuppliers(spark: SparkSession, dir: String,
+      supplier: Column = col("l_suppkey")): DataFrame =
+    t(spark, dir, "lineitem").select(col("l_orderkey"), supplier.as("l_suppkey")).distinct()
+
+  /** Co-service weights: `w` orders served by both suppliers `u < v`. */
+  private def coServiceWeights(sup: DataFrame): DataFrame =
+    sup.as("a").join(sup.as("b"),
+        col("a.l_orderkey") === col("b.l_orderkey") &&
+          col("a.l_suppkey") < col("b.l_suppkey"))
+      .groupBy(col("a.l_suppkey").as("u"), col("b.l_suppkey").as("v"))
+      .agg(count(lit(1)).as("w"))
+
+  /** Both directions of the (u, v) edge set `e`, as (`a`, `b`) rows. */
+  private def bothWays(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(col("u").as(a), col("v").as(b)).unionAll(e.select(col("v").as(a), col("u").as(b)))
+
+  /** The BLOCKED wedge self-join over (mid, nb) rows: a mid of degree `d`
+    * gets `s = ⌈d / wedgeCap⌉` hash-buckets over its neighbors, a row carries
+    * its bucket (`bs`) and replicates over the other side's (`bo`), and the
+    * join keys on `(mid, bs = bo, bo = bs)`: each `(mid, u < v)` wedge meets
+    * once. Returns (the PERSISTED blocked frame both sides read, for the
+    * caller to release; the wedges (u, v, d), `d` the mid's degree).
+    */
+  private def blockedWedges(adj: DataFrame, wedgeCap: Int): (DataFrame, DataFrame) = {
+    val blocked = adj.join(adj.groupBy("mid").agg(count(lit(1)).as("d")), "mid")
+      .withColumn("s", expr(s"(d + ${wedgeCap - 1}L) div ${wedgeCap}L"))
+      .withColumn("bs", pmod(hash(col("nb")).cast("bigint"), col("s")))
+      .withColumn("bo", explode(expr("sequence(0L, s - 1L)")))
+      .select("mid", "nb", "d", "bs", "bo")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    blocked.count() // eager fill before the two-consumer self-join (cache-before-AQE)
+    val wedges = blocked.as("a").join(blocked.as("b"),
+        col("a.mid") === col("b.mid") &&
+          col("a.bs") === col("b.bo") && col("a.bo") === col("b.bs") &&
+          col("a.nb") < col("b.nb"))
+      .select(col("a.nb").as("u"), col("b.nb").as("v"), col("a.d").as("d"))
+    (blocked, wedges)
+  }
+
   /** LINK PREDICTION (round-10 continuation) — resource-allocation index
     * over the supplier co-service graph: for each NON-adjacent pair
     * `(u, v)`, `RA(u,v) = Σ_{w ∈ N(u)∩N(v)} 1/deg(w)`, the classic
@@ -465,16 +559,10 @@ object Graph {
     * r12 #2) keep a residual hub from funneling its d² wedges through one
     * task:
     *
-    *   - the wedge self-join is BLOCKED per mid: each mid of degree d gets
-    *     `s = ⌈d / wedgeCap⌉` hash-buckets over its neighbors, each side
-    *     replicates ×s over the OTHER side's bucket, and the join key is
-    *     `(mid, bucketₐ, bucket_b)` — so a hub's d² wedge rows spread over
-    *     s² shuffle keys with ≤ ~wedgeCap² rows each, at a replication
-    *     cost of d·s ≈ d²/wedgeCap rows (1/wedgeCap of the wedge output
-    *     itself). Light mids have s = 1 and the machinery degenerates to
-    *     the plain self-join with zero overhead. Pair semantics are
-    *     untouched: bucket assignment is deterministic, so each (mid,u,v)
-    *     wedge matches exactly once.
+    *   - the wedge self-join is BLOCKED per mid ([[blockedWedges]]): a
+    *     hub's d² wedge rows spread over s² shuffle keys with ≤ ~wedgeCap²
+    *     rows each, at a replication cost of d·s ≈ d²/wedgeCap rows; light
+    *     mids (s = 1) degenerate to the plain self-join.
     *   - the per-mid degree rides ALONG on the blocked rows (deg is joined
     *     once, before the explode) instead of broadcasting the |V|-row
     *     degree table — a plain equi-join AQE may still broadcast when it
@@ -484,9 +572,7 @@ object Graph {
     */
   def linkPredict(spark: SparkSession, dir: String, topK: Int = 20,
       cutPermille: Int = 900, wedgeCap: Int = 1024): DataFrame =
-    linkPredictCore(
-      t(spark, dir, "lineitem").select("l_orderkey", "l_suppkey").distinct(),
-      topK, cutPermille, wedgeCap)
+    linkPredictCore(orderSuppliers(spark, dir), topK, cutPermille, wedgeCap)
 
   /** Hub-heavy skew twin of [[linkPredict]] (the [[trianglesHubSkew]]
     * treatment): suppliers collapse to `l_suppkey % hubMod` super-nodes
@@ -500,37 +586,16 @@ object Graph {
   def linkPredictHubSkew(spark: SparkSession, dir: String, topK: Int = 20,
       cutPermille: Int = 500, hubMod: Long = 8, wedgeCap: Int = 1024): DataFrame = {
     require(hubMod >= 1, s"hubMod must be >= 1, got $hubMod")
-    linkPredictCore(
-      t(spark, dir, "lineitem")
-        .select(col("l_orderkey"), (col("l_suppkey") % hubMod).as("l_suppkey"))
-        .distinct(),
-      topK, cutPermille, wedgeCap)
+    linkPredictCore(orderSuppliers(spark, dir, col("l_suppkey") % hubMod), topK, cutPermille,
+      wedgeCap)
   }
 
   private def linkPredictCore(sup: DataFrame, topK: Int, cutPermille: Int,
       wedgeCap: Int): DataFrame = {
     require(wedgeCap >= 1, s"wedgeCap must be >= 1, got $wedgeCap")
     val (ew, e) = sparsifiedCoServiceEdgesFrom(sup, cutPermille)
-    val adj = e.select(col("u").as("mid"), col("v").as("nb"))
-      .union(e.select(col("v").as("mid"), col("u").as("nb")))
-    val deg = adj.groupBy("mid").agg(count(lit(1)).as("d"))
-    // s = ⌈d / wedgeCap⌉ hash-buckets per mid; each row carries its own
-    // bucket (`bs`) and replicates over the other side's bucket (`bo`).
-    // PERSISTED: both sides of the wedge self-join read this one frame, so
-    // the adj ⋈ deg + explode subtree runs once, not once per side (it is
-    // ~2|E|·s̄ narrow rows — tiny next to the wedge output it feeds).
-    val blocked = adj.join(deg, "mid")
-      .withColumn("s", expr(s"(d + ${wedgeCap - 1}L) div ${wedgeCap}L"))
-      .withColumn("bs", pmod(hash(col("nb")).cast("bigint"), col("s")))
-      .withColumn("bo", explode(expr("sequence(0L, s - 1L)")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    blocked.count() // eager fill before the two-consumer self-join (cache-before-AQE)
-    val scored = blocked.as("a").join(blocked.as("b"),
-        col("a.mid") === col("b.mid") &&
-          col("a.bs") === col("b.bo") && col("a.bo") === col("b.bs") &&
-          col("a.nb") < col("b.nb"))
-      .select(col("a.nb").as("u"), col("b.nb").as("v"), col("a.d").as("d"))
-      .groupBy("u", "v")
+    val (blocked, wedges) = blockedWedges(bothWays(e, "mid", "nb"), wedgeCap)
+    val scored = wedges.groupBy("u", "v")
       .agg(count(lit(1)).as("n_common"), sum(expr("1000000L div d")).as("ra_micros"))
     val out = scored.join(e, Seq("u", "v"), "left_anti")
       .orderBy(col("ra_micros").desc, col("n_common").desc, col("u").asc, col("v").asc)
@@ -540,7 +605,7 @@ object Graph {
     Dedup.materializeAndRelease(Seq(ew, blocked), out)
   }
 
-  /** The shared QUANTILE-SPARSIFIED supplier co-service edge stage (the
+  /** The QUANTILE-SPARSIFIED supplier co-service edge stage (the
     * self-tuning cut [[linkPredict]] documents): returns the CACHED
     * weighted pair table (caller must hand it to
     * `Dedup.materializeAndRelease`) and the u<v edge set strictly above
@@ -552,20 +617,10 @@ object Graph {
     * collapse to one community — the top-decile backbone is where the
     * community structure lives.
     */
-  private def sparsifiedCoServiceEdges(spark: SparkSession, dir: String,
-      permille: Int = 500): (DataFrame, DataFrame) =
-    sparsifiedCoServiceEdgesFrom(
-      t(spark, dir, "lineitem").select("l_orderkey", "l_suppkey").distinct(), permille)
-
-  private[graft] def sparsifiedCoServiceEdgesFrom(sup: DataFrame,
+  private def sparsifiedCoServiceEdgesFrom(sup: DataFrame,
       permille: Int): (DataFrame, DataFrame) = {
     require(permille >= 1 && permille <= 999, s"permille must be in [1, 999], got $permille")
-    val ew = sup.as("a").join(sup.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_suppkey") < col("b.l_suppkey"))
-      .groupBy(col("a.l_suppkey").as("u"), col("b.l_suppkey").as("v"))
-      .agg(count(lit(1)).as("w"))
-      .cache()
+    val ew = coServiceWeights(sup).cache()
     ew.count() // fill before the multi-consumer fan-out (cache-before-AQE rule)
     val hist = ew.groupBy("w").agg(count(lit(1)).as("c"))
     // The weight domain is shared-order COUNTS — its distinct-value count
@@ -593,58 +648,37 @@ object Graph {
       .crossJoin(broadcast(ew.agg(count(lit(1)).as("n"))))
       .filter(col("cum") * 1000 >= col("n") * permille)
       .agg(min("w").as("t"))
-    val e = ew.crossJoin(broadcast(thr)).filter(col("w") > col("t")).select("u", "v")
+    // one job reads the cut, so every consumer of `e` is a filter on the cache
+    val e = ew.filter(col("w") > lit(thr.head().get(0))).select("u", "v")
     (ew, e)
   }
 
-  /** LABEL-PROPAGATION COMMUNITIES (round-10 continuation) — synchronous
-    * LPA (Raghavan et al. 2007) over the median-sparsified co-service
-    * graph: every node starts as its own label; each superstep every node
-    * adopts the most frequent label among its neighbors, ties to the
-    * SMALLEST label — the deterministic variant, so the fixed `steps`
-    * supersteps produce one well-defined labeling on any engine (async
-    * LPA's order-dependence is exactly what's excluded). Output: each
-    * supplier's community after `steps` rounds plus the community size.
+  /** TRIANGLE COUNT + global clustering coefficient (round 10) over the
+    * supplier CO-SERVICE projection: suppliers are adjacent when they
+    * served at least `minOrders` common orders (the bipartite trade graph
+    * itself is triangle-free, so the one-mode projection is where
+    * community structure lives; the strength threshold is also the
+    * density control — the sf0.1 projection thins 453k raw pairs to 48k
+    * edges at the default).
     *
-    * Scale: one superstep = one equi-join of the adjacency with the
-    * (node, label) table + a (node, label) count aggregate + a min-struct
-    * argmax per node — the two-exchange Pregel shape [[pageRank]]
-    * documents, rows never wider than three longs; the argmax is an
-    * aggregate (`min(struct(-c, lbl))`), NOT a per-node window, so no
-    * degree-sized partition materializes. Fixed `steps` bounds the
-    * lineage (localCheckpoint every 2).
+    * The count is the classic oriented two-join: with every edge stored
+    * once as `u < v`, a triangle `a<b<c` is found EXACTLY once as
+    * e(a,b) ⋈ e(b,c) ⋈ e(a,c) — two hash equi-joins, no direction
+    * double-counting, no cartesian anywhere. Wedges come from the degree
+    * table (`Σ d(d−1)/2`, integers), so the global clustering
+    * coefficient `3·triangles / wedges` lands in exact permille.
+    *
+    * Scale: per-order supplier pairs are bounded by (suppliers/order)²
+    * — a fan-out the fixture caps at ~50, and real procurement data
+    * keeps small; the edge aggregate shuffles (u, v) pairs once; the
+    * triangle join's intermediate is the wedge set, Σ d² — the
+    * threshold parameter is the knob that keeps it subquadratic, which
+    * is exactly how production triangle counts run (strength-thresholded
+    * or degree-ordered).
     */
-  def lpaCommunities(spark: SparkSession, dir: String, steps: Int = 3,
-      cutPermille: Int = 900): DataFrame = {
-    require(steps >= 1, s"steps must be >= 1, got $steps")
-    val (ew, e) = sparsifiedCoServiceEdges(spark, dir, cutPermille)
-    val adj = e.select(col("u").as("v"), col("v").as("nb"))
-      .union(e.select(col("v").as("v"), col("u").as("nb")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()
-    var labels = adj.select(col("v")).distinct().withColumn("lbl", col("v"))
-    (1 to steps).foreach { i =>
-      val counted = adj.join(labels.select(col("v").as("nb"), col("lbl")), "nb")
-        .groupBy("v", "lbl").agg(count(lit(1)).as("c"))
-      labels = counted
-        .groupBy("v")
-        .agg(min(struct((-col("c")).as("negc"), col("lbl").as("lbl"))).as("m"))
-        .select(col("v"), col("m.lbl").as("lbl"))
-      if (i % 2 == 0) labels = labels.localCheckpoint(true)
-    }
-    val sized = labels.join(labels.groupBy("lbl").agg(count(lit(1)).as("sz")), "lbl")
-      .select(col("v").as("supplier"), col("lbl").cast("bigint").as("community"),
-        col("sz").cast("bigint").as("community_size"))
-    val out = Dedup.materializeAndRelease(Seq(ew), sized)
-    adj.unpersist(false)
-    out
-  }
-
   def triangles(spark: SparkSession, dir: String, minOrders: Long = 5L,
       wedgeCap: Int = 1024): DataFrame =
-    trianglesCore(
-      t(spark, dir, "lineitem").select("l_orderkey", "l_suppkey").distinct(),
-      minOrders, wedgeCap)
+    trianglesCore(orderSuppliers(spark, dir), minOrders, wedgeCap)
 
   /** Hub-heavy skew twin of [[triangles]]: suppliers collapse to
     * `l_suppkey % hubMod` super-nodes BEFORE the co-order self-join, so
@@ -658,27 +692,14 @@ object Graph {
   def trianglesHubSkew(spark: SparkSession, dir: String,
       minOrders: Long = 5L, hubMod: Long = 8, wedgeCap: Int = 1024): DataFrame = {
     require(hubMod >= 1, s"hubMod must be >= 1, got $hubMod")
-    trianglesCore(
-      t(spark, dir, "lineitem")
-        .select(col("l_orderkey"), (col("l_suppkey") % hubMod).as("l_suppkey"))
-        .distinct(),
-      minOrders, wedgeCap)
+    trianglesCore(orderSuppliers(spark, dir, col("l_suppkey") % hubMod), minOrders, wedgeCap)
   }
 
-  private def trianglesCore(sup: DataFrame, minOrders: Long,
-      wedgeCap: Int = 1024): DataFrame = {
+  private def trianglesCore(sup: DataFrame, minOrders: Long, wedgeCap: Int): DataFrame = {
     require(wedgeCap >= 1, s"wedgeCap must be >= 1, got $wedgeCap")
-    val e = sup.as("a").join(sup.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_suppkey") < col("b.l_suppkey"))
-      .groupBy(col("a.l_suppkey").as("u"), col("b.l_suppkey").as("v"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= minOrders)
-      .select("u", "v")
-      .cache()
+    val e = coServiceWeights(sup).filter(col("w") >= minOrders).select("u", "v").cache()
     e.count() // fill before the multi-consumer fan-out (cache-before-AQE rule)
-    val deg = e.select(col("u").as("n")).union(e.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
+    val deg = bothWays(e, "n", "nb").groupBy("n").agg(count(lit(1)).as("d"))
     // DEGREE ORIENTATION (the standard wedge-count cut): point every edge
     // from its lower-(degree, id) endpoint, so wedges enumerate only from
     // each triangle's lowest-degree vertex — Σ C(outdeg, 2) with outdeg
@@ -688,44 +709,17 @@ object Graph {
     // lookup uses the canonical u<v edge set. Measured ~4× fewer wedge
     // rows on the sf0.1 projection. The degree table is |V| rows — plain
     // equi-joins (AQE broadcasts when genuinely small), never an
-    // unconditional broadcast (r13, the linkPredict treatment). The
-    // persisted two-consumer frame is `blocked` below (r14: oriented
-    // itself is single-consumer once the blocking subsumes it).
+    // unconditional broadcast (r13, the linkPredict treatment).
+    val lower = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
     val oriented = e
       .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-      .select(
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-          col("u")).otherwise(col("v")).as("src"),
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-          col("v")).otherwise(col("u")).as("dst"))
-    // BLOCKED wedge enumeration (r14 deep-read — closing the residual the
-    // orientation argument left open): orientation caps outdeg near
-    // √(2m), but a vertex RETAINING that outdegree still lands its
-    // C(√(2m), 2) ≈ m wedge rows on the one task owning its src key. The
-    // linkPredict cure applies verbatim: s = ⌈outdeg/wedgeCap⌉ hash
-    // sub-buckets over each src's out-neighbors, rows replicate across
-    // the other side's bucket, and the join keys on (src, bs=bo, bo=bs) —
-    // wedges BIT-identical (every out-pair meets exactly once, the
-    // property-tested blocked-self-join lemma), hot sources spread over
-    // s² keys, light sources (s = 1, every fixture vertex at the default
-    // cap) degenerate to the plain self-join.
-    val odeg = oriented.groupBy("src").agg(count(lit(1)).as("od"))
-    val blocked = oriented.join(odeg, "src")
-      .withColumn("s", expr(s"(od + ${wedgeCap - 1}L) div ${wedgeCap}L"))
-      .withColumn("bs", pmod(hash(col("dst")).cast("bigint"), col("s")))
-      .withColumn("bo", explode(expr("sequence(0L, s - 1L)")))
-      .select("src", "dst", "bs", "bo")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    blocked.count() // eager fill before the two-consumer self-join
-    val nTri = blocked.as("e1")
-      .join(blocked.as("e2"),
-        col("e1.src") === col("e2.src") &&
-          col("e1.bs") === col("e2.bo") && col("e1.bo") === col("e2.bs") &&
-          col("e1.dst") < col("e2.dst"))
-      .select(col("e1.dst").as("wu"), col("e2.dst").as("wv"))
-      .join(e, col("wu") === col("u") && col("wv") === col("v"), "left_semi")
-      .count()
+      .select(when(lower, col("u")).otherwise(col("v")).as("mid"),
+        when(lower, col("v")).otherwise(col("u")).as("nb"))
+    // BLOCKED (r14): a vertex keeping outdeg ≈ √(2m) would land its ≈ m
+    // wedge rows on one task; blocking spreads them, wedges BIT-identical
+    val (blocked, wedges) = blockedWedges(oriented, wedgeCap)
+    val nTri = wedges.join(e, Seq("u", "v"), "left_semi").count()
     val out = deg.agg(
       count(lit(1)).as("n_nodes"),
       sum(expr("d * (d - 1) div 2")).as("n_wedges"))

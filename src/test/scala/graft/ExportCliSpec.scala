@@ -29,8 +29,9 @@ class ExportCliSpec extends AnyFunSuite {
   private def checksum(df: DataFrame): BigDecimal = BigDecimal(df
     .select(sum(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)"))).head().getDecimal(0))
 
-  /** The CLI's `_AVRO_SCHEMA.avsc` for `input`, fields as (name, avro type, Spark type). */
-  private def avsc(input: String, fields: (String, String, String)*): String =
+  /** The CLI's `_AVRO_SCHEMA.avsc` for `input` read as `format`, fields as
+    * (name, avro type, Spark type). */
+  private def avsc(input: String, format: String, fields: (String, String, String)*): String =
     fields.map { case (n, t, tn) =>
       s"""{
          |    "name" : "$n",
@@ -44,12 +45,12 @@ class ExportCliSpec extends AnyFunSuite {
          |  "type" : "record",
          |  "name" : "events",
          |  "namespace" : "dbeam_generated",
-         |  "doc" : "Generate schema from JDBC ResultSet from parquet:$input",
+         |  "doc" : "Generate schema from JDBC ResultSet from $format:$input",
          |  "fields" : [ """.stripMargin,
       ", ",
       s""" ],
          |  "tableName" : "events",
-         |  "connectionUrl" : "parquet:$input"
+         |  "connectionUrl" : "$format:$input"
          |}""".stripMargin)
 
   private val eventsFields = Seq(
@@ -57,12 +58,12 @@ class ExportCliSpec extends AnyFunSuite {
     ("event_type", "string", "STRING"), ("value", "double", "DOUBLE"), ("props", "string", "STRING"))
 
   private def assertContract(out: String, input: String, query: String,
-      fields: Seq[(String, String, String)] = eventsFields): Unit = {
+      fields: Seq[(String, String, String)] = eventsFields, format: String = "parquet"): Unit = {
     assert(new File(out).list().toSet == Set("_AVRO_SCHEMA.avsc", "_MANIFEST", "_METRICS.json",
       "_SERVICE_METRICS.json", "_queries", "part-00000-of-00001.avro"))
     assert(new File(s"$out/_queries").list().toSeq == Seq("query_0.sql"))
     assert(text(s"$out/_queries/query_0.sql") == query)
-    assert(text(s"$out/_AVRO_SCHEMA.avsc") == avsc(input, fields: _*))
+    assert(text(s"$out/_AVRO_SCHEMA.avsc") == avsc(input, format, fields: _*))
   }
 
   /** Epoch-millis bounds of the `--partition=2024-01-10 --partitionPeriod=P7D` window. */
@@ -99,7 +100,7 @@ class ExportCliSpec extends AnyFunSuite {
         "WHERE event_type <> 'error') as user_sql_query " +
         "WHERE 1=1 AND ts >= '2024-01-10' AND ts < '2024-01-17' LIMIT 40",
       Seq(("event_id", "int", "INT"), ("ts", "long", "TIMESTAMP"),
-        ("event_type", "string", "STRING"), ("value", "double", "DOUBLE")))
+        ("event_type", "string", "STRING"), ("value", "double", "DOUBLE")), format = "csv")
     val rows = back(out)
     assert(rows.count() == 40)
     assert(rows.filter(col("ts") < windowStart || col("ts") >= windowEnd
@@ -159,6 +160,21 @@ class ExportCliSpec extends AnyFunSuite {
       assert(ExitCodes.forThrowable(e) == ExitCodes.IllegalArgument)
       assert(e.getMessage.contains(flag.takeWhile(_ != '=')), e.getMessage)
       assert(!new File(out).exists() && !new File(s"$tmp/refused-state").exists(), flag)
+    }
+  }
+
+  test("a file export refuses the JDBC-only flags, before any write (exit 43)") {
+    val jdbcOnly = Seq("--splitColumn=event_id", "--fetchSize=100", "--arrayMode=bytes",
+      "--preCommand=SET a=1", "--username=u", "--password=p", "--passwordFile=/x.pw",
+      "--skipReplicationDelayCheck")
+    for ((flag, i) <- jdbcOnly.zipWithIndex) {
+      val out = s"$tmp/file-refused-$i"
+      val e = intercept[IllegalArgumentException](
+        run(s"--input=$events", flag, "--queryParallelism=4", s"--output=$out"))
+      assert(ExitCodes.forThrowable(e) == ExitCodes.IllegalArgument)
+      assert(e.getMessage.contains(flag.takeWhile(_ != '=')) &&
+        e.getMessage.contains("--connectionUrl"), e.getMessage)
+      assert(!new File(out).exists(), flag)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -211,6 +211,106 @@ class GraphSpec extends AnyFunSuite {
         System.nanoTime() < deadline) Thread.sleep(50)
       assert(org.apache.spark.graft.LiveBroadcasts.ofLongArrays() subsetOf arrays,
         s"gate=$gate rank=$rank: an engine broadcast is still live")
+    }
+  }
+
+  /** The trade graph of `dir` as collected (src, dst) edges, both directions. */
+  private def tradePairs(dir: String): Seq[(Long, Long)] = {
+    val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(None))
+    try edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq finally cache.unpersist()
+  }
+
+  /** Synchronous LPA on the driver: every dst takes its in-neighbours'
+    * most frequent label, ties to the smallest. */
+  private def lpaByHand(e: Seq[(Long, Long)], steps: Int): Map[Long, Long] =
+    (1 to steps).foldLeft(e.map(_._2).distinct.map(n => n -> n).toMap) { (lbl, _) =>
+      e.groupBy(_._2).map { case (d, in) =>
+        d -> in.groupBy(x => lbl(x._1)).toSeq.map { case (l, ls) => (-ls.size, l) }.min._2
+      }
+    }
+
+  /** A reach seed: customer 1, node 2 (on the path graphs, nation 1's only customer). */
+  private def seedC1: DataFrame = spark.range(1).select(functions.lit(2L).as("node"))
+
+  /** BFS hops on the driver over every endpoint of `e`, up to `maxHops`. */
+  private def hopsByHand(e: Seq[(Long, Long)], seeds: Set[Long], maxHops: Int): Map[Long, Long] =
+    (1 to maxHops).foldLeft(seeds.map(_ -> 0L).toMap) { (hop, h) =>
+      hop ++ e.collect { case (s, d) if hop.get(s).contains(h - 1L) && !hop.contains(d) => d -> h.toLong }
+    }
+
+  private def lpaRows(edges: DataFrame, steps: Int, gate: Long): Map[Long, (Long, Long)] =
+    Graph.lpaCore(spark, edges, steps, broadcastNodes = gate).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  /** LPA rows must carry the expected labels, and each size is its label's count. */
+  private def assertLpa(got: Map[Long, (Long, Long)], want: Map[Long, Long], clue: String): Unit = {
+    assert(got.map { case (n, (l, _)) => n -> l } == want, clue)
+    val sizes = want.values.groupBy(identity).map { case (l, ls) => l -> ls.size.toLong }
+    assert(got.values.forall { case (l, sz) => sizes(l) == sz }, clue)
+  }
+
+  test("LPA: both regimes equal a driver-side recurrence, ties to the smallest label") {
+    import spark.implicits._
+    // a star, centre 9 and leaves 1-4, plus the leaf edges 1-2 and 3-4:
+    // every first-step label is a tie between singleton counts
+    val star = Seq(9L -> 1L, 9L -> 2L, 9L -> 3L, 9L -> 4L, 1L -> 2L, 3L -> 4L)
+    val graphs = Seq("star" -> (star ++ star.map(_.swap)), "path" -> tradePairs(pathDir))
+    for ((name, e) <- graphs; steps <- Seq(1, 2, 3); gate <- Seq(0L, Graph.BroadcastableNodes)) {
+      assertLpa(lpaRows(e.toDF("src", "dst"), steps, gate), lpaByHand(e, steps),
+        s"$name steps=$steps gate=$gate")
+    }
+    assert(lpaByHand(graphs.head._2, 1) == Map(9L -> 1L, 1L -> 2L, 2L -> 1L, 3L -> 4L, 4L -> 3L))
+    // the path c1-s1-c2-s2-c3: s1 sees {c1, c2}, a tie the smaller id wins
+    assert(lpaByHand(graphs(1)._2, 1)(3L) == 2L)
+  }
+
+  test("reach: both regimes equal a driver-side BFS on the path graph and past non-nodes") {
+    for ((dir, maxHops) <- Seq(pathDir -> 3, pathDir -> 4, strayDir -> 4, strayDir -> 5)) {
+      val want = hopsByHand(tradePairs(dir), Set(2L), maxHops)
+      for (gate <- Seq(0L, Graph.BroadcastableNodes)) {
+        val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(None))
+        assert(pairs(Graph.reachCore(spark, edges.select("src", "dst"), seedC1, maxHops,
+          Seq(cache), gate)) == want, s"$dir maxHops=$maxHops gate=$gate")
+      }
+      assert(pairs(Graph.reachability(spark, dir, maxHops)) == want, s"$dir maxHops=$maxHops")
+    }
+    // the stray customer 0 is not a node, but the oracle follows its edge
+    // from s2 (hop 3): it is reached at hop 4, and s0 (via c3) at hop 5
+    val stray = pairs(Graph.reachability(spark, strayDir, maxHops = 5))
+    assert(stray(0L) == 4L && stray(1L) == 5L && !stray.contains(8L), s"$stray")
+  }
+
+  test("LPA and reach release every cache and broadcast they make") {
+    val sc = spark.sparkContext
+    val dir = SparkSpec.testDataDir
+    // the cores at gate 0 run the shuffle regime, the catalog entries the array one
+    val runs = Seq[(String, () => DataFrame)](
+      "lpa shuffle" -> (() => {
+        val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(None))
+        Graph.lpaCore(spark, edges.select("src", "dst"), 3, Seq(cache), 0L)
+      }),
+      "reach shuffle" -> (() => {
+        val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(None))
+        Graph.reachCore(spark, edges.select("src", "dst"),
+          seedC1, 3, Seq(cache), 0L)
+      }),
+      "lpaCommunities" -> (() => Graph.lpaCommunities(spark, dir)),
+      "reachability" -> (() => Graph.reachability(spark, dir)))
+    for ((name, run) <- runs) {
+      val cached = sc.getPersistentRDDs.keySet
+      val arrays = org.apache.spark.graft.LiveBroadcasts.ofLongArrays()
+      val out = run()
+      // the engine's result is a local checkpoint: its RDD is the one new cache
+      val own = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(own.size == 1, name)
+      assert(sc.getPersistentRDDs.keySet == cached ++ own, name)
+      assert(out.count() > 0, name)
+      own.foreach(id => sc.getPersistentRDDs(id).unpersist(true))
+      val deadline = System.nanoTime() + 10000000000L
+      while (!(org.apache.spark.graft.LiveBroadcasts.ofLongArrays() subsetOf arrays) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      assert(org.apache.spark.graft.LiveBroadcasts.ofLongArrays() subsetOf arrays,
+        s"$name: an engine broadcast is still live")
     }
   }
 }
