@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.schema.AvroSchemaGen
 import graft.sink.AvroSink
+import graft.sources.ParquetSource
 import graft.streaming.EventStream
 
 /** Benchmark main — runs the FULL query catalog on
@@ -217,7 +218,7 @@ object Bench {
     // Warm the JVM (codegen paths, parquet footers, FS cache) before any
     // timed section — standard bench hygiene so run 1 isn't a JIT sample.
     Seq("lineitem", "documents", "embeddings", "events")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+      .foreach(t => ParquetSource.read(spark, s"$sfDir/$t.parquet").count())
     // Warm each query SHAPE once at the smallest SF: codegen compilation
     // (janino) costs ~100s of ms per novel operator tree and is a one-time
     // JVM cost, not per-query work — timing it would measure compiler
@@ -282,7 +283,7 @@ object Bench {
       // round-over-round continuity. On a real multi-file 100 TB input the
       // scan itself provides the parallelism and ensureWriteParallelism is
       // a no-op.
-      val df0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val df0 = ParquetSource.read(spark, s"$sfDir/lineitem.parquet")
       val df = if (parallelism <= 1) df0
         else AvroSink.ensureWriteParallelism(df0, parallelism)
       val schema = AvroSchemaGen.generate(df0.schema, AvroSchemaGen.Config(tableName = "lineitem"))
@@ -346,7 +347,7 @@ object Bench {
     // direct table path crashes on a single-file fixture (FileStreamSource
     // pins basePath). FileStreams.streamTable picks per layout; 3a
     // additionally asserts non-vacuous input for the section.
-    val eventsSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val eventsSchema = ParquetSource.read(spark, s"$sfDir/events.parquet").schema
     def eventsStream() =
       graft.streaming.FileStreams.streamTable(spark, sfDir, "events", eventsSchema)
 
@@ -401,15 +402,15 @@ object Bench {
     // signature store (built untimed — it is the nightly pipeline's
     // standing artifact; the timed section is the increment protocol).
     results("stream_incremental_dedup") = {
-      val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
+      val nDocs = ParquetSource.read(spark, s"$sfDir/documents.parquet").count()
       val splitId = nDocs * 9 / 10
       val store = tempDir("graft-bench-sigstore")
       graft.operators.Dedup.writeSignatureStore(
         graft.operators.Dedup.docShingleArrays(spark, sfDir), store, splitId)
-      val corpusBands = spark.read.parquet(s"$store/bands.parquet")
+      val corpusBands = ParquetSource.read(spark, s"$store/bands.parquet")
       val corpusArrays = graft.operators.Dedup.docShingleArrays(spark, sfDir)
         .filter(col("doc_id") < splitId)
-      val docsSchema = spark.read.parquet(s"$sfDir/documents.parquet").schema
+      val docsSchema = ParquetSource.read(spark, s"$sfDir/documents.parquet").schema
       time2 {
         val newDocs = graft.streaming.FileStreams
           .streamTable(spark, sfDir, "documents", docsSchema)
@@ -428,7 +429,7 @@ object Bench {
     // of a persisted IVF-PQ store (built untimed — it is the standing
     // nightly artifact; the timed section is the ingest protocol).
     results("stream_ann_ingest") = {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb = ParquetSource.read(spark, s"$sfDir/embeddings.parquet")
       val nVecs = emb.count()
       val splitId = nVecs * 9 / 10
       val store = tempDir("graft-bench-ann-store")
@@ -453,7 +454,7 @@ object Bench {
     results("stream_line_dedup") = time2 {
       val store = tempDir("graft-bench-stream-sld")
       val ckpt = tempDir("graft-bench-stream-sld-ckpt")
-      val docsSchema = spark.read.parquet(s"$sfDir/documents.parquet").schema
+      val docsSchema = ParquetSource.read(spark, s"$sfDir/documents.parquet").schema
       val newDocs = graft.streaming.FileStreams
         .streamTable(spark, sfDir, "documents", docsSchema)
         .select("doc_id", "text")

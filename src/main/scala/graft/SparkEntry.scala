@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Dedup, Graph, Layout, Multimodal, Relational, Similarity, TextAnalysis, TimeSeries}
+import graft.sources.ParquetSource
 import graft.streaming.EventStream
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -492,7 +493,7 @@ object SparkEntry {
     // spec-checked against exact counts in HllSpec
     "sketch_distinct" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      s.read.parquet(s"$d/lineitem.parquet").createOrReplaceTempView("graft_li")
+      ParquetSource.read(s, s"$d/lineitem.parquet").createOrReplaceTempView("graft_li")
       s.sql("SELECT l_returnflag, graft_hll_distinct(l_partkey) AS approx_parts, " +
         "graft_hll_distinct(l_orderkey) AS approx_orders FROM graft_li GROUP BY l_returnflag")
     }),
@@ -502,7 +503,7 @@ object SparkEntry {
     // bound hash-mismatches the driver row.
     "sketch_distinct_check" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      s.read.parquet(s"$d/lineitem.parquet").createOrReplaceTempView("graft_li")
+      ParquetSource.read(s, s"$d/lineitem.parquet").createOrReplaceTempView("graft_li")
       s.sql(
         """WITH g AS (
           | SELECT l_returnflag,
@@ -548,7 +549,7 @@ object SparkEntry {
     }),
     "sketch_quantile_check" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      s.read.parquet(s"$d/lineitem.parquet").createOrReplaceTempView("graft_li")
+      ParquetSource.read(s, s"$d/lineitem.parquet").createOrReplaceTempView("graft_li")
       s.sql(
         """WITH q AS (
           | SELECT l_returnflag,

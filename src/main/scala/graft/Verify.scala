@@ -44,6 +44,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (failures.nonEmpty) {

@@ -3,6 +3,7 @@ package graft.jobs
 
 import graft.schema.AvroSchemaGen
 import graft.sink.AvroSink
+import graft.sources.ParquetSource
 
 /** Benchmark job with the reference's shape
   * (`jobs/BenchJdbcAvroJob.java:61-129`): run the export `--executions=N`
@@ -27,7 +28,7 @@ object BenchJob {
     val spark = graft.SessionFactory.cli("graft-bench-job")
 
     val runs = (0 until executions).map { i =>
-      val df = spark.read.parquet(input)
+      val df = ParquetSource.read(spark, input)
       val t0 = System.currentTimeMillis()
       val schema = AvroSchemaGen.generate(df.schema, AvroSchemaGen.Config(tableName = "bench"))
       val m = AvroSink.write(df, schema, s"$output/run_$i", codec, System.currentTimeMillis() - t0)

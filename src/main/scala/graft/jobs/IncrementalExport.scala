@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.args.AvroSinkArgs
 import graft.schema.AvroSchemaGen
+import graft.sources.ParquetSource
 
 /** INCREMENTAL (high-watermark) export — the nightly-delta mode every
   * production export deployment of the reference ends up scripting by
@@ -79,7 +80,7 @@ object IncrementalExport {
       minRows: Long = -1,
       dataOnly: Boolean = false): ExportJob.Result = {
 
-    val base = spark.read.parquet(input)
+    val base = ParquetSource.read(spark, input)
     val field = base.schema.fields.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(
         s"incremental column $column not in schema ${base.schema.fieldNames.mkString(",")}"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable
+import graft.sources.ParquetSource
 
 /** Strategy selector for the embedding/semantic dedup family
   * ([[Dedup.embeddingNearDupsBy]], [[Dedup.semanticClusters]],
@@ -59,10 +60,10 @@ object Dedup {
   }
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    ParquetSource.read(spark, s"$dir/documents.parquet")
 
   private def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    ParquetSource.read(spark, s"$dir/embeddings.parquet")
 
   /** Exact dedup: one survivor (min doc_id) per identical text. */
   def exact(spark: SparkSession, dir: String): DataFrame =
@@ -691,7 +692,7 @@ object Dedup {
     // verification throws
     try {
       writeSignatureStore(arrays, store, splitId) // one corpus pass: reuses the cache
-      val corpusB = spark.read.parquet(s"$store/bands.parquet")
+      val corpusB = ParquetSource.read(spark, s"$store/bands.parquet")
       val newB = bandedSignatures(signaturesFrom(arrays.filter(col("doc_id") >= splitId)))
         .select(col("band"), col("k1"), col("k2"), col("doc_id").as("id_new"))
       val cand = corpusB
@@ -1764,10 +1765,10 @@ object Dedup {
       // new side can never be bucketed with mismatched hyperplanes (a
       // query-only deployment reads meta + buckets and calls
       // embeddingIncrementalFrom the same way)
-      val meta = spark.read.parquet(s"$store/meta.parquet").head()
+      val meta = ParquetSource.read(spark, s"$store/meta.parquet").head()
       embeddingIncrementalFrom(corpus, increment, threshold,
         tables = meta.getInt(0), bits = meta.getInt(1),
-        corpusBuckets = Some(spark.read.parquet(s"$store/buckets.parquet")))
+        corpusBuckets = Some(ParquetSource.read(spark, s"$store/buckets.parquet")))
     } finally {
       if (storeDir.isEmpty) { // result is checkpointed — the temp store can go
         import scala.reflect.io.Directory

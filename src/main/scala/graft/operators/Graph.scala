@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.sources.ParquetSource
+
 /** Iterative graph analytics over the trade graph the TPC-H-ish fixture
   * implies: an undirected customer⇄supplier edge for every (customer,
   * supplier) pair that ever traded (orders ⋈ lineitem, distinct pairs,
@@ -51,7 +53,7 @@ import org.apache.spark.storage.StorageLevel
 object Graph {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetSource.read(spark, s"$dir/$name.parquet")
 
   /** Rank scale: the uniform vector is `SCALE` per node. */
   val Scale = 1000000000L

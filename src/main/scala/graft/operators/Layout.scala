@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSource
+
 /** Data-layout operators: space-filling-curve clustering for
   * multi-dimensional data skipping.
   *
@@ -45,7 +47,7 @@ object Layout {
     * itself is [[cluster]]; a projection is what a driver can hash-check.
     */
   def zorderQuery(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    ParquetSource.read(spark, s"$dir/lineitem.parquet")
       .select(
         col("l_orderkey"), col("l_linenumber"),
         col("l_partkey"), col("l_suppkey"),
@@ -95,7 +97,7 @@ object Layout {
     */
   def hilbertQuery(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    ParquetSource.read(spark, s"$dir/lineitem.parquet")
       .select(
         col("l_orderkey"), col("l_linenumber"),
         col("l_partkey"), col("l_suppkey"),
@@ -173,7 +175,7 @@ object Layout {
     // the probe lattice divides by nProbes-1; ANSI would crash on div 0
     require(nChunks >= 1 && nProbes >= 2,
       s"skippingGain: need nChunks >= 1 and nProbes >= 2, got $nChunks/$nProbes")
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = ParquetSource.read(spark, s"$dir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
       .withColumn("zval", zValue(col("l_partkey"), col("l_suppkey")))
     val b = li.agg(

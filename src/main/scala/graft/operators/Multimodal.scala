@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSource
+
 /** Multimodal-column plumbing: media as opaque `binary` columns with typed
   * metadata. Header decoding is REAL for every format whose metadata is
   * parseable from raw bytes without a codec — PPM, BMP, WAV, and (since
@@ -287,7 +289,7 @@ object Multimodal {
     * oracle-checkable: md5 and lengths are engine-independent.
     */
   def binaryMeta(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    ParquetSource.read(spark, s"$dir/documents.parquet")
       .withColumn("payload", encode(col("text"), "UTF-8"))
       .select(
         col("doc_id"),
@@ -341,7 +343,7 @@ object Multimodal {
     * offsets; the slicing/fan-out plumbing is what scales.
     */
   def frameSample(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    ParquetSource.read(spark, s"$dir/documents.parquet")
       .withColumn("n_frames", expr("CAST((length(text) + 63) DIV 64 AS BIGINT)"))
       .select(
         col("doc_id"),
@@ -477,7 +479,7 @@ object Multimodal {
     */
   def plantedHeaderQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet").select("doc_id").as[Long]
+    ParquetSource.read(spark, s"$dir/documents.parquet").select("doc_id").as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
           val w = 16 + (id % 624).toInt
@@ -516,7 +518,7 @@ object Multimodal {
   /** End-to-end stub pipeline: documents → binary payload → typed decode. */
   def decodePipeline(spark: SparkSession, dir: String): Dataset[MediaMeta] = {
     import spark.implicits._
-    val media = spark.read.parquet(s"$dir/documents.parquet")
+    val media = ParquetSource.read(spark, s"$dir/documents.parquet")
       .select(
         col("doc_id"),
         lit("text/fake").as("media_type"),
@@ -701,7 +703,7 @@ object Multimodal {
     */
   def imagePpmQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet").select("doc_id").as[Long]
+    ParquetSource.read(spark, s"$dir/documents.parquet").select("doc_id").as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
           val corrupt = id % 5 == 0
@@ -754,7 +756,7 @@ object Multimodal {
     */
   def audioPcmQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet").select("doc_id").as[Long]
+    ParquetSource.read(spark, s"$dir/documents.parquet").select("doc_id").as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
           val n = 2 * (32 + (id % 64)).toInt
@@ -887,7 +889,7 @@ object Multimodal {
     */
   def imageDhashQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet").select("doc_id").as[Long]
+    ParquetSource.read(spark, s"$dir/documents.parquet").select("doc_id").as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
           val corrupt = id % 7 == 0
@@ -934,7 +936,7 @@ object Multimodal {
     */
   def audioFrameQuery(spark: SparkSession, dir: String, frameSize: Int = 32): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet").select("doc_id").as[Long]
+    ParquetSource.read(spark, s"$dir/documents.parquet").select("doc_id").as[Long]
       .mapPartitions { ids =>
         ids.flatMap { id =>
           val n = 2 * (32 + (id % 64)).toInt
@@ -1034,7 +1036,7 @@ object Multimodal {
     */
   def audioSpectrumQuery(spark: SparkSession, dir: String, frameSize: Int = 32): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet").select("doc_id").as[Long]
+    ParquetSource.read(spark, s"$dir/documents.parquet").select("doc_id").as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
           val n = 2 * (32 + (id % 64)).toInt
@@ -1083,7 +1085,7 @@ object Multimodal {
     // for them (md5 of 256 NUL bytes) while a substr-based SQL oracle
     // reconstructs md5('') — resize-of-nothing has no canonical answer, so
     // the contract is defined on non-empty payloads only (both sides filter).
-    val media = spark.read.parquet(s"$dir/documents.parquet")
+    val media = ParquetSource.read(spark, s"$dir/documents.parquet")
       .filter(length(col("text")) > 0)
       .select(
         col("doc_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSource
 import graft.sql.ParallelRanges
 
 /** Parity + relational query catalog. Each query has a DuckDB oracle in
@@ -21,7 +22,7 @@ import graft.sql.ParallelRanges
 object Relational {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetSource.read(spark, s"$dir/$name.parquet")
 
   /** Normalizes the events `ts` column across testdata generations: older
     * fixtures ship parquet TIMESTAMP(NANOS), which Spark reads only as raw
@@ -945,7 +946,7 @@ object Relational {
       .write.mode("overwrite").parquet(s"$store/batch=hist")
     state(li.filter(col("l_shipdate") >= lit(splitDate)))
       .write.mode("overwrite").parquet(s"$store/batch=new")
-    spark.read.parquet(s"$store/batch=hist", s"$store/batch=new")
+    ParquetSource.read(spark, s"$store/batch=hist", s"$store/batch=new")
       .groupBy("l_returnflag")
       .agg(sum(col("sum_cents")).as("sum_cents"), sum(col("n")).as("n"),
         min(col("min_cents")).as("min_cents"),
@@ -2360,7 +2361,7 @@ object Relational {
         .groupBy("l_returnflag", "l_linenumber")
         .agg(expr("graft_hll_sketch(l_partkey)").as("sk"))
         .write.mode("overwrite").parquet(s"$store/hll.parquet")
-      val merged = spark.read.parquet(s"$store/hll.parquet")
+      val merged = ParquetSource.read(spark, s"$store/hll.parquet")
         .groupBy("l_returnflag")
         .agg(expr("graft_hll_merge(sk)").as("est_parts"))
       val exact = t(spark, dir, "lineitem")
@@ -2393,7 +2394,7 @@ object Relational {
         .groupBy("shard")
         .agg(expr("graft_freq_sketch(event_type)").as("sk"))
         .write.mode("overwrite").parquet(s"$store/freq.parquet")
-      val merged = spark.read.parquet(s"$store/freq.parquet")
+      val merged = ParquetSource.read(spark, s"$store/freq.parquet")
         .select(explode(expr("graft_freq_merge_items(sk, 10)")).as("t"))
         .select(col("t.item").as("event_type"),
           col("t.estimate").as("est"))
@@ -2413,7 +2414,7 @@ object Relational {
         .groupBy("l_returnflag", "l_linenumber")
         .agg(expr("graft_kll_sketch(l_quantity)").as("sk"))
         .write.mode("overwrite").parquet(s"$store/kll.parquet")
-      spark.read.parquet(s"$store/kll.parquet").createOrReplaceTempView("graft_kll_blobs")
+      ParquetSource.read(spark, s"$store/kll.parquet").createOrReplaceTempView("graft_kll_blobs")
       t(spark, dir, "lineitem").createOrReplaceTempView("graft_li")
       spark.sql(
         """WITH q AS (
@@ -2447,7 +2448,7 @@ object Relational {
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(expr("graft_theta_sketch(user_id)").as("sk"))
         .write.mode("overwrite").parquet(s"$store/theta.parquet")
-      val merged = spark.read.parquet(s"$store/theta.parquet")
+      val merged = ParquetSource.read(spark, s"$store/theta.parquet")
         .groupBy("event_type")
         .agg(expr("graft_theta_merge_est(sk)").as("est_users"))
       val exact = events(spark, dir)

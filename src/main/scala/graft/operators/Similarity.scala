@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable
+import graft.sources.ParquetSource
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`Array[Float]`, 64-dim).
@@ -20,7 +21,7 @@ import graft.functions.Portable
 object Similarity {
 
   private def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    ParquetSource.read(spark, s"$dir/embeddings.parquet")
 
   /** (vec_id, embedding, norm) with zero-norm vectors EXCLUDED — the same
     * contract [[normedOf]] documents for the PQ family, applied at the
@@ -807,9 +808,9 @@ object Similarity {
   def ivfTopKViaStore(spark: SparkSession, dir: String, storeDir: String,
       k: Int = 10, nQueries: Int = 5, numProbes: Int = NumProbes): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val centroids = spark.read.parquet(s"$storeDir/centroids.parquet")
+    val centroids = ParquetSource.read(spark, s"$storeDir/centroids.parquet")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-    val assignments = spark.read.parquet(s"$storeDir/assignments.parquet")
+    val assignments = ParquetSource.read(spark, s"$storeDir/assignments.parquet")
     val e = withNorm(embeddings(spark, dir))
     val assigned = e.join(assignments, "vec_id")
     ivfProbeTopK(e, assigned, centroids, k, nQueries, numProbes)
@@ -1343,13 +1344,13 @@ object Similarity {
   def pqTopKViaStore(spark: SparkSession, dir: String, storeDir: String,
       k: Int = 10, nQueries: Int = 5, pqShortlist: Int = PqShortlist): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val rows = spark.read.parquet(s"$storeDir/codebooks.parquet")
+    val rows = ParquetSource.read(spark, s"$storeDir/codebooks.parquet")
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray)).toMap
     val nCentroids = rows.keys.map(_._2).max + 1
     val books = Array.tabulate(PqSubspaces) { s =>
       Array.tabulate(nCentroids)(c => rows((s, c)))
     }
-    val coded = spark.read.parquet(s"$storeDir/codes.parquet")
+    val coded = ParquetSource.read(spark, s"$storeDir/codes.parquet")
     val e = withNorm(embeddings(spark, dir))
     pqQueryStage(e, normedOf(e), coded, books, k, nQueries, nCentroids, pqShortlist)
   }
@@ -1606,7 +1607,7 @@ object Similarity {
     // on 8-byte ids against the ~16-byte/vector coded artifact, never
     // embeddings. (The streaming twin, StreamAnnIngest, gets the same
     // guarantee from its versioned OVERWRITE-by-batchId layout.)
-    val existing = spark.read.parquet(s"$storeDir/coded.parquet").select("vec_id")
+    val existing = ParquetSource.read(spark, s"$storeDir/coded.parquet").select("vec_id")
     val fresh = encodeWithStoreModels(embeddings(spark, dir).filter(newVecs), storeDir)
       .join(existing, Seq("vec_id"), "left_anti")
       // materialize BEFORE the append opens the target for writing: the
@@ -1636,11 +1637,11 @@ object Similarity {
     * `coded.parquet` plus every `increments/v*.parquet` batch directory.
     */
   def codedWithIncrements(spark: SparkSession, storeDir: String): DataFrame = {
-    val base = spark.read.parquet(s"$storeDir/coded.parquet")
+    val base = ParquetSource.read(spark, s"$storeDir/coded.parquet")
     val incRoot = new java.io.File(s"$storeDir/increments")
     val incs = if (incRoot.isDirectory)
       incRoot.listFiles().filter(_.getName.startsWith("v")).map(f =>
-        spark.read.parquet(f.getAbsolutePath)).toSeq
+        ParquetSource.read(spark, f.getAbsolutePath)).toSeq
     else Seq.empty
     incs.foldLeft(base)(_ unionByName _)
   }
@@ -1663,9 +1664,9 @@ object Similarity {
 
   private def loadIvfPqModels(spark: SparkSession, storeDir: String)
       : (Array[(Int, Seq[Double])], Array[Array[Array[Double]]]) = {
-    val centroids = spark.read.parquet(s"$storeDir/centroids.parquet")
+    val centroids = ParquetSource.read(spark, s"$storeDir/centroids.parquet")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-    val rows = spark.read.parquet(s"$storeDir/codebooks.parquet")
+    val rows = ParquetSource.read(spark, s"$storeDir/codebooks.parquet")
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray)).toMap
     val nCentroids = rows.keys.map(_._2).max + 1
     val books = Array.tabulate(PqSubspaces) { s =>
@@ -1739,7 +1740,7 @@ object Similarity {
       pqShortlist: Int = PqShortlist, embFrame: Option[DataFrame] = None): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val (centroids, books) = loadIvfPqModels(spark, storeDir)
-    val coded = spark.read.parquet(s"$storeDir/coded.parquet")
+    val coded = ParquetSource.read(spark, s"$storeDir/coded.parquet")
     // embFrame: an already-cached embeddings frame (the recall gates share
     // one across their build / exact / query stages) — same seam as
     // writeIvfPqIndex, so the gates exercise THIS function, not a copy
@@ -1911,11 +1912,11 @@ object Similarity {
   def sqTopKViaStore(spark: SparkSession, dir: String, storeDir: String,
       k: Int = 10, nQueries: Int = 5, sqShortlist: Int = 100): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val rows = spark.read.parquet(s"$storeDir/params.parquet")
+    val rows = ParquetSource.read(spark, s"$storeDir/params.parquet")
       .collect().map(r => r.getInt(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     val mn = Array.tabulate(rows.size)(d => rows(d)._1)
     val scale = Array.tabulate(rows.size)(d => rows(d)._2)
-    val coded = spark.read.parquet(s"$storeDir/codes.parquet")
+    val coded = ParquetSource.read(spark, s"$storeDir/codes.parquet")
     val e = withNorm(embeddings(spark, dir))
     sqQueryStage(e, normedOf(e), coded, mn, scale, k, nQueries, sqShortlist)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable
+import graft.sources.ParquetSource
 
 /** Text-analysis operators for a training-data pipeline, over the
   * `documents` table. All formulas are integer-count based (ratios as a
@@ -16,7 +17,7 @@ import graft.functions.Portable
 object TextAnalysis {
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    ParquetSource.read(spark, s"$dir/documents.parquet")
 
   /** Whitespace + BPE-ish token counting. */
   def tokenCount(spark: SparkSession, dir: String): DataFrame =
@@ -2043,7 +2044,7 @@ object TextAnalysis {
     */
   def bpeEncodeViaStore(spark: SparkSession, dir: String, storeDir: String): DataFrame = {
     val ranks: Map[(String, String), Int] =
-      spark.read.parquet(s"$storeDir/bpe_merges.parquet").collect()
+      ParquetSource.read(spark, s"$storeDir/bpe_merges.parquet").collect()
         .map(r => (r.getString(1), r.getString(2)) -> r.getInt(0)).toMap
     encodeDocsWith(spark, dir, ranks)
   }

@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Avro container-file sink with the reference's output contract
   * (`/root/reference/dbeam-core/src/main/java/com/spotify/dbeam/avro/JdbcAvroIO.java:60-232`):
@@ -121,8 +122,12 @@ object AvroSink {
     val meterFlushes = sc.longAccumulator("meterFlushes")
 
     val sparkSchema = df.schema
-    // Serializable snapshot of the Hadoop conf keys we need executor-side.
-    val fsDefault = sc.hadoopConfiguration.get("fs.defaultFS", "file:///")
+    // The session's whole Hadoop conf, shipped once per write as Spark's own
+    // file writers ship it: `spark.hadoop.*` keys, credentials and
+    // `fs.<scheme>.impl` reach the tasks, and no task re-parses
+    // `core-default.xml` into a fresh Configuration.
+    val hadoopConf = sc.broadcast(
+      new SerializableConfiguration(new Configuration(sc.hadoopConfiguration)))
 
     val rdd0 = df.queryExecution.toRdd // InternalRow — avoids Row materialization
     // A zero-partition plan (e.g. an empty LocalRelation) would run no
@@ -136,15 +141,13 @@ object AvroSink {
     val job = rdd.mapPartitionsWithIndex { (idx, rows) =>
       val t0 = System.currentTimeMillis()
       val schema = new Schema.Parser().parse(schemaJson)
-      val conf = new Configuration()
-      conf.set("fs.defaultFS", fsDefault)
       val finalPath = new Path(outputDir, f"part-$idx%05d-of-$numPartitions%05d.avro")
       // The temp name carries the task attempt id so concurrent speculative /
       // zombie attempts for the same partition never write the same file —
       // each attempt races only on the final atomic rename.
       val attemptId = Option(org.apache.spark.TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
       val tmpPath = new Path(outputDir, f".tmp-part-$idx%05d-of-$numPartitions%05d-attempt-$attemptId.avro")
-      val fs = finalPath.getFileSystem(conf)
+      val fs = finalPath.getFileSystem(hadoopConf.value.value)
       fs.setWriteChecksum(false) // no .crc sidecars on the local FS
       var n = 0L
       var queryElapsed = 0L

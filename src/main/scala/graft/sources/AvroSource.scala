@@ -10,6 +10,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Reads Avro container files (the sink's own output format) back into a
   * DataFrame — no spark-avro on this classpath, so this is a small
@@ -69,17 +70,18 @@ object AvroSource {
     }
     val sparkSchema = toStructType(avroSchema)
     val schemaJson = avroSchema.toString
-    val fsDefault = conf.get("fs.defaultFS", "file:///")
+    // Shipped once per read, like the sink's: every task sees the session's
+    // Hadoop conf (credentials, `fs.<scheme>.impl`), not a fresh default.
+    val taskConf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(new Configuration(conf)))
 
     val rows = spark.sparkContext
       .parallelize(files.toIndexedSeq, files.length)
       .flatMap { file =>
-        val c = new Configuration()
-        c.set("fs.defaultFS", fsDefault)
         val p = new Path(file)
         val schema = new Schema.Parser().parse(schemaJson)
         val stream = new DataFileStream[GenericRecord](
-          p.getFileSystem(c).open(p), new GenericDatumReader[GenericRecord](schema))
+          p.getFileSystem(taskConf.value.value).open(p), new GenericDatumReader[GenericRecord](schema))
         // Close on task completion too: a consumer that abandons the
         // iterator early (LIMIT, take) never reaches the drained-close in
         // hasNext, and a long-lived executor would leak the file handle.

@@ -192,7 +192,7 @@ final case class FileSource(path: String, format: String, tableName: String,
 
   /** The input as stored, before any query argument applies. */
   def base(spark: SparkSession): DataFrame = format match {
-    case "parquet" => spark.read.parquet(path)
+    case "parquet" => ParquetSource.read(spark, path)
     case "csv" => spark.read
       .option("header", "true")
       .option("inferSchema", "true")
@@ -274,10 +274,4 @@ object FileSource {
       else if (name.endsWith(".avro")) "avro"
       else "parquet"
     }
-}
-
-/** The parquet [[FileSource]]. */
-object ParquetSource {
-  def apply(path: String, tableName: String, args: QueryArgs): FileSource =
-    FileSource(path, "parquet", tableName, args)
 }

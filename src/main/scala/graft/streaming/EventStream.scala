@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
+import graft.sources.ParquetSource
+
 /** Structured Streaming operators over the `events` table, each with a
   * batch-equivalent twin so correctness is oracle-checkable (the streaming
   * and batch versions are asserted equal in StreamingSpec).
@@ -28,7 +30,7 @@ object EventStream {
   /** Streaming hourly aggregation: watermark + tumbling window. */
   def hourlyAggStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = ParquetSource.read(spark, s"$dir/events.parquet").schema
     // layout-aware: handles both a single `events.parquet` FILE and a
     // Spark-written directory of part files (ADVICE r15; see FileStreams)
     FileStreams.streamTable(spark, dir, "events", schema)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.ParquetSource
+
 /** Streaming BOILERPLATE-COUNT store — the ingest half of corpus-level
   * line dedup ([[graft.operators.TextAnalysis.lineDedup]]) run as data
   * lands: per micro-batch, each document's aligned segments fold into a
@@ -58,7 +60,7 @@ object StreamLineDedup {
       .agg(countDistinct(col("doc_id")).as("n_docs"))
     val merged = VersionedStore.latestVersion(spark, storeDir, below = Some(batchId)) match {
       case Some(prev) =>
-        spark.read.parquet(prev).select(col("gh"), col("n_docs"))
+        ParquetSource.read(spark, prev).select(col("gh"), col("n_docs"))
           .union(newCounts)
           .groupBy("gh")
           .agg(sum("n_docs").as("n_docs"))
@@ -73,7 +75,7 @@ object StreamLineDedup {
     */
   def boilerplate(spark: SparkSession, storeDir: String,
       minDocs: Long = 2): DataFrame =
-    spark.read.parquet(VersionedStore.latestOrFail(spark, storeDir, "line-dedup"))
+    ParquetSource.read(spark, VersionedStore.latestOrFail(spark, storeDir, "line-dedup"))
       .filter(col("n_docs") >= minDocs)
       .select(col("gh"), col("n_docs").cast("bigint").as("n_docs"))
 
@@ -87,7 +89,7 @@ object StreamLineDedup {
       segWords: Int = 10, minDocs: Long = 2): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val segs = graft.operators.TextAnalysis
-      .segmentsOf(spark.read.parquet(s"$dir/documents.parquet"), segWords)
+      .segmentsOf(ParquetSource.read(spark, s"$dir/documents.parquet"), segWords)
       .withColumn("gh", graft.functions.Portable.polyHash60Native("seg"))
     val boiler = boilerplate(spark, storeDir, minDocs)
       .select(col("gh"), lit(true).as("is_boiler"))

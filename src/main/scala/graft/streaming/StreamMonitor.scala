@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.ParquetSource
+
 /** Streaming pipeline-health MONITOR — the online form of
   * `events_anomaly_mad`: each micro-batch folds its (event_type, hour)
   * counts into a persisted, VERSIONED count store (the
@@ -53,7 +55,7 @@ object StreamMonitor {
       .agg(count(lit(1)).as("n"))
     val merged = VersionedStore.latestVersion(spark, storeDir, below = Some(batchId)) match {
       case Some(prev) =>
-        spark.read.parquet(prev).select("event_type", "hour", "n")
+        ParquetSource.read(spark, prev).select("event_type", "hour", "n")
           .union(newCounts)
           .groupBy("event_type", "hour")
           .agg(sum("n").as("n"))
@@ -68,7 +70,7 @@ object StreamMonitor {
     */
   def flags(spark: SparkSession, storeDir: String): DataFrame =
     graft.operators.Relational.anomalyFromCounts(
-      spark.read.parquet(latest(spark, storeDir)).select("event_type", "hour", "n"))
+      ParquetSource.read(spark, latest(spark, storeDir)).select("event_type", "hour", "n"))
 
   /** Exact integer EWMA over the same store (r10) — the batch
     * `events_ewma` fold body
@@ -80,7 +82,7 @@ object StreamMonitor {
     */
   def ewma(spark: SparkSession, storeDir: String): DataFrame =
     graft.operators.Relational.ewmaFromCounts(
-      spark.read.parquet(latest(spark, storeDir))
+      ParquetSource.read(spark, latest(spark, storeDir))
         .select(col("event_type"), col("hour"), col("n").as("y")))
 
   /** Densified + gap-filled hourly series over the same store — the batch
@@ -89,7 +91,7 @@ object StreamMonitor {
     */
   def filled(spark: SparkSession, storeDir: String): DataFrame =
     graft.operators.Relational.gapfillFromCounts(
-      spark.read.parquet(latest(spark, storeDir)).select("event_type", "hour", "n"))
+      ParquetSource.read(spark, latest(spark, storeDir)).select("event_type", "hour", "n"))
 
   private def latest(spark: SparkSession, storeDir: String): String =
     VersionedStore.latestOrFail(spark, storeDir, "monitor")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Relational
+import graft.sources.ParquetSource
 
 /** Streaming SCD TYPE-2 maintenance — the online form of `events_scd2`:
   * each micro-batch folds its events into maximal runs
@@ -57,7 +58,7 @@ object StreamScd2 {
     val merged = VersionedStore.latestVersion(spark, storeDir, below = Some(batchId)) match {
       case Some(prev) =>
         Relational.scd2MergeRuns(
-          spark.read.parquet(prev)
+          ParquetSource.read(spark, prev)
             .select("user_id", "event_type", "first_ts", "first_eid", "n_events")
             .union(newRuns))
       case None => newRuns
@@ -70,6 +71,6 @@ object StreamScd2 {
     * operator's interval body, verbatim, over the newest version. */
   def intervals(spark: SparkSession, storeDir: String): DataFrame =
     Relational.scd2RunsToIntervals(
-      spark.read.parquet(VersionedStore.latestOrFail(spark, storeDir, "scd2"))
+      ParquetSource.read(spark, VersionedStore.latestOrFail(spark, storeDir, "scd2"))
         .select("user_id", "event_type", "first_ts", "first_eid", "n_events"))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
+import graft.sources.ParquetSource
 
 /** STREAMING DSIR scoring — the train-offline / score-online deployment
   * shape: a model is trained ONCE on a frozen corpus snapshot
@@ -33,7 +34,7 @@ object StreamScore {
       numBuckets: Int, checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     graft.functions.GraftFunctions.register(spark)
-    val cost = spark.read.parquet(s"$modelDir/dsir_cost.parquet")
+    val cost = ParquetSource.read(spark, s"$modelDir/dsir_cost.parquet")
     newDocs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

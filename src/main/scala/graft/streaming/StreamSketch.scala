@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.ParquetSource
+
 /** Streaming sketch rollup — per micro-batch, per-key sketch blobs (HLL,
   * KLL or theta, r9) are merged into a PERSISTED, VERSIONED sketch store:
   * the standing corpus-statistics artifact a 100 TB ingest pipeline
@@ -90,7 +92,7 @@ object StreamSketch {
       .agg(expr(buildExpr).as("sk"))
     val merged = VersionedStore.latestVersion(spark, storeDir, below = Some(batchId)) match {
       case Some(prev) =>
-        spark.read.parquet(prev).select(col(keyCol), col("sk"))
+        ParquetSource.read(spark, prev).select(col(keyCol), col("sk"))
           .union(newBlobs)
           .groupBy(col(keyCol))
           .agg(expr(mergeExpr).as("sk"))
@@ -112,7 +114,7 @@ object StreamSketch {
       case other => throw new IllegalArgumentException(
         s"estimates() reads hll|theta stores, got $other — use quantiles() for kll")
     }
-    spark.read.parquet(latest(spark, storeDir))
+    ParquetSource.read(spark, latest(spark, storeDir))
       .groupBy(col(keyCol))
       .agg(expr(estExpr).as("approx_distinct"))
   }
@@ -121,7 +123,7 @@ object StreamSketch {
   def heavyHitters(spark: SparkSession, storeDir: String, keyCol: String,
       k: Int = 10): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(latest(spark, storeDir))
+    ParquetSource.read(spark, latest(spark, storeDir))
       .groupBy(col(keyCol))
       .agg(expr(s"graft_freq_merge_items(sk, $k)").as("top"))
   }
@@ -133,7 +135,7 @@ object StreamSketch {
     // 'D' suffix: a bare 0.5 parses as DECIMAL, which the rank-array
     // reader (toDoubleArray) rejects
     val rankArr = ranks.map(r => s"${r}D").mkString("array(", ", ", ")")
-    spark.read.parquet(latest(spark, storeDir))
+    ParquetSource.read(spark, latest(spark, storeDir))
       .groupBy(col(keyCol))
       .agg(expr(s"graft_kll_merge_quantiles(sk, $rankArr)").as("qs"))
   }

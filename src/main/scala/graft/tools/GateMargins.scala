@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Relational, Similarity, TextAnalysis}
+import graft.sources.ParquetSource
 
 /** `Probe margins`: operating-margin audit of every TOLERANCE gate in the
   * catalog — the systematic form of what the r17 sf0.1 adversarial sweep
@@ -83,7 +84,7 @@ object GateMargins {
       }
 
       // --- sketch accuracy gates: budget consumption of the 5% bounds ----
-      spark.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("gm_li")
+      ParquetSource.read(spark, s"$dir/lineitem.parquet").createOrReplaceTempView("gm_li")
       Relational.events(spark, dir).createOrReplaceTempView("gm_events")
       locally {
         val rows = spark.sql(
@@ -148,12 +149,12 @@ object GateMargins {
       }
       locally {
         // same sharded-merge path as hllStoreMergeCheck, bound cast removed
-        val merged = spark.read.parquet(s"$dir/lineitem.parquet")
+        val merged = ParquetSource.read(spark, s"$dir/lineitem.parquet")
           .groupBy("l_returnflag", "l_linenumber")
           .agg(expr("graft_hll_sketch(l_partkey)").as("sk"))
           .groupBy("l_returnflag")
           .agg(expr("graft_hll_merge(sk)").as("est_parts"))
-        val exact = spark.read.parquet(s"$dir/lineitem.parquet")
+        val exact = ParquetSource.read(spark, s"$dir/lineitem.parquet")
           .groupBy("l_returnflag")
           .agg(countDistinct(col("l_partkey")).as("exact_parts"))
         val rows = exact.join(merged, "l_returnflag")
@@ -181,7 +182,7 @@ object GateMargins {
       }
       locally {
         // merged-KLL q50 rank distance, same band arithmetic as above
-        spark.read.parquet(s"$dir/lineitem.parquet")
+        ParquetSource.read(spark, s"$dir/lineitem.parquet")
           .groupBy("l_returnflag", "l_linenumber")
           .agg(expr("graft_kll_sketch(l_quantity)").as("sk"))
           .createOrReplaceTempView("gm_kll_blobs")
@@ -208,7 +209,7 @@ object GateMargins {
 
       // --- bloom gates ---------------------------------------------------
       locally {
-        spark.read.parquet(s"$dir/orders.parquet")
+        ParquetSource.read(spark, s"$dir/orders.parquet")
           .createOrReplaceTempView("gm_bloom_orders")
         val r = spark.sql(
           """WITH members AS (

@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.sources.ParquetSource
 import graft.{Bench, SessionFactory, SparkEntry}
 
 /** The one probe entry point for catalog rows. Every mode times a row with
@@ -237,7 +238,7 @@ object Probe {
     val tables = Option(new File(src).list()).getOrElse(Array.empty[String])
       .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
     tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
+      val df = ParquetSource.read(spark, s"$src/$t.parquet")
       val copies = recipes.get(t).fold(Seq(df)) { recipe =>
         df +: (1 until k).map(i => df.withColumns(recipe(df, i.toLong).toMap))
       }

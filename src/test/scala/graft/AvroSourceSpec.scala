@@ -36,6 +36,33 @@ class AvroSourceSpec extends AnyFunSuite {
     assert(back.rdd.getNumPartitions == li.rdd.getNumPartitions)
   }
 
+  test("the sink and the reader's tasks run on the session's Hadoop conf") {
+    // A scheme known only to the context's Hadoop conf: a task that builds
+    // its own Configuration cannot resolve it. Uncached, so no FileSystem
+    // the driver made can stand in for the task's own lookup.
+    val scheme = SchemeLocalFileSystem.Scheme
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set(s"fs.$scheme.impl", classOf[SchemeLocalFileSystem].getName)
+    hc.setBoolean(s"fs.$scheme.impl.disable.cache", true)
+    try {
+      val nation = spark.read.parquet(s"${SparkSpec.testDataDir}/nation.parquet")
+      val schema = AvroSchemaGen.generate(nation.schema, AvroSchemaGen.Config(tableName = "nation"))
+      val local = Files.createTempDirectory("avro-hadoop-conf").toString
+      AvroSink.write(nation, schema, s"$scheme://$local/out", "deflate1")
+      assert(new java.io.File(s"$local/out/part-00000-of-00001.avro").isFile)
+      AvroSink.write(nation, schema, s"$local/plain", "deflate1")
+      for (dir <- Seq(s"$scheme://$local/out", s"$scheme://$local/plain")) {
+        val back = AvroSource.read(spark, dir)
+        assert(back.count() == nation.count(), dir)
+        assert(back.select("n_nationkey", "n_name")
+          .exceptAll(nation.select("n_nationkey", "n_name")).isEmpty, dir)
+      }
+    } finally {
+      hc.unset(s"fs.$scheme.impl")
+      hc.unset(s"fs.$scheme.impl.disable.cache")
+    }
+  }
+
   test("commit manifest: written after parts, rejects partition-count drift") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
