@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.ParquetSource
@@ -31,8 +32,8 @@ import graft.sources.ParquetSource
   *   - PageRank, components, reach and LPA share ONE superstep engine,
   *     [[supersteps]]: each brings its state init, array kernel (sum, min
   *     or mode) and shuffle step; the node count picks the regime once
-  *   - the edge table is built ONCE from a cached pair table and
-  *     persisted in the layout its regime needs
+  *   - the engine takes UNDIRECTED (u, v) pairs and builds both edge
+  *     directions itself in its one edge build; only reach caches its pairs
   *   - up to [[BroadcastableNodes]] nodes, [[arraySupersteps]]: state is
   *     one long per node on the driver, the edges are cached as
   *     per-partition primitive arrays partitioned on `dst`, and a
@@ -58,44 +59,23 @@ object Graph {
   /** Rank scale: the uniform vector is `SCALE` per node. */
   val Scale = 1000000000L
 
-  /** Symmetric trade edges with out-degree, one row per directed edge:
-    * (src, dst, outdeg). Distinct pairs only — edge weight is ignored by
-    * design (the oracle does the same).
+  /** The distinct undirected trade pairs: (u, v) = (customer node, supplier
+    * node `snode`), uncached — the superstep engine reads them once and
+    * builds both edge directions itself. Distinct pairs only — edge weight
+    * is ignored by design (the oracle does the same). `snode` is the seam
+    * the hub-skew twins use to collapse suppliers into super-nodes.
     */
-  def tradeEdges(spark: SparkSession, dir: String): DataFrame = {
-    val (pairs, edges) = tradeEdgesFrom(spark, dir, col("l_suppkey") * 2 + 1)
-    Dedup.materializeAndRelease(Seq(pairs), edges)
-  }
-
-  /** [[tradeEdges]] generalized over the supplier-node expression — the
-    * seam the hub-skew twin uses to collapse suppliers into super-nodes.
-    *
-    * Returns (the CACHED distinct pair table, the edge frame built on it);
-    * the caller unpersists the pair cache once edges are materialized.
-    * Caching matters (r17 opt, measured in the pageRank SQL tab): `pairs`
-    * is referenced four times in the edge plan (both union branches, then
-    * both again under the degree aggregate), and Spark does not dedupe
-    * common subtrees — uncached, the orders ⋈ lineitem → distinct build
-    * (the most expensive stage of every graph query) executed TWICE per
-    * edge materialization even with exchange reuse.
-    */
-  private[graft] def tradeEdgesFrom(spark: SparkSession, dir: String,
-      snode: Column): (DataFrame, DataFrame) = {
+  private[graft] def tradePairs(spark: SparkSession, dir: String,
+      snode: Column = col("l_suppkey") * 2 + 1): DataFrame =
     // dedupe (order, supplier) BEFORE the join: the distinct shuffles on
     // l_orderkey — the join key the rows need anyway — and shrinks the
     // join output ~4x (multi-lineitem orders) ahead of the wide pair
     // distinct; at fact-table scale this is the difference between
     // shuffling lineitem once and shuffling the joined pairs too
-    val pairs = t(spark, dir, "orders").select("o_orderkey", "o_custkey")
+    t(spark, dir, "orders").select("o_orderkey", "o_custkey")
       .join(orderSuppliers(spark, dir), col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("u"), snode.as("v")) // customer, supplier node
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // eager fill — four consumers below (cache-before-AQE rule)
-    val directed = bothWays(pairs, "src", "dst")
-    val deg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    (pairs, directed.join(deg, "src"))
-  }
 
   /** All graph nodes (isolated customers/suppliers included — they keep
     * the base rank, identically in the oracle). */
@@ -118,11 +98,9 @@ object Graph {
     */
   def pageRank(spark: SparkSession, dir: String, iters: Int = 5,
       dampPct: Long = 85, scale: Long = Scale,
-      checkpointEvery: Int = 4): DataFrame = {
-    val (pairs, edges) = tradeEdgesFrom(spark, dir, col("l_suppkey") * 2 + 1)
-    pageRankCore(spark, edges, tradeNodes(spark, dir),
-      iters, dampPct, scale, checkpointEvery, extraCaches = Seq(pairs))
-  }
+      checkpointEvery: Int = 4): DataFrame =
+    pageRankCore(spark, tradePairs(spark, dir), tradeNodes(spark, dir),
+      iters, dampPct, scale, checkpointEvery)
 
   /** Hub-heavy degree-skew twin of [[pageRank]]: the identical integer
     * recurrence over the trade graph with the supplier side COLLAPSED to
@@ -139,9 +117,8 @@ object Graph {
       hubMod: Long = 8, dampPct: Long = 85, scale: Long = Scale,
       checkpointEvery: Int = 4): DataFrame = {
     require(hubMod >= 1, s"hubMod must be >= 1, got $hubMod")
-    val (pairs, edges) = tradeEdgesFrom(spark, dir, (col("l_suppkey") % hubMod) * 2 + 1)
-    pageRankCore(spark, edges, hubNodes(spark, dir, hubMod), iters, dampPct, scale,
-      checkpointEvery, extraCaches = Seq(pairs))
+    pageRankCore(spark, tradePairs(spark, dir, (col("l_suppkey") % hubMod) * 2 + 1),
+      hubNodes(spark, dir, hubMod), iters, dampPct, scale, checkpointEvery)
   }
 
   /** Node count up to which the superstep state lives on the driver as
@@ -182,23 +159,23 @@ object Graph {
 
   /** One partition of the array engine's edge cache: edge `k` runs from
     * node index `src(k)` into local slot `slot(k)`, whose node index is
-    * `dst(slot(k))`; `outdeg(k)` is the source's out-degree over ALL edges
-    * (empty unless the edge frame carries it). Edges are partitioned on
+    * `dst(slot(k))` and whose in-degree over ALL edges (its out-degree, the
+    * edges being symmetric) is `deg(slot(k))`. Edges are partitioned on
     * `dst`, so every dst owns one slot in one partition and sees all its
-    * in-edges there: any per-dst fold is partition-local and exact.
-    */
+    * in-edges there: any per-dst fold is partition-local and exact. */
   private final case class EdgeBlock(src: Array[Int], slot: Array[Int],
-      outdeg: Array[Long], dst: Array[Int])
+      dst: Array[Int], deg: Array[Long])
 
-  /** An array-regime kernel: `fold(b, state)(j)` folds slot `j`'s in-neighbour states. */
+  /** An array-regime kernel: `fold(b, sent)(j)` folds slot `j`'s in-neighbours'
+    * sent values; a slot without in-edges folds to the recurrence's `zero`. */
   private type Fold = (EdgeBlock, Array[Long]) => Array[Long]
 
-  /** Σ `state(src) div outdeg` (PageRank). */
+  /** Σ `sent(src)` (PageRank, which sends `pr div outdeg`). */
   private val sumIn: Fold = (b, st) => {
     val acc = new Array[Long](b.dst.length)
     var k = 0
     while (k < b.src.length) {
-      acc(b.slot(k)) += st(b.src(k)) / b.outdeg(k)
+      acc(b.slot(k)) += st(b.src(k))
       k += 1
     }
     acc
@@ -228,7 +205,8 @@ object Graph {
     for (k <- b.src.indices) { lbl(next(b.slot(k))) = st(b.src(k)); next(b.slot(k)) += 1 }
     Array.tabulate(b.dst.length) { j =>
       java.util.Arrays.sort(lbl, start(j), start(j + 1))
-      var best, bestRun, run = 0L
+      var best = Long.MaxValue
+      var bestRun, run = 0L
       for (i <- start(j) until start(j + 1)) {
         run = if (i > start(j) && lbl(i) == lbl(i - 1)) run + 1 else 1
         if (run > bestRun) { best = lbl(i); bestRun = run }
@@ -239,66 +217,79 @@ object Graph {
 
   /** A recurrence over the state column `name`, starting at `init`: the array
     * regime sets each node to `update(old, fold partial or zero)`, the shuffle
-    * regime runs `step(state, edges, nodes)`; `finish` shapes the (node, name)
-    * result before it is materialized. */
+    * regime runs `step(state, edges, nodes)`, its edges carrying `outdeg`
+    * when `byDegree` (the array regime then sends `state div outdeg`);
+    * `finish` reshapes the (node, name) result before it is materialized. */
   private final case class Recurrence(name: String, init: Column, zero: Long, fold: Fold,
       update: (Long, Long) => Long, step: (DataFrame, DataFrame, DataFrame) => DataFrame,
-      finish: DataFrame => DataFrame = identity)
+      byDegree: Boolean = false, finish: Option[DataFrame => DataFrame] = None)
 
-  /** The superstep engine of all four recurrences: the materialized (node,
-    * `rec.name`) frame after `iters` supersteps over (src, dst[, outdeg]) edges.
-    * [[nodeUniverse]] reads the nodes once; `checkNodes` sees their count, which
-    * picks [[arraySupersteps]] up to `gate`, else [[shuffleSupersteps]]. */
-  private def supersteps(spark: SparkSession, edges0: DataFrame, nodes0: DataFrame,
+  /** Both directions of the undirected (u, v) pairs as long (src, dst) rows, in one pass. */
+  private def directed(pairs: DataFrame): DataFrame = {
+    val (u, v) = (col("u").cast("long"), col("v").cast("long"))
+    pairs.select(inline(array(struct(u.as("src"), v.as("dst")), struct(v.as("src"), u.as("dst")))))
+  }
+
+  /** The superstep engine of all four recurrences: the (node, `rec.name`)
+    * frame after `iters` supersteps over both directions of the undirected
+    * (u, v) `pairs`. [[nodeUniverse]] reads the nodes once; `checkNodes`
+    * sees their count, which picks [[arraySupersteps]] up to `gate`, else
+    * [[shuffleSupersteps]]. `extraCaches` are released with the result. */
+  private def supersteps(spark: SparkSession, pairs: DataFrame, nodes0: DataFrame,
       rec: Recurrence, iters: Int, checkpointEvery: Int, gate: Long,
       extraCaches: Seq[DataFrame], checkNodes: Long => Unit = _ => ()): DataFrame = {
     val (nNodes, small) = nodeUniverse(nodes0, rec.init, gate)
     checkNodes(nNodes)
     small match {
-      case Some((ids, init)) => arraySupersteps(spark, edges0, ids, init, rec, iters, extraCaches)
-      case None => shuffleSupersteps(spark, edges0, nodes0, rec, iters, checkpointEvery, extraCaches)
+      case Some((ids, init)) => arraySupersteps(spark, pairs, ids, init, rec, iters, extraCaches)
+      case None => shuffleSupersteps(spark, pairs, nodes0, rec, iters, checkpointEvery, extraCaches)
     }
   }
 
   /** The small-graph regime: one long of state per node on the driver,
-    * indexed by position in the sorted `ids`. The edges are mapped once to
-    * persisted [[EdgeBlock]]s, dropping an edge whose src or dst is not a
-    * node (as the oracle's joins do; `outdeg` still counts it). Per
-    * superstep the state is broadcast, one single-stage job folds each block
-    * into per-dst partials, and the driver updates every node. All-integer,
-    * so partitioning and summation order do not matter; no lineage to cut.
-    */
-  private def arraySupersteps(spark: SparkSession, edges0: DataFrame, ids: Array[Long],
+    * indexed by position in the sorted `ids`. One pass maps the pairs to both
+    * edge directions and persisted [[EdgeBlock]]s, dropping an edge whose src
+    * or dst is not a node (as the oracle's joins do) but counting it in its
+    * dst's degree; a `byDegree` recurrence collects the degrees in the job
+    * that fills the blocks. Per superstep the sent values are broadcast, one
+    * single-stage job folds each block into per-dst partials, and the driver
+    * updates every node. All-integer, so partitioning and summation order do
+    * not matter. The result is an RDD-backed frame over the driver's arrays,
+    * checkpointed only when `finish` reshapes it. */
+  private def arraySupersteps(spark: SparkSession, pairs: DataFrame, ids: Array[Long],
       init: Array[Long], rec: Recurrence, iters: Int, extraCaches: Seq[DataFrame]): DataFrame = {
     val sc = spark.sparkContext
     val idsB = sc.broadcast(ids)
     val fold = rec.fold
-    // outdeg rides along when the frame has it: only the sum divides by it
-    val blocks = edges0.select(Seq("src", "dst", "outdeg").filter(edges0.columns.contains)
-        .map(col(_).cast("long")): _*)
+    // sorted map output compresses; on one long key the sort is a radix sort
+    val blocks = directed(pairs).sortWithinPartitions("dst")
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("dst"))
       .queryExecution.toRdd.mapPartitions { rows =>
         val ids = idsB.value
         val src, slot, dst = Array.newBuilder[Int]
-        val deg = Array.newBuilder[Long]
+        val deg = scala.collection.mutable.ArrayBuffer.empty[Long]
         val slotOf = scala.collection.mutable.HashMap.empty[Int, Int]
         rows.foreach { r =>
-          val s = java.util.Arrays.binarySearch(ids, r.getLong(0))
           val d = java.util.Arrays.binarySearch(ids, r.getLong(1))
-          if (s >= 0 && d >= 0) {
-            src += s
-            slot += slotOf.getOrElseUpdate(d, { dst += d; slotOf.size }) // next free slot
-            if (r.numFields > 2) deg += r.getLong(2)
+          if (d >= 0) {
+            val j = slotOf.getOrElseUpdate(d, { dst += d; deg += 0L; slotOf.size }) // next free slot
+            deg(j) += 1
+            val s = java.util.Arrays.binarySearch(ids, r.getLong(0))
+            if (s >= 0) { src += s; slot += j }
           }
         }
-        Iterator.single(EdgeBlock(src.result(), slot.result(), deg.result(), dst.result()))
+        Iterator.single(EdgeBlock(src.result(), slot.result(), dst.result(), deg.toArray))
       }.persist(StorageLevel.MEMORY_AND_DISK)
     val state = try {
-      blocks.count()
+      val outdeg = Array.fill(ids.length)(1L) // a node no block counts: no edge reads it
+      if (rec.byDegree)
+        for ((dst, deg) <- blocks.map(b => (b.dst, b.deg)).collect(); j <- dst.indices)
+          outdeg(dst(j)) = deg(j)
       (1 to iters).foldLeft(init) { (state, _) =>
-        val stateB = sc.broadcast(state)
-        val partials = try blocks.map(b => (b.dst, fold(b, stateB.value))).collect()
-          finally stateB.destroy()
+        val sent = if (rec.byDegree) Array.tabulate(ids.length)(i => state(i) / outdeg(i)) else state
+        val sentB = sc.broadcast(sent)
+        val partials = try blocks.map(b => (b.dst, fold(b, sentB.value))).collect()
+          finally sentB.destroy()
         val in = Array.fill(ids.length)(rec.zero)
         for ((dst, acc) <- partials; j <- dst.indices) in(dst(j)) = acc(j)
         Array.tabulate(ids.length)(i => rec.update(state(i), in(i)))
@@ -307,20 +298,28 @@ object Graph {
       blocks.unpersist(false)
       idsB.destroy()
     }
-    Dedup.materializeAndRelease(extraCaches, rec.finish(
-      spark.createDataFrame(ids.indices.map(i => (ids(i), state(i)))).toDF("node", rec.name)))
+    val out = spark.createDataFrame(sc.parallelize(ids.indices.map(i => Row(ids(i), state(i)))),
+      StructType.fromDDL(s"node BIGINT NOT NULL, ${rec.name} BIGINT NOT NULL"))
+    rec.finish match {
+      case Some(f) => Dedup.materializeAndRelease(extraCaches, f(out))
+      case None => extraCaches.foreach(_.unpersist(false)); out
+    }
   }
 
   /** The shuffle regime, past the node gate. The edges are persisted
     * partitioned on `src`, so a superstep's join exchanges only the state;
     * dsts outside the node set are dropped once up front (srcs outside it
-    * never meet a state row). A localCheckpoint every `checkpointEvery`
-    * supersteps cuts lineage and is released with the result. */
-  private def shuffleSupersteps(spark: SparkSession, edges0: DataFrame, nodes0: DataFrame,
+    * never meet a state row), after a `byDegree` recurrence's `outdeg` has
+    * counted them. A localCheckpoint every `checkpointEvery` supersteps cuts
+    * lineage and is released with the result. */
+  private def shuffleSupersteps(spark: SparkSession, pairs: DataFrame, nodes0: DataFrame,
       rec: Recurrence, iters: Int, checkpointEvery: Int,
       extraCaches: Seq[DataFrame]): DataFrame = {
     val nodes = nodes0.persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = edges0.join(nodes, edges0("dst") === nodes("node"), "left_semi")
+    val all = directed(pairs)
+    val withDeg = if (!rec.byDegree) all
+      else all.join(all.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+    val edges = withDeg.join(nodes, withDeg("dst") === nodes("node"), "left_semi")
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val checkpoints = Seq.newBuilder[DataFrame]
@@ -332,17 +331,18 @@ object Graph {
         checkpoints += state
       }
     }
+    val result = state.select(col("node").cast("bigint").as("node"),
+      col(rec.name).cast("bigint").as(rec.name))
     val out = Dedup.materializeAndRelease(Seq(edges, nodes) ++ extraCaches,
-      rec.finish(state.select(col("node").cast("bigint").as("node"),
-        col(rec.name).cast("bigint").as(rec.name))))
+      rec.finish.fold(result)(_(result)))
     checkpoints.result().flatMap(_.queryExecution.logical.collect { case r: LogicalRDD => r.rdd })
       .foreach(_.unpersist(false))
     out
   }
 
-  private[graft] def pageRankCore(spark: SparkSession, edges0: DataFrame, nodes0: DataFrame,
+  /** PageRank over both directions of the undirected (u, v) `pairs`. */
+  private[graft] def pageRankCore(spark: SparkSession, pairs: DataFrame, nodes0: DataFrame,
       iters: Int, dampPct: Long, scale: Long, checkpointEvery: Int,
-      extraCaches: Seq[DataFrame] = Nil,
       broadcastNodes: Long = BroadcastableNodes): DataFrame = {
     require(dampPct >= 1 && dampPct <= 100, s"dampPct must be in [1, 100], got $dampPct")
     val base = scale * (100L - dampPct) / 100L
@@ -354,13 +354,14 @@ object Graph {
           .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
           .unionAll(nodes.select(col("node"), lit(0L).as("c")))
           .groupBy("node")
-          .agg((lit(base) + expr(s"($dampPct * sum(c)) div 100")).as("pr")))
+          .agg((lit(base) + expr(s"($dampPct * sum(c)) div 100")).as("pr")),
+      byDegree = true)
     // Overflow precondition, asserted at RUNTIME on the actual node count:
     // a node's inbound sum is bounded by the total mass N·scale, which the
     // damping step then multiplies by dampPct before the div — so
     // N·scale·dampPct must fit in a Long. The default scale is safe to
     // ~10^8 nodes; beyond that this fails loudly instead of wrapping.
-    supersteps(spark, edges0, nodes0, rank, iters, checkpointEvery, broadcastNodes, extraCaches,
+    supersteps(spark, pairs, nodes0, rank, iters, checkpointEvery, broadcastNodes, Nil,
       checkNodes = n => require(n == 0 || scale <= Long.MaxValue / n / dampPct,
         s"integer PageRank overflow: $n nodes × scale=$scale × dampPct=$dampPct " +
           "exceeds 2^63 — pass a smaller scale"))
@@ -392,11 +393,8 @@ object Graph {
     * `checkpointEvery` applies to the shuffle regime only.
     */
   def components(spark: SparkSession, dir: String, iters: Int = 4,
-      checkpointEvery: Int = 2): DataFrame = {
-    val (pairs, edges) = tradeEdgesFrom(spark, dir, col("l_suppkey") * 2 + 1)
-    componentsCore(spark, edges.select("src", "dst"),
-      tradeNodes(spark, dir), iters, checkpointEvery, extraCaches = Seq(pairs))
-  }
+      checkpointEvery: Int = 2): DataFrame =
+    componentsCore(spark, tradePairs(spark, dir), tradeNodes(spark, dir), iters, checkpointEvery)
 
   /** Hub-heavy degree-skew twin of [[components]] (the
     * [[pageRankHubSkew]] pattern): suppliers collapse to `l_suppkey %
@@ -410,17 +408,16 @@ object Graph {
   def componentsHubSkew(spark: SparkSession, dir: String, iters: Int = 4,
       hubMod: Long = 8, checkpointEvery: Int = 2): DataFrame = {
     require(hubMod >= 1, s"hubMod must be >= 1, got $hubMod")
-    val (pairs, edges) = tradeEdgesFrom(spark, dir, (col("l_suppkey") % hubMod) * 2 + 1)
-    componentsCore(spark, edges.select("src", "dst"), hubNodes(spark, dir, hubMod),
-      iters, checkpointEvery, extraCaches = Seq(pairs))
+    componentsCore(spark, tradePairs(spark, dir, (col("l_suppkey") % hubMod) * 2 + 1),
+      hubNodes(spark, dir, hubMod), iters, checkpointEvery)
   }
 
-  private[graft] def componentsCore(spark: SparkSession, edges0: DataFrame,
+  /** Components over both directions of the undirected (u, v) `pairs`. */
+  private[graft] def componentsCore(spark: SparkSession, pairs: DataFrame,
       nodes0: DataFrame, iters: Int, checkpointEvery: Int,
-      extraCaches: Seq[DataFrame] = Nil,
       broadcastNodes: Long = BroadcastableNodes): DataFrame =
-    supersteps(spark, edges0, nodes0, minPlus("label", col("node"), 0L), iters,
-      checkpointEvery, broadcastNodes, extraCaches)
+    supersteps(spark, pairs, nodes0, minPlus("label", col("node"), 0L), iters,
+      checkpointEvery, broadcastNodes, Nil)
 
   /** Bounded-hop BFS reachability: minimum hop count (≤ maxHops) from the
     * seed set — customers of one nation — over EVERY trade edge, as the
@@ -431,24 +428,26 @@ object Graph {
     */
   def reachability(spark: SparkSession, dir: String, maxHops: Int = 3,
       nation: String = "NATION_1"): DataFrame = {
-    val (pairs, edges) = tradeEdgesFrom(spark, dir, col("l_suppkey") * 2 + 1)
     val seeds = t(spark, dir, "customer")
       .join(t(spark, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
       .filter(col("n_name") === nation)
       .select((col("c_custkey") * 2).as("node"))
-    reachCore(spark, edges.select("src", "dst"), seeds, maxHops, extraCaches = Seq(pairs))
+    reachCore(spark, tradePairs(spark, dir), seeds, maxHops)
   }
 
-  private[graft] def reachCore(spark: SparkSession, edges0: DataFrame, seeds: DataFrame,
-      maxHops: Int, extraCaches: Seq[DataFrame] = Nil,
-      broadcastNodes: Long = BroadcastableNodes): DataFrame = {
-    val nodes = edges0.select(explode(array(col("src"), col("dst"))).as("node"),
+  /** Reach over both directions of the undirected (u, v) `pairs`, which the
+    * node universe and the edge build both read: they are cached once. */
+  private[graft] def reachCore(spark: SparkSession, pairs0: DataFrame, seeds: DataFrame,
+      maxHops: Int, broadcastNodes: Long = BroadcastableNodes): DataFrame = {
+    val pairs = pairs0.persist(StorageLevel.MEMORY_AND_DISK)
+    pairs.count() // eager fill — two consumers below (cache-before-AQE rule)
+    val nodes = pairs.select(explode(array(col("u"), col("v"))).as("node"),
         lit(Long.MaxValue).as("h0"))
       .unionAll(seeds.select(col("node"), lit(0L).as("h0")))
       .groupBy("node").agg(min("h0").as("h0"))
-    supersteps(spark, edges0, nodes,
-      minPlus("hop", col("h0"), 1L).copy(finish = _.where(col("hop") < Long.MaxValue)), maxHops,
-      checkpointEvery = 2, broadcastNodes, extraCaches)
+    supersteps(spark, pairs, nodes,
+      minPlus("hop", col("h0"), 1L).copy(finish = Some(_.where(col("hop") < Long.MaxValue))),
+      maxHops, checkpointEvery = 2, broadcastNodes, Seq(pairs))
   }
 
   /** LABEL-PROPAGATION COMMUNITIES (round-10 continuation) — synchronous
@@ -470,11 +469,12 @@ object Graph {
       cutPermille: Int = 900): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
     val (ew, e) = sparsifiedCoServiceEdgesFrom(orderSuppliers(spark, dir), cutPermille)
-    lpaCore(spark, bothWays(e, "src", "dst"), steps, extraCaches = Seq(ew))
+    lpaCore(spark, e, steps, extraCaches = Seq(ew))
   }
 
-  /** LPA over SYMMETRIC edges; their endpoints are the nodes (the oracle's `l0`). */
-  private[graft] def lpaCore(spark: SparkSession, edges0: DataFrame, steps: Int,
+  /** LPA over both directions of the undirected (u, v) `pairs`; their
+    * endpoints are the nodes (the oracle's `l0`). */
+  private[graft] def lpaCore(spark: SparkSession, pairs: DataFrame, steps: Int,
       extraCaches: Seq[DataFrame] = Nil,
       broadcastNodes: Long = BroadcastableNodes): DataFrame = {
     val lpa = Recurrence("lbl", col("node"), Long.MaxValue, modeIn, (_, in) => in,
@@ -483,10 +483,10 @@ object Graph {
           .groupBy(col("dst").as("node"), col("lbl")).agg(count(lit(1)).as("c"))
           .groupBy("node").agg(min(struct((-col("c")).as("negc"), col("lbl"))).as("m"))
           .select(col("node"), col("m.lbl").as("lbl")),
-      labels => labels.join(labels.groupBy("lbl").agg(count(lit(1)).as("sz")), "lbl")
+      finish = Some(labels => labels.join(labels.groupBy("lbl").agg(count(lit(1)).as("sz")), "lbl")
         .select(col("node").as("supplier"), col("lbl").as("community"),
-          col("sz").cast("bigint").as("community_size")))
-    supersteps(spark, edges0, edges0.select(col("dst").as("node")).distinct(),
+          col("sz").cast("bigint").as("community_size"))))
+    supersteps(spark, pairs, pairs.select(explode(array(col("u"), col("v"))).as("node")).distinct(),
       lpa, steps, checkpointEvery = 2, broadcastNodes, extraCaches)
   }
 

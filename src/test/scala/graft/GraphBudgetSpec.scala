@@ -1,0 +1,46 @@
+package graft
+
+import org.apache.spark.graft.LiveBroadcasts
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.tools.Probe
+
+/** A host-robust budget for the array superstep rows: Spark jobs and stages
+  * per catalog query (collected, as the benchmark runs it) at sf0.001,
+  * counted by [[Probe.Meter]]. Wall time moves with the host; these counts
+  * move only when the plan does. A row over budget has gained a job — a
+  * degree join, a cache fill, a result checkpoint — and the run must leave
+  * no new persisted RDD and no live `long[]` broadcast behind.
+  */
+class GraphBudgetSpec extends AnyFunSuite {
+  private lazy val spark = SparkSpec.spark
+
+  /** row -> (max jobs, max stages), as measured on the array engine. */
+  private val budget = Seq(
+    "graph_pagerank" -> (13, 13),
+    "graph_pagerank_skew" -> (14, 14),
+    "graph_components" -> (11, 11),
+    "graph_components_skew" -> (12, 12))
+
+  test("the superstep rows stay within their job and stage budget and leave nothing behind") {
+    val sc = spark.sparkContext
+    val meter = new Probe.Meter
+    sc.addSparkListener(meter)
+    try for ((row, (maxJobs, maxStages)) <- budget) {
+      val run = () => SparkEntry.queries(row)(spark, SparkSpec.testDataDir).collect()
+      run() // compiles the query shape once, as the benchmark's warm pass does
+      val cached = sc.getPersistentRDDs.keySet
+      val arrays = LiveBroadcasts.ofLongArrays()
+      val c = meter.measure(run())._2
+      info(s"$row: ${c.jobs} jobs, ${c.stages} stages, ${c.tasks} tasks")
+      assert(c.jobs <= maxJobs && c.stages <= maxStages,
+        s"$row: ${c.jobs} jobs (budget $maxJobs), ${c.stages} stages (budget $maxStages)")
+      assert(sc.getPersistentRDDs.keySet == cached, s"$row left a persisted RDD")
+      // broadcast removal is asynchronous
+      val deadline = System.nanoTime() + 10000000000L
+      while (!(LiveBroadcasts.ofLongArrays() subsetOf arrays) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(LiveBroadcasts.ofLongArrays() subsetOf arrays, s"$row left a long[] broadcast live")
+    } finally sc.removeSparkListener(meter)
+  }
+}

@@ -67,8 +67,9 @@ class GraphSpec extends AnyFunSuite {
 
   test("r9: integer PageRank matches a driver-side recurrence bit-for-bit") {
     val dir = SparkSpec.testDataDir
-    val edges = graft.operators.Graph.tradeEdges(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val both = bothWays(tradePairs(dir))
+    val deg = both.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+    val edges = both.map { case (src, dst) => (src, dst, deg(src)) }
     val nodes = graft.operators.Graph.tradeNodes(spark, dir)
       .collect().map(_.getLong(0))
     val scale = graft.operators.Graph.Scale
@@ -122,19 +123,18 @@ class GraphSpec extends AnyFunSuite {
   /** PageRank through its core, with the node gate at `gate`. */
   private def rankCore(dir: String, gate: Long, hubMod: Option[Long] = None,
       nodes: Option[DataFrame] = None): Map[Long, Long] = {
-    val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(hubMod))
-    pairs(Graph.pageRankCore(spark, edges, nodes.getOrElse(nodeSet(dir, hubMod)),
+    pairs(Graph.pageRankCore(spark, Graph.tradePairs(spark, dir, supplierNode(hubMod)),
+      nodes.getOrElse(nodeSet(dir, hubMod)),
       iters = 5, dampPct = 85, scale = Graph.Scale, checkpointEvery = 4,
-      extraCaches = Seq(cache), broadcastNodes = gate))
+      broadcastNodes = gate))
   }
 
   /** Components through its core, with the node gate at `gate`. */
   private def labelCore(dir: String, gate: Long, hubMod: Option[Long] = None,
       nodes: Option[DataFrame] = None): Map[Long, Long] = {
-    val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(hubMod))
-    pairs(Graph.componentsCore(spark, edges.select("src", "dst"),
+    pairs(Graph.componentsCore(spark, Graph.tradePairs(spark, dir, supplierNode(hubMod)),
       nodes.getOrElse(nodeSet(dir, hubMod)), iters = 4, checkpointEvery = 2,
-      extraCaches = Seq(cache), broadcastNodes = gate))
+      broadcastNodes = gate))
   }
 
   test("array and shuffle regimes agree on every PageRank and components twin") {
@@ -195,16 +195,21 @@ class GraphSpec extends AnyFunSuite {
     for (gate <- Seq(0L, Graph.BroadcastableNodes); rank <- Seq(true, false)) {
       val cached = sc.getPersistentRDDs.keySet
       val arrays = org.apache.spark.graft.LiveBroadcasts.ofLongArrays()
-      val (cache, edges) = Graph.tradeEdgesFrom(spark, SparkSpec.testDataDir, supplierNode(None))
+      val pairs0 = Graph.tradePairs(spark, SparkSpec.testDataDir)
       val nodes = Graph.tradeNodes(spark, SparkSpec.testDataDir)
       val out =
-        if (rank) Graph.pageRankCore(spark, edges, nodes, 5, 85, Graph.Scale, 4, Seq(cache), gate)
-        else Graph.componentsCore(spark, edges.select("src", "dst"), nodes, 4, 2, Seq(cache), gate)
-      // the result itself is a local checkpoint: its RDD is the one new cache
+        if (rank) Graph.pageRankCore(spark, pairs0, nodes, 5, 85, Graph.Scale, 4, gate)
+        else Graph.componentsCore(spark, pairs0, nodes, 4, 2, gate)
       val own = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
       assert(own.size == 1)
-      assert(sc.getPersistentRDDs.keySet == cached ++ own, s"gate=$gate rank=$rank")
-      own.foreach(id => sc.getPersistentRDDs(id).unpersist(true))
+      if (gate == 0L) {
+        // the shuffle regime's result is a local checkpoint: its RDD is the one new cache
+        assert(sc.getPersistentRDDs.keySet == cached ++ own, s"gate=$gate rank=$rank")
+        own.foreach(id => sc.getPersistentRDDs(id).unpersist(true))
+      } else {
+        // the array regime's result is built from the driver's arrays: no new cache at all
+        assert(sc.getPersistentRDDs.keySet == cached, s"gate=$gate rank=$rank")
+      }
       // broadcast removal is asynchronous
       val deadline = System.nanoTime() + 10000000000L
       while (!(org.apache.spark.graft.LiveBroadcasts.ofLongArrays() subsetOf arrays) &&
@@ -214,11 +219,12 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  /** The trade graph of `dir` as collected (src, dst) edges, both directions. */
-  private def tradePairs(dir: String): Seq[(Long, Long)] = {
-    val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(None))
-    try edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq finally cache.unpersist()
-  }
+  /** The trade graph of `dir` as collected undirected (u, v) pairs. */
+  private def tradePairs(dir: String): Seq[(Long, Long)] =
+    Graph.tradePairs(spark, dir).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  /** Both directions of undirected pairs, as (src, dst) edges. */
+  private def bothWays(p: Seq[(Long, Long)]): Seq[(Long, Long)] = p ++ p.map(_.swap)
 
   /** Synchronous LPA on the driver: every dst takes its in-neighbours'
     * most frequent label, ties to the smallest. */
@@ -238,8 +244,8 @@ class GraphSpec extends AnyFunSuite {
       hop ++ e.collect { case (s, d) if hop.get(s).contains(h - 1L) && !hop.contains(d) => d -> h.toLong }
     }
 
-  private def lpaRows(edges: DataFrame, steps: Int, gate: Long): Map[Long, (Long, Long)] =
-    Graph.lpaCore(spark, edges, steps, broadcastNodes = gate).collect()
+  private def lpaRows(pairs: DataFrame, steps: Int, gate: Long): Map[Long, (Long, Long)] =
+    Graph.lpaCore(spark, pairs, steps, broadcastNodes = gate).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
 
   /** LPA rows must carry the expected labels, and each size is its label's count. */
@@ -254,23 +260,23 @@ class GraphSpec extends AnyFunSuite {
     // a star, centre 9 and leaves 1-4, plus the leaf edges 1-2 and 3-4:
     // every first-step label is a tie between singleton counts
     val star = Seq(9L -> 1L, 9L -> 2L, 9L -> 3L, 9L -> 4L, 1L -> 2L, 3L -> 4L)
-    val graphs = Seq("star" -> (star ++ star.map(_.swap)), "path" -> tradePairs(pathDir))
-    for ((name, e) <- graphs; steps <- Seq(1, 2, 3); gate <- Seq(0L, Graph.BroadcastableNodes)) {
-      assertLpa(lpaRows(e.toDF("src", "dst"), steps, gate), lpaByHand(e, steps),
+    val graphs = Seq("star" -> star, "path" -> tradePairs(pathDir))
+    for ((name, p) <- graphs; steps <- Seq(1, 2, 3); gate <- Seq(0L, Graph.BroadcastableNodes)) {
+      assertLpa(lpaRows(p.toDF("u", "v"), steps, gate), lpaByHand(bothWays(p), steps),
         s"$name steps=$steps gate=$gate")
     }
-    assert(lpaByHand(graphs.head._2, 1) == Map(9L -> 1L, 1L -> 2L, 2L -> 1L, 3L -> 4L, 4L -> 3L))
+    assert(lpaByHand(bothWays(graphs.head._2), 1) ==
+      Map(9L -> 1L, 1L -> 2L, 2L -> 1L, 3L -> 4L, 4L -> 3L))
     // the path c1-s1-c2-s2-c3: s1 sees {c1, c2}, a tie the smaller id wins
-    assert(lpaByHand(graphs(1)._2, 1)(3L) == 2L)
+    assert(lpaByHand(bothWays(graphs(1)._2), 1)(3L) == 2L)
   }
 
   test("reach: both regimes equal a driver-side BFS on the path graph and past non-nodes") {
     for ((dir, maxHops) <- Seq(pathDir -> 3, pathDir -> 4, strayDir -> 4, strayDir -> 5)) {
-      val want = hopsByHand(tradePairs(dir), Set(2L), maxHops)
+      val want = hopsByHand(bothWays(tradePairs(dir)), Set(2L), maxHops)
       for (gate <- Seq(0L, Graph.BroadcastableNodes)) {
-        val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(None))
-        assert(pairs(Graph.reachCore(spark, edges.select("src", "dst"), seedC1, maxHops,
-          Seq(cache), gate)) == want, s"$dir maxHops=$maxHops gate=$gate")
+        assert(pairs(Graph.reachCore(spark, Graph.tradePairs(spark, dir), seedC1, maxHops,
+          gate)) == want, s"$dir maxHops=$maxHops gate=$gate")
       }
       assert(pairs(Graph.reachability(spark, dir, maxHops)) == want, s"$dir maxHops=$maxHops")
     }
@@ -285,22 +291,16 @@ class GraphSpec extends AnyFunSuite {
     val dir = SparkSpec.testDataDir
     // the cores at gate 0 run the shuffle regime, the catalog entries the array one
     val runs = Seq[(String, () => DataFrame)](
-      "lpa shuffle" -> (() => {
-        val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(None))
-        Graph.lpaCore(spark, edges.select("src", "dst"), 3, Seq(cache), 0L)
-      }),
-      "reach shuffle" -> (() => {
-        val (cache, edges) = Graph.tradeEdgesFrom(spark, dir, supplierNode(None))
-        Graph.reachCore(spark, edges.select("src", "dst"),
-          seedC1, 3, Seq(cache), 0L)
-      }),
+      "lpa shuffle" -> (() => Graph.lpaCore(spark, Graph.tradePairs(spark, dir), 3, Nil, 0L)),
+      "reach shuffle" -> (() => Graph.reachCore(spark, Graph.tradePairs(spark, dir), seedC1, 3, 0L)),
       "lpaCommunities" -> (() => Graph.lpaCommunities(spark, dir)),
       "reachability" -> (() => Graph.reachability(spark, dir)))
     for ((name, run) <- runs) {
       val cached = sc.getPersistentRDDs.keySet
       val arrays = org.apache.spark.graft.LiveBroadcasts.ofLongArrays()
       val out = run()
-      // the engine's result is a local checkpoint: its RDD is the one new cache
+      // a reshaped result (LPA's sizes, reach's filter) is a local checkpoint
+      // in both regimes: its RDD is the one new cache
       val own = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
       assert(own.size == 1, name)
       assert(sc.getPersistentRDDs.keySet == cached ++ own, name)

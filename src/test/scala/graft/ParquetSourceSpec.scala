@@ -16,17 +16,8 @@ import graft.tools.Probe
   */
 class ParquetSourceSpec extends AnyFunSuite {
 
-  /** The test session under [[SessionFactory]]'s SQL confs, nanosAsLong included. */
-  private lazy val spark: SparkSession = {
-    val s = SparkSpec.spark.newSession()
-    Seq(
-      "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true"
-    ).foreach { case (k, v) => s.conf.set(k, v) }
-    s
-  }
+  /** The shared test session, under [[SessionFactory]]'s confs (nanosAsLong included). */
+  private lazy val spark: SparkSession = SparkSpec.spark
 
   private def fixtureFiles: Seq[String] =
     Seq("sf0.001", "sf0.01", "sf0.1").map(Paths.get(SparkSpec.testDataDir).resolveSibling(_))

@@ -6,23 +6,28 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Two rules of the main tree that no compiler checks: parquet is read only
+/** Two rules that no compiler checks: the main tree reads parquet only
   * through `graft.sources.ParquetSource` (whose single-file reads skip
-  * Spark's schema-inference job), and sessions are built only by
-  * [[SessionFactory]] (the engine's one session configuration).
+  * Spark's schema-inference job), and the main and test trees build
+  * sessions only through [[SessionFactory]] (the engine's one session
+  * configuration, which the specs share through [[SparkSpec]]).
   */
 class SourceHygieneSpec extends AnyFunSuite {
   import SourceHygieneSpec._
 
   private val root = Paths.get("src/main/scala")
+  private val testRoot = Paths.get("src/test/scala")
 
-  private def sources: Seq[Path] =
-    Files.walk(root).iterator().asScala
+  private def sources(under: Path = root): Seq[Path] =
+    Files.walk(under).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
 
-  private def violations(rule: Rule): Seq[String] =
-    sources.filterNot(p => root.relativize(p).toString == rule.home).flatMap { p =>
-      offenders(Files.readString(p), rule).map(line => s"${root.relativize(p)}:$line")
+  /** Offending lines under `under`, outside the rule's home and this spec
+    * (whose test names mention the calls it forbids). */
+  private def violations(rule: Rule, under: Path = root): Seq[String] =
+    sources(under).filterNot(p => Set(rule.home, "graft/SourceHygieneSpec.scala")(
+      under.relativize(p).toString)).flatMap { p =>
+      offenders(Files.readString(p), rule).map(line => s"${under.relativize(p)}:$line")
     }
 
   test("the scanner sees a call in code and ignores one in a comment") {
@@ -33,13 +38,16 @@ class SourceHygieneSpec extends AnyFunSuite {
   }
 
   test("spark.read.parquet appears only in the parquet reader") {
-    assert(sources.exists(p => root.relativize(p).toString == ParquetRead.home))
+    assert(sources().exists(p => root.relativize(p).toString == ParquetRead.home))
     assert(violations(ParquetRead).isEmpty, violations(ParquetRead))
   }
 
   test("SparkSession.builder appears only in SessionFactory") {
-    assert(sources.exists(p => root.relativize(p).toString == SessionBuild.home))
+    assert(sources().exists(p => root.relativize(p).toString == SessionBuild.home))
     assert(violations(SessionBuild).isEmpty, violations(SessionBuild))
+    // the specs too: they share SparkSpec's session, built by SessionFactory
+    val specs = violations(SessionBuild, testRoot)
+    assert(specs.isEmpty, specs)
   }
 }
 

@@ -2,14 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local SparkSession for test suites (one JVM-wide session). */
+/** Shared local SparkSession for test suites (one JVM-wide session), built
+  * by [[SessionFactory]] so every spec runs under the engine's confs. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = SessionFactory.builder("local[4]", "graft-test", "4")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()
