@@ -99,9 +99,9 @@ object ExportJob {
     if (!dataOnly) {
       // Side outputs BEFORE the data write, like the reference
       // (`jobs/JdbcAvroJob.java:129-135`).
-      writeString(conf, s"$outputDir/_AVRO_SCHEMA.avsc", avroSchema.toString(true))
+      AvroSink.writeSideFile(conf, s"$outputDir/_AVRO_SCHEMA.avsc", avroSchema.toString(true))
       queries.zipWithIndex.foreach { case (q, i) =>
-        writeString(conf, s"$outputDir/_queries/query_$i.sql", q)
+        AvroSink.writeSideFile(conf, s"$outputDir/_queries/query_$i.sql", q)
       }
     }
 
@@ -123,8 +123,8 @@ object ExportJob {
       val json = metricsJson(metrics.toMap)
       // Metrics write failures are logged, never fatal (`BeamHelper.java:91-104`).
       try {
-        writeString(conf, s"$outputDir/_METRICS.json", json)
-        writeString(conf, s"$outputDir/_SERVICE_METRICS.json", json)
+        AvroSink.writeSideFile(conf, s"$outputDir/_METRICS.json", json)
+        AvroSink.writeSideFile(conf, s"$outputDir/_SERVICE_METRICS.json", json)
       } catch { case e: Exception => System.err.println(s"Failed to save metrics: $e") }
     }
 
@@ -149,15 +149,6 @@ object ExportJob {
 
   def metricsJson(m: Map[String, Long]): String =
     m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-
-  def writeString(conf: Configuration, pathStr: String, contents: String): Unit = {
-    val path = new Path(pathStr)
-    val fs = path.getFileSystem(conf)
-    fs.setWriteChecksum(false)
-    val out = fs.create(path, true)
-    try out.write(contents.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** Reads a user SQL file (`--sqlFile`) — reference `beam/BeamHelper.java:106-110`. */
   def readSqlFile(conf: Configuration, pathStr: String): String = {

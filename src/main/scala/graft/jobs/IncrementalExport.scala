@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.args.AvroSinkArgs
 import graft.schema.AvroSchemaGen
+import graft.sink.AvroSink
 import graft.sources.ParquetSource
 
 /** INCREMENTAL (high-watermark) export — the nightly-delta mode every
@@ -57,7 +58,7 @@ object IncrementalExport {
   }
 
   def writeState(conf: Configuration, stateDir: String, state: State): Unit =
-    ExportJob.writeString(conf, stateFile(stateDir).toString,
+    AvroSink.writeSideFile(conf, stateFile(stateDir).toString,
       s"column=${state.column}\nmax=${state.maxLiteral}\n")
 
   /** Formats a collected max() value as a string literal that

@@ -90,7 +90,7 @@ object PartitionedExport {
       val manifest = results
         .map { case (d, m) => s""""$d":${m.recordCount}""" }
         .mkString("{", ",", "}")
-      ExportJob.writeString(spark.sparkContext.hadoopConfiguration,
+      AvroSink.writeSideFile(spark.sparkContext.hadoopConfiguration,
         s"$outputDir/_PARTITIONS.json", manifest)
     }
     Result(results, outputDir)

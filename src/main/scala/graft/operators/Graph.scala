@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -134,14 +135,24 @@ object Graph {
 
   /** The node universe, read once: the node count, plus the sorted ids and
     * their `init` values when there are at most `gate` of them (the array
-    * regime) — one job either way below the gate. Duplicate ids fail loudly
-    * in both regimes: the recurrences (and the oracle's `nodes LEFT JOIN`)
-    * assume one state per node.
+    * regime) — one job below the gate, and never more than `gate + 1` rows
+    * on the driver. Duplicate ids fail loudly in both regimes: the
+    * recurrences (and the oracle's `nodes LEFT JOIN`) assume one state per
+    * node.
+    *
+    * A node set with no shuffle (the scans of [[tradeNodes]]) is read in
+    * one task that stops at `gate + 1` rows: a limit over several
+    * partitions would take one job per batch of partitions. A node set
+    * with a shuffle keeps its partitions, so its reduce side never runs
+    * in one task.
     */
   private def nodeUniverse(nodes: DataFrame, init: Column,
       gate: Long): (Long, Option[(Array[Long], Array[Long])]) = {
     require(gate >= 0 && gate < Int.MaxValue, s"node gate must be in [0, 2^31-1), got $gate")
-    val rows = nodes.select(col("node").cast("long").as("id"), init.cast("long").as("init"))
+    val sel = nodes.select(col("node").cast("long").as("id"), init.cast("long").as("init"))
+    val narrow = !sel.queryExecution.sparkPlan.exists(
+      _.requiredChildDistribution.exists(_ != UnspecifiedDistribution))
+    val rows = (if (narrow) sel.coalesce(1) else sel)
       .limit(gate.toInt + 1)
       .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).collect()
     if (rows.length <= gate) {

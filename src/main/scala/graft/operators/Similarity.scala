@@ -1634,17 +1634,14 @@ object Similarity {
   }
 
   /** The composed coded corpus of a store with streaming increments:
-    * `coded.parquet` plus every `increments/v*.parquet` batch directory.
+    * `coded.parquet` plus every `increments/v<id>.parquet` batch directory,
+    * listed through the store's file system by the streaming stores' one
+    * listing ([[graft.streaming.VersionedStore]]).
     */
-  def codedWithIncrements(spark: SparkSession, storeDir: String): DataFrame = {
-    val base = ParquetSource.read(spark, s"$storeDir/coded.parquet")
-    val incRoot = new java.io.File(s"$storeDir/increments")
-    val incs = if (incRoot.isDirectory)
-      incRoot.listFiles().filter(_.getName.startsWith("v")).map(f =>
-        ParquetSource.read(spark, f.getAbsolutePath)).toSeq
-    else Seq.empty
-    incs.foldLeft(base)(_ unionByName _)
-  }
+  def codedWithIncrements(spark: SparkSession, storeDir: String): DataFrame =
+    graft.streaming.VersionedStore.incrementPaths(spark, storeDir)
+      .foldLeft(ParquetSource.read(spark, s"$storeDir/coded.parquet"))((acc, inc) =>
+        acc.unionByName(ParquetSource.read(spark, inc)))
 
   /** [[ivfPqTopKViaStore]] over the streaming-composed corpus
     * ([[codedWithIncrements]]) — how a reader queries an index that a

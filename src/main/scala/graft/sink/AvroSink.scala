@@ -217,18 +217,10 @@ object AvroSink {
     // reader would silently return duplicated rows — AvroSource validates
     // the on-disk set against this file and rejects such drift instead.
     // `--dataOnly` exports suppress it (parts-only layout contract).
-    if (writeManifest) {
-      val conf = sc.hadoopConfiguration
-      val p = new Path(outputDir, ManifestFile)
-      val fs = p.getFileSystem(conf)
-      fs.setWriteChecksum(false)
-      val out = fs.create(p, true)
-      out.write((0 until numPartitions)
-        .map(i => f"part-$i%05d-of-$numPartitions%05d.avro")
-        .mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-    }
+    if (writeManifest)
+      writeSideFile(sc.hadoopConfiguration, new Path(outputDir, ManifestFile).toString,
+        (0 until numPartitions).map(i => f"part-$i%05d-of-$numPartitions%05d.avro")
+          .mkString("", "\n", "\n"))
 
     Metrics(
       recordCount.value,
@@ -237,6 +229,19 @@ object AvroSink {
       executeQueryElapsedMs.value,
       schemaElapsedTimeMs,
       meterFlushes.value)
+  }
+
+  /** Writes a small UTF-8 side file (`_MANIFEST`, `_AVRO_SCHEMA.avsc`,
+    * `_METRICS.json`, a state file), replacing any old one, without a
+    * `.crc` sidecar. Every export layout writes its side files here.
+    */
+  def writeSideFile(conf: Configuration, pathStr: String, contents: String): Unit = {
+    val path = new Path(pathStr)
+    val fs = path.getFileSystem(conf)
+    fs.setWriteChecksum(false)
+    val out = fs.create(path, true)
+    try out.write(contents.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** Executor-side progress logger for the metering cadence — one shared

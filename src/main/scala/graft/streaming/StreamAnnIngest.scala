@@ -13,11 +13,11 @@ import graft.operators.Similarity
   * increments ([[graft.operators.Similarity.ivfPqTopKViaStoreWithIncrements]])
   * and sees every ingested vector without the index ever retraining.
   *
-  * Replay safety: appends are NOT idempotent, so the increment is written
-  * as `increments/v<batchId>.parquet` in OVERWRITE mode — a re-delivered
-  * batch rewrites ITS OWN directory byte-for-byte instead of duplicating
-  * rows (the versioned-layout argument of [[StreamSketch]], applied to an
-  * append-only corpus; ReplaySpec-style coverage in Round10OpsSpec).
+  * Replay safety: appends are NOT idempotent, so each batch lands as
+  * `increments/v<batchId>.parquet` through [[VersionedStore.append]],
+  * which overwrites: a re-delivered batch rewrites ITS OWN increment
+  * instead of duplicating rows ([[VersionedStore.fold]] gives the replay
+  * argument; ReplaySpec-style coverage in Round10OpsSpec).
   *
   * Scale: the per-batch body is one map-only encode (cell assignment +
   * PQ codes against driver-loaded models, ~16 output bytes per vector);
@@ -29,47 +29,11 @@ import graft.operators.Similarity
 object StreamAnnIngest {
 
   def start(newVecs: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    newVecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, storeDir)
-      }
-      .start()
+    VersionedStore.start(newVecs, checkpointDir)(foldBatch(_, _, storeDir))
 
   /** The per-batch fold, exposed so tests can double-deliver a batch and
     * assert the composed store unchanged.
     */
-  def foldBatch(batch: DataFrame, batchId: Long, storeDir: String): Unit = {
-    requireOwnership(batch.sparkSession, storeDir, batchId)
-    Similarity.encodeWithStoreModels(batch, storeDir)
-      .write.mode("overwrite").parquet(s"$storeDir/increments/v$batchId.parquet")
-  }
-
-  /** The [[VersionedStore.requireOwnership]] guard applied to the
-    * increment layout: a query restarted with a FRESH checkpoint restarts
-    * batchIds at 0, and overwrite mode would silently clobber the existing
-    * `increments/v0.parquet` with DIFFERENT data (replay rewrites its own
-    * id byte-for-byte; a new checkpoint does not). Equality is allowed —
-    * that is the replay contract.
-    */
-  private def requireOwnership(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, batchId: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(s"$storeDir/increments")
-    if (!fs.exists(dir)) return
-    val ids = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".parquet") &&
-        n.stripPrefix("v").stripSuffix(".parquet").nonEmpty &&
-        n.stripPrefix("v").stripSuffix(".parquet").forall(_.isDigit) =>
-        n.stripPrefix("v").stripSuffix(".parquet").toLong }
-    ids.maxOption.foreach { maxId =>
-      require(maxId <= batchId,
-        s"ANN increment store $storeDir already holds v$maxId > batch $batchId: this " +
-          "checkpoint does not own the store (fresh checkpoint against an existing store?). " +
-          "Overwrite would clobber a committed increment — point the query at a new storeDir " +
-          "or resume from the original checkpoint")
-    }
-  }
+  def foldBatch(batch: DataFrame, batchId: Long, storeDir: String): Unit =
+    VersionedStore.append(batch, batchId, storeDir)(Similarity.encodeWithStoreModels(_, storeDir))
 }

@@ -39,11 +39,7 @@ object StreamDedup {
   def start(newDocs: DataFrame, corpusArrays: DataFrame, corpusBands: DataFrame,
       threshold: Double, checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Dedup.incrementalNearDupsFrom(batch, corpusArrays, corpusBands, threshold), batchId)
-      }
-      .start()
+    VersionedStore.start(newDocs, checkpointDir) { (batch, batchId) =>
+      sink(Dedup.incrementalNearDupsFrom(batch, corpusArrays, corpusBands, threshold), batchId)
+    }
 }

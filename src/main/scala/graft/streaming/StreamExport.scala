@@ -45,19 +45,14 @@ object StreamExport {
     val schemaMs = (System.nanoTime() - t0) / 1000000L
     // Same layout contract as the batch ExportJob: the inferred schema is
     // published once at the export root (all batches share it).
-    graft.jobs.ExportJob.writeString(
+    AvroSink.writeSideFile(
       stream.sparkSession.sparkContext.hadoopConfiguration,
       s"$outputDir/_AVRO_SCHEMA.avsc", schema.toString(true))
-    stream.writeStream
-      .outputMode("append")
-      .queryName("graft_avro_export")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outputDir/_checkpoint"))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    VersionedStore.start(stream, checkpointDir.getOrElse(s"$outputDir/_checkpoint"), trigger) {
+      (batch, batchId) =>
         AvroSink.write(batch, schema, f"$outputDir/batch-$batchId%09d", codec,
           schemaElapsedTimeMs = schemaMs)
         ()
-      }
-      .start()
+    }
   }
 }

@@ -20,10 +20,8 @@ import graft.sources.ParquetSource
   * distinct-doc counts are over disjoint doc sets and ADD across batches —
   * the cumulative sum is exactly the all-data `countDistinct(doc_id)`.
   * Counts are NOT merge-idempotent (the freq/KLL situation), so replay
-  * safety rests on the versioned LAYOUT: a re-delivered batch N rebuilds
-  * `v<N>` from `v<latest < N>`, never from its own failed half-write
-  * (same argument as [[StreamSketch]]; ReplaySpec-style double delivery
-  * is pinned in StreamLineDedupSpec).
+  * safety rests on [[VersionedStore.fold]] (its scaladoc gives the
+  * argument; double delivery is pinned in StreamLineDedupSpec).
   *
   * Scale: store size ∝ DISTINCT segments (8-byte key + count), never rows
   * seen; the per-batch fold shuffles (gh, partial distinct) pairs — at
@@ -33,49 +31,28 @@ import graft.sources.ParquetSource
 object StreamLineDedup {
 
   def start(newDocs: DataFrame, storeDir: String, checkpointDir: String,
-      segWords: Int = 10, keepVersions: Int = 2): StreamingQuery = {
-    VersionedStore.requireReplaySafe(keepVersions) // fail at setup, not batch 0
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, storeDir, segWords, keepVersions)
-      }
-      .start()
-  }
+      segWords: Int = 10): StreamingQuery =
+    VersionedStore.start(newDocs, checkpointDir)(foldBatch(_, _, storeDir, segWords))
 
   /** The per-batch fold, exposed so replay safety and stream==batch are
     * testable without a streaming harness.
     */
   def foldBatch(batch: DataFrame, batchId: Long, storeDir: String,
-      segWords: Int = 10, keepVersions: Int = 2): Unit = {
-    VersionedStore.requireReplaySafe(keepVersions)
-    val spark = batch.sparkSession
-    VersionedStore.requireOwnership(spark, storeDir, batchId)
-    graft.functions.GraftFunctions.register(spark)
-    val newCounts = graft.operators.TextAnalysis
-      .segmentsOf(batch.select("doc_id", "text"), segWords)
-      .withColumn("gh", graft.functions.Portable.polyHash60Native("seg"))
-      .groupBy("gh")
-      .agg(countDistinct(col("doc_id")).as("n_docs"))
-    val merged = VersionedStore.latestVersion(spark, storeDir, below = Some(batchId)) match {
-      case Some(prev) =>
-        ParquetSource.read(spark, prev).select(col("gh"), col("n_docs"))
-          .union(newCounts)
-          .groupBy("gh")
-          .agg(sum("n_docs").as("n_docs"))
-      case None => newCounts
-    }
-    merged.write.mode("overwrite").parquet(s"$storeDir/v$batchId")
-    VersionedStore.prune(spark, storeDir, keepVersions)
-  }
+      segWords: Int = 10): Unit =
+    VersionedStore.fold(batch, batchId, storeDir) { b =>
+      graft.functions.GraftFunctions.register(b.sparkSession)
+      graft.operators.TextAnalysis.segmentsOf(b.select("doc_id", "text"), segWords)
+        .withColumn("gh", graft.functions.Portable.polyHash60Native("seg"))
+        .groupBy("gh")
+        .agg(countDistinct(col("doc_id")).as("n_docs"))
+    }(_.groupBy("gh").agg(sum("n_docs").as("n_docs")))
 
   /** The current boiler set: fingerprints seen in ≥ `minDocs` distinct
     * documents so far.
     */
   def boilerplate(spark: SparkSession, storeDir: String,
       minDocs: Long = 2): DataFrame =
-    ParquetSource.read(spark, VersionedStore.latestOrFail(spark, storeDir, "line-dedup"))
+    VersionedStore.read(spark, storeDir, "line-dedup")
       .filter(col("n_docs") >= minDocs)
       .select(col("gh"), col("n_docs").cast("bigint").as("n_docs"))
 

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.ParquetSource
-
 /** Streaming pipeline-health MONITOR — the online form of
   * `events_anomaly_mad`: each micro-batch folds its (event_type, hour)
   * counts into a persisted, VERSIONED count store (the
@@ -14,12 +12,9 @@ import graft.sources.ParquetSource
   * median/MAD flags a dashboard polls are always computed by exactly the
   * batch operator's arithmetic over everything seen so far.
   *
-  * Replay safety: hourly counts are plain sums (NOT idempotent under
-  * re-merge, unlike HLL), so safety rests entirely on the versioned
-  * layout — a re-delivered batch N rebuilds `v<N>` FROM
-  * `v<latest < N>`, never from its own failed half-write, so each
-  * batch's rows enter the totals exactly once (the KLL argument in
-  * [[StreamSketch]], which this store reuses verbatim).
+  * Replay safety: hourly counts are plain sums, not idempotent under
+  * re-merge, so safety rests on [[VersionedStore.fold]] (its scaladoc
+  * gives the argument).
   *
   * Scale: store rows ∝ |types| × calendar hours — bounded by the
   * CALENDAR, never event volume; the per-batch merge is one
@@ -27,50 +22,27 @@ import graft.sources.ParquetSource
   */
 object StreamMonitor {
 
-  def start(newRows: DataFrame, storeDir: String, checkpointDir: String,
-      keepVersions: Int = 2): StreamingQuery = {
-    VersionedStore.requireReplaySafe(keepVersions) // fail at setup, not batch 0
-    newRows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, storeDir, keepVersions)
-      }
-      .start()
-  }
+  def start(newRows: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
+    VersionedStore.start(newRows, checkpointDir)(foldBatch(_, _, storeDir))
 
   /** The per-batch fold, exposed so ReplaySpec can double-deliver a batch
-    * and assert the count store unchanged (counts are plain sums — the
-    * versioned layout is the whole replay-safety story here). */
-  def foldBatch(batch: DataFrame, batchId: Long, storeDir: String,
-      keepVersions: Int = 2): Unit = {
-    VersionedStore.requireReplaySafe(keepVersions)
-    val spark = batch.sparkSession
-    VersionedStore.requireOwnership(spark, storeDir, batchId)
-    // schema-dispatched no-op on proper timestamps; the StreamScd2 fold
-    // already normalizes internally — same contract here, so a caller
-    // streaming raw nanos-as-long events cannot silently mis-bucket
-    val newCounts = graft.operators.Relational.normalizeEventTs(batch)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
-      .agg(count(lit(1)).as("n"))
-    val merged = VersionedStore.latestVersion(spark, storeDir, below = Some(batchId)) match {
-      case Some(prev) =>
-        ParquetSource.read(spark, prev).select("event_type", "hour", "n")
-          .union(newCounts)
-          .groupBy("event_type", "hour")
-          .agg(sum("n").as("n"))
-      case None => newCounts
-    }
-    merged.write.mode("overwrite").parquet(s"$storeDir/v$batchId")
-    VersionedStore.prune(spark, storeDir, keepVersions)
-  }
+    * and assert the count store unchanged. */
+  def foldBatch(batch: DataFrame, batchId: Long, storeDir: String): Unit =
+    // normalizeEventTs is a schema-dispatched no-op on proper timestamps;
+    // the StreamScd2 fold normalizes too, so a caller streaming raw
+    // nanos-as-long events cannot silently mis-bucket
+    VersionedStore.fold(batch, batchId, storeDir)(b =>
+      graft.operators.Relational.normalizeEventTs(b)
+        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
+        .agg(count(lit(1)).as("n")))(
+      _.groupBy("event_type", "hour").agg(sum("n").as("n")))
 
   /** Median/MAD anomaly flags over everything the store has seen —
     * the batch operator's body, verbatim, over the newest version.
     */
   def flags(spark: SparkSession, storeDir: String): DataFrame =
     graft.operators.Relational.anomalyFromCounts(
-      ParquetSource.read(spark, latest(spark, storeDir)).select("event_type", "hour", "n"))
+      VersionedStore.read(spark, storeDir, "monitor").select("event_type", "hour", "n"))
 
   /** Exact integer EWMA over the same store (r10) — the batch
     * `events_ewma` fold body
@@ -82,7 +54,7 @@ object StreamMonitor {
     */
   def ewma(spark: SparkSession, storeDir: String): DataFrame =
     graft.operators.Relational.ewmaFromCounts(
-      ParquetSource.read(spark, latest(spark, storeDir))
+      VersionedStore.read(spark, storeDir, "monitor")
         .select(col("event_type"), col("hour"), col("n").as("y")))
 
   /** Densified + gap-filled hourly series over the same store — the batch
@@ -91,8 +63,5 @@ object StreamMonitor {
     */
   def filled(spark: SparkSession, storeDir: String): DataFrame =
     graft.operators.Relational.gapfillFromCounts(
-      ParquetSource.read(spark, latest(spark, storeDir)).select("event_type", "hour", "n"))
-
-  private def latest(spark: SparkSession, storeDir: String): String =
-    VersionedStore.latestOrFail(spark, storeDir, "monitor")
+      VersionedStore.read(spark, storeDir, "monitor").select("event_type", "hour", "n"))
 }

@@ -23,12 +23,8 @@ object StreamQuality {
 
   def start(newDocs: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextAnalysis.gopherRulesOn(batch)
-          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-      }
-      .start()
+    VersionedStore.start(newDocs, checkpointDir) { (batch, batchId) =>
+      graft.operators.TextAnalysis.gopherRulesOn(batch)
+        .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }
 }

@@ -35,12 +35,8 @@ object StreamScore {
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     graft.functions.GraftFunctions.register(spark)
     val cost = ParquetSource.read(spark, s"$modelDir/dsir_cost.parquet")
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(TextAnalysis.dsirScoreAgainst(batch, cost, numBuckets), batchId)
-      }
-      .start()
+    VersionedStore.start(newDocs, checkpointDir) { (batch, batchId) =>
+      sink(TextAnalysis.dsirScoreAgainst(batch, cost, numBuckets), batchId)
+    }
   }
 }

@@ -17,9 +17,9 @@ class GraphBudgetSpec extends AnyFunSuite {
 
   /** row -> (max jobs, max stages), as measured on the array engine. */
   private val budget = Seq(
-    "graph_pagerank" -> (13, 13),
+    "graph_pagerank" -> (12, 12),
     "graph_pagerank_skew" -> (14, 14),
-    "graph_components" -> (11, 11),
+    "graph_components" -> (10, 10),
     "graph_components_skew" -> (12, 12))
 
   test("the superstep rows stay within their job and stage budget and leave nothing behind") {

@@ -2145,7 +2145,7 @@ class StreamMonitorSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getBoolean(5))).toSet
     assert(streamed == batch,
       s"only-stream=${(streamed -- batch).take(3)} only-batch=${(batch -- streamed).take(3)}")
-    // versioned store pruned to keepVersions
+    // versioned store pruned to the newest 2 versions
     val versions = new java.io.File(store).listFiles().filter(_.isDirectory)
       .map(_.getName).filter(_.startsWith("v"))
     assert(versions.length <= 2, s"store must prune old versions: ${versions.toSeq}")

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * bodies twice and assert the published state is unchanged.
   *
   * Horizon note: a replayed batch rebuilds `v<id>` from `v<latest < id>`,
-  * so the store must still hold that prior version — with `keepVersions`
-  * kept, the replay horizon is the last `keepVersions − 1` batches, which
+  * so the store must still hold that prior version. The fold keeps the
+  * newest 2 versions, so the replay horizon is fixed at one batch, which
   * covers foreachBatch's actual behavior (only the most recent
   * uncommitted batch is ever re-delivered).
   */

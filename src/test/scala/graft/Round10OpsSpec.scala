@@ -113,6 +113,32 @@ class Round10OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("ANN increments are listed through the store's file system, numeric ids only") {
+    // A scheme only the session's Hadoop conf resolves: a java.io listing
+    // sees no increments under it. A stray `vOLD` holds rows of its own,
+    // so a listing that takes any `v*` name would count them.
+    import spark.implicits._
+    val scheme = SchemeLocalFileSystem.Scheme
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set(s"fs.$scheme.impl", classOf[SchemeLocalFileSystem].getName)
+    hc.setBoolean(s"fs.$scheme.impl.disable.cache", true)
+    val local = java.nio.file.Files.createTempDirectory("ann-inc-fs").toString
+    try {
+      def coded(ids: Range) = ids.map(i => (i.toLong, i % 4, Seq(i % 7, i % 5))).toDF("vec_id", "cell", "codes")
+      coded(0 until 10).write.parquet(s"$local/coded.parquet")
+      coded(10 until 13).write.parquet(s"$local/increments/v0.parquet")
+      coded(13 until 15).write.parquet(s"$local/increments/v1.parquet")
+      coded(100 until 150).write.parquet(s"$local/increments/vOLD")
+      val ids = Similarity.codedWithIncrements(spark, s"$scheme://$local")
+        .select("vec_id").as[Long].collect().sorted.toSeq
+      assert(ids == (0L until 15L), ids)
+    } finally {
+      hc.unset(s"fs.$scheme.impl")
+      hc.unset(s"fs.$scheme.impl.disable.cache")
+      new scala.reflect.io.Directory(new java.io.File(local)).deleteRecursively()
+    }
+  }
+
   test("k-center coreset equals a driver brute-force greedy exactly") {
     import org.apache.spark.sql.functions.col
     // independent reference: collect the normalized corpus and run the

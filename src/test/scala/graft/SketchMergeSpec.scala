@@ -103,7 +103,7 @@ class SketchMergeSpec extends AnyFunSuite {
       val exact = Map("click" -> 60L, "buy" -> 15L)
       assert(got == oneShot, s"stream rollup $got != one-shot $oneShot")
       assert(got == exact, s"small-cardinality HLL should be exact: $got != $exact")
-      // only keepVersions store versions remain after pruning
+      // only the newest 2 store versions remain after pruning
       val versions = new java.io.File(store).listFiles().filter(_.isDirectory)
         .map(_.getName).filter(_.startsWith("v")).sorted.toSeq
       assert(versions.size <= 2 && versions.contains("v1"), s"versions=$versions")

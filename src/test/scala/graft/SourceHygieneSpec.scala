@@ -6,11 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Two rules that no compiler checks: the main tree reads parquet only
+/** Three rules that no compiler checks: the main tree reads parquet only
   * through `graft.sources.ParquetSource` (whose single-file reads skip
-  * Spark's schema-inference job), and the main and test trees build
-  * sessions only through [[SessionFactory]] (the engine's one session
-  * configuration, which the specs share through [[SparkSpec]]).
+  * Spark's schema-inference job), the main and test trees build sessions
+  * only through [[SessionFactory]] (the engine's one session
+  * configuration, which the specs share through [[SparkSpec]]), and the
+  * main tree opens `foreachBatch` queries only through
+  * `graft.streaming.VersionedStore.start` (one checkpoint and output-mode
+  * setup for every micro-batch sink).
   */
 class SourceHygieneSpec extends AnyFunSuite {
   import SourceHygieneSpec._
@@ -32,9 +35,11 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   test("the scanner sees a call in code and ignores one in a comment") {
     val src = "val a = 1\n// spark.read.parquet(x)\n/** SparkSession.builder() */\n" +
-      "val df = spark.read\n  .parquet(p)\nval s = SparkSession\n  .builder()\n"
+      "val df = spark.read\n  .parquet(p)\nval s = SparkSession\n  .builder()\n" +
+      "// q.foreachBatch(f)\nq.writeStream.foreachBatch { (b, id) => f(b) }\n"
     assert(offenders(src, ParquetRead) == Seq(4))
     assert(offenders(src, SessionBuild) == Seq(6))
+    assert(offenders(src, BatchQuery) == Seq(9))
   }
 
   test("spark.read.parquet appears only in the parquet reader") {
@@ -49,6 +54,11 @@ class SourceHygieneSpec extends AnyFunSuite {
     val specs = violations(SessionBuild, testRoot)
     assert(specs.isEmpty, specs)
   }
+
+  test("foreachBatch appears only in the micro-batch query helper") {
+    assert(sources().exists(p => root.relativize(p).toString == BatchQuery.home))
+    assert(violations(BatchQuery).isEmpty, violations(BatchQuery))
+  }
 }
 
 object SourceHygieneSpec {
@@ -58,6 +68,7 @@ object SourceHygieneSpec {
   val ParquetRead = Rule("""\bread\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet")""",
     "graft/sources/ParquetSource.scala")
   val SessionBuild = Rule("""\bSparkSession\s*\.\s*builder\b""", "graft/SessionFactory.scala")
+  val BatchQuery = Rule("""\bforeachBatch\b""", "graft/streaming/VersionedStore.scala")
 
   /** 1-based lines where `rule` matches in `src`, comments blanked first
     * (line breaks kept, so line numbers hold).

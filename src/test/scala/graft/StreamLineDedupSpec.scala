@@ -58,53 +58,6 @@ class StreamLineDedupSpec extends AnyFunSuite {
     assert(viaStore == batchOut, "store-backed clean != batch operator")
   }
 
-  test("r14: keepVersions < 2 is refused — replay safety cannot be configured away") {
-    // keepVersions=1 would prune v(N-1) immediately after writing vN, so a
-    // re-delivered batch N finds no pre-N state and silently rebuilds the
-    // store from that single batch (ADVICE r13). The guard is shared by all
-    // four versioned stores (VersionedStore.requireReplaySafe).
-    val b = spark.range(1).selectExpr("id AS doc_id", "'x' AS text")
-    for (kv <- Seq(0, 1)) {
-      val e = intercept[IllegalArgumentException] {
-        StreamLineDedup.foldBatch(b, 0L, tmp("kv-guard"), keepVersions = kv)
-      }
-      assert(e.getMessage.contains("keepVersions"), e.getMessage)
-    }
-    for (kv <- Seq(0, 1)) {
-      intercept[IllegalArgumentException] {
-        graft.streaming.StreamSketch.foldBatch(
-          b.selectExpr("doc_id AS k", "text AS v"), 0L, tmp("kv-guard-sk"),
-          "k", "v", keepVersions = kv)
-      }
-      intercept[IllegalArgumentException] {
-        graft.streaming.StreamMonitor.foldBatch(
-          b.selectExpr("'e' AS event_type", "current_timestamp() AS ts"),
-          0L, tmp("kv-guard-mon"), keepVersions = kv)
-      }
-      intercept[IllegalArgumentException] {
-        graft.streaming.StreamScd2.foldBatch(
-          b.selectExpr("doc_id AS user_id", "current_timestamp() AS ts",
-            "doc_id AS event_id", "text AS event_type"),
-          0L, tmp("kv-guard-scd"), keepVersions = kv)
-      }
-    }
-  }
-
-  test("r14: start() fails fast on keepVersions < 2 — at setup, before the query goes live") {
-    // The foldBatch guard alone would only fire inside foreachBatch when
-    // batch 0 arrives, surfacing as a worker-side StreamingQueryException
-    // on an already-running query; start() must refuse synchronously.
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val sdf = mem.toDF().toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      StreamLineDedup.start(sdf, tmp("kv-ff-store"), tmp("kv-ff-ckpt"), keepVersions = 1)
-    }
-    assert(e.getMessage.contains("keepVersions"), e.getMessage)
-  }
-
   test("replay: double-delivered batch leaves the store unchanged; a new id changes it") {
     import spark.implicits._
     val store = tmp("sld-replay")

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ReplaySpec proves idempotence under re-delivery; these tests pin the
   * other failure mode — a store that grows with BATCHES or EVENTS instead
   * of with its documented key space. Each test delivers ≥ 3 batches and
-  * asserts (a) the versioned layout is pruned to `keepVersions` directories
+  * asserts (a) the versioned layout is pruned to 2 directories
   * and (b) the newest version's row count equals the operator's key bound
   * (users×runs for SCD2, types×hours for the monitor, distinct users for
   * the attribution state store), unchanged as more batches arrive.
@@ -35,7 +35,7 @@ class StreamStateBoundSpec extends AnyFunSuite {
         (0 until 3).map(i => (b * 100L + u * 10 + i, ts(b, u.toInt * 5 + i),
           u, s"type_${u % 3}", 0.0, "{}"))
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      graft.streaming.StreamScd2.foldBatch(batch, b.toLong, store, keepVersions = 2)
+      graft.streaming.StreamScd2.foldBatch(batch, b.toLong, store)
 
       assert(versionDirs(store).size <= 2, s"versions not pruned: ${versionDirs(store)}")
       val rows = spark.read.parquet(s"$store/v$b").count()
@@ -56,7 +56,7 @@ class StreamStateBoundSpec extends AnyFunSuite {
     for (b <- 0 until 4) {
       val batch = (0 until 20).map(i =>
         (ts((i / 2) % 2, i), s"type_${i % 2}", 1.0)).toDF("ts", "event_type", "value")
-      graft.streaming.StreamMonitor.foldBatch(batch, b.toLong, store, keepVersions = 2)
+      graft.streaming.StreamMonitor.foldBatch(batch, b.toLong, store)
 
       assert(versionDirs(store).size <= 2, s"versions not pruned: ${versionDirs(store)}")
       val rows = spark.read.parquet(s"$store/v$b").count()
@@ -78,6 +78,22 @@ class StreamStateBoundSpec extends AnyFunSuite {
         .selectExpr("event_type", "hour", "n AS y"))
       .collect().map(_.toSeq).toSet
     assert(streamed == batch && streamed.nonEmpty)
+  }
+
+  test("sketch and line-dedup stores keep at most 2 versions across 4 batches") {
+    import spark.implicits._
+    val sketch = tmp("bound-sketch")
+    val lines = tmp("bound-linededup")
+    for (b <- 0 until 4) {
+      val kv = (0 until 10).map(i => (s"k${i % 3}", s"v${b * 10 + i}")).toDF("k", "v")
+      graft.streaming.StreamSketch.foldBatch(kv, b.toLong, sketch, "k", "v")
+      val docs = (0 until 3).map(i => (b * 10L + i, s"doc $b line $i shared tail words here"))
+        .toDF("doc_id", "text")
+      graft.streaming.StreamLineDedup.foldBatch(docs, b.toLong, lines)
+      for (store <- Seq(sketch, lines))
+        assert(versionDirs(store) == Seq(s"v${math.max(b - 1, 0)}", s"v$b").distinct,
+          s"versions not pruned: ${versionDirs(store)}")
+    }
   }
 
   test("attribution flatMapGroupsWithState keeps one state row per user across 3 batches") {
