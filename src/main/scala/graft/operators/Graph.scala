@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
@@ -11,8 +14,8 @@ import graft.sources.ParquetSource
 
 /** Iterative graph analytics over the trade graph the TPC-H-ish fixture
   * implies: an undirected customer⇄supplier edge for every (customer,
-  * supplier) pair that ever traded (orders ⋈ lineitem, distinct pairs,
-  * both directions materialized so the random walk is symmetric). Node
+  * supplier) pair that ever traded (orders ⋈ lineitem, each pair counted
+  * once, both directions materialized so the random walk is symmetric). Node
   * ids disambiguate the two populations arithmetically
   * (`c_custkey·2` / `s_suppkey·2+1`) — no strings on any shuffle.
   *
@@ -33,18 +36,22 @@ import graft.sources.ParquetSource
   *   - PageRank, components, reach and LPA share ONE superstep engine,
   *     [[supersteps]]: each brings its state init, array kernel (sum, min
   *     or mode) and shuffle step; the node count picks the regime once
-  *   - the engine takes UNDIRECTED (u, v) pairs and builds both edge
-  *     directions itself in its one edge build; only reach caches its pairs
+  *   - the engine takes UNDIRECTED (u, v) pairs, which may repeat, and
+  *     builds both edge directions itself in its one edge build, where each
+  *     edge is counted once; only reach caches its pairs
   *   - up to [[BroadcastableNodes]] nodes, [[arraySupersteps]]: state is
-  *     one long per node on the driver, the edges are cached as
-  *     per-partition primitive arrays partitioned on `dst`, and a
-  *     superstep is one broadcast plus one single-stage job that returns
-  *     one partial per node — no SQL plan per superstep, no exchange, no
-  *     lineage to truncate
-  *   - past the gate, the shuffle regime joins the state to src-partitioned
-  *     edges and aggregates on `dst`, one or two exchanges per superstep,
-  *     with a localCheckpoint every `checkpointEvery` supersteps so the
-  *     plan does not deepen linearly with iterations
+  *     one long per node on the driver, the trade rows reach the edge cache
+  *     through ONE exchange (no distinct ahead of it: the block build
+  *     dedupes), the edges are cached as per-partition primitive arrays
+  *     partitioned on `dst`, and a superstep is one broadcast plus one
+  *     single-stage job that returns one partial per node — no SQL plan per
+  *     superstep, no exchange, no lineage to truncate; the result is a
+  *     driver-local relation, collected with no job
+  *   - past the gate, the shuffle regime dedupes its directed edges once,
+  *     then joins the state to src-partitioned edges and aggregates on
+  *     `dst`, one or two exchanges per superstep, with a localCheckpoint
+  *     every `checkpointEvery` supersteps so the plan does not deepen
+  *     linearly with iterations
   *   - rank SCALE must satisfy `N · SCALE · dampPct < 2^63`: the default
   *     1e9 is safe to ~10^8 nodes; [[pageRankCore]] asserts it on the
   *     runtime node count
@@ -60,23 +67,20 @@ object Graph {
   /** Rank scale: the uniform vector is `SCALE` per node. */
   val Scale = 1000000000L
 
-  /** The distinct undirected trade pairs: (u, v) = (customer node, supplier
-    * node `snode`), uncached — the superstep engine reads them once and
-    * builds both edge directions itself. Distinct pairs only — edge weight
-    * is ignored by design (the oracle does the same). `snode` is the seam
-    * the hub-skew twins use to collapse suppliers into super-nodes.
+  /** The undirected trade pairs: (u, v) = (customer node, supplier node
+    * `snode`), one per lineitem row of a known order, uncached. A pair
+    * repeats when a customer buys from a supplier more than once; the
+    * superstep engine counts each edge once ([[supersteps]]), so no distinct
+    * runs here and the rows reach the edge blocks through one exchange. Edge
+    * weight is ignored by design (the oracle does the same). `snode` is the
+    * seam the hub-skew twins use to collapse suppliers into super-nodes.
     */
   private[graft] def tradePairs(spark: SparkSession, dir: String,
       snode: Column = col("l_suppkey") * 2 + 1): DataFrame =
-    // dedupe (order, supplier) BEFORE the join: the distinct shuffles on
-    // l_orderkey — the join key the rows need anyway — and shrinks the
-    // join output ~4x (multi-lineitem orders) ahead of the wide pair
-    // distinct; at fact-table scale this is the difference between
-    // shuffling lineitem once and shuffling the joined pairs too
     t(spark, dir, "orders").select("o_orderkey", "o_custkey")
-      .join(orderSuppliers(spark, dir), col("o_orderkey") === col("l_orderkey"))
+      .join(t(spark, dir, "lineitem").select("l_orderkey", "l_suppkey"),
+        col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("u"), snode.as("v")) // customer, supplier node
-      .distinct()
 
   /** All graph nodes (isolated customers/suppliers included — they keep
     * the base rank, identically in the oracle). */
@@ -86,11 +90,13 @@ object Graph {
         .select((col("s_suppkey") * 2 + 1).as("node")))
 
   /** The node set of the hub-skew twins: customers plus the `hubMod`
-    * supplier super-nodes `(s_suppkey % hubMod)·2+1`. */
+    * supplier super-nodes `(s_suppkey % hubMod)·2+1`. The supplier table is
+    * small, so its distinct runs in one partition with no exchange, and
+    * [[nodeUniverse]] reads the node set in one job. */
   private[graft] def hubNodes(spark: SparkSession, dir: String, hubMod: Long): DataFrame =
     t(spark, dir, "customer").select((col("c_custkey") * 2).as("node"))
       .unionAll(t(spark, dir, "supplier")
-        .select(((col("s_suppkey") % hubMod) * 2 + 1).as("node")).distinct())
+        .select(((col("s_suppkey") % hubMod) * 2 + 1).as("node")).coalesce(1).distinct())
 
   /** Fixed-iteration integer PageRank:
     * `pr' = SCALE·(100−dampPct)/100 + dampPct · Σ_in (pr div outdeg) div 100`,
@@ -140,18 +146,18 @@ object Graph {
     * recurrences (and the oracle's `nodes LEFT JOIN`) assume one state per
     * node.
     *
-    * A node set with no shuffle (the scans of [[tradeNodes]]) is read in
-    * one task that stops at `gate + 1` rows: a limit over several
-    * partitions would take one job per batch of partitions. A node set
-    * with a shuffle keeps its partitions, so its reduce side never runs
-    * in one task.
+    * A node set whose plan needs no exchange (the scans of [[tradeNodes]],
+    * the one-partition distinct of [[hubNodes]]) is read in one task that
+    * stops at `gate + 1` rows: a limit over several partitions would take
+    * one job per batch of partitions. A node set with an exchange keeps its
+    * partitions, so its reduce side never runs in one task.
     */
   private def nodeUniverse(nodes: DataFrame, init: Column,
       gate: Long): (Long, Option[(Array[Long], Array[Long])]) = {
     require(gate >= 0 && gate < Int.MaxValue, s"node gate must be in [0, 2^31-1), got $gate")
     val sel = nodes.select(col("node").cast("long").as("id"), init.cast("long").as("init"))
-    val narrow = !sel.queryExecution.sparkPlan.exists(
-      _.requiredChildDistribution.exists(_ != UnspecifiedDistribution))
+    val narrow = !sel.queryExecution.sparkPlan.exists(p => p.children.zip(p.requiredChildDistribution)
+      .exists { case (c, d) => !c.outputPartitioning.satisfies(d) }) // no exchange is planned
     val rows = (if (narrow) sel.coalesce(1) else sel)
       .limit(gate.toInt + 1)
       .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)).collect()
@@ -170,10 +176,11 @@ object Graph {
 
   /** One partition of the array engine's edge cache: edge `k` runs from
     * node index `src(k)` into local slot `slot(k)`, whose node index is
-    * `dst(slot(k))` and whose in-degree over ALL edges (its out-degree, the
-    * edges being symmetric) is `deg(slot(k))`. Edges are partitioned on
-    * `dst`, so every dst owns one slot in one partition and sees all its
-    * in-edges there: any per-dst fold is partition-local and exact. */
+    * `dst(slot(k))`. `deg(slot(k))` counts the slot's distinct
+    * in-neighbours, non-nodes included: its out-degree, the edges being
+    * symmetric. Edges are partitioned on `dst`, so every dst owns one slot
+    * in one partition and sees all its in-edges there: any per-dst fold is
+    * partition-local and exact. Each (dst, src) edge appears once. */
   private final case class EdgeBlock(src: Array[Int], slot: Array[Int],
       dst: Array[Int], deg: Array[Long])
 
@@ -205,15 +212,22 @@ object Graph {
     acc
   }
 
-  /** The most frequent `state(src)`, ties to the smallest (LPA): each slot's
-    * states, bucketed by a counting sort, are sorted; the first longest run wins. */
-  private val modeIn: Fold = (b, st) => {
-    val start = new Array[Int](b.dst.length + 1) // slot j: lbl(start(j) until start(j + 1))
-    b.slot.foreach(j => start(j + 1) += 1)
-    for (j <- b.dst.indices) start(j + 1) += start(j)
+  /** Counting sort of `value(k)` by `slot(k)` into `nSlots` buckets: slot
+    * `j` holds `out(start(j) until start(j + 1))`. */
+  private def bySlot(slot: Array[Int], nSlots: Int, value: Int => Long): (Array[Int], Array[Long]) = {
+    val start = new Array[Int](nSlots + 1)
+    slot.foreach(j => start(j + 1) += 1)
+    for (j <- 0 until nSlots) start(j + 1) += start(j)
     val next = start.clone()
-    val lbl = new Array[Long](b.src.length)
-    for (k <- b.src.indices) { lbl(next(b.slot(k))) = st(b.src(k)); next(b.slot(k)) += 1 }
+    val out = new Array[Long](slot.length)
+    for (k <- slot.indices) { out(next(slot(k))) = value(k); next(slot(k)) += 1 }
+    (start, out)
+  }
+
+  /** The most frequent `state(src)`, ties to the smallest (LPA): each slot's
+    * states, bucketed by [[bySlot]], are sorted; the first longest run wins. */
+  private val modeIn: Fold = (b, st) => {
+    val (start, lbl) = bySlot(b.slot, b.dst.length, k => st(b.src(k)))
     Array.tabulate(b.dst.length) { j =>
       java.util.Arrays.sort(lbl, start(j), start(j + 1))
       var best = Long.MaxValue
@@ -245,7 +259,11 @@ object Graph {
     * frame after `iters` supersteps over both directions of the undirected
     * (u, v) `pairs`. [[nodeUniverse]] reads the nodes once; `checkNodes`
     * sees their count, which picks [[arraySupersteps]] up to `gate`, else
-    * [[shuffleSupersteps]]. `extraCaches` are released with the result. */
+    * [[shuffleSupersteps]]. `extraCaches` are released with the result.
+    *
+    * Both regimes count an edge once: a (src, dst) edge that the pairs give
+    * more than once (a repeated pair) folds and counts in `outdeg` as one,
+    * as over the oracle's distinct pairs. So callers need not dedupe. */
   private def supersteps(spark: SparkSession, pairs: DataFrame, nodes0: DataFrame,
       rec: Recurrence, iters: Int, checkpointEvery: Int, gate: Long,
       extraCaches: Seq[DataFrame], checkNodes: Long => Unit = _ => ()): DataFrame = {
@@ -258,15 +276,19 @@ object Graph {
   }
 
   /** The small-graph regime: one long of state per node on the driver,
-    * indexed by position in the sorted `ids`. One pass maps the pairs to both
-    * edge directions and persisted [[EdgeBlock]]s, dropping an edge whose src
-    * or dst is not a node (as the oracle's joins do) but counting it in its
-    * dst's degree; a `byDegree` recurrence collects the degrees in the job
-    * that fills the blocks. Per superstep the sent values are broadcast, one
-    * single-stage job folds each block into per-dst partials, and the driver
-    * updates every node. All-integer, so partitioning and summation order do
-    * not matter. The result is an RDD-backed frame over the driver's arrays,
-    * checkpointed only when `finish` reshapes it. */
+    * indexed by position in the sorted `ids`. One exchange takes both edge
+    * directions of the pairs to persisted [[EdgeBlock]]s, partitioned on
+    * `dst`. The block build is where an edge is counted once: it buckets
+    * each partition's edges by dst slot, sorts each slot's raw srcs and keeps
+    * one edge per (dst, src). It drops an edge whose src or dst is not a node
+    * (as the oracle's joins do), but counts its src in its dst's degree; a
+    * `byDegree` recurrence collects the degrees in the job that fills the
+    * blocks. Per superstep the sent values are broadcast, one single-stage
+    * job folds each block into per-dst partials, and the driver updates
+    * every node. All-integer, so partitioning and summation order do not
+    * matter. The result is a driver-local relation over the driver's
+    * arrays, which a collect reads with no job; it is checkpointed only when
+    * `finish` reshapes it. */
   private def arraySupersteps(spark: SparkSession, pairs: DataFrame, ids: Array[Long],
       init: Array[Long], rec: Recurrence, iters: Int, extraCaches: Seq[DataFrame]): DataFrame = {
     val sc = spark.sparkContext
@@ -277,19 +299,35 @@ object Graph {
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("dst"))
       .queryExecution.toRdd.mapPartitions { rows =>
         val ids = idsB.value
-        val src, slot, dst = Array.newBuilder[Int]
-        val deg = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val slotOf = scala.collection.mutable.HashMap.empty[Int, Int]
+        val dstB, rawSlot = Array.newBuilder[Int]
+        val rawSrc = Array.newBuilder[Long]
+        val slotOf = Array.fill(ids.length)(-1) // node index -> local slot
         rows.foreach { r =>
           val d = java.util.Arrays.binarySearch(ids, r.getLong(1))
           if (d >= 0) {
-            val j = slotOf.getOrElseUpdate(d, { dst += d; deg += 0L; slotOf.size }) // next free slot
-            deg(j) += 1
-            val s = java.util.Arrays.binarySearch(ids, r.getLong(0))
-            if (s >= 0) { src += s; slot += j }
+            if (slotOf(d) < 0) { slotOf(d) = dstB.length; dstB += d } // next free slot
+            rawSlot += slotOf(d)
+            rawSrc += r.getLong(0)
           }
         }
-        Iterator.single(EdgeBlock(src.result(), slot.result(), dst.result(), deg.toArray))
+        val dst = dstB.result()
+        val raw = rawSrc.result()
+        val (start, srcs) = bySlot(rawSlot.result(), dst.length, raw(_))
+        val src, slot = Array.newBuilder[Int]
+        val deg = new Array[Long](dst.length)
+        for (j <- dst.indices) {
+          java.util.Arrays.sort(srcs, start(j), start(j + 1))
+          var i = start(j)
+          while (i < start(j + 1)) {
+            if (i == start(j) || srcs(i) != srcs(i - 1)) { // the first of each distinct src
+              deg(j) += 1
+              val s = java.util.Arrays.binarySearch(ids, srcs(i))
+              if (s >= 0) { src += s; slot += j }
+            }
+            i += 1
+          }
+        }
+        Iterator.single(EdgeBlock(src.result(), slot.result(), dst, deg))
       }.persist(StorageLevel.MEMORY_AND_DISK)
     val state = try {
       val outdeg = Array.fill(ids.length)(1L) // a node no block counts: no edge reads it
@@ -309,15 +347,18 @@ object Graph {
       blocks.unpersist(false)
       idsB.destroy()
     }
-    val out = spark.createDataFrame(sc.parallelize(ids.indices.map(i => Row(ids(i), state(i)))),
-      StructType.fromDDL(s"node BIGINT NOT NULL, ${rec.name} BIGINT NOT NULL"))
+    // a driver-local relation of internal rows: no RDD, and no job to collect it
+    val out = PlanBridge.ofRows(spark, LocalRelation(
+      DataTypeUtils.toAttributes(StructType.fromDDL(s"node BIGINT NOT NULL, ${rec.name} BIGINT NOT NULL")),
+      ids.indices.map(i => InternalRow(ids(i), state(i)))))
     rec.finish match {
       case Some(f) => Dedup.materializeAndRelease(extraCaches, f(out))
       case None => extraCaches.foreach(_.unpersist(false)); out
     }
   }
 
-  /** The shuffle regime, past the node gate. The edges are persisted
+  /** The shuffle regime, past the node gate. The directed edges are
+    * deduped once, ahead of the degree aggregate, then persisted
     * partitioned on `src`, so a superstep's join exchanges only the state;
     * dsts outside the node set are dropped once up front (srcs outside it
     * never meet a state row), after a `byDegree` recurrence's `outdeg` has
@@ -327,7 +368,7 @@ object Graph {
       rec: Recurrence, iters: Int, checkpointEvery: Int,
       extraCaches: Seq[DataFrame]): DataFrame = {
     val nodes = nodes0.persist(StorageLevel.MEMORY_AND_DISK)
-    val all = directed(pairs)
+    val all = directed(pairs).distinct()
     val withDeg = if (!rec.byDegree) all
       else all.join(all.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
     val edges = withDeg.join(nodes, withDeg("dst") === nodes("node"), "left_semi")

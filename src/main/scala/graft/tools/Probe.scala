@@ -29,8 +29,8 @@ import graft.{Bench, SessionFactory, SparkEntry}
   * runMain graft.tools.Probe scale   [--k=<n>] row ...
   * }}}
   *
-  *   - `profile`: wall, jobs, stages, tasks, task-s, GC, shuffle, input and
-  *     spill per row (no rows = the whole catalog). `--stages` adds one line
+  *   - `profile`: wall, jobs, stages, tasks, task-s, GC, shuffle read and
+  *     write (KB), input and spill per row (no rows = the whole catalog). `--stages` adds one line
   *     per stage of run 2; `--show=n` prints the first n result rows.
   *   - `ab`: one A/B leg (bench/PROTOCOL.md) — a host calibration stamp,
   *     then wall and `ratio_mt` = wall / all-cores calibration per row.
@@ -166,14 +166,15 @@ object Probe {
   def profile(spark: SparkSession, dir: String, rows: Seq[String],
       stages: Boolean = false, show: Int = 0): Seq[Timing] = withMeter(spark) { meter =>
     println(f"${"query"}%-36s ${"wall_s"}%8s ${"w2_s"}%8s ${"jobs"}%5s ${"stg"}%5s " +
-      f"${"tasks"}%6s ${"taskS"}%8s ${"gcS"}%6s ${"shufMB"}%8s ${"inMB"}%7s ${"spillMB"}%8s")
+      f"${"tasks"}%6s ${"taskS"}%8s ${"gcS"}%6s ${"shufRK"}%8s ${"shufWK"}%8s ${"inMB"}%7s " +
+      f"${"spillMB"}%8s")
     rows.map { row =>
       warm(spark, row, dir)
       val t = bestOf2(spark, meter, row, dir)
       val c = t.counters
       println(f"$row%-36s ${t.wallS}%8.3f ${t.run2S}%8.3f ${c.jobs}%5d ${c.stages}%5d " +
         f"${c.tasks}%6d ${c.taskS}%8.2f ${c.gcMs / 1e3}%6.2f " +
-        f"${(c.shuffleReadBytes + c.shuffleWriteBytes) / 1e6}%8.1f ${c.inputBytes / 1e6}%7.1f " +
+        f"${c.shuffleReadBytes / 1000}%8d ${c.shuffleWriteBytes / 1000}%8d ${c.inputBytes / 1e6}%7.1f " +
         f"${c.spillBytes / 1e6}%8.1f")
       if (stages) meter.stageLog.foreach(println)
       if (show > 0) SparkEntry.queries(row)(spark, dir).show(show, truncate = false)

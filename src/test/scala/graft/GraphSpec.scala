@@ -201,13 +201,14 @@ class GraphSpec extends AnyFunSuite {
         if (rank) Graph.pageRankCore(spark, pairs0, nodes, 5, 85, Graph.Scale, 4, gate)
         else Graph.componentsCore(spark, pairs0, nodes, 4, 2, gate)
       val own = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
-      assert(own.size == 1)
       if (gate == 0L) {
         // the shuffle regime's result is a local checkpoint: its RDD is the one new cache
+        assert(own.size == 1)
         assert(sc.getPersistentRDDs.keySet == cached ++ own, s"gate=$gate rank=$rank")
         own.foreach(id => sc.getPersistentRDDs(id).unpersist(true))
       } else {
-        // the array regime's result is built from the driver's arrays: no new cache at all
+        // the array regime's result is a driver-local relation: it holds no RDD, no new cache
+        assert(own.isEmpty, s"gate=$gate rank=$rank")
         assert(sc.getPersistentRDDs.keySet == cached, s"gate=$gate rank=$rank")
       }
       // broadcast removal is asynchronous
@@ -219,9 +220,10 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  /** The trade graph of `dir` as collected undirected (u, v) pairs. */
+  /** The trade graph of `dir` as collected distinct undirected (u, v) pairs:
+    * the driver-side references count each edge once, as the engine does. */
   private def tradePairs(dir: String): Seq[(Long, Long)] =
-    Graph.tradePairs(spark, dir).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    Graph.tradePairs(spark, dir).distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   /** Both directions of undirected pairs, as (src, dst) edges. */
   private def bothWays(p: Seq[(Long, Long)]): Seq[(Long, Long)] = p ++ p.map(_.swap)
@@ -284,6 +286,25 @@ class GraphSpec extends AnyFunSuite {
     // from s2 (hop 3): it is reached at hop 4, and s0 (via c3) at hop 5
     val stray = pairs(Graph.reachability(spark, strayDir, maxHops = 5))
     assert(stray(0L) == 4L && stray(1L) == 5L && !stray.contains(8L), s"$stray")
+  }
+
+  test("a repeated pair changes nothing: both regimes count every edge once") {
+    for (dir <- Seq(SparkSpec.testDataDir, pathDir); gate <- Seq(0L, Graph.BroadcastableNodes)) {
+      val once = Graph.tradePairs(spark, dir).distinct()
+      val nodes = Graph.tradeNodes(spark, dir)
+      val cores = Seq[(String, DataFrame => DataFrame)](
+        "pageRank" -> (p => Graph.pageRankCore(spark, p, nodes, 5, 85, Graph.Scale, 4, gate)),
+        "components" -> (p => Graph.componentsCore(spark, p, nodes, 4, 2, gate)),
+        "reach" -> (p => Graph.reachCore(spark, p, seedC1, 3, gate)),
+        "lpa" -> (p => Graph.lpaCore(spark, p, 3, broadcastNodes = gate)))
+      for ((name, core) <- cores) {
+        val want = core(once).collect().toSet
+        val got = core(once.unionAll(once)).collect().toSet
+        assert(want.nonEmpty, s"$name $dir gate=$gate")
+        val same = got == want
+        assert(same, s"$name $dir gate=$gate: ${(got -- want).take(3)}")
+      }
+    }
   }
 
   test("LPA and reach release every cache and broadcast they make") {
