@@ -492,25 +492,24 @@ object SparkEntry {
     // approximate → no SQL oracle (engine-specific estimates); accuracy is
     // spec-checked against exact counts in HllSpec
     "sketch_distinct" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       ParquetSource.read(s, s"$d/lineitem.parquet").createOrReplaceTempView("graft_li")
-      s.sql("SELECT l_returnflag, graft_hll_distinct(l_partkey) AS approx_parts, " +
-        "graft_hll_distinct(l_orderkey) AS approx_orders FROM graft_li GROUP BY l_returnflag")
+      s.sql("SELECT l_returnflag, hll_sketch_estimate(hll_sketch_agg(l_partkey)) AS approx_parts, " +
+        "hll_sketch_estimate(hll_sketch_agg(l_orderkey)) AS approx_orders " +
+        "FROM graft_li GROUP BY l_returnflag")
     }),
     // sketch ACCURACY as oracle rows (the ann_recall pattern): the booleans
     // are computed from sketch-vs-exact inside Spark; the DuckDB oracle
     // computes the exact values and asserts TRUE — a sketch drifting out of
     // bound hash-mismatches the driver row.
     "sketch_distinct_check" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       ParquetSource.read(s, s"$d/lineitem.parquet").createOrReplaceTempView("graft_li")
       s.sql(
         """WITH g AS (
           | SELECT l_returnflag,
           |  count(DISTINCT l_partkey) AS exact_parts,
           |  count(DISTINCT l_orderkey) AS exact_orders,
-          |  graft_hll_distinct(l_partkey) AS est_parts,
-          |  graft_hll_distinct(l_orderkey) AS est_orders
+          |  hll_sketch_estimate(hll_sketch_agg(l_partkey)) AS est_parts,
+          |  hll_sketch_estimate(hll_sketch_agg(l_orderkey)) AS est_orders
           | FROM graft_li GROUP BY l_returnflag)
           |SELECT l_returnflag,
           | CAST(exact_parts AS BIGINT) AS exact_parts,
@@ -520,16 +519,15 @@ object SparkEntry {
           |FROM g""".stripMargin)
     }),
     "sketch_theta_check" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       graft.operators.Relational.events(s, d).createOrReplaceTempView("graft_events")
       s.sql(
         """WITH sk AS (
-          | SELECT event_type, graft_theta_sketch(user_id) AS sk
+          | SELECT event_type, theta_sketch_agg(user_id) AS sk
           | FROM graft_events GROUP BY event_type),
           |est AS (
           | SELECT a.event_type AS type_a, b.event_type AS type_b,
-          |  graft_theta_intersect_est(a.sk, b.sk) AS est_both,
-          |  graft_theta_union_est(a.sk, b.sk) AS est_either
+          |  theta_sketch_estimate(theta_intersection(a.sk, b.sk)) AS est_both,
+          |  theta_sketch_estimate(theta_union(a.sk, b.sk)) AS est_either
           | FROM sk a JOIN sk b ON a.event_type < b.event_type),
           |du AS (SELECT DISTINCT event_type, user_id FROM graft_events),
           |cnt AS (SELECT event_type, count(*) AS n FROM du GROUP BY event_type),
@@ -548,12 +546,11 @@ object SparkEntry {
           | JOIN cnt cb ON cb.event_type = e.type_b""".stripMargin)
     }),
     "sketch_quantile_check" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       ParquetSource.read(s, s"$d/lineitem.parquet").createOrReplaceTempView("graft_li")
       s.sql(
         """WITH q AS (
           | SELECT l_returnflag,
-          |  element_at(graft_kll_quantiles(l_quantity, array(0.5D)), 1) AS q50
+          |  element_at(kll_sketch_get_quantile_double(kll_sketch_agg_double(l_quantity), array(0.5D)), 1) AS q50
           | FROM graft_li GROUP BY l_returnflag),
           |r AS (
           | SELECT l_returnflag, l_quantity,

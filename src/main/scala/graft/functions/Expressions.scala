@@ -1372,31 +1372,6 @@ object GraftFunctions {
       require(exprs.length == 2, "graft_bloom_contains(filter, key)")
       BloomContains(exprs.head, exprs(1))
     },
-    "graft_hll_distinct" -> { exprs =>
-      val lgK = if (exprs.length > 1) num(exprs(1)).intValue() else 12
-      HllDistinct(exprs.head, lgK).toAggregateExpression()
-    },
-    "graft_theta_sketch" -> { exprs =>
-      val lgK = if (exprs.length > 1) num(exprs(1)).intValue() else 12
-      ThetaSketchAgg(exprs.head, lgK).toAggregateExpression()
-    },
-    "graft_theta_union_est" -> { exprs =>
-      require(exprs.length == 2, "graft_theta_union_est(sketch, sketch)")
-      ThetaSetEstimate(exprs(0), exprs(1), "union")
-    },
-    "graft_theta_intersect_est" -> { exprs =>
-      require(exprs.length == 2, "graft_theta_intersect_est(sketch, sketch)")
-      ThetaSetEstimate(exprs(0), exprs(1), "intersect")
-    },
-    "graft_theta_diff_est" -> { exprs =>
-      require(exprs.length == 2, "graft_theta_diff_est(sketchA, sketchB)")
-      ThetaSetEstimate(exprs(0), exprs(1), "diff")
-    },
-    "graft_freq_items" -> { exprs =>
-      val k = if (exprs.length > 1) num(exprs(1)).intValue() else 10
-      val maxMapSize = if (exprs.length > 2) num(exprs(2)).intValue() else 256
-      FreqItems(exprs.head, k, maxMapSize).toAggregateExpression()
-    },
     "graft_freq_check" -> { exprs =>
       val maxMapSize = if (exprs.length > 1) num(exprs(1)).intValue() else 256
       FreqItemsCheck(exprs.head, maxMapSize).toAggregateExpression()
@@ -1416,65 +1391,6 @@ object GraftFunctions {
     "graft_struct_field" -> { exprs =>
       require(exprs.length == 2, "graft_struct_field(arr, 'field')")
       StructFieldArray(exprs.head, exprs(1).eval().toString)
-    },
-    "graft_kll_quantiles" -> { exprs =>
-      require(exprs.length >= 2, "graft_kll_quantiles(col, array(ranks...)[, k])")
-      val ranks = exprs(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        .toDoubleArray().toSeq
-      val k = if (exprs.length > 2) num(exprs(2)).intValue() else 200
-      KllQuantiles(exprs.head, ranks, k).toAggregateExpression()
-    },
-    // --- persisted-blob emit + merge surface (cross-day sketch rollups) ---
-    "graft_hll_sketch" -> { exprs =>
-      val lgK = if (exprs.length > 1) num(exprs(1)).intValue() else 12
-      HllDistinct(exprs.head, lgK, emitBlob = true).toAggregateExpression()
-    },
-    "graft_hll_merge" -> { exprs =>
-      val lgK = if (exprs.length > 1) num(exprs(1)).intValue() else 12
-      HllMergeEstimate(exprs.head, lgK).toAggregateExpression()
-    },
-    // merged blob (not estimate): the store-update step of a rolling rollup
-    "graft_hll_merge_sketch" -> { exprs =>
-      val lgK = if (exprs.length > 1) num(exprs(1)).intValue() else 12
-      HllMergeEstimate(exprs.head, lgK, emitBlob = true).toAggregateExpression()
-    },
-    "graft_kll_sketch" -> { exprs =>
-      val k = if (exprs.length > 1) num(exprs(1)).intValue() else 200
-      KllQuantiles(exprs.head, Seq.empty, k, emitBlob = true).toAggregateExpression()
-    },
-    "graft_kll_merge_quantiles" -> { exprs =>
-      require(exprs.length >= 2, "graft_kll_merge_quantiles(blob, array(ranks...)[, k])")
-      val ranks = exprs(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        .toDoubleArray().toSeq
-      val k = if (exprs.length > 2) num(exprs(2)).intValue() else 200
-      KllMergeQuantiles(exprs.head, ranks, k).toAggregateExpression()
-    },
-    "graft_theta_merge_est" -> { exprs =>
-      val lgK = if (exprs.length > 1) num(exprs(1)).intValue() else 12
-      ThetaMergeEstimate(exprs.head, lgK).toAggregateExpression()
-    },
-    // merged blob (not quantiles/estimate): the store-update step of the
-    // rolling KLL / theta rollups — HLL's graft_hll_merge_sketch twin
-    "graft_kll_merge_sketch" -> { exprs =>
-      val k = if (exprs.length > 1) num(exprs(1)).intValue() else 200
-      KllMergeQuantiles(exprs.head, Seq.empty, k, emitBlob = true).toAggregateExpression()
-    },
-    "graft_theta_merge_sketch" -> { exprs =>
-      val lgK = if (exprs.length > 1) num(exprs(1)).intValue() else 12
-      ThetaMergeEstimate(exprs.head, lgK, emitBlob = true).toAggregateExpression()
-    },
-    "graft_freq_sketch" -> { exprs =>
-      val maxMapSize = if (exprs.length > 1) num(exprs(1)).intValue() else 256
-      FreqItems(exprs.head, k = 0, maxMapSize, emitBlob = true).toAggregateExpression()
-    },
-    "graft_freq_merge_items" -> { exprs =>
-      val k = if (exprs.length > 1) num(exprs(1)).intValue() else 10
-      val maxMapSize = if (exprs.length > 2) num(exprs(2)).intValue() else 256
-      FreqMergeItems(exprs.head, k, maxMapSize).toAggregateExpression()
-    },
-    "graft_freq_merge_sketch" -> { exprs =>
-      val maxMapSize = if (exprs.length > 1) num(exprs(1)).intValue() else 256
-      FreqMergeItems(exprs.head, k = 0, maxMapSize, emitBlob = true).toAggregateExpression()
     },
     "graft_gram" -> { exprs =>
       require(exprs.length >= 2, "graft_gram(embedding, dim[, scale])")

@@ -7,84 +7,16 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Heavy hitters via a DataSketches frequent-items sketch — finds the
-  * most frequent strings (tokens, n-grams, URLs, boilerplate lines) in one
-  * mergeable pass with bounded memory. At 100 TB this is how you find the
-  * dominant boilerplate in a corpus WITHOUT a full (token → count)
-  * aggregation: each partition keeps a `maxMapSize`-entry sketch, sketches
-  * merge associatively, and every item whose true count exceeds
-  * n/maxMapSize is guaranteed present (no false negatives; estimates are
-  * within `getMaximumError` of truth).
+/** Heavy hitters via a DataSketches frequent-items sketch, with the
+  * sketch's error bounds exposed — the driver-checkable form that Spark's
+  * `approx_top_k` family does not give. Each partition keeps a
+  * `maxMapSize`-entry sketch, sketches merge associatively, and every item
+  * whose true count exceeds n/maxMapSize is guaranteed present.
   *
-  * Result: top-`k` `array<struct<item string, estimate bigint>>`, ordered
-  * by (estimate desc, item) for determinism.
-  */
-case class FreqItems(
-    child: Expression,
-    k: Int = 10,
-    maxMapSize: Int = 256,
-    emitBlob: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[ItemsSketch[String]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = if (emitBlob) BinaryType else ArrayType(
-    StructType(Seq(
-      StructField("item", StringType, nullable = false),
-      StructField("estimate", LongType, nullable = false))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_freq_items requires a string column, got ${other.sql}")
-  }
-
-  override def createAggregationBuffer(): ItemsSketch[String] =
-    new ItemsSketch[String](maxMapSize)
-
-  override def update(buffer: ItemsSketch[String], input: InternalRow): ItemsSketch[String] = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(buffer: ItemsSketch[String], input: ItemsSketch[String]): ItemsSketch[String] = {
-    buffer.merge(input)
-    buffer
-  }
-
-  override def eval(buffer: ItemsSketch[String]): Any =
-    if (emitBlob) serialize(buffer)
-    else {
-      val rows = buffer.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES)
-        .sortBy(r => (-r.getEstimate, r.getItem))
-        .take(k)
-        .map(r => InternalRow(UTF8String.fromString(r.getItem), r.getEstimate))
-      new GenericArrayData(rows.asInstanceOf[Array[Any]])
-    }
-
-  override def serialize(buffer: ItemsSketch[String]): Array[Byte] =
-    buffer.toByteArray(new ArrayOfStringsSerDe())
-
-  override def deserialize(bytes: Array[Byte]): ItemsSketch[String] =
-    ItemsSketch.getInstance(Memory.wrap(bytes), new ArrayOfStringsSerDe())
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): FreqItems =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): FreqItems =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FreqItems =
-    copy(child = newChildren.head)
-}
-
-/** [[FreqItems]] with its error bounds exposed — the driver-checkable form.
   * Returns one struct carrying every frequent item (NO_FALSE_NEGATIVES cut,
   * no top-k truncation) with the sketch's own per-item lower/upper bounds,
   * plus `max_error` (the data-dependent maximum over-count) and
@@ -156,4 +88,13 @@ case class FreqItemsCheck(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FreqItemsCheck =
     copy(child = newChildren.head)
+}
+
+object FreqItemsCheck {
+
+  /** `maxItemsTracked` for Spark's `approx_top_k*` functions. Spark sizes
+    * the sketch's map to the power of 2 at or above maxItemsTracked / 0.75,
+    * so 192 gives the 256-entry map that [[FreqItemsCheck]] defaults to.
+    */
+  val ItemsTracked = 192
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.FreqItemsCheck
 import graft.sources.ParquetSource
 import graft.sql.ParallelRanges
 
@@ -1741,7 +1742,8 @@ object Relational {
     * the three exact distinct counts rewrite to Expand (one extra pass of
     * (column, value) pairs through the exchange, same shape as
     * [[countDistinctAgg]]); nothing collects. At 100 TB swap exact
-    * distincts for `graft_hll_distinct` (documented, one-line change).
+    * distincts for `hll_sketch_estimate(hll_sketch_agg(x))` (documented,
+    * one-line change).
     */
   def statsProfile(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "lineitem")
@@ -2204,16 +2206,15 @@ object Relational {
     * accuracy is spec-checked in ThetaSpec.
     */
   def thetaOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     events(spark, dir).createOrReplaceTempView("graft_events")
     spark.sql(
       """WITH sk AS (
-        | SELECT event_type, graft_theta_sketch(user_id) AS sk
+        | SELECT event_type, theta_sketch_agg(user_id) AS sk
         | FROM graft_events GROUP BY event_type)
         |SELECT a.event_type AS type_a, b.event_type AS type_b,
-        | graft_theta_intersect_est(a.sk, b.sk) AS both_users_est,
-        | graft_theta_union_est(a.sk, b.sk) AS either_users_est,
-        | graft_theta_diff_est(a.sk, b.sk) AS only_a_users_est
+        | theta_sketch_estimate(theta_intersection(a.sk, b.sk)) AS both_users_est,
+        | theta_sketch_estimate(theta_union(a.sk, b.sk)) AS either_users_est,
+        | theta_sketch_estimate(theta_difference(a.sk, b.sk)) AS only_a_users_est
         |FROM sk a JOIN sk b ON a.event_type < b.event_type""".stripMargin)
   }
 
@@ -2309,18 +2310,19 @@ object Relational {
   }
 
   /** KLL quantile sketch per group — mergeable approximate percentiles
-    * ([[graft.functions.KllQuantiles]]); rows-only driver check (scalar
+    * (Spark's `kll_sketch_agg_double`, k = 200); rows-only driver check (scalar
     * doubles, so the harness can sort/hash them), accuracy is spec-checked
     * against exact rank quantiles in KllSpec.
     */
   def sketchQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     t(spark, dir, "lineitem").createOrReplaceTempView("graft_li")
     spark.sql(
       """WITH q AS (
         | SELECT l_returnflag,
-        |  graft_kll_quantiles(l_quantity, array(0.5D, 0.95D, 0.99D)) AS qty_q,
-        |  graft_kll_quantiles(l_extendedprice, array(0.5D, 0.95D, 0.99D)) AS price_q
+        |  kll_sketch_get_quantile_double(kll_sketch_agg_double(l_quantity),
+        |   array(0.5D, 0.95D, 0.99D)) AS qty_q,
+        |  kll_sketch_get_quantile_double(kll_sketch_agg_double(l_extendedprice),
+        |   array(0.5D, 0.95D, 0.99D)) AS price_q
         | FROM graft_li GROUP BY l_returnflag)
         |SELECT l_returnflag,
         | element_at(qty_q, 1) AS qty_q50, element_at(qty_q, 2) AS qty_q95,
@@ -2335,7 +2337,7 @@ object Relational {
   // The pattern shared by all three: per-SHARD sketch blobs are written to
   // parquet (the shard key stands in for "day" — l_linenumber gives 7
   // shards per returnflag, date(ts) gives real days for events), read
-  // back, and MERGED per group with the `graft_*_merge*` aggregates — the
+  // back, and MERGED per group with Spark's sketch union aggregates — the
   // original rows are never re-scanned. The output is exact values plus
   // within-bound booleans (the `sketch_distinct_check` recipe), so the
   // DuckDB oracle computes the exact side and asserts TRUE: a merge that
@@ -2355,15 +2357,14 @@ object Relational {
     * distinct-part estimate per returnflag, gated within 5% of exact.
     */
   def hllStoreMergeCheck(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     withTempStore("graft-hll-store") { store =>
       t(spark, dir, "lineitem")
         .groupBy("l_returnflag", "l_linenumber")
-        .agg(expr("graft_hll_sketch(l_partkey)").as("sk"))
+        .agg(expr("hll_sketch_agg(l_partkey)").as("sk"))
         .write.mode("overwrite").parquet(s"$store/hll.parquet")
       val merged = ParquetSource.read(spark, s"$store/hll.parquet")
         .groupBy("l_returnflag")
-        .agg(expr("graft_hll_merge(sk)").as("est_parts"))
+        .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("est_parts"))
       val exact = t(spark, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(countDistinct(col("l_partkey")).as("exact_parts"))
@@ -2387,17 +2388,16 @@ object Relational {
     * pins `estimate == exact count` for every item, not a tolerance.
     */
   def freqStoreMergeCheck(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     withTempStore("graft-freq-store") { store =>
       events(spark, dir)
         .withColumn("shard", col("user_id") % 8)
         .groupBy("shard")
-        .agg(expr("graft_freq_sketch(event_type)").as("sk"))
+        .agg(expr(s"approx_top_k_accumulate(event_type, ${FreqItemsCheck.ItemsTracked})").as("sk"))
         .write.mode("overwrite").parquet(s"$store/freq.parquet")
       val merged = ParquetSource.read(spark, s"$store/freq.parquet")
-        .select(explode(expr("graft_freq_merge_items(sk, 10)")).as("t"))
-        .select(col("t.item").as("event_type"),
-          col("t.estimate").as("est"))
+        .select(explode(expr(
+          s"approx_top_k_estimate(approx_top_k_combine(sk, ${FreqItemsCheck.ItemsTracked}), 10)")).as("t"))
+        .select(col("t.item").as("event_type"), col("t.count").as("est"))
       val exact = events(spark, dir)
         .groupBy("event_type").agg(count(lit(1)).as("exact_n"))
       exact.join(merged, "event_type")
@@ -2408,19 +2408,18 @@ object Relational {
   }
 
   def kllStoreMergeCheck(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     withTempStore("graft-kll-store") { store =>
       t(spark, dir, "lineitem")
         .groupBy("l_returnflag", "l_linenumber")
-        .agg(expr("graft_kll_sketch(l_quantity)").as("sk"))
+        .agg(expr("kll_sketch_agg_double(l_quantity)").as("sk"))
         .write.mode("overwrite").parquet(s"$store/kll.parquet")
-      ParquetSource.read(spark, s"$store/kll.parquet").createOrReplaceTempView("graft_kll_blobs")
+      ParquetSource.read(spark, s"$store/kll.parquet").createOrReplaceTempView("graft_sketch_blobs")
       t(spark, dir, "lineitem").createOrReplaceTempView("graft_li")
       spark.sql(
         """WITH q AS (
           | SELECT l_returnflag,
-          |  element_at(graft_kll_merge_quantiles(sk, array(0.5D)), 1) AS q50
-          | FROM graft_kll_blobs GROUP BY l_returnflag),
+          |  element_at(kll_sketch_get_quantile_double(kll_merge_agg_double(sk), array(0.5D)), 1) AS q50
+          | FROM graft_sketch_blobs GROUP BY l_returnflag),
           |r AS (
           | SELECT l_returnflag, l_quantity,
           |  CAST(row_number() OVER (PARTITION BY l_returnflag ORDER BY l_quantity, l_orderkey, l_linenumber) AS BIGINT) AS rn,
@@ -2442,15 +2441,14 @@ object Relational {
     * for tiny cohorts, as in `sketch_theta_check`).
     */
   def thetaStoreMergeCheck(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     withTempStore("graft-theta-store") { store =>
       events(spark, dir)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(expr("graft_theta_sketch(user_id)").as("sk"))
+        .agg(expr("theta_sketch_agg(user_id)").as("sk"))
         .write.mode("overwrite").parquet(s"$store/theta.parquet")
       val merged = ParquetSource.read(spark, s"$store/theta.parquet")
         .groupBy("event_type")
-        .agg(expr("graft_theta_merge_est(sk)").as("est_users"))
+        .agg(expr("theta_sketch_estimate(theta_union_agg(sk))").as("est_users"))
       val exact = events(spark, dir)
         .groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("exact_users"))

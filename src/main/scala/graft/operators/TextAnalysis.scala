@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Portable
+import graft.functions.{FreqItemsCheck, Portable}
 import graft.sources.ParquetSource
 
 /** Text-analysis operators for a training-data pipeline, over the
@@ -1332,12 +1332,11 @@ object TextAnalysis {
     * (no-false-negative guarantee, error bound) is spec-checked in FreqSpec.
     */
   def topkTermsSketch(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     docs(spark, dir)
       .select(explode(Portable.tokens("text")).as("token"))
       .createOrReplaceTempView("graft_tokens")
     spark.sql(
-      """SELECT inline(graft_freq_items(token, 10, 256)) FROM graft_tokens""")
+      s"SELECT inline(approx_top_k(token, 10, ${FreqItemsCheck.ItemsTracked})) FROM graft_tokens")
       .toDF("token", "estimate")
   }
 

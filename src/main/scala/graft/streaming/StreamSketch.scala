@@ -4,15 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.functions.FreqItemsCheck.ItemsTracked
+
 /** Streaming sketch rollup — per micro-batch, per-key sketch blobs (HLL,
-  * KLL or theta, r9) are merged into a PERSISTED, VERSIONED sketch store:
-  * the standing corpus-statistics artifact a 100 TB ingest pipeline
-  * maintains ("distinct users / value quantiles per event type, so far,
-  * updated as data lands") without ever re-scanning history. The
-  * batch-side building blocks are the round-8 merge surface
-  * (`graft_<kind>_sketch` to emit blobs, `graft_<kind>_merge_sketch` to
-  * fold them), so the streaming path cannot drift from the batch rollup
-  * it composes.
+  * KLL, theta or frequent items) are merged into a PERSISTED, VERSIONED
+  * sketch store: the standing corpus-statistics artifact a 100 TB ingest
+  * pipeline maintains ("distinct users / value quantiles per event type,
+  * so far, updated as data lands") without ever re-scanning history. The
+  * building blocks are Spark's DataSketches functions ([[exprsFor]]: a
+  * sketch aggregate emits the batch's blobs, the matching union aggregate
+  * folds them), the same ones the batch rollup rows use, so the streaming
+  * path cannot drift from the batch rollup it composes.
+  *
+  * HLL, theta and KLL stores written by graft's own sketch aggregates
+  * (before Spark's built-ins replaced them) hold the same DataSketches
+  * serial forms and still read and fold. A frequent-items store from then
+  * does not: `approx_top_k_accumulate` keeps a struct, not a bare blob.
   *
   * Replay safety: the store folds through [[VersionedStore.fold]], whose
   * scaladoc gives the argument; HLL and theta are safe by algebra as
@@ -27,18 +34,19 @@ object StreamSketch {
 
   /** (build-blob expr, store-merge-blob expr) per sketch kind. */
   private def exprsFor(kind: String, valCol: String): (String, String) = kind match {
-    case "hll" => (s"graft_hll_sketch($valCol)", "graft_hll_merge_sketch(sk)")
-    case "kll" => (s"graft_kll_sketch($valCol)", "graft_kll_merge_sketch(sk)")
-    case "theta" => (s"graft_theta_sketch($valCol)", "graft_theta_merge_sketch(sk)")
+    case "hll" => (s"hll_sketch_agg($valCol)", "hll_union_agg(sk)")
+    case "kll" => (s"kll_sketch_agg_double($valCol)", "kll_merge_agg_double(sk)")
+    case "theta" => (s"theta_sketch_agg($valCol)", "theta_union_agg(sk)")
     // freq merge adds counts (not idempotent, like KLL weights): replay
     // safety rests on the fold alone
-    case "freq" => (s"graft_freq_sketch($valCol)", "graft_freq_merge_sketch(sk)")
+    case "freq" => (s"approx_top_k_accumulate($valCol, $ItemsTracked)",
+      s"approx_top_k_combine(sk, $ItemsTracked)")
     case other => throw new IllegalArgumentException(
       s"StreamSketch kind must be hll|kll|theta|freq, got $other")
   }
 
   /** Starts the rollup: `newRows` is a STREAMING frame; each micro-batch
-    * folds `graft_<kind>_sketch(valCol)` per `keyCol` into the store
+    * folds the kind's sketch of `valCol` per `keyCol` into the store
     * ([[VersionedStore.fold]], whose replay argument covers every kind).
     *
     * Per kind: HLL and theta merges are also IDEMPOTENT (register maxima /
@@ -63,10 +71,9 @@ object StreamSketch {
   def foldBatch(batch: DataFrame, batchId: Long, storeDir: String,
       keyCol: String, valCol: String, kind: String = "hll"): Unit = {
     val (buildExpr, mergeExpr) = exprsFor(kind, valCol)
-    VersionedStore.fold(batch, batchId, storeDir) { b =>
-      graft.functions.GraftFunctions.register(b.sparkSession)
-      b.groupBy(col(keyCol)).agg(expr(buildExpr).as("sk"))
-    }(_.groupBy(col(keyCol)).agg(expr(mergeExpr).as("sk")))
+    VersionedStore.fold(batch, batchId, storeDir)(
+      _.groupBy(col(keyCol)).agg(expr(buildExpr).as("sk"))
+    )(_.groupBy(col(keyCol)).agg(expr(mergeExpr).as("sk")))
   }
 
   /** Per-key distinct-count estimates from the newest store version
@@ -74,10 +81,9 @@ object StreamSketch {
     */
   def estimates(spark: SparkSession, storeDir: String, keyCol: String,
       kind: String = "hll"): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val estExpr = kind match {
-      case "hll" => "graft_hll_merge(sk)"
-      case "theta" => "graft_theta_merge_est(sk)"
+      case "hll" => "hll_sketch_estimate(hll_union_agg(sk))"
+      case "theta" => "theta_sketch_estimate(theta_union_agg(sk))"
       case other => throw new IllegalArgumentException(
         s"estimates() reads hll|theta stores, got $other — use quantiles() for kll")
     }
@@ -88,22 +94,17 @@ object StreamSketch {
 
   /** Per-key heavy hitters from the newest version of a freq store. */
   def heavyHitters(spark: SparkSession, storeDir: String, keyCol: String,
-      k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+      k: Int = 10): DataFrame =
     VersionedStore.read(spark, storeDir, "sketch")
       .groupBy(col(keyCol))
-      .agg(expr(s"graft_freq_merge_items(sk, $k)").as("top"))
-  }
+      .agg(expr(s"approx_top_k_estimate(approx_top_k_combine(sk, $ItemsTracked), $k)").as("top"))
 
   /** Per-key quantiles from the newest version of a KLL store. */
   def quantiles(spark: SparkSession, storeDir: String, keyCol: String,
       ranks: Seq[Double]): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    // 'D' suffix: a bare 0.5 parses as DECIMAL, which the rank-array
-    // reader (toDoubleArray) rejects
     val rankArr = ranks.map(r => s"${r}D").mkString("array(", ", ", ")")
     VersionedStore.read(spark, storeDir, "sketch")
       .groupBy(col(keyCol))
-      .agg(expr(s"graft_kll_merge_quantiles(sk, $rankArr)").as("qs"))
+      .agg(expr(s"kll_sketch_get_quantile_double(kll_merge_agg_double(sk), $rankArr)").as("qs"))
   }
 }

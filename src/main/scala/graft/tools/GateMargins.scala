@@ -26,13 +26,15 @@ import graft.sources.ParquetSource
   * sweep trips it.
   */
 object GateMargins {
+  /** Prints the gate's `GATEMARGIN` line and returns (gate, used_permille). */
   private def line(dir: String, gate: String, metric: String,
-      usedPermille: Long, detail: String): Unit = {
+      usedPermille: Long, detail: String): (String, Long) = {
     val flag = if (usedPermille >= 1000) " FAIL"
       else if (usedPermille >= 800) " KNIFE-EDGE"
       else ""
     println(s"GATEMARGIN dir=${dir.split('/').last} gate=$gate metric=$metric " +
       s"used_permille=$usedPermille $detail$flag")
+    (gate, usedPermille)
   }
 
   /** Recall-floor gates: budget = minHits of the k exact neighbors; the
@@ -45,6 +47,137 @@ object GateMargins {
     val mn = v.min
     val used = if (mn == 0) 2000L else math.round(1000.0 * floor / mn)
     line(dir, gate, s"min_hits=$mn floor=$floor", used, s"hits=[${v.mkString(",")}]")
+  }
+
+  /** The six sketch accuracy gates: budget consumption of their 5% bounds
+    * (rank band for KLL), one `GATEMARGIN` line each, returned as
+    * (gate, used_permille).
+    */
+  def sketchGates(spark: SparkSession, dir: String): Seq[(String, Long)] = {
+    ParquetSource.read(spark, s"$dir/lineitem.parquet").createOrReplaceTempView("gm_li")
+    Relational.events(spark, dir).createOrReplaceTempView("gm_events")
+    val distinct = {
+      val rows = spark.sql(
+        """SELECT l_returnflag,
+          | abs(hll_sketch_estimate(hll_sketch_agg(l_partkey)) - count(DISTINCT l_partkey))
+          |   / (0.05D * count(DISTINCT l_partkey)) AS u_parts,
+          | abs(hll_sketch_estimate(hll_sketch_agg(l_orderkey)) - count(DISTINCT l_orderkey))
+          |   / (0.05D * count(DISTINCT l_orderkey)) AS u_orders
+          |FROM gm_li GROUP BY l_returnflag""".stripMargin).collect()
+      val worst = rows.map(r => math.max(r.getDouble(1), r.getDouble(2))).max
+      line(dir, "sketch_distinct_check", "hll err vs 5pct bound",
+        math.round(worst * 1000), s"groups=${rows.length}")
+    }
+    val theta = {
+      val rows = spark.sql(
+        """WITH sk AS (
+          | SELECT event_type, theta_sketch_agg(user_id) AS sk
+          | FROM gm_events GROUP BY event_type),
+          |du AS (SELECT DISTINCT event_type, user_id FROM gm_events),
+          |cnt AS (SELECT event_type, count(*) AS n FROM du GROUP BY event_type),
+          |ex AS (
+          | SELECT x.event_type AS type_a, y.event_type AS type_b, count(*) AS exact_both
+          | FROM du x JOIN du y ON x.user_id = y.user_id AND x.event_type < y.event_type
+          | GROUP BY x.event_type, y.event_type)
+          |SELECT
+          | abs(theta_sketch_estimate(theta_intersection(a.sk, b.sk)) - ex.exact_both)
+          |   / (0.05D * ex.exact_both + 1.0D) AS u_both,
+          | abs(theta_sketch_estimate(theta_union(a.sk, b.sk)) - (ca.n + cb.n - ex.exact_both))
+          |   / (0.05D * (ca.n + cb.n - ex.exact_both) + 1.0D) AS u_either
+          |FROM sk a JOIN sk b ON a.event_type < b.event_type
+          | JOIN ex ON ex.type_a = a.event_type AND ex.type_b = b.event_type
+          | JOIN cnt ca ON ca.event_type = a.event_type
+          | JOIN cnt cb ON cb.event_type = b.event_type""".stripMargin).collect()
+      val worst = rows.map(r => math.max(r.getDouble(0), r.getDouble(1))).max
+      line(dir, "sketch_theta_check", "theta err vs 5pct+1 bound",
+        math.round(worst * 1000), s"pairs=${rows.length}")
+    }
+    val quantile = {
+      // q50 rank distance from the median, vs the 5-point band (ranks in
+      // [45%, 55%] pass; consumption = |rank − 50%| / 5%)
+      val rows = spark.sql(
+        """WITH q AS (
+          | SELECT l_returnflag,
+          |  element_at(kll_sketch_get_quantile_double(kll_sketch_agg_double(l_quantity),
+          |   array(0.5D)), 1) AS q50,
+          |  count(*) AS n
+          | FROM gm_li GROUP BY l_returnflag),
+          |rk AS (
+          | SELECT l.l_returnflag,
+          |  sum(CASE WHEN l.l_quantity <= q.q50 THEN 1 ELSE 0 END) AS r_hi,
+          |  sum(CASE WHEN l.l_quantity < q.q50 THEN 1 ELSE 0 END) AS r_lo,
+          |  max(q.n) AS n
+          | FROM gm_li l JOIN q ON l.l_returnflag = q.l_returnflag
+          | GROUP BY l.l_returnflag)
+          |SELECT l_returnflag,
+          | CASE WHEN 0.5D * n BETWEEN r_lo AND r_hi THEN 0.0D
+          |      ELSE least(abs(r_lo / n - 0.5D), abs(r_hi / n - 0.5D)) / 0.05D
+          | END AS used
+          |FROM rk""".stripMargin).collect()
+      val worst = rows.map(_.getDouble(1)).max
+      line(dir, "sketch_quantile_check", "kll q50 rank vs 45-55pct band",
+        math.round(worst * 1000), s"groups=${rows.length}")
+    }
+    val hllMerge = {
+      // same sharded-merge path as hllStoreMergeCheck, bound cast removed
+      val merged = ParquetSource.read(spark, s"$dir/lineitem.parquet")
+        .groupBy("l_returnflag", "l_linenumber")
+        .agg(expr("hll_sketch_agg(l_partkey)").as("sk"))
+        .groupBy("l_returnflag")
+        .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("est_parts"))
+      val exact = ParquetSource.read(spark, s"$dir/lineitem.parquet")
+        .groupBy("l_returnflag")
+        .agg(countDistinct(col("l_partkey")).as("exact_parts"))
+      val rows = exact.join(merged, "l_returnflag")
+        .select((abs(col("est_parts") - col("exact_parts")) /
+          (col("exact_parts").cast("double") * 0.05)).as("u")).collect()
+      val worst = rows.map(_.getDouble(0)).max
+      line(dir, "sketch_hll_merge_check", "merged hll err vs 5pct bound",
+        math.round(worst * 1000), s"groups=${rows.length}")
+    }
+    val thetaMerge = {
+      val merged = Relational.events(spark, dir)
+        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+        .agg(expr("theta_sketch_agg(user_id)").as("sk"))
+        .groupBy("event_type")
+        .agg(expr("theta_sketch_estimate(theta_union_agg(sk))").as("est_users"))
+      val exact = Relational.events(spark, dir)
+        .groupBy("event_type")
+        .agg(countDistinct(col("user_id")).as("exact_users"))
+      val rows = exact.join(merged, "event_type")
+        .select((abs(col("est_users") - col("exact_users")) /
+          (col("exact_users").cast("double") * 0.05 + 1.0)).as("u")).collect()
+      val worst = rows.map(_.getDouble(0)).max
+      line(dir, "sketch_theta_merge_check", "merged theta err vs 5pct+1 bound",
+        math.round(worst * 1000), s"groups=${rows.length}")
+    }
+    val kllMerge = {
+      // merged-KLL q50 rank distance, same band arithmetic as above
+      ParquetSource.read(spark, s"$dir/lineitem.parquet")
+        .groupBy("l_returnflag", "l_linenumber")
+        .agg(expr("kll_sketch_agg_double(l_quantity)").as("sk"))
+        .createOrReplaceTempView("gm_kll_blobs")
+      val rows = spark.sql(
+        """WITH q AS (
+          | SELECT l_returnflag,
+          |  element_at(kll_sketch_get_quantile_double(kll_merge_agg_double(sk), array(0.5D)), 1) AS q50
+          | FROM gm_kll_blobs GROUP BY l_returnflag),
+          |rk AS (
+          | SELECT l.l_returnflag,
+          |  sum(CASE WHEN l.l_quantity <= q.q50 THEN 1 ELSE 0 END) AS r_hi,
+          |  sum(CASE WHEN l.l_quantity < q.q50 THEN 1 ELSE 0 END) AS r_lo,
+          |  count(*) AS n
+          | FROM gm_li l JOIN q ON l.l_returnflag = q.l_returnflag
+          | GROUP BY l.l_returnflag)
+          |SELECT CASE WHEN 0.5D * n BETWEEN r_lo AND r_hi THEN 0.0D
+          |       ELSE least(abs(r_lo / n - 0.5D), abs(r_hi / n - 0.5D)) / 0.05D
+          |       END AS used
+          |FROM rk""".stripMargin).collect()
+      val worst = rows.map(_.getDouble(0)).max
+      line(dir, "sketch_kll_merge_check", "merged kll q50 rank vs band",
+        math.round(worst * 1000), s"groups=${rows.length}")
+    }
+    Seq(distinct, theta, quantile, hllMerge, thetaMerge, kllMerge)
   }
 
   def run(spark: SparkSession, dirs: Seq[String]): Unit = {
@@ -83,129 +216,7 @@ object GateMargins {
           if (found == n) 0L else 2000L, "")
       }
 
-      // --- sketch accuracy gates: budget consumption of the 5% bounds ----
-      ParquetSource.read(spark, s"$dir/lineitem.parquet").createOrReplaceTempView("gm_li")
-      Relational.events(spark, dir).createOrReplaceTempView("gm_events")
-      locally {
-        val rows = spark.sql(
-          """SELECT l_returnflag,
-            | abs(graft_hll_distinct(l_partkey) - count(DISTINCT l_partkey))
-            |   / (0.05D * count(DISTINCT l_partkey)) AS u_parts,
-            | abs(graft_hll_distinct(l_orderkey) - count(DISTINCT l_orderkey))
-            |   / (0.05D * count(DISTINCT l_orderkey)) AS u_orders
-            |FROM gm_li GROUP BY l_returnflag""".stripMargin).collect()
-        val worst = rows.map(r => math.max(r.getDouble(1), r.getDouble(2))).max
-        line(dir, "sketch_distinct_check", "hll err vs 5pct bound",
-          math.round(worst * 1000), s"groups=${rows.length}")
-      }
-      locally {
-        val rows = spark.sql(
-          """WITH sk AS (
-            | SELECT event_type, graft_theta_sketch(user_id) AS sk
-            | FROM gm_events GROUP BY event_type),
-            |du AS (SELECT DISTINCT event_type, user_id FROM gm_events),
-            |cnt AS (SELECT event_type, count(*) AS n FROM du GROUP BY event_type),
-            |ex AS (
-            | SELECT x.event_type AS type_a, y.event_type AS type_b, count(*) AS exact_both
-            | FROM du x JOIN du y ON x.user_id = y.user_id AND x.event_type < y.event_type
-            | GROUP BY x.event_type, y.event_type)
-            |SELECT
-            | abs(graft_theta_intersect_est(a.sk, b.sk) - ex.exact_both)
-            |   / (0.05D * ex.exact_both + 1.0D) AS u_both,
-            | abs(graft_theta_union_est(a.sk, b.sk) - (ca.n + cb.n - ex.exact_both))
-            |   / (0.05D * (ca.n + cb.n - ex.exact_both) + 1.0D) AS u_either
-            |FROM sk a JOIN sk b ON a.event_type < b.event_type
-            | JOIN ex ON ex.type_a = a.event_type AND ex.type_b = b.event_type
-            | JOIN cnt ca ON ca.event_type = a.event_type
-            | JOIN cnt cb ON cb.event_type = b.event_type""".stripMargin).collect()
-        val worst = rows.map(r => math.max(r.getDouble(0), r.getDouble(1))).max
-        line(dir, "sketch_theta_check", "theta err vs 5pct+1 bound",
-          math.round(worst * 1000), s"pairs=${rows.length}")
-      }
-      locally {
-        // q50 rank distance from the median, vs the 5-point band (ranks in
-        // [45%, 55%] pass; consumption = |rank − 50%| / 5%)
-        val rows = spark.sql(
-          """WITH q AS (
-            | SELECT l_returnflag,
-            |  element_at(graft_kll_quantiles(l_quantity, array(0.5D)), 1) AS q50,
-            |  count(*) AS n
-            | FROM gm_li GROUP BY l_returnflag),
-            |rk AS (
-            | SELECT l.l_returnflag,
-            |  sum(CASE WHEN l.l_quantity <= q.q50 THEN 1 ELSE 0 END) AS r_hi,
-            |  sum(CASE WHEN l.l_quantity < q.q50 THEN 1 ELSE 0 END) AS r_lo,
-            |  max(q.n) AS n
-            | FROM gm_li l JOIN q ON l.l_returnflag = q.l_returnflag
-            | GROUP BY l.l_returnflag)
-            |SELECT l_returnflag,
-            | CASE WHEN 0.5D * n BETWEEN r_lo AND r_hi THEN 0.0D
-            |      ELSE least(abs(r_lo / n - 0.5D), abs(r_hi / n - 0.5D)) / 0.05D
-            | END AS used
-            |FROM rk""".stripMargin).collect()
-        val worst = rows.map(_.getDouble(1)).max
-        line(dir, "sketch_quantile_check", "kll q50 rank vs 45-55pct band",
-          math.round(worst * 1000), s"groups=${rows.length}")
-      }
-      locally {
-        // same sharded-merge path as hllStoreMergeCheck, bound cast removed
-        val merged = ParquetSource.read(spark, s"$dir/lineitem.parquet")
-          .groupBy("l_returnflag", "l_linenumber")
-          .agg(expr("graft_hll_sketch(l_partkey)").as("sk"))
-          .groupBy("l_returnflag")
-          .agg(expr("graft_hll_merge(sk)").as("est_parts"))
-        val exact = ParquetSource.read(spark, s"$dir/lineitem.parquet")
-          .groupBy("l_returnflag")
-          .agg(countDistinct(col("l_partkey")).as("exact_parts"))
-        val rows = exact.join(merged, "l_returnflag")
-          .select((abs(col("est_parts") - col("exact_parts")) /
-            (col("exact_parts").cast("double") * 0.05)).as("u")).collect()
-        val worst = rows.map(_.getDouble(0)).max
-        line(dir, "sketch_hll_merge_check", "merged hll err vs 5pct bound",
-          math.round(worst * 1000), s"groups=${rows.length}")
-      }
-      locally {
-        val merged = Relational.events(spark, dir)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(expr("graft_theta_sketch(user_id)").as("sk"))
-          .groupBy("event_type")
-          .agg(expr("graft_theta_merge_est(sk)").as("est_users"))
-        val exact = Relational.events(spark, dir)
-          .groupBy("event_type")
-          .agg(countDistinct(col("user_id")).as("exact_users"))
-        val rows = exact.join(merged, "event_type")
-          .select((abs(col("est_users") - col("exact_users")) /
-            (col("exact_users").cast("double") * 0.05 + 1.0)).as("u")).collect()
-        val worst = rows.map(_.getDouble(0)).max
-        line(dir, "sketch_theta_merge_check", "merged theta err vs 5pct+1 bound",
-          math.round(worst * 1000), s"groups=${rows.length}")
-      }
-      locally {
-        // merged-KLL q50 rank distance, same band arithmetic as above
-        ParquetSource.read(spark, s"$dir/lineitem.parquet")
-          .groupBy("l_returnflag", "l_linenumber")
-          .agg(expr("graft_kll_sketch(l_quantity)").as("sk"))
-          .createOrReplaceTempView("gm_kll_blobs")
-        val rows = spark.sql(
-          """WITH q AS (
-            | SELECT l_returnflag,
-            |  element_at(graft_kll_merge_quantiles(sk, array(0.5D)), 1) AS q50
-            | FROM gm_kll_blobs GROUP BY l_returnflag),
-            |rk AS (
-            | SELECT l.l_returnflag,
-            |  sum(CASE WHEN l.l_quantity <= q.q50 THEN 1 ELSE 0 END) AS r_hi,
-            |  sum(CASE WHEN l.l_quantity < q.q50 THEN 1 ELSE 0 END) AS r_lo,
-            |  count(*) AS n
-            | FROM gm_li l JOIN q ON l.l_returnflag = q.l_returnflag
-            | GROUP BY l.l_returnflag)
-            |SELECT CASE WHEN 0.5D * n BETWEEN r_lo AND r_hi THEN 0.0D
-            |       ELSE least(abs(r_lo / n - 0.5D), abs(r_hi / n - 0.5D)) / 0.05D
-            |       END AS used
-            |FROM rk""".stripMargin).collect()
-        val worst = rows.map(_.getDouble(0)).max
-        line(dir, "sketch_kll_merge_check", "merged kll q50 rank vs band",
-          math.round(worst * 1000), s"groups=${rows.length}")
-      }
+      sketchGates(spark, dir)
 
       // --- bloom gates ---------------------------------------------------
       locally {

@@ -18,8 +18,9 @@ import graft.{Bench, SessionFactory, SparkEntry}
 
 /** The one probe entry point for catalog rows. Every mode times a row with
   * the bench estimator — a warm pass on the sf0.001 fixture (the sibling of
-  * the target dir, skipped when absent), then best-of-2 `count()` — and
-  * reads the [[Meter]] counters of run 2.
+  * the target dir, skipped when absent) and one uncounted pass on the
+  * target dir, then best-of-2 `count()` — and reads the [[Meter]] counters
+  * of run 2.
   *
   * {{{
   * runMain graft.tools.Probe profile [--stages] [--show=<n>] [row ...]
@@ -141,14 +142,18 @@ object Probe {
       .filter(_.isDirectory)
       .map(_.getPath)
 
-  /** Compiles the row's query shape once, as the bench's warm pass does;
-    * a row that fails on the tiny fixture is timed anyway.
+  /** Compiles the row's query shape once, as the bench's warm pass does,
+    * then runs it once, uncounted, on `dir` itself: the sf0.001 pass alone
+    * leaves the first timed run to pay the warm-up that grows with scale.
+    * A row that fails on the tiny fixture is timed anyway.
     */
-  private def warm(spark: SparkSession, row: String, dir: String): Unit =
+  private def warm(spark: SparkSession, row: String, dir: String): Unit = {
     warmDirFor(dir).foreach { w =>
       try SparkEntry.queries(row)(spark, w).count()
       catch { case NonFatal(_) => () }
     }
+    SparkEntry.queries(row)(spark, dir).count()
+  }
 
   private def bestOf2(spark: SparkSession, meter: Meter, row: String, dir: String): Timing = {
     val fn = SparkEntry.queries(row)

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Frequent-items sketch: the no-false-negative guarantee and the error
+/** Frequent-items sketch (Spark's `approx_top_k` with a 256-entry map, and
+  * `graft_freq_check`): the no-false-negative guarantee and the error
   * bound must hold against exact token counts, including through the
   * merge path (many input partitions).
   */
@@ -12,7 +13,6 @@ class FreqSpec extends AnyFunSuite {
   private lazy val dir = SparkSpec.testDataDir
 
   test("sketch top-k covers the exact heavy hitters within the error bound") {
-    graft.functions.GraftFunctions.register(spark)
     val tokens = spark.read.parquet(s"$dir/documents.parquet")
       .select(explode(graft.functions.Portable.tokens("text")).as("token"))
     val exact = tokens.groupBy("token").count()
@@ -62,13 +62,12 @@ class FreqSpec extends AnyFunSuite {
   }
 
   test("sketch result is repartition-invariant within the bound (merge path)") {
-    graft.functions.GraftFunctions.register(spark)
     val tokens = spark.read.parquet(s"$dir/documents.parquet")
       .select(explode(graft.functions.Portable.tokens("text")).as("token"))
     tokens.repartition(17).createOrReplaceTempView("freq_t17")
     tokens.coalesce(1).createOrReplaceTempView("freq_t1")
     def top(view: String) = spark.sql(
-      s"SELECT inline(graft_freq_items(token, 5, 256)) FROM $view")
+      s"SELECT inline(approx_top_k(token, 5, ${graft.functions.FreqItemsCheck.ItemsTracked})) FROM $view")
       .collect().map(_.getString(0)).toSet
     // exact counts differ by at most the error bound between partitionings;
     // the top-5 heavy hitters dominate by far more than that here

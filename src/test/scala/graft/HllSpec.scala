@@ -2,22 +2,20 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
-
-/** DataSketches-HLL custom aggregate: estimate accuracy and mergeability
-  * across groups/partitions.
+/** Spark's DataSketches HLL functions (`hll_sketch_agg` at lgK 12, read by
+  * `hll_sketch_estimate`), as the catalog calls them: estimate accuracy
+  * and mergeability across groups/partitions.
   */
 class HllSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
 
   test("hll estimate within 5% of exact distinct counts") {
-    GraftFunctions.register(spark)
     spark.read.parquet(s"${SparkSpec.testDataDir}/lineitem.parquet")
       .createOrReplaceTempView("li")
     val r = spark.sql(
-      """SELECT graft_hll_distinct(l_partkey) AS est,
+      """SELECT hll_sketch_estimate(hll_sketch_agg(l_partkey)) AS est,
         |       count(DISTINCT l_partkey) AS exact,
-        |       graft_hll_distinct(l_orderkey) AS est_ord,
+        |       hll_sketch_estimate(hll_sketch_agg(l_orderkey)) AS est_ord,
         |       count(DISTINCT l_orderkey) AS exact_ord
         |FROM li""".stripMargin).head()
     for ((est, exact) <- Seq((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3)))) {
@@ -28,15 +26,16 @@ class HllSpec extends AnyFunSuite {
   }
 
   test("hll works grouped and over strings, repartition-invariant") {
-    GraftFunctions.register(spark)
     spark.read.parquet(s"${SparkSpec.testDataDir}/lineitem.parquet")
       .repartition(7).createOrReplaceTempView("li7")
     val grouped = spark.sql(
-      "SELECT l_returnflag, graft_hll_distinct(l_linestatus) AS d FROM li7 GROUP BY l_returnflag")
+      "SELECT l_returnflag, hll_sketch_estimate(hll_sketch_agg(l_linestatus)) AS d " +
+        "FROM li7 GROUP BY l_returnflag")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(grouped.values.forall(d => d >= 1 && d <= 2)) // 2 statuses exist
     // distinct strings: merge across 7 partitions must not double-count
-    val est = spark.sql("SELECT graft_hll_distinct(l_returnflag) FROM li7").head().getLong(0)
+    val est = spark.sql("SELECT hll_sketch_estimate(hll_sketch_agg(l_returnflag)) FROM li7")
+      .head().getLong(0)
     assert(est == 3) // A, N, R — small cardinality is exact in HLL
   }
 }

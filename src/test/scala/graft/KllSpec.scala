@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** KLL quantile sketch: estimates must land within the sketch's rank-error
-  * envelope of the exact quantiles, and merging partial sketches
-  * (repartitioned input) must not change that.
+/** KLL quantile sketch (Spark's `kll_sketch_agg_double`, k = 200):
+  * estimates must land within the sketch's rank-error envelope of the
+  * exact quantiles, and merging partial sketches (repartitioned input)
+  * must not change that.
   */
 class KllSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
@@ -17,7 +18,6 @@ class KllSpec extends AnyFunSuite {
   }
 
   test("kll quantiles within rank-error envelope of exact quantiles") {
-    graft.functions.GraftFunctions.register(spark)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val exact = li.select(col("l_quantity").cast("double")).collect().map(_.getDouble(0))
     val est = graft.operators.Relational.sketchQuantiles(spark, dir)
@@ -28,7 +28,8 @@ class KllSpec extends AnyFunSuite {
     // group — simpler: re-run ungrouped and compare directly
     li.createOrReplaceTempView("kll_li")
     val global = spark.sql(
-      "SELECT graft_kll_quantiles(l_quantity, array(0.5D, 0.95D, 0.99D), 200) AS q FROM kll_li")
+      "SELECT kll_sketch_get_quantile_double(kll_sketch_agg_double(l_quantity, 200), " +
+        "array(0.5D, 0.95D, 0.99D)) AS q FROM kll_li")
       .head().getSeq[Double](0)
     val eps = 0.02 // k=200 → ~1.7% rank error at high confidence
     Seq(0.5, 0.95, 0.99).zip(global).foreach { case (r, v) =>
@@ -44,10 +45,9 @@ class KllSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val mem = MemoryStream[Double]
     val agg = mem.toDF().toDF("v")
-      .agg(expr("graft_kll_quantiles(v, array(0.5D), 200)").as("q"))
+      .agg(expr("kll_sketch_get_quantile_double(kll_sketch_agg_double(v, 200), array(0.5D))").as("q"))
     val q = agg.writeStream.outputMode("complete")
       .format("memory").queryName("stream_kll")
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -62,12 +62,12 @@ class KllSpec extends AnyFunSuite {
   }
 
   test("kll estimate is repartition-invariant in distribution (merge path)") {
-    graft.functions.GraftFunctions.register(spark)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val exact = li.select(col("l_quantity").cast("double")).collect().map(_.getDouble(0))
     li.repartition(13).createOrReplaceTempView("kll_li13")
     val merged = spark.sql(
-      "SELECT graft_kll_quantiles(l_quantity, array(0.5D), 200) AS q FROM kll_li13")
+      "SELECT kll_sketch_get_quantile_double(kll_sketch_agg_double(l_quantity, 200), " +
+        "array(0.5D)) AS q FROM kll_li13")
       .head().getSeq[Double](0).head
     val lo = exactQuantile(exact, 0.48)
     val hi = exactQuantile(exact, 0.52)

@@ -1240,11 +1240,10 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val mem = MemoryStream[(String, Long)]
     val agg = mem.toDF().toDF("event_type", "user_id")
       .groupBy("event_type")
-      .agg(expr("graft_hll_distinct(user_id)").as("approx_users"))
+      .agg(expr("hll_sketch_estimate(hll_sketch_agg(user_id))").as("approx_users"))
     val q = agg.writeStream.outputMode("complete")
       .format("memory").queryName("stream_hll")
       .trigger(Trigger.ProcessingTime(0)).start()

@@ -6,14 +6,16 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Three rules that no compiler checks: the main tree reads parquet only
+/** Four rules that no compiler checks: the main tree reads parquet only
   * through `graft.sources.ParquetSource` (whose single-file reads skip
   * Spark's schema-inference job), the main and test trees build sessions
   * only through [[SessionFactory]] (the engine's one session
-  * configuration, which the specs share through [[SparkSpec]]), and the
+  * configuration, which the specs share through [[SparkSpec]]), the
   * main tree opens `foreachBatch` queries only through
   * `graft.streaming.VersionedStore.start` (one checkpoint and output-mode
-  * setup for every micro-batch sink).
+  * setup for every micro-batch sink), and the main tree uses no
+  * DataSketches HLL, theta or KLL class (Spark's built-in sketch functions
+  * own those; a second copy would drift from them).
   */
 class SourceHygieneSpec extends AnyFunSuite {
   import SourceHygieneSpec._
@@ -36,10 +38,12 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("the scanner sees a call in code and ignores one in a comment") {
     val src = "val a = 1\n// spark.read.parquet(x)\n/** SparkSession.builder() */\n" +
       "val df = spark.read\n  .parquet(p)\nval s = SparkSession\n  .builder()\n" +
-      "// q.foreachBatch(f)\nq.writeStream.foreachBatch { (b, id) => f(b) }\n"
+      "// q.foreachBatch(f)\nq.writeStream.foreachBatch { (b, id) => f(b) }\n" +
+      "// org.apache.datasketches.hll\nimport org.apache.datasketches.kll.KllDoublesSketch\n"
     assert(offenders(src, ParquetRead) == Seq(4))
     assert(offenders(src, SessionBuild) == Seq(6))
     assert(offenders(src, BatchQuery) == Seq(9))
+    assert(offenders(src, SketchClass) == Seq(11))
   }
 
   test("spark.read.parquet appears only in the parquet reader") {
@@ -59,16 +63,22 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(sources().exists(p => root.relativize(p).toString == BatchQuery.home))
     assert(violations(BatchQuery).isEmpty, violations(BatchQuery))
   }
+
+  test("no DataSketches HLL, theta or KLL class in the main tree") {
+    assert(violations(SketchClass).isEmpty, violations(SketchClass))
+  }
 }
 
 object SourceHygieneSpec {
-  /** A call pattern and the one file (under `src/main/scala`) allowed to make it. */
-  final case class Rule(pattern: String, home: String)
+  /** A call pattern and the one file (under `src/main/scala`) allowed to
+    * make it; no file when `home` is empty. */
+  final case class Rule(pattern: String, home: String = "")
 
   val ParquetRead = Rule("""\bread\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet")""",
     "graft/sources/ParquetSource.scala")
   val SessionBuild = Rule("""\bSparkSession\s*\.\s*builder\b""", "graft/SessionFactory.scala")
   val BatchQuery = Rule("""\bforeachBatch\b""", "graft/streaming/VersionedStore.scala")
+  val SketchClass = Rule("""\borg\.apache\.datasketches\.(hll|theta|kll)\b""")
 
   /** 1-based lines where `rule` matches in `src`, comments blanked first
     * (line breaks kept, so line numbers hold).

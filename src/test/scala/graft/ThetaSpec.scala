@@ -3,16 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Theta sketch set algebra: pairwise union/intersection estimates must
-  * track the exact distinct counts, through the merge path (partitioned
-  * input) and the canonical compact byte form.
+/** Theta sketch set algebra through Spark's DataSketches theta functions:
+  * pairwise union/intersection estimates must track the exact distinct
+  * counts, through the merge path (partitioned input) and the canonical
+  * compact byte form of `theta_sketch_agg`.
   */
 class ThetaSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   private lazy val dir = SparkSpec.testDataDir
 
   test("pairwise audience overlap estimates within 5% of exact") {
-    graft.functions.GraftFunctions.register(spark)
     val ev = graft.operators.Relational.events(spark, dir)
       .select("event_type", "user_id").cache()
     val est = graft.operators.Relational.thetaOverlap(spark, dir)
@@ -39,12 +39,11 @@ class ThetaSpec extends AnyFunSuite {
   }
 
   test("compact sketch bytes are canonical under repartitioning") {
-    graft.functions.GraftFunctions.register(spark)
     val ev = graft.operators.Relational.events(spark, dir).select("event_type", "user_id")
     ev.repartition(13).createOrReplaceTempView("theta_e13")
     ev.coalesce(1).createOrReplaceTempView("theta_e1")
     def bytes(view: String) = spark.sql(
-      s"SELECT event_type, graft_theta_sketch(user_id) AS sk FROM $view GROUP BY event_type")
+      s"SELECT event_type, theta_sketch_agg(user_id) AS sk FROM $view GROUP BY event_type")
       .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
     assert(bytes("theta_e13") == bytes("theta_e1"),
       "compact-ordered theta sketches must not depend on partitioning")
