@@ -45,20 +45,6 @@ object EmbeddingStrategy {
   */
 object Dedup {
 
-  /** Materializes `result` (eager localCheckpoint — one job, lineage
-    * truncated) and THEN unpersists the listed intermediate caches, so
-    * repeated catalog invocations in a long-lived session don't accumulate
-    * cached blocks (checkpoint blocks are GC-cleaned by the ContextCleaner).
-    * Only used where the result is orders of magnitude smaller than the
-    * corpus (near-dup pairs, cluster labels, top-k lists), so the
-    * materialization is cheap at any scale.
-    */
-  private[operators] def materializeAndRelease(caches: Seq[DataFrame], result: DataFrame): DataFrame = {
-    val out = result.localCheckpoint(true)
-    caches.foreach(_.unpersist(false))
-    out
-  }
-
   private def docs(spark: SparkSession, dir: String): DataFrame =
     ParquetSource.read(spark, s"$dir/documents.parquet")
 
@@ -178,8 +164,8 @@ object Dedup {
         .as("sig"))
   }
 
-  /** Returns (candidates, the cached banded intermediate) — the caller
-    * unpersists the cache once the candidates are materialized.
+  /** The LSH candidate pairs of `sigs`; the banded intermediate is
+    * filled in `m`.
     *
     * `passThrough` columns ride inside the banded rows and `pairFilter`
     * (an expression over the `a`/`b` join aliases) applies INLINE in the
@@ -188,18 +174,15 @@ object Dedup {
     * crowded-prune + self-join logic, which had to be kept in lockstep
     * with this one through the de-hinting and the maxBucketSize seam).
     */
-  private def candidatesFrom(sigs: DataFrame,
-      numHashes: Int = NumHashes, bands: Int = Bands,
-      forPlanInspection: Boolean = false,
-      maxBucketSize: Int = MaxBucketSize,
+  private def candidatesFrom(m: Materialize, sigs: DataFrame,
+      numHashes: Int, bands: Int, maxBucketSize: Int,
       passThrough: Seq[String] = Nil,
-      pairFilter: Option[Column] = None): (DataFrame, DataFrame) = {
-    // (doc_id, band, k1, k2) — `bands` small rows per doc; cached because
+      pairFilter: Option[Column] = None): DataFrame = {
+    // (doc_id, band, k1, k2) — `bands` small rows per doc; filled because
     // it feeds the crowded-bucket agg, the anti-join, AND both self-join
     // sides (uncached it recomputes the signature pipeline 4×).
-    val banded = bandedSignatures(sigs, passThrough = passThrough,
-      numHashes = numHashes, bands = bands).cache()
-    if (!forPlanInspection) banded.count() // fill the cache before AQE fans out its 4 consumers
+    val banded = m.fill(bandedSignatures(sigs, passThrough = passThrough,
+      numHashes = numHashes, bands = bands))
     // Skew guard: a band key shared by a huge number of docs (boilerplate
     // text at 100 TB) would generate a quadratic candidate set while
     // carrying almost no signal — drop overcrowded buckets. True near-dups
@@ -218,10 +201,9 @@ object Dedup {
     val joined = a.join(b,
         col("a.band") === col("b.band") && col("a.k1") === col("b.k1") &&
           col("a.k2") === col("b.k2") && col("a.doc_id") < col("b.doc_id"))
-    val cand = pairFilter.fold(joined)(joined.filter)
+    pairFilter.fold(joined)(joined.filter)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    (cand, banded)
   }
 
   /** Max docs per LSH bucket before the bucket is considered noise. */
@@ -240,11 +222,9 @@ object Dedup {
     */
   def minhashNearDups(spark: SparkSession, dir: String, threshold: Double = 0.6,
       numHashes: Int = NumHashes, bands: Int = Bands,
-      forPlanInspection: Boolean = false,
       maxBucketSize: Int = MaxBucketSize): DataFrame =
     nearDupsFromArrays(docShingleArrays(spark, dir), threshold,
-      numHashes = numHashes, bands = bands, forPlanInspection = forPlanInspection,
-      maxBucketSize = maxBucketSize)
+      numHashes = numHashes, bands = bands, maxBucketSize = maxBucketSize)
 
   /** Character 5-gram Jaccard near-dups — the n-GRAM dedup family. Same
     * MinHash-LSH candidate generation and exact verification as the word
@@ -262,11 +242,9 @@ object Dedup {
     * end-to-end; the gap widens quadratically with corpus size).
     */
   def ngramNearDups(spark: SparkSession, dir: String, threshold: Double = 0.6,
-      numHashes: Int = NumHashes, bands: Int = Bands,
-      forPlanInspection: Boolean = false): DataFrame =
+      numHashes: Int = NumHashes, bands: Int = Bands): DataFrame =
     nearDupsFromArrays(charShingleHashes(spark, dir), threshold, sigFilter = true,
-      numHashes = numHashes, bands = bands, sigBase = Some("sig_input"),
-      forPlanInspection = forPlanInspection)
+      numHashes = numHashes, bands = bands, sigBase = Some("sig_input"))
 
   /** (doc_id, shingles) with distinct character 5-grams (length < 5 →
     * one shingle: the whole text), mirroring `minGramFingerprint`'s
@@ -349,29 +327,25 @@ object Dedup {
       // minhash input SQL: defaults to hashing the string `shingles` col;
       // hash-native callers pass a pre-hashed column name instead
       sigBase: Option[String] = None,
-      forPlanInspection: Boolean = false,
       // probe seam (r14): MaxBucketSize never triggers at test scale, so
       // the crowded-prune anti-join's scale behavior is exercised by
       // forcing a tiny cutoff (DedupScaleProbe) — production uses the default
-      maxBucketSize: Int = MaxBucketSize): DataFrame = {
-    // One shingle pass feeds signatures and verification. Materialize the
-    // cache EAGERLY: AQE submits the independent downstream stages (band
-    // agg, anti-join, both self-join sides, verification) concurrently,
-    // and an unfilled cache makes each of them recompute the whole shingle
+      maxBucketSize: Int = MaxBucketSize): DataFrame = Materialize { m =>
+    // One shingle pass feeds signatures and verification. Fill the cache
+    // EAGERLY: AQE submits the independent downstream stages (band agg,
+    // anti-join, both self-join sides, verification) concurrently, and an
+    // unfilled cache makes each of them recompute the whole shingle
     // pipeline in parallel (measured: 4× ~1 s duplicate jobs at sf0.1).
-    val arrays = shingleArrays.cache()
-    if (!forPlanInspection) arrays.count()
+    val arrays = m.fill(shingleArrays)
     graft.functions.GraftFunctions.register(arrays.sparkSession)
 
     val defaultBase = s"graft_poly_hash_array(shingles, 31, ${Portable.P1}L)"
     val sigInput = sigBase.getOrElse(defaultBase)
-    val (cand, caches) =
+    val cand =
       if (!sigFilter) {
         val sigsPlain = arrays.select(col("doc_id"),
           expr(s"graft_minhash($sigInput, $numHashes)").as("sig"))
-        val (c, banded) = candidatesFrom(sigsPlain, numHashes, bands, forPlanInspection,
-          maxBucketSize)
-        (c, Seq(banded))
+        candidatesFrom(m, sigsPlain, numHashes, bands, maxBucketSize)
       } else {
         // Banding keeps the frozen affine signature; the FILTER signature
         // must be the mixed family — affine components are correlated on
@@ -397,12 +371,9 @@ object Dedup {
           expr(s"transform(graft_minhash_mix($sigInput, $SigFilterHashes), " +
             "h -> CAST(h % 128 AS TINYINT))").as("sigb"))
         val tau = sigAgreementCutoff(threshold)
-        val (filtered, banded) = candidatesFrom(sigs,
-          numHashes = numHashes, bands = bands,
-          forPlanInspection = forPlanInspection, maxBucketSize = maxBucketSize,
+        candidatesFrom(m, sigs, numHashes, bands, maxBucketSize,
           passThrough = Seq("sigb"),
           pairFilter = Some(expr("graft_sig_agree(a.sigb, b.sigb)") >= tau))
-        (filtered, Seq(banded))
       }
 
     // Exact verification joins each candidate pair back to its two shingle
@@ -411,7 +382,7 @@ object Dedup {
     // the corpus-side shuffle carries one array per doc instead of an
     // exploded row per shingle. Shingle arrays are distinct, so
     // |array_intersect| is the true intersection count.
-    val verified = cand
+    cand
       .join(arrays.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), "id_a")
       .join(arrays.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b")
       .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
@@ -420,10 +391,6 @@ object Dedup {
           (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_inter", "jaccard")
-    // forPlanInspection=true returns the UNMATERIALIZED frame (caches
-    // released) for PlanSpec plan-shape assertions only
-    if (forPlanInspection) { (arrays +: caches).foreach(_.unpersist(false)); verified }
-    else materializeAndRelease(arrays +: caches, verified)
   }
 
   /** EXACT set-similarity self-join via prefix filtering — the
@@ -463,20 +430,16 @@ object Dedup {
     * is what [[minhashNearDups]]'s `MaxBucketSize` guard is for.
     */
   def jaccardPrefixNearDups(spark: SparkSession, dir: String,
-      tauNum: Int = 3, tauDen: Int = 5,
-      forPlanInspection: Boolean = false): DataFrame =
-    jaccardPrefixFromArrays(docShingleArrays(spark, dir), tauNum, tauDen,
-      forPlanInspection)
+      tauNum: Int = 3, tauDen: Int = 5): DataFrame =
+    jaccardPrefixFromArrays(docShingleArrays(spark, dir), tauNum, tauDen)
 
   private[graft] def jaccardPrefixFromArrays(
-      shingleArrays: DataFrame, tauNum: Int, tauDen: Int,
-      forPlanInspection: Boolean = false): DataFrame = {
-    val (caches, sorted, cand) =
-      jaccardPrefixCandidates(shingleArrays, tauNum, tauDen, forPlanInspection)
+      shingleArrays: DataFrame, tauNum: Int, tauDen: Int): DataFrame = Materialize { m =>
+    val (sorted, cand) = jaccardPrefixCandidates(m, shingleArrays, tauNum, tauDen)
     // exact verification — same contract and double comparison as the
     // minhash twin, so both answer the identical oracle
     val threshold = tauNum.toDouble / tauDen
-    val verified = cand
+    cand
       .join(sorted.select(col("doc_id").as("id_a"), col("ghs").as("gh_a"),
         col("m").as("m_a")), "id_a")
       .join(sorted.select(col("doc_id").as("id_b"), col("ghs").as("gh_b"),
@@ -488,18 +451,13 @@ object Dedup {
           (col("m_a") + col("m_b") - col("n_inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_inter", "jaccard")
-    if (forPlanInspection) { caches.foreach(_.unpersist(false)); verified }
-    else materializeAndRelease(caches, verified)
   }
 
-  /** The candidate stage of [[jaccardPrefixFromArrays]], exposed so the
-    * scale probes can pin CANDIDATE-count growth (the prefix filter's
-    * whole point) directly. Returns (caches to release, the sorted
-    * per-doc arrays, the candidate pairs); the caller owns the caches.
+  /** The candidate stage of [[jaccardPrefixFromArrays]]: (the sorted
+    * per-doc arrays, the candidate pairs), its intermediates filled in `m`.
     */
-  private[graft] def jaccardPrefixCandidates(
-      shingleArrays: DataFrame, tauNum: Int, tauDen: Int,
-      forPlanInspection: Boolean = false): (Seq[DataFrame], DataFrame, DataFrame) = {
+  private def jaccardPrefixCandidates(m: Materialize,
+      shingleArrays: DataFrame, tauNum: Int, tauDen: Int): (DataFrame, DataFrame) = {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
       s"threshold must be a rational in (0, 1]: $tauNum/$tauDen")
     graft.functions.GraftFunctions.register(shingleArrays.sparkSession)
@@ -508,15 +466,13 @@ object Dedup {
     // graft_hash60_array is the codegen form of the 60-bit packing
     // (h31·2^30 + h37 mod 2^30) — one tight loop per array instead of an
     // interpreted per-element HOF lambda
-    val ghArrays = shingleArrays.select(
-      col("doc_id"),
-      array_distinct(expr("graft_hash60_array(shingles)")).as("ghs"))
-      .cache()
     // eager fill — the hashing pass feeds the df count, the ordering join
     // AND (via `sorted`) everything downstream; unfilled, AQE's concurrent
     // consumers each re-run the shingle+hash pipeline (measured 18.5 s →
     // 2.7 s for the `sorted` stage at sf0.1)
-    if (!forPlanInspection) ghArrays.count()
+    val ghArrays = m.fill(shingleArrays.select(
+      col("doc_id"),
+      array_distinct(expr("graft_hash60_array(shingles)")).as("ghs")))
     val exploded = ghArrays.select(col("doc_id"), explode(col("ghs")).as("gh"))
     // global document frequency per fingerprint — defines the rare-first
     // total order (df asc, gh asc); map-side partial agg, 8-byte keys
@@ -524,7 +480,8 @@ object Dedup {
     // per-doc shingle array re-sorted by the global order + set size;
     // collect_list is order-nondeterministic but array_sort restores a
     // canonical order ((df, gh) is unique within a doc)
-    val sorted = exploded.join(dfCounts, "gh")
+    // eager fill: feeds the self-join (twice) + verification
+    val sorted = m.fill(exploded.join(dfCounts, "gh")
       .groupBy("doc_id")
       .agg(collect_list(struct(col("df"), col("gh"))).as("pairs"),
         count(lit(1)).as("m"))
@@ -537,10 +494,7 @@ object Dedup {
       // p = m − ceil(τ·m) + 1, exact integer ceil — never off by the
       // 1-ulp of a double τ
       .withColumn("p",
-        col("m") - expr(s"(m * $tauNum + ${tauDen - 1}) div $tauDen") + 1)
-      .cache()
-    // eager fill: feeds the self-join (twice) + verification
-    if (!forPlanInspection) sorted.count()
+        col("m") - expr(s"(m * $tauNum + ${tauDen - 1}) div $tauDen") + 1))
     val pref = sorted.select(col("doc_id"), col("m"),
       posexplode(expr("slice(ghs, 1, CAST(p AS INT))")).as(Seq("pos0", "gh")))
       .withColumn("pos", col("pos0") + 1).drop("pos0")
@@ -565,7 +519,7 @@ object Dedup {
             (col("a.m") + col("b.m")) * tNum)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    (Seq(ghArrays, sorted), sorted, cand)
+    (sorted, cand)
   }
 
   /** INCREMENTAL near-dup detection — the daily-increment shape of a
@@ -588,11 +542,9 @@ object Dedup {
     * [[minhashNearDups]].
     */
   def incrementalNearDups(spark: SparkSession, dir: String, threshold: Double = 0.6,
-      splitId: Long = 400, forPlanInspection: Boolean = false): DataFrame = {
-    val arrays = docShingleArrays(spark, dir).cache()
-    if (!forPlanInspection) arrays.count() // eager fill — same AQE fan-out rationale as nearDupsFromArrays
-    val banded = bandedSignatures(signaturesFrom(arrays)).cache()
-    if (!forPlanInspection) banded.count()
+      splitId: Long = 400): DataFrame = Materialize { m =>
+    val arrays = m.fill(docShingleArrays(spark, dir)) // same AQE fan-out rationale as nearDupsFromArrays
+    val banded = m.fill(bandedSignatures(signaturesFrom(arrays)))
     val newB = banded.filter(col("doc_id") >= splitId)
       .select(col("band"), col("k1"), col("k2"), col("doc_id").as("id_new"))
     val corpusB = banded.filter(col("doc_id") < splitId)
@@ -603,12 +555,7 @@ object Dedup {
     val cand = corpusB.join(newB, Seq("band", "k1", "k2"))
       .select("id_new", "id_corpus")
       .distinct()
-    val verified = verifyIncrementalPairs(arrays, cand, threshold)
-    // forPlanInspection=true returns an UNMATERIALIZED frame whose caches
-    // are already released — for `.queryExecution` plan-shape assertions
-    // ONLY (PlanSpec); executing it would recompute the signature pipeline
-    if (!forPlanInspection) materializeAndRelease(Seq(arrays, banded), verified)
-    else { arrays.unpersist(false); banded.unpersist(false); verified }
+    verifyIncrementalPairs(arrays, cand, threshold)
   }
 
   /** Exact-Jaccard verification of (id_new, id_corpus) candidate pairs
@@ -647,10 +594,9 @@ object Dedup {
   def incrementalNearDupsFrom(newDocs: DataFrame, corpusArrays: DataFrame,
       corpusBands: DataFrame, threshold: Double = 0.6): DataFrame = {
     // the increment's arrays feed BOTH banding and verification; an eager
-    // localCheckpoint computes the tokenize+shingle pipeline once per
-    // micro-batch (blocks are ContextCleaner-managed, so nothing to
-    // unpersist on this per-batch path)
-    val newArrays = shingleArraysOf(newDocs).localCheckpoint(true)
+    // checkpoint computes the tokenize+shingle pipeline once per
+    // micro-batch (released by the caller's scope: StreamDedup's batch)
+    val newArrays = Materialize.checkpoint(shingleArraysOf(newDocs))
     val newB = bandedSignatures(signaturesFrom(newArrays))
       .select(col("band"), col("k1"), col("k2"), col("doc_id").as("id_new"))
     val cand = corpusBands
@@ -685,12 +631,11 @@ object Dedup {
       splitId: Long = 400, storeDir: Option[String] = None): DataFrame = {
     val store = storeDir.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-sig-store").toString)
-    val arrays = docShingleArrays(spark, dir).cache()
-    arrays.count()
     // try/finally: the temp store is a full parquet copy of corpus bands —
     // it must not leak into /tmp if the read-back, candidate join, or
     // verification throws
-    try {
+    try Materialize { m =>
+      val arrays = m.fill(docShingleArrays(spark, dir))
       writeSignatureStore(arrays, store, splitId) // one corpus pass: reuses the cache
       val corpusB = ParquetSource.read(spark, s"$store/bands.parquet")
       val newB = bandedSignatures(signaturesFrom(arrays.filter(col("doc_id") >= splitId)))
@@ -700,8 +645,7 @@ object Dedup {
         .join(newB, Seq("band", "k1", "k2")) // de-hinted (r14): AQE's call
         .select("id_new", "id_corpus")
         .distinct()
-      materializeAndRelease(Seq(arrays),
-        verifyIncrementalPairs(arrays, cand, threshold))
+      verifyIncrementalPairs(arrays, cand, threshold)
     } finally {
       if (storeDir.isEmpty) { // result is checkpointed — the temp store can go
         import scala.reflect.io.Directory
@@ -765,22 +709,23 @@ object Dedup {
     * At 100 TB this is the standard BSP connected-components shape; a
     * large-star/small-star variant would cut rounds on deep graphs.
     */
-  def nearDupClusters(spark: SparkSession, dir: String, threshold: Double = 0.6): DataFrame = {
-    val pairs = minhashNearDups(spark, dir, threshold).select("id_a", "id_b").cache()
-    val edges = pairs.union(pairs.select(col("id_b"), col("id_a"))).toDF("src", "dst").cache()
-    // localCheckpoint per round: each iteration references the previous
+  def nearDupClusters(spark: SparkSession, dir: String,
+      threshold: Double = 0.6): DataFrame = Materialize { m =>
+    val pairs = m.cache(minhashNearDups(spark, dir, threshold).select("id_a", "id_b"))
+    val edges = m.cache(pairs.union(pairs.select(col("id_b"), col("id_a"))).toDF("src", "dst"))
+    // a checkpoint per round: each iteration references the previous
     // labels twice (union + convergence join), so an uncut lineage grows
     // exponentially with rounds
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
+    var labels = m.checkpoint(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 50) {
       val prop = edges
         .join(labels.withColumnRenamed("id", "dst_id"), col("dst") === col("dst_id"))
         .select(col("src").as("id"), col("label"))
-      val next = labels.union(prop)
-        .groupBy("id").agg(min("label").as("label")).localCheckpoint(true)
+      val next = m.checkpoint(labels.union(prop)
+        .groupBy("id").agg(min("label").as("label")))
       changed = next.as("n").join(labels.as("o"), "id")
         .filter(col("n.label") =!= col("o.label")).count()
       labels = next
@@ -796,9 +741,7 @@ object Dedup {
         s"nearDupClusters: label propagation did not converge in $rounds rounds " +
           s"($changed labels still moving) — component diameter exceeds the cap; " +
           "use nearDupClustersStar (large-star/small-star, O(log n) rounds)")
-    materializeAndRelease(
-      Seq(pairs, edges),
-      labels.select(col("id").as("doc_id"), col("label").as("cluster_id")))
+    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** Connected components via alternating large-star/small-star rounds
@@ -821,69 +764,68 @@ object Dedup {
     * converge — asserted ≤ O(log n) in the deep-chain spec.
     */
   def connectedComponentsStarWithRounds(edges0: DataFrame): (DataFrame, Int) = {
-    val spark = edges0.sparkSession
-    // canonical undirected edge list, self-loops dropped
-    // Each round references the previous round's plan several times (the
-    // union'd neighbor view + the convergence except), so the lineage would
-    // grow EXPONENTIALLY across rounds — localCheckpoint truncates it to
-    // the materialized blocks every iteration (the loop analogue of
-    // materializeAndRelease; blocks are GC-cleaned).
-    var edges = edges0.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
-    var converged = false
     var rounds = 0
-    var edgeCount = edges.count()
-    while (!converged && rounds < 25) {
-      // large-star: m(c) = min(Γ(c) ∪ {c}); link strictly larger
-      // neighbors to m. Aggregate-then-join — never materializes a
-      // neighborhood in one row (a collect_set would OOM on the root of a
-      // large component).
-      val nbrs = edges.select(col("u").as("c"), col("v").as("n"))
-        .union(edges.select(col("v").as("c"), col("u").as("n")))
-      val lsMin = nbrs.groupBy("c").agg(min(least(col("c"), col("n"))).as("m"))
-      val ls = nbrs.join(lsMin, "c")
-        .filter(col("n") > col("c"))
-        .select(least(col("n"), col("m")).as("u"), greatest(col("n"), col("m")).as("v"))
-        .filter(col("u") =!= col("v"))
-      // small-star over the larger→smaller edges: link every smaller
-      // neighbor AND the center to the neighborhood minimum
-      val sn = ls.select(col("v").as("c"), col("u").as("n")) // n <= c by construction
-      val ssMin = sn.groupBy("c").agg(min(col("n")).as("m"))
-      val ss = sn.join(ssMin, "c")
-        .select(col("m"), col("n")).union(ssMin.select(col("m"), col("c").as("n")))
-        .filter(col("m") =!= col("n"))
-        .select(col("m").as("u"), col("n").as("v")) // m = min ⇒ already canonical
-        .distinct()
-        .localCheckpoint(true)
-      // converged when the edge set is a fixed point (all stars: v -> root).
-      // || short-circuits: the except (a shuffle) only runs when the counts
-      // are equal; the count is carried across rounds so each iteration
-      // costs one checkpoint job + one count + (rarely) the except.
-      val ssCount = ss.count()
-      val changed = ssCount != edgeCount || ss.except(edges).limit(1).count() > 0
-      edges = ss
-      edgeCount = ssCount
-      converged = !changed
-      rounds += 1
+    val out = Materialize { m =>
+      // canonical undirected edge list, self-loops dropped
+      // Each round references the previous round's plan several times (the
+      // union'd neighbor view + the convergence except), so the lineage would
+      // grow EXPONENTIALLY across rounds — a checkpoint truncates it to the
+      // materialized blocks every iteration.
+      var edges = m.checkpoint(edges0.select(col("src").cast("long"), col("dst").cast("long"))
+        .filter(col("src") =!= col("dst"))
+        .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
+        .distinct())
+      var converged = false
+      var edgeCount = edges.count()
+      while (!converged && rounds < 25) {
+        // large-star: m(c) = min(Γ(c) ∪ {c}); link strictly larger
+        // neighbors to m. Aggregate-then-join — never materializes a
+        // neighborhood in one row (a collect_set would OOM on the root of a
+        // large component).
+        val nbrs = edges.select(col("u").as("c"), col("v").as("n"))
+          .union(edges.select(col("v").as("c"), col("u").as("n")))
+        val lsMin = nbrs.groupBy("c").agg(min(least(col("c"), col("n"))).as("m"))
+        val ls = nbrs.join(lsMin, "c")
+          .filter(col("n") > col("c"))
+          .select(least(col("n"), col("m")).as("u"), greatest(col("n"), col("m")).as("v"))
+          .filter(col("u") =!= col("v"))
+        // small-star over the larger→smaller edges: link every smaller
+        // neighbor AND the center to the neighborhood minimum
+        val sn = ls.select(col("v").as("c"), col("u").as("n")) // n <= c by construction
+        val ssMin = sn.groupBy("c").agg(min(col("n")).as("m"))
+        val ss = m.checkpoint(sn.join(ssMin, "c")
+          .select(col("m"), col("n")).union(ssMin.select(col("m"), col("c").as("n")))
+          .filter(col("m") =!= col("n"))
+          .select(col("m").as("u"), col("n").as("v")) // m = min ⇒ already canonical
+          .distinct())
+        // converged when the edge set is a fixed point (all stars: v -> root).
+        // || short-circuits: the except (a shuffle) only runs when the counts
+        // are equal; the count is carried across rounds so each iteration
+        // costs one checkpoint job + one count + (rarely) the except.
+        val ssCount = ss.count()
+        val changed = ssCount != edgeCount || ss.except(edges).limit(1).count() > 0
+        edges = ss
+        edgeCount = ssCount
+        converged = !changed
+        rounds += 1
+      }
+      // loud, never wrong-silently (r14 review): star rounds converge in
+      // O(log n) — 25 rounds covers any graph that fits any cluster (2^25-
+      // deep contraction). Hitting the cap means a bug or adversarial input;
+      // partial labels must never flow into canonical selection.
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponentsStar: not converged after $rounds rounds — " +
+            "edge set is still changing; refusing to emit partial components")
+      // stars point every node at its component min; the roots themselves
+      // get their own id
+      val members = edges.select(col("v").as("node"), col("u").as("label"))
+      val roots = edges.select(col("u").as("node")).distinct()
+        .join(members.select(col("node")), Seq("node"), "left_anti")
+        .withColumn("label", col("node"))
+      members.union(roots)
     }
-    // loud, never wrong-silently (r14 review): star rounds converge in
-    // O(log n) — 25 rounds covers any graph that fits any cluster (2^25-
-    // deep contraction). Hitting the cap means a bug or adversarial input;
-    // partial labels must never flow into canonical selection.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar: not converged after $rounds rounds — " +
-          "edge set is still changing; refusing to emit partial components")
-    // stars point every node at its component min; the roots themselves
-    // get their own id
-    val members = edges.select(col("v").as("node"), col("u").as("label"))
-    val roots = edges.select(col("u").as("node")).distinct()
-      .join(members.select(col("node")), Seq("node"), "left_anti")
-      .withColumn("label", col("node"))
-    (materializeAndRelease(Nil, members.union(roots)), rounds)
+    (out, rounds)
   }
 
   /** Edge graphs at or below this size are solved with driver union-find
@@ -900,14 +842,13 @@ object Dedup {
     * [[connectedComponentsStar]] otherwise. Labels are the component
     * minimum in both paths, so results are identical (spec-asserted).
     */
-  def connectedComponentsAdaptive(edges0: DataFrame): DataFrame = {
+  def connectedComponentsAdaptive(edges0: DataFrame): DataFrame = Materialize { m =>
     val spark = edges0.sparkSession
     import spark.implicits._
-    val canonical = edges0.select(col("src").cast("long"), col("dst").cast("long"))
+    val canonical = m.checkpoint(edges0.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     if (canonical.count() > SmallGraphEdges) {
       connectedComponentsStar(canonical.select(col("u").as("src"), col("v").as("dst")))
     } else {
@@ -937,12 +878,11 @@ object Dedup {
     * label by component min, spec-proven equal to the min-label BSP in
     * [[nearDupClusters]]).
     */
-  def nearDupClustersStar(spark: SparkSession, dir: String, threshold: Double = 0.6): DataFrame = {
-    val pairs = minhashNearDups(spark, dir, threshold)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    connectedComponentsAdaptive(pairs)
-      .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-  }
+  def nearDupClustersStar(spark: SparkSession, dir: String, threshold: Double = 0.6): DataFrame =
+    Materialize { _ => // releases the pairs once the components are materialized
+      connectedComponentsAdaptive(minhashNearDups(spark, dir, threshold)
+        .select(col("id_a").as("src"), col("id_b").as("dst")))
+    }.select(col("node").as("doc_id"), col("label").as("cluster_id"))
 
   /** End-to-end corpus dedup — what the cluster machinery is FOR: group
     * near-duplicates ([[nearDupClustersStar]]), keep the smallest doc_id of
@@ -1028,27 +968,27 @@ object Dedup {
       tables: Int = 4): DataFrame = {
     require(tables > maxDist && tables <= 60,
       s"simhash banding: need maxDist < tables <= 60 for guaranteed recall (got maxDist=$maxDist, tables=$tables)")
-    val sig = simhash(spark, dir).cache()
-    // (sig cache released via materializeAndRelease at the end)
-    val bands = (0 until tables).map { j =>
-      val start = j * 60 / tables
-      val end = (j + 1) * 60 / tables
-      struct(lit(j).as("band"),
-        shiftright(col("simhash"), start).bitwiseAND(lit((1L << (end - start)) - 1)).as("key"))
+    Materialize { m =>
+      val sig = m.cache(simhash(spark, dir))
+      val bands = (0 until tables).map { j =>
+        val start = j * 60 / tables
+        val end = (j + 1) * 60 / tables
+        struct(lit(j).as("band"),
+          shiftright(col("simhash"), start).bitwiseAND(lit((1L << (end - start)) - 1)).as("key"))
+      }
+      val banded = sig.select(col("doc_id"), col("simhash"), explode(array(bands: _*)).as("b"))
+        .select(col("doc_id"), col("simhash"), col("b.band"), col("b.key"))
+      val a = banded.as("a")
+      val b = banded.as("b")
+      a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+          col("a.simhash").as("sig_a"), col("b.simhash").as("sig_b"))
+        .distinct()
+        .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
+        .filter(col("hamming") <= maxDist)
+        .select("id_a", "id_b", "hamming")
     }
-    val banded = sig.select(col("doc_id"), col("simhash"), explode(array(bands: _*)).as("b"))
-      .select(col("doc_id"), col("simhash"), col("b.band"), col("b.key"))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val out = a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.simhash").as("sig_a"), col("b.simhash").as("sig_b"))
-      .distinct()
-      .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
-      .filter(col("hamming") <= maxDist)
-      .select("id_a", "id_b", "hamming")
-    materializeAndRelease(Seq(sig), out)
   }
 
   /** Edit-distance scoring of verified near-dup pairs: LSH candidates →
@@ -1200,13 +1140,12 @@ object Dedup {
       // (measured: shuffle exponent 1.96 under ×8 co-growth, CorpusScale-
       // Probe r14); a 100 TB run raises bits ~log2(corpus growth) to hold
       // occupancy — and with it the candidate stream — linear.
-      tables: Int = 16, bits: Int = 8): DataFrame = {
-    val pairs = embeddingNearDupsBy(embeddings(spark, dir), threshold, strategy,
-        tables = tables, bits = bits)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    connectedComponentsAdaptive(pairs)
-      .select(col("node").as("vec_id"), col("label").as("cluster_id"))
-  }
+      tables: Int = 16, bits: Int = 8): DataFrame =
+    Materialize { _ => // releases the LSH pairs once the components are materialized
+      connectedComponentsAdaptive(embeddingNearDupsBy(embeddings(spark, dir), threshold, strategy,
+          tables = tables, bits = bits)
+        .select(col("id_a").as("src"), col("id_b").as("dst")))
+    }.select(col("node").as("vec_id"), col("label").as("cluster_id"))
 
   /** End-to-end semantic dedup — keep ONE representative (min vec_id) per
     * semantic cluster, pass unique vectors through: the [[canonicalDocs]]
@@ -1258,13 +1197,12 @@ object Dedup {
     * Output: (vec_id, cluster_id: bigint, dist_sq: bigint) with dist_sq
     * the final squared distance in micro² units.
     *
-    * `forPlanInspection = true` builds the SAME plan shape with fixed
+    * Under [[Materialize.inspect]] it builds the SAME plan shape with fixed
     * dummy centroids and runs ZERO jobs (no seed collect, no Lloyd, no
     * cache fill) — the seam PlanSpec's hint walker reads (ADVICE r14).
     */
   private[graft] def kmeansMicroAssign(vectors: DataFrame, k: Int,
-      lloydIters: Int, forPlanInspection: Boolean = false,
-      assignVia: String = "auto"): DataFrame = {
+      lloydIters: Int, assignVia: String = "auto"): DataFrame = Materialize { m =>
     require(k >= 1 && lloydIters >= 0,
       s"kmeansMicroAssign: need k >= 1 and lloydIters >= 0, got k=$k iters=$lloydIters")
     val spark = vectors.sparkSession
@@ -1295,7 +1233,7 @@ object Dedup {
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))")
           .as("q"))
-    val q = if (forPlanInspection) q0 else q0.cache()
+    val q = m.cache(q0)
 
     // the literal map-only argmin (small k)
     def assignLit(cents: Array[Array[Long]]): DataFrame = {
@@ -1323,16 +1261,14 @@ object Dedup {
         .select(col("vec_id"), col("q"),
           col("best.j").as("cluster_id"), col("best.d").as("dist_sq"))
 
-    if (forPlanInspection) {
+    if (m.inspecting) {
       // fixed dummy centroids, zero jobs — plan shape only
-      return if (useJoin)
+      if (useJoin)
         assignJoin(spark.range(k.toLong)
           .select(col("id").as("j"), array(lit(0L)).as("cent")))
           .select("vec_id", "cluster_id", "dist_sq")
       else assignLit(Array.fill(k)(Array(0L))).select("vec_id", "cluster_id", "dist_sq")
-    }
-
-    if (!useJoin) {
+    } else if (!useJoin) {
       val seeds = q.orderBy("vec_id").limit(k).collect() // bounded: k rows
       require(seeds.length == k,
         s"kmeansMicroAssign: corpus has only ${seeds.length} vectors, need >= k=$k")
@@ -1350,15 +1286,13 @@ object Dedup {
         }
         cents = next
       }
-      materializeAndRelease(Seq(q),
-        assignLit(cents).select("vec_id", "cluster_id", "dist_sq"))
+      assignLit(cents).select("vec_id", "cluster_id", "dist_sq")
     } else {
       // seeds: the k smallest vec_ids in rank order — j = rank − 1, same
       // contract as the literal path, built WITHOUT collecting vectors
       val w = org.apache.spark.sql.expressions.Window.orderBy("vec_id")
-      var cents = q.orderBy("vec_id").limit(k)
-        .select((row_number().over(w) - 1).cast("long").as("j"), col("q").as("cent"))
-        .localCheckpoint(true) // k rows; eager so the seed sort runs once
+      var cents = m.checkpoint(q.orderBy("vec_id").limit(k) // k rows; eager so the seed sort runs once
+        .select((row_number().over(w) - 1).cast("long").as("j"), col("q").as("cent")))
       require(cents.count() == k,
         s"kmeansMicroAssign: corpus has fewer than k=$k vectors")
       for (_ <- 1 to lloydIters) {
@@ -1373,13 +1307,12 @@ object Dedup {
           .groupBy("cluster_id")
           .agg(expr("transform(array_sort(collect_list(struct(dim, nv))), p -> p.nv)")
             .as("new_cent"))
-        cents = cents.join(updates, cents("j") === updates("cluster_id"), "left")
+        // cut per-iteration lineage; k rows
+        cents = m.checkpoint(cents.join(updates, cents("j") === updates("cluster_id"), "left")
           .select(col("j"),
-            coalesce(col("new_cent"), col("cent")).as("cent")) // empty cluster keeps its centroid
-          .localCheckpoint(true) // cut per-iteration lineage; k rows
+            coalesce(col("new_cent"), col("cent")).as("cent"))) // empty cluster keeps its centroid
       }
-      materializeAndRelease(Seq(q),
-        assignJoin(cents).select("vec_id", "cluster_id", "dist_sq"))
+      assignJoin(cents).select("vec_id", "cluster_id", "dist_sq")
     }
   }
 
@@ -1447,23 +1380,18 @@ object Dedup {
     * the seam the spec plants synthetic duplicates through.
     */
   def semDeDupFrom(vectors: DataFrame, k: Int = 8, lloydIters: Int = 2,
-      threshold: Double = 0.4, clusterCap: Int = LshBucketCap,
-      forPlanInspection: Boolean = false): DataFrame = {
+      threshold: Double = 0.4, clusterCap: Int = LshBucketCap): DataFrame = Materialize { m =>
     graft.functions.GraftFunctions.register(vectors.sparkSession)
-    val e = vectors
+    val e = m.cache(vectors
       .select(col("vec_id"), col("embedding"),
-        Portable.l2NormNative("embedding").as("norm"))
-      .cache()
-    val assigned = kmeansMicroAssign(e.select("vec_id", "embedding"), k, lloydIters,
-        forPlanInspection = forPlanInspection) // inspection runs zero k-means jobs
+        Portable.l2NormNative("embedding").as("norm")))
+    val assigned = kmeansMicroAssign(e.select("vec_id", "embedding"), k, lloydIters)
       .select("vec_id", "cluster_id") // payload-free: blocking replicates ids only
     val cn = assigned.groupBy("cluster_id").agg(count(lit(1)).as("n_c"))
-    val blocked = assigned.join(cn, Seq("cluster_id"))
+    val blocked = m.fill(assigned.join(cn, Seq("cluster_id")) // one subtree for both self-join sides
       .withColumn("s", expr(s"(n_c + ${clusterCap - 1}L) div ${clusterCap}L"))
       .withColumn("bs", pmod(hash(col("vec_id")).cast("bigint"), col("s")))
-      .withColumn("bo", explode(expr("sequence(0L, s - 1L)")))
-      .cache()
-    if (!forPlanInspection) blocked.count() // one subtree for both self-join sides
+      .withColumn("bo", explode(expr("sequence(0L, s - 1L)"))))
     // every same-cluster pair meets in exactly one (bs, bo) block cell —
     // the property-tested blocked-self-join pairing lemma; light clusters
     // have s=1 and degenerate to the plain equi-join
@@ -1479,11 +1407,9 @@ object Dedup {
       .filter(Portable.dotProductNative("emb_a", "emb_b") /
         (col("norm_a") * col("norm_b")) >= threshold)
       .select(col("id_b").as("vec_id")).distinct()
-    val out = assigned
+    assigned
       .join(dropped.withColumn("hit", lit(1)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster_id"), col("hit").isNull.as("kept"))
-    if (!forPlanInspection) materializeAndRelease(Seq(e, blocked), out)
-    else { e.unpersist(false); blocked.unpersist(false); out }
   }
 
   /** Embedding near-dups via sign-projection LSH — the 100 TB path for
@@ -1502,16 +1428,15 @@ object Dedup {
     * recall-checked against planted ground truth in DedupSpec.
     */
   def embeddingNearDupsLsh(vectors: DataFrame, threshold: Double = 0.7,
-      tables: Int = 16, bits: Int = 8, forPlanInspection: Boolean = false,
-      bucketCap: Int = LshBucketCap): DataFrame = {
+      tables: Int = 16, bits: Int = 8,
+      bucketCap: Int = LshBucketCap): DataFrame = Materialize { m =>
     graft.functions.GraftFunctions.register(vectors.sparkSession)
-    val e = vectors
+    // filled before AQE fans out the bucket + two payload consumers
+    val e = m.fill(vectors
       .select(col("vec_id"), col("embedding"), Portable.l2NormNative("embedding").as("norm"))
       // zero/non-finite-norm exclusion (r14 review; r16 finite rule) —
       // same rationale as the grid path
-      .filter(Portable.usableNorm(col("norm")))
-      .cache()
-    if (!forPlanInspection) e.count() // fill before AQE fans out the bucket + two payload consumers
+      .filter(Portable.usableNorm(col("norm"))))
     // buckets carry only (vec_id, t, key) — candidate generation never
     // shuffles embedding payloads.
     //
@@ -1530,28 +1455,22 @@ object Dedup {
     val bucketed0 = e.select(col("vec_id"),
       posexplode(expr(s"graft_lsh_buckets(embedding, $tables, $bits)")).as(Seq("t", "key")))
     val bn = bucketed0.groupBy("t", "key").agg(count(lit(1)).as("n_b"))
-    val blocked = bucketed0.join(bn, Seq("t", "key"))
+    val blocked = m.fill(bucketed0.join(bn, Seq("t", "key")) // one subtree for both self-join sides
       .withColumn("s", expr(s"(n_b + ${bucketCap - 1}L) div ${bucketCap}L"))
       .withColumn("bs", pmod(hash(col("vec_id")).cast("bigint"), col("s")))
-      .withColumn("bo", explode(expr("sequence(0L, s - 1L)")))
-      .cache()
-    if (!forPlanInspection) blocked.count() // one subtree for both self-join sides
+      .withColumn("bo", explode(expr("sequence(0L, s - 1L)"))))
     val cand = blocked.as("a").join(blocked.as("b"),
         col("a.t") === col("b.t") && col("a.key") === col("b.key") &&
           col("a.bs") === col("b.bo") && col("a.bo") === col("b.bs") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
       .distinct()
-    val verified = cand
+    cand
       .join(e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("norm").as("norm_a")), "id_a")
       .join(e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("norm").as("norm_b")), "id_b")
       .withColumn("cosine", Portable.dotProductNative("emb_a", "emb_b") / (col("norm_a") * col("norm_b")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
-    // forPlanInspection=true: unmaterialized, caches released — plan-shape
-    // assertions only (PlanSpec); executing that frame recomputes buckets
-    if (!forPlanInspection) materializeAndRelease(Seq(e, blocked), verified)
-    else { e.unpersist(false); blocked.unpersist(false); verified }
   }
 
   /** Banding width that holds the EXPECTED per-table bucket occupancy at
@@ -1638,11 +1557,11 @@ object Dedup {
   def semanticClustersLsh(spark: SparkSession, dir: String, threshold: Double = 0.7,
       nPlanted: Int = 20): DataFrame = {
     val base = embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val pairs = embeddingNearDupsBy(base.unionByName(plantedCopies(base, nPlanted)), threshold,
-        EmbeddingStrategy.SignLsh)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    connectedComponentsAdaptive(pairs)
-      .select(col("node").as("vec_id"), col("label").as("cluster_id"))
+    Materialize { _ => // releases the LSH pairs once the components are materialized
+      connectedComponentsAdaptive(embeddingNearDupsBy(base.unionByName(plantedCopies(base, nPlanted)),
+          threshold, EmbeddingStrategy.SignLsh)
+        .select(col("id_a").as("src"), col("id_b").as("dst")))
+    }.select(col("node").as("vec_id"), col("label").as("cluster_id"))
   }
 
   /** INCREMENTAL embedding near-dup detection — the [[incrementalNearDups]]
@@ -1663,8 +1582,7 @@ object Dedup {
     */
   def embeddingIncrementalFrom(corpus: DataFrame, increment: DataFrame,
       threshold: Double = 0.7, tables: Int = 16, bits: Int = 8,
-      corpusBuckets: Option[DataFrame] = None,
-      forPlanInspection: Boolean = false): DataFrame = {
+      corpusBuckets: Option[DataFrame] = None): DataFrame = Materialize { m =>
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     // Zero-norm vectors are excluded on BOTH sides: their cosine is 0/0 =
     // NaN, and Spark's NaN-greatest ordering makes `NaN >= threshold`
@@ -1680,10 +1598,8 @@ object Dedup {
     // consumers); on the store-backed path it has exactly one consumer (the
     // verification join) and caching it would pin the whole corpus in
     // memory against the "streams through unshuffled" contract
-    val needCorpusBuckets = corpusBuckets.isEmpty
-    val cor = if (needCorpusBuckets) withNorm(corpus).cache() else withNorm(corpus)
-    val inc = withNorm(increment).cache()
-    if (!forPlanInspection) { if (needCorpusBuckets) cor.count(); inc.count() }
+    val cor = if (corpusBuckets.isEmpty) m.fill(withNorm(corpus)) else withNorm(corpus)
+    val inc = m.fill(withNorm(increment))
     val corB = corpusBuckets.getOrElse(buckets(cor))
       .select(col("t"), col("key"), col("vec_id").as("id_corpus"))
     val newB = buckets(inc).select(col("t"), col("key"), col("vec_id").as("id_new"))
@@ -1713,15 +1629,13 @@ object Dedup {
     val cand = corBlocked.join(newBlocked, Seq("t", "key", "bs"))
       .select("id_new", "id_corpus")
       .distinct()
-    val verified = cand
+    cand
       .join(inc.select(col("vec_id").as("id_new"), col("embedding").as("emb_n"), col("norm").as("norm_n")), "id_new")
       .join(cor.select(col("vec_id").as("id_corpus"), col("embedding").as("emb_c"), col("norm").as("norm_c")), "id_corpus")
       .withColumn("cosine",
         graft.functions.Portable.dotProductNative("emb_n", "emb_c") / (col("norm_n") * col("norm_c")))
       .filter(col("cosine") >= threshold)
       .select("id_new", "id_corpus", "cosine")
-    if (!forPlanInspection) materializeAndRelease(Seq(cor, inc), verified)
-    else { cor.unpersist(false); inc.unpersist(false); verified }
   }
 
   /** Writes the corpus side's sign-LSH bucket ids as the parquet store a

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.StructType
@@ -259,20 +258,24 @@ object Graph {
     * frame after `iters` supersteps over both directions of the undirected
     * (u, v) `pairs`. [[nodeUniverse]] reads the nodes once; `checkNodes`
     * sees their count, which picks [[arraySupersteps]] up to `gate`, else
-    * [[shuffleSupersteps]]. `extraCaches` are released with the result.
+    * [[shuffleSupersteps]]. The regime's intermediates live in one
+    * [[Materialize]] scope, which materializes the (finished) result: a
+    * checkpoint, or, for the array regime's unreshaped result, the
+    * driver-local relation itself.
     *
     * Both regimes count an edge once: a (src, dst) edge that the pairs give
     * more than once (a repeated pair) folds and counts in `outdeg` as one,
     * as over the oracle's distinct pairs. So callers need not dedupe. */
   private def supersteps(spark: SparkSession, pairs: DataFrame, nodes0: DataFrame,
       rec: Recurrence, iters: Int, checkpointEvery: Int, gate: Long,
-      extraCaches: Seq[DataFrame], checkNodes: Long => Unit = _ => ()): DataFrame = {
+      checkNodes: Long => Unit = _ => ()): DataFrame = Materialize { m =>
     val (nNodes, small) = nodeUniverse(nodes0, rec.init, gate)
     checkNodes(nNodes)
-    small match {
-      case Some((ids, init)) => arraySupersteps(spark, pairs, ids, init, rec, iters, extraCaches)
-      case None => shuffleSupersteps(spark, pairs, nodes0, rec, iters, checkpointEvery, extraCaches)
+    val out = small match {
+      case Some((ids, init)) => arraySupersteps(spark, pairs, ids, init, rec, iters)
+      case None => shuffleSupersteps(m, spark, pairs, nodes0, rec, iters, checkpointEvery)
     }
+    rec.finish.fold(out)(_(out))
   }
 
   /** The small-graph regime: one long of state per node on the driver,
@@ -287,10 +290,10 @@ object Graph {
     * job folds each block into per-dst partials, and the driver updates
     * every node. All-integer, so partitioning and summation order do not
     * matter. The result is a driver-local relation over the driver's
-    * arrays, which a collect reads with no job; it is checkpointed only when
-    * `finish` reshapes it. */
+    * arrays, which a collect reads with no job. The edge blocks are an RDD,
+    * released here in a `finally`. */
   private def arraySupersteps(spark: SparkSession, pairs: DataFrame, ids: Array[Long],
-      init: Array[Long], rec: Recurrence, iters: Int, extraCaches: Seq[DataFrame]): DataFrame = {
+      init: Array[Long], rec: Recurrence, iters: Int): DataFrame = {
     val sc = spark.sparkContext
     val idsB = sc.broadcast(ids)
     val fold = rec.fold
@@ -348,13 +351,9 @@ object Graph {
       idsB.destroy()
     }
     // a driver-local relation of internal rows: no RDD, and no job to collect it
-    val out = PlanBridge.ofRows(spark, LocalRelation(
+    PlanBridge.ofRows(spark, LocalRelation(
       DataTypeUtils.toAttributes(StructType.fromDDL(s"node BIGINT NOT NULL, ${rec.name} BIGINT NOT NULL")),
       ids.indices.map(i => InternalRow(ids(i), state(i)))))
-    rec.finish match {
-      case Some(f) => Dedup.materializeAndRelease(extraCaches, f(out))
-      case None => extraCaches.foreach(_.unpersist(false)); out
-    }
   }
 
   /** The shuffle regime, past the node gate. The directed edges are
@@ -362,34 +361,22 @@ object Graph {
     * partitioned on `src`, so a superstep's join exchanges only the state;
     * dsts outside the node set are dropped once up front (srcs outside it
     * never meet a state row), after a `byDegree` recurrence's `outdeg` has
-    * counted them. A localCheckpoint every `checkpointEvery` supersteps cuts
-    * lineage and is released with the result. */
-  private def shuffleSupersteps(spark: SparkSession, pairs: DataFrame, nodes0: DataFrame,
-      rec: Recurrence, iters: Int, checkpointEvery: Int,
-      extraCaches: Seq[DataFrame]): DataFrame = {
-    val nodes = nodes0.persist(StorageLevel.MEMORY_AND_DISK)
+    * counted them. A lazy checkpoint every `checkpointEvery` supersteps
+    * cuts lineage. The caches and checkpoints are held in `m`. */
+  private def shuffleSupersteps(m: Materialize, spark: SparkSession, pairs: DataFrame,
+      nodes0: DataFrame, rec: Recurrence, iters: Int, checkpointEvery: Int): DataFrame = {
+    val nodes = m.cache(nodes0)
     val all = directed(pairs).distinct()
     val withDeg = if (!rec.byDegree) all
       else all.join(all.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-    val edges = withDeg.join(nodes, withDeg("dst") === nodes("node"), "left_semi")
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val checkpoints = Seq.newBuilder[DataFrame]
+    val edges = m.cache(withDeg.join(nodes, withDeg("dst") === nodes("node"), "left_semi")
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("src")))
     var state = nodes.withColumn(rec.name, rec.init)
     for (i <- 1 to iters) {
       state = rec.step(state, edges, nodes)
-      if (i % checkpointEvery == 0 && i < iters) {
-        state = state.localCheckpoint()
-        checkpoints += state
-      }
+      if (i % checkpointEvery == 0 && i < iters) state = m.checkpoint(state, eager = false)
     }
-    val result = state.select(col("node").cast("bigint").as("node"),
-      col(rec.name).cast("bigint").as(rec.name))
-    val out = Dedup.materializeAndRelease(Seq(edges, nodes) ++ extraCaches,
-      rec.finish.fold(result)(_(result)))
-    checkpoints.result().flatMap(_.queryExecution.logical.collect { case r: LogicalRDD => r.rdd })
-      .foreach(_.unpersist(false))
-    out
+    state.select(col("node").cast("bigint").as("node"), col(rec.name).cast("bigint").as(rec.name))
   }
 
   /** PageRank over both directions of the undirected (u, v) `pairs`. */
@@ -413,7 +400,7 @@ object Graph {
     // damping step then multiplies by dampPct before the div — so
     // N·scale·dampPct must fit in a Long. The default scale is safe to
     // ~10^8 nodes; beyond that this fails loudly instead of wrapping.
-    supersteps(spark, pairs, nodes0, rank, iters, checkpointEvery, broadcastNodes, Nil,
+    supersteps(spark, pairs, nodes0, rank, iters, checkpointEvery, broadcastNodes,
       checkNodes = n => require(n == 0 || scale <= Long.MaxValue / n / dampPct,
         s"integer PageRank overflow: $n nodes × scale=$scale × dampPct=$dampPct " +
           "exceeds 2^63 — pass a smaller scale"))
@@ -469,7 +456,7 @@ object Graph {
       nodes0: DataFrame, iters: Int, checkpointEvery: Int,
       broadcastNodes: Long = BroadcastableNodes): DataFrame =
     supersteps(spark, pairs, nodes0, minPlus("label", col("node"), 0L), iters,
-      checkpointEvery, broadcastNodes, Nil)
+      checkpointEvery, broadcastNodes)
 
   /** Bounded-hop BFS reachability: minimum hop count (≤ maxHops) from the
     * seed set — customers of one nation — over EVERY trade edge, as the
@@ -488,18 +475,17 @@ object Graph {
   }
 
   /** Reach over both directions of the undirected (u, v) `pairs`, which the
-    * node universe and the edge build both read: they are cached once. */
+    * node universe and the edge build both read: they are filled once. */
   private[graft] def reachCore(spark: SparkSession, pairs0: DataFrame, seeds: DataFrame,
-      maxHops: Int, broadcastNodes: Long = BroadcastableNodes): DataFrame = {
-    val pairs = pairs0.persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // eager fill — two consumers below (cache-before-AQE rule)
+      maxHops: Int, broadcastNodes: Long = BroadcastableNodes): DataFrame = Materialize { m =>
+    val pairs = m.fill(pairs0) // two consumers below (cache-before-AQE rule)
     val nodes = pairs.select(explode(array(col("u"), col("v"))).as("node"),
         lit(Long.MaxValue).as("h0"))
       .unionAll(seeds.select(col("node"), lit(0L).as("h0")))
       .groupBy("node").agg(min("h0").as("h0"))
     supersteps(spark, pairs, nodes,
       minPlus("hop", col("h0"), 1L).copy(finish = Some(_.where(col("hop") < Long.MaxValue))),
-      maxHops, checkpointEvery = 2, broadcastNodes, Seq(pairs))
+      maxHops, checkpointEvery = 2, broadcastNodes)
   }
 
   /** LABEL-PROPAGATION COMMUNITIES (round-10 continuation) — synchronous
@@ -520,14 +506,14 @@ object Graph {
   def lpaCommunities(spark: SparkSession, dir: String, steps: Int = 3,
       cutPermille: Int = 900): DataFrame = {
     require(steps >= 1, s"steps must be >= 1, got $steps")
-    val (ew, e) = sparsifiedCoServiceEdgesFrom(orderSuppliers(spark, dir), cutPermille)
-    lpaCore(spark, e, steps, extraCaches = Seq(ew))
+    Materialize { m =>
+      lpaCore(spark, sparsifiedCoServiceEdgesFrom(m, orderSuppliers(spark, dir), cutPermille), steps)
+    }
   }
 
   /** LPA over both directions of the undirected (u, v) `pairs`; their
     * endpoints are the nodes (the oracle's `l0`). */
   private[graft] def lpaCore(spark: SparkSession, pairs: DataFrame, steps: Int,
-      extraCaches: Seq[DataFrame] = Nil,
       broadcastNodes: Long = BroadcastableNodes): DataFrame = {
     val lpa = Recurrence("lbl", col("node"), Long.MaxValue, modeIn, (_, in) => in,
       (labels, edges, _) =>
@@ -539,7 +525,7 @@ object Graph {
         .select(col("node").as("supplier"), col("lbl").as("community"),
           col("sz").cast("bigint").as("community_size"))))
     supersteps(spark, pairs, pairs.select(explode(array(col("u"), col("v"))).as("node")).distinct(),
-      lpa, steps, checkpointEvery = 2, broadcastNodes, extraCaches)
+      lpa, steps, checkpointEvery = 2, broadcastNodes)
   }
 
   /** Distinct (order, supplier) pairs; the hub twins pass `l_suppkey % hubMod`. */
@@ -563,23 +549,21 @@ object Graph {
     * gets `s = ⌈d / wedgeCap⌉` hash-buckets over its neighbors, a row carries
     * its bucket (`bs`) and replicates over the other side's (`bo`), and the
     * join keys on `(mid, bs = bo, bo = bs)`: each `(mid, u < v)` wedge meets
-    * once. Returns (the PERSISTED blocked frame both sides read, for the
-    * caller to release; the wedges (u, v, d), `d` the mid's degree).
+    * once. Returns the wedges (u, v, d), `d` the mid's degree; the blocked
+    * frame both sides read is filled in `m`.
     */
-  private def blockedWedges(adj: DataFrame, wedgeCap: Int): (DataFrame, DataFrame) = {
-    val blocked = adj.join(adj.groupBy("mid").agg(count(lit(1)).as("d")), "mid")
+  private def blockedWedges(m: Materialize, adj: DataFrame, wedgeCap: Int): DataFrame = {
+    // eager fill before the two-consumer self-join (cache-before-AQE)
+    val blocked = m.fill(adj.join(adj.groupBy("mid").agg(count(lit(1)).as("d")), "mid")
       .withColumn("s", expr(s"(d + ${wedgeCap - 1}L) div ${wedgeCap}L"))
       .withColumn("bs", pmod(hash(col("nb")).cast("bigint"), col("s")))
       .withColumn("bo", explode(expr("sequence(0L, s - 1L)")))
-      .select("mid", "nb", "d", "bs", "bo")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    blocked.count() // eager fill before the two-consumer self-join (cache-before-AQE)
-    val wedges = blocked.as("a").join(blocked.as("b"),
+      .select("mid", "nb", "d", "bs", "bo"))
+    blocked.as("a").join(blocked.as("b"),
         col("a.mid") === col("b.mid") &&
           col("a.bs") === col("b.bo") && col("a.bo") === col("b.bs") &&
           col("a.nb") < col("b.nb"))
       .select(col("a.nb").as("u"), col("b.nb").as("v"), col("a.d").as("d"))
-    (blocked, wedges)
   }
 
   /** LINK PREDICTION (round-10 continuation) — resource-allocation index
@@ -645,25 +629,23 @@ object Graph {
   }
 
   private def linkPredictCore(sup: DataFrame, topK: Int, cutPermille: Int,
-      wedgeCap: Int): DataFrame = {
+      wedgeCap: Int): DataFrame = Materialize { m =>
     require(wedgeCap >= 1, s"wedgeCap must be >= 1, got $wedgeCap")
-    val (ew, e) = sparsifiedCoServiceEdgesFrom(sup, cutPermille)
-    val (blocked, wedges) = blockedWedges(bothWays(e, "mid", "nb"), wedgeCap)
+    val e = sparsifiedCoServiceEdgesFrom(m, sup, cutPermille)
+    val wedges = blockedWedges(m, bothWays(e, "mid", "nb"), wedgeCap)
     val scored = wedges.groupBy("u", "v")
       .agg(count(lit(1)).as("n_common"), sum(expr("1000000L div d")).as("ra_micros"))
-    val out = scored.join(e, Seq("u", "v"), "left_anti")
+    scored.join(e, Seq("u", "v"), "left_anti")
       .orderBy(col("ra_micros").desc, col("n_common").desc, col("u").asc, col("v").asc)
       .limit(topK)
       .select(col("u"), col("v"), col("n_common").cast("bigint").as("n_common"),
         col("ra_micros").cast("bigint").as("ra_micros"))
-    Dedup.materializeAndRelease(Seq(ew, blocked), out)
   }
 
   /** The QUANTILE-SPARSIFIED supplier co-service edge stage (the
-    * self-tuning cut [[linkPredict]] documents): returns the CACHED
-    * weighted pair table (caller must hand it to
-    * `Dedup.materializeAndRelease`) and the u<v edge set strictly above
-    * the `permille`-quantile co-service weight (500 = the lower median;
+    * self-tuning cut [[linkPredict]] documents): the u<v edge set strictly
+    * above the `permille`-quantile co-service weight, a filter over the
+    * weighted pair table that is filled in `m` (500 = the lower median;
     * `cum·1000 ≥ n·permille` is the same integer rank rule — for 500 it
     * is algebraically identical to the `(n+1) div 2` median form the
     * link-predict oracle states). [[lpaCommunities]] cuts at 900: the
@@ -671,11 +653,10 @@ object Graph {
     * collapse to one community — the top-decile backbone is where the
     * community structure lives.
     */
-  private def sparsifiedCoServiceEdgesFrom(sup: DataFrame,
-      permille: Int): (DataFrame, DataFrame) = {
+  private def sparsifiedCoServiceEdgesFrom(m: Materialize, sup: DataFrame,
+      permille: Int): DataFrame = {
     require(permille >= 1 && permille <= 999, s"permille must be in [1, 999], got $permille")
-    val ew = coServiceWeights(sup).cache()
-    ew.count() // fill before the multi-consumer fan-out (cache-before-AQE rule)
+    val ew = m.fill(coServiceWeights(sup)) // before the multi-consumer fan-out (cache-before-AQE rule)
     val hist = ew.groupBy("w").agg(count(lit(1)).as("c"))
     // The weight domain is shared-order COUNTS — its distinct-value count
     // is bounded by the max co-service weight, not the edge count. The
@@ -703,8 +684,7 @@ object Graph {
       .filter(col("cum") * 1000 >= col("n") * permille)
       .agg(min("w").as("t"))
     // one job reads the cut, so every consumer of `e` is a filter on the cache
-    val e = ew.filter(col("w") > lit(thr.head().get(0))).select("u", "v")
-    (ew, e)
+    ew.filter(col("w") > lit(thr.head().get(0))).select("u", "v")
   }
 
   /** TRIANGLE COUNT + global clustering coefficient (round 10) over the
@@ -749,10 +729,11 @@ object Graph {
     trianglesCore(orderSuppliers(spark, dir, col("l_suppkey") % hubMod), minOrders, wedgeCap)
   }
 
-  private def trianglesCore(sup: DataFrame, minOrders: Long, wedgeCap: Int): DataFrame = {
+  private def trianglesCore(sup: DataFrame, minOrders: Long,
+      wedgeCap: Int): DataFrame = Materialize { m =>
     require(wedgeCap >= 1, s"wedgeCap must be >= 1, got $wedgeCap")
-    val e = coServiceWeights(sup).filter(col("w") >= minOrders).select("u", "v").cache()
-    e.count() // fill before the multi-consumer fan-out (cache-before-AQE rule)
+    // filled before the multi-consumer fan-out (cache-before-AQE rule)
+    val e = m.fill(coServiceWeights(sup).filter(col("w") >= minOrders).select("u", "v"))
     val deg = bothWays(e, "n", "nb").groupBy("n").agg(count(lit(1)).as("d"))
     // DEGREE ORIENTATION (the standard wedge-count cut): point every edge
     // from its lower-(degree, id) endpoint, so wedges enumerate only from
@@ -772,9 +753,9 @@ object Graph {
         when(lower, col("v")).otherwise(col("u")).as("nb"))
     // BLOCKED (r14): a vertex keeping outdeg ≈ √(2m) would land its ≈ m
     // wedge rows on one task; blocking spreads them, wedges BIT-identical
-    val (blocked, wedges) = blockedWedges(oriented, wedgeCap)
+    val wedges = blockedWedges(m, oriented, wedgeCap)
     val nTri = wedges.join(e, Seq("u", "v"), "left_semi").count()
-    val out = deg.agg(
+    deg.agg(
       count(lit(1)).as("n_nodes"),
       sum(expr("d * (d - 1) div 2")).as("n_wedges"))
       .join(broadcast(e.agg(count(lit(1)).as("n_edges"))))
@@ -789,6 +770,5 @@ object Graph {
         // text_quality DIVIDE_BY_ZERO class)
         expr(s"CASE WHEN n_wedges > 0 THEN (3L * ${nTri}L * 1000L) div n_wedges END")
           .as("clustering_permille"))
-    Dedup.materializeAndRelease(Seq(e, blocked), out)
   }
 }

@@ -2347,7 +2347,7 @@ object Relational {
     val store = java.nio.file.Files.createTempDirectory(prefix).toString
     try {
       // materialize before the temp store is deleted
-      Dedup.materializeAndRelease(Seq.empty, body(store))
+      Materialize(_ => body(store))
     } finally {
       new scala.reflect.io.Directory(new java.io.File(store)).deleteRecursively()
     }

@@ -174,9 +174,10 @@ object Similarity {
     require(k >= 1, s"marginMining: k must be >= 1, got $k")
     graft.functions.GraftFunctions.register(spark)
     val e = withNorm(embeddings(spark, dir))
-    val scored = exactScoredScan(e, maxQueryRows).cache()
-    scored.count() // eager fill before the four consumers (cache-before-AQE)
-    marginFromScored(scored, k, Seq(scored))
+    Materialize { m =>
+      // eager fill before the four consumers (cache-before-AQE)
+      marginFromScored(m, m.fill(exactScoredScan(e, maxQueryRows)), k)
+    }
   }
 
   /** The exact all-pairs scored scan (side B × broadcast side A), fenced at
@@ -222,41 +223,35 @@ object Similarity {
     */
   def marginMiningIvf(spark: SparkSession, dir: String, k: Int = 4,
       refineIters: Int = 2, trainFraction: Double = TrainFraction,
-      numCentroids: Int = NumCentroids, numProbes: Int = NumProbes,
-      forPlanInspection: Boolean = false): DataFrame = {
+      numCentroids: Int = NumCentroids, numProbes: Int = NumProbes): DataFrame = Materialize { m =>
     require(k >= 1, s"marginMiningIvf: k must be >= 1, got $k")
     graft.functions.GraftFunctions.register(spark)
     // e needs no explicit count() fill: the quantizer-training collect
     // inside marginIvfCandidates scans every partition of e through the
     // cached plan synchronously, before any concurrent consumer exists
-    val e = withNorm(embeddings(spark, dir)).cache()
-    val (cand, cells) =
-      marginIvfCandidates(e, refineIters, trainFraction, numCentroids, numProbes,
-        fillCache = !forPlanInspection)
+    val e = m.cache(withNorm(embeddings(spark, dir)))
+    val cand = marginIvfCandidates(m, e, refineIters, trainFraction, numCentroids, numProbes)
     val a = e.filter(col("vec_id") % 10 === 0)
     val b = e.filter(col("vec_id") % 10 =!= 0)
     // Cosine-score candidates only: payloads rejoin by id (equi-joins; AQE
     // picks broadcast when a side is genuinely small, never by assumption).
-    val scored = cand
+    val scored = m.fill(cand
       .join(a.select(col("vec_id").as("xi"), col("embedding").as("q_emb"),
         col("norm").as("q_norm")), "xi")
       .join(b.select(col("vec_id").as("yi"), col("embedding"), col("norm")), "yi")
       .withColumn("c", cosine)
-      .select("xi", "yi", "c")
-      .cache()
-    if (!forPlanInspection) scored.count()
-    marginFromScored(scored, k, Seq(e, cells, scored), forPlanInspection)
+      .select("xi", "yi", "c"))
+    marginFromScored(m, scored, k)
   }
 
   /** The IVF candidate-pair stage shared by [[marginMiningIvf]] and
     * [[marginMiningIvfAgreement]]: trains the coarse quantizer, assigns
     * per-vector probe rings, and returns the distinct (xi, yi) candidate
-    * pairs plus the CACHED cell table (caller releases it). Sharing this
-    * stage means the agreement gate trains the quantizer exactly once.
+    * pairs; the cell table is filled in `m`. Sharing this stage means the
+    * agreement gate trains the quantizer exactly once.
     */
-  private def marginIvfCandidates(e: DataFrame, refineIters: Int,
-      trainFraction: Double, numCentroids: Int,
-      numProbes: Int, fillCache: Boolean = true): (DataFrame, DataFrame) = {
+  private def marginIvfCandidates(m: Materialize, e: DataFrame, refineIters: Int,
+      trainFraction: Double, numCentroids: Int, numProbes: Int): DataFrame = {
     // no count()/cache() on the sample: the trainer is its single consumer
     // (one collect) and fails loudly on an empty sample itself
     val train = trainSample(e, trainFraction)
@@ -269,34 +264,30 @@ object Similarity {
     val probeCells =
       slice(reverse(array_sort(array(cellAffinities(centroids): _*))), 1, numProbes)
         .getField("c")
-    val cells = e.select(col("vec_id"), probeCells.as("probes"))
-      .withColumn("home", element_at(col("probes"), 1))
-      .cache()
     // eager fill (r14 review): the candidate union reads cells through
     // FOUR branches (aHome/bHome/aProbe/bProbe) that AQE submits
     // concurrently — against an unfilled cache the 16-dot affinity
     // projection over the whole corpus runs up to 4×, the exact disease
     // the nearDupsFromArrays count() discipline documents
-    if (fillCache) cells.count()
+    val cells = m.fill(e.select(col("vec_id"), probeCells.as("probes"))
+      .withColumn("home", element_at(col("probes"), 1)))
     val aCells = cells.filter(col("vec_id") % 10 === 0)
     val bCells = cells.filter(col("vec_id") % 10 =!= 0)
     val aHome = aCells.select(col("vec_id").as("xi"), col("home").as("cell"))
     val bHome = bCells.select(col("vec_id").as("yi"), col("home").as("cell"))
     val aProbe = aCells.select(col("vec_id").as("xi"), explode(col("probes")).as("cell"))
     val bProbe = bCells.select(col("vec_id").as("yi"), explode(col("probes")).as("cell"))
-    val cand = aProbe.join(bHome, "cell").select("xi", "yi")
+    aProbe.join(bHome, "cell").select("xi", "yi")
       .union(aHome.join(bProbe, "cell").select("xi", "yi"))
       .distinct()
-    (cand, cells)
   }
 
   /** The margin/mutual-best machinery downstream of the candidate scorer —
     * shared verbatim by [[marginMining]] (exact scored scan, the oracle
     * gate), [[marginMiningIvf]] (cell-equi-join candidates, the 100 TB
-    * path) and the agreement gate. `scored` must be cached and
-    * materialized by the caller; `releases` (which the caller includes
-    * `scored` in when this call is its last consumer) are unpersisted
-    * after the output materializes.
+    * path) and the agreement gate. `scored` must be filled by the caller;
+    * the margin table is filled in `m`, whose scope materializes the
+    * output.
     *
     * Type constraint (ADVICE r17): the candidate score `c` is re-read from
     * the `graft_topk` heap entries, whose score field is DOUBLE — so any
@@ -306,8 +297,7 @@ object Similarity {
     * would silently lose low bits and must widen the heap's score field
     * first.
     */
-  private def marginFromScored(scored: DataFrame, k: Int,
-      releases: Seq[DataFrame], forPlanInspection: Boolean = false): DataFrame = {
+  private def marginFromScored(m: Materialize, scored: DataFrame, k: Int): DataFrame = {
     val topX = scored.groupBy("xi").agg(expr(s"graft_topk(yi, c, $k)").as("top"))
     val topY = scored.groupBy("yi").agg(expr(s"graft_topk(xi, c, $k)").as("top"))
     // graft_struct_sum == the aggregate() HOF bit-for-bit (same IEEE fold
@@ -327,33 +317,25 @@ object Similarity {
       .select(col("xi"), col("t.id").as("yi"), col("t.score").as("c"))
     val bwd = topY.select(col("yi"), explode(col("top")).as("t"))
       .select(col("t.id").as("xi"), col("yi"), col("t.score").as("c"))
-    val m = fwd.union(bwd).distinct()
+    val margins = m.fill(fwd.union(bwd).distinct()
       .join(denX, "xi") // side-A sums scale with the query set: AQE decides
       .join(denY, "yi") // side-B sums are corpus-sized: equi-join, AQE decides
       .withColumn("margin_micro",
-        expr(s"CAST(round(1000000.0 * (${2 * k} * c) / (dx + dy)) AS BIGINT)"))
-      .cache()
-    if (!forPlanInspection) m.count()
+        expr(s"CAST(round(1000000.0 * (${2 * k} * c) / (dx + dy)) AS BIGINT)")))
     // Both argmaxes are AGGREGATES (`max(struct(margin, -id))` — the
     // (margin DESC, id ASC) total order), not rank-1 windows: map-side
     // partial combine, no per-anchor sort materializes (r13; the same
     // argmax-is-an-aggregate rule the LPA superstep documents).
-    val best = m.groupBy("xi")
+    val best = margins.groupBy("xi")
       .agg(max(struct(col("margin_micro"), (-col("yi")).as("ny"))).as("b"))
       .select(col("xi").as("x_id"), (-col("b.ny")).as("y_id"),
         col("b.margin_micro").as("margin_micro"))
-    val bestXofY = m.groupBy("yi")
+    val bestXofY = margins.groupBy("yi")
       .agg(max(struct(col("margin_micro"), (-col("xi")).as("nx"))).as("b"))
       .select(col("yi").as("y_id"), (-col("b.nx")).as("bx"))
-    val out = best.join(bestXofY, "y_id")
+    best.join(bestXofY, "y_id")
       .select(col("x_id"), col("y_id"), col("margin_micro"),
         (col("bx") === col("x_id")).as("is_mutual"))
-    // forPlanInspection: unmaterialized plan for shape assertions only
-    // (PlanSpec); executing that frame would recompute the released caches
-    if (forPlanInspection) {
-      (releases :+ m).foreach(_.unpersist(false))
-      out
-    } else Dedup.materializeAndRelease(releases :+ m, out)
   }
 
   /** Driver-checkable gate for [[marginMiningIvf]] (the
@@ -396,27 +378,26 @@ object Similarity {
     // yields bit-identical cosines to the standalone IVF scorer (same
     // `cosine` expression over the same payload columns) at zero extra
     // cosine work. Before this the gate ran both miners end to end.
-    val e = withNorm(embeddings(spark, dir)).cache()
-    val scoredAll = exactScoredScan(e, 1L << 17).cache()
-    scoredAll.count() // eager fill before the fan-out (cache-before-AQE)
-    val (candPairs, cells) =
-      marginIvfCandidates(e, 2, TrainFraction, numCentroids, numProbes)
-    val scoredIvf = scoredAll.join(candPairs, Seq("xi", "yi"), "left_semi").cache()
-    scoredIvf.count()
-    val exact = marginFromScored(scoredAll, k, Seq(scoredAll))
-      .select(col("x_id"), col("y_id").as("y_exact"), col("is_mutual").as("m_exact"))
-    val ivf = marginFromScored(scoredIvf, k, Seq(e, cells, scoredIvf))
-      .select(col("x_id"), col("y_id").as("y_ivf"), col("is_mutual").as("m_ivf"))
-    // single consumer (the one agg below) — no cache; caching here would
-    // just force an extra materialization pass
-    val j = exact.join(ivf, Seq("x_id"), "left")
-    val r = j.agg(
-      count(lit(1)).as("n"),
-      sum(when(col("y_ivf").isNotNull, 1L).otherwise(0L)).as("covered"),
-      sum(when(col("y_ivf") === col("y_exact"), 1L).otherwise(0L)).as("partner_agree"),
-      sum(when(col("y_ivf") === col("y_exact") && col("m_ivf") =!= col("m_exact"), 1L)
-        .otherwise(0L)).as("mutual_flips")).head()
-    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    Materialize.releasing { m =>
+      val e = m.cache(withNorm(embeddings(spark, dir)))
+      val scoredAll = m.fill(exactScoredScan(e, 1L << 17)) // eager fill before the fan-out (cache-before-AQE)
+      val candPairs = marginIvfCandidates(m, e, 2, TrainFraction, numCentroids, numProbes)
+      val scoredIvf = m.fill(scoredAll.join(candPairs, Seq("xi", "yi"), "left_semi"))
+      val exact = Materialize(marginFromScored(_, scoredAll, k))
+        .select(col("x_id"), col("y_id").as("y_exact"), col("is_mutual").as("m_exact"))
+      val ivf = Materialize(marginFromScored(_, scoredIvf, k))
+        .select(col("x_id"), col("y_id").as("y_ivf"), col("is_mutual").as("m_ivf"))
+      // single consumer (the one agg below) — no cache; caching here would
+      // just force an extra materialization pass
+      val j = exact.join(ivf, Seq("x_id"), "left")
+      val r = j.agg(
+        count(lit(1)).as("n"),
+        sum(when(col("y_ivf").isNotNull, 1L).otherwise(0L)).as("covered"),
+        sum(when(col("y_ivf") === col("y_exact"), 1L).otherwise(0L)).as("partner_agree"),
+        sum(when(col("y_ivf") === col("y_exact") && col("m_ivf") =!= col("m_exact"), 1L)
+          .otherwise(0L)).as("mutual_flips")).head()
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    }
   }
 
   /** K-CENTER CORESET selection (round 10) — greedy farthest-point
@@ -441,7 +422,7 @@ object Similarity {
     * the cached/columnar corpus, which is exactly how FAISS-style
     * pipelines run farthest-point at scale.
     */
-  def kCenterCoreset(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
+  def kCenterCoreset(spark: SparkSession, dir: String, k: Int = 8): DataFrame = Materialize { m =>
     require(k >= 1, s"kCenterCoreset: k must be >= 1, got $k")
     graft.functions.GraftFunctions.register(spark)
     val e = withNorm(embeddings(spark, dir))
@@ -471,7 +452,7 @@ object Similarity {
       centers :+= ((far.getLong(0), Some(far.getDouble(2))))
       state = state.withColumn("min_dist",
         least(col("min_dist"), distTo(far.getSeq[Double](1))))
-      if (i % 4 == 0) state = state.localCheckpoint(true)
+      if (i % 4 == 0) state = m.checkpoint(state)
     }
 
     import spark.implicits._
@@ -580,31 +561,25 @@ object Similarity {
     * 100 TB: cells ≈ √n and probes tune the recall/cost frontier.
     */
   def ivfTopK(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
-      refineIters: Int = 2, forPlanInspection: Boolean = false,
-      trainFraction: Double = TrainFraction,
+      refineIters: Int = 2, trainFraction: Double = TrainFraction,
       numCentroids: Int = NumCentroids, numProbes: Int = NumProbes): DataFrame =
     ivfTopKFrom(spark, embeddings(spark, dir), k, nQueries, refineIters,
-      forPlanInspection, trainFraction, numCentroids, numProbes)
+      trainFraction, numCentroids, numProbes)
 
   private[graft] def ivfTopKFrom(spark: SparkSession, e0: DataFrame,
       k: Int, nQueries: Int, refineIters: Int = 2,
-      forPlanInspection: Boolean = false,
       trainFraction: Double = TrainFraction,
-      numCentroids: Int = NumCentroids, numProbes: Int = NumProbes): DataFrame = {
+      numCentroids: Int = NumCentroids, numProbes: Int = NumProbes): DataFrame = Materialize { m =>
     graft.functions.GraftFunctions.register(spark)
-    val e = withNorm(e0).cache()
+    val e = m.cache(withNorm(e0))
     // Training set: deterministic hash-sample; scanning it fills e's cache.
-    val train = trainSample(e, trainFraction).cache()
+    val train = m.cache(trainSample(e, trainFraction))
     val nTrain = train.count()
     require(nTrain > 0, s"ivfTopK: training sample is empty (trainFraction=$trainFraction)")
     val centroids = trainIvfCentroids(train, refineIters, numCentroids)
     val assigned = e.withColumn("cell",
       array_max(array(cellAffinities(centroids): _*)).getField("c"))
-    val out = ivfProbeTopK(e, assigned, centroids, k, nQueries, numProbes)
-    // forPlanInspection=true: unmaterialized, cache released — plan-shape
-    // assertions ONLY (PlanSpec); executing it would recompute the pipeline
-    if (!forPlanInspection) Dedup.materializeAndRelease(Seq(e, train), out)
-    else { e.unpersist(false); train.unpersist(false); out }
+    ivfProbeTopK(e, assigned, centroids, k, nQueries, numProbes)
   }
 
   /** Cell affinity = cosine vs each centroid, as literal-array dots
@@ -781,10 +756,10 @@ object Similarity {
     */
   def writeIvfIndex(spark: SparkSession, dir: String, storeDir: String,
       refineIters: Int = 2, trainFraction: Double = TrainFraction,
-      numCentroids: Int = NumCentroids): Unit = {
+      numCentroids: Int = NumCentroids): Unit = Materialize.releasing { m =>
     graft.functions.GraftFunctions.register(spark)
-    val e = withNorm(embeddings(spark, dir)).cache()
-    val train = trainSample(e, trainFraction).cache()
+    val e = m.cache(withNorm(embeddings(spark, dir)))
+    val train = m.cache(trainSample(e, trainFraction))
     require(train.count() > 0,
       s"writeIvfIndex: training sample is empty (trainFraction=$trainFraction)")
     val centroids = trainIvfCentroids(train, refineIters, numCentroids)
@@ -794,8 +769,6 @@ object Similarity {
     e.withColumn("cell", array_max(array(cellAffinities(centroids): _*)).getField("c"))
       .select("vec_id", "cell")
       .write.mode("overwrite").parquet(s"$storeDir/assignments.parquet")
-    e.unpersist(false)
-    train.unpersist(false)
   }
 
   /** Queries a PERSISTED IVF index ([[writeIvfIndex]]) without retraining
@@ -836,7 +809,7 @@ object Similarity {
       val exact = bruteForceTopK(spark, dir, k, nQueries).select("q_id", "neighbor_id")
       val approx = ivfTopKViaStore(spark, dir, store, k, nQueries).select("q_id", "neighbor_id")
       // materialize before the temp index is deleted
-      Dedup.materializeAndRelease(Seq.empty, recallHitCounts(exact, approx))
+      Materialize(_ => recallHitCounts(exact, approx))
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(store)).deleteRecursively()
@@ -869,18 +842,16 @@ object Similarity {
     * table.
     */
   def lshTopK(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
-      tables: Int = NumTables, bits: Int = BitsPerTable,
-      forPlanInspection: Boolean = false): DataFrame = {
-    val e = withNorm(embeddings(spark, dir)).cache() // reused by buckets, queries, re-rank
+      tables: Int = NumTables, bits: Int = BitsPerTable): DataFrame = Materialize { m =>
+    val e = m.cache(withNorm(embeddings(spark, dir))) // reused by buckets, queries, re-rank
     // Buckets carry ONLY (vec_id, t, key): candidate generation and dedup
     // never shuffle the embedding payloads. All 32 keys come from ONE
     // codegen pass (`graft_lsh_buckets`) — bit-identical to the per-plane
     // literal-dot form, ~100× less generated code. Cached — feeds both
     // join sides.
-    val bucketed = e
+    val bucketed = m.cache(e
       .select(col("vec_id"),
-        posexplode(expr(s"graft_lsh_buckets(embedding, $tables, $bits)")).as(Seq("t", "key")))
-      .cache()
+        posexplode(expr(s"graft_lsh_buckets(embedding, $tables, $bits)")).as(Seq("t", "key"))))
     val qb = bucketed.filter(col("vec_id") < nQueries).withColumnRenamed("vec_id", "q_id")
     val pairs = bucketed.join(broadcast(qb), Seq("t", "key"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -890,14 +861,12 @@ object Similarity {
     // broadcast.
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("norm").as("q_norm"))
-    val out = topKPerQuery(
+    topKPerQuery(
       pairs
         .join(e, "vec_id")
         .join(broadcast(q), "q_id")
         .withColumn("cosine", cosine),
       col("cosine"), k)
-    if (!forPlanInspection) Dedup.materializeAndRelease(Seq(e, bucketed), out)
-    else { e.unpersist(false); bucketed.unpersist(false); out }
   }
 
   /** Driver-checkable ANN recall: per query, the number of the TRUE top-k
@@ -997,14 +966,14 @@ object Similarity {
     * (`Probe margins` seam).
     */
   private[graft] def ivfClusteredRecallHits(spark: SparkSession, dir: String, k: Int = 10,
-      nQueries: Int = 5, clusterPermille: Int = 900): DataFrame = {
-    val clustered = clusteredEmbeddings(spark, dir, clusterPermille).cache()
-    clustered.count() // eager fill: brute-force and IVF paths both read it
+      nQueries: Int = 5, clusterPermille: Int = 900): DataFrame = Materialize { m =>
+    // eager fill: brute-force and IVF paths both read it
+    val clustered = m.fill(clusteredEmbeddings(spark, dir, clusterPermille))
     val exact = bruteForceTopKFrom(clustered, k, nQueries)
       .select("q_id", "neighbor_id")
     val approx = ivfTopKFrom(spark, clustered, k, nQueries)
       .select("q_id", "neighbor_id")
-    Dedup.materializeAndRelease(Seq(clustered), recallHitCounts(exact, approx))
+    recallHitCounts(exact, approx)
   }
 
   /** PQ layout: 64 dims → [[PqSubspaces]] blocks of [[PqSubDims]] dims,
@@ -1072,20 +1041,18 @@ object Similarity {
     * thousand sample rows — pure fixed overhead at any SF.
     */
   private[graft] def trainCodebooks(normed: DataFrame, refineIters: Int,
-      trainFraction: Double, pqCentroids: Int = PqCentroids): Array[Array[Array[Double]]] = {
-    val train = trainSample(normed, trainFraction).cache()
-    val rows = train
-      .select(xxhash64(col("vec_id")).as("h"), col("vec_id"), col("nemb"))
-      .limit(MaxTrainCollect + 1).collect()
-    require(rows.nonEmpty, s"pqTopK: training sample is empty (trainFraction=$trainFraction)")
-    val res =
+      trainFraction: Double, pqCentroids: Int = PqCentroids): Array[Array[Array[Double]]] =
+    Materialize.releasing { m =>
+      val train = m.cache(trainSample(normed, trainFraction))
+      val rows = train
+        .select(xxhash64(col("vec_id")).as("h"), col("vec_id"), col("nemb"))
+        .limit(MaxTrainCollect + 1).collect()
+      require(rows.nonEmpty, s"pqTopK: training sample is empty (trainFraction=$trainFraction)")
       if (rows.length > MaxTrainCollect) trainCodebooksDistributed(train, refineIters, pqCentroids)
       else trainCodebooksLocal(
         rows.sortBy(r => (r.getLong(0), r.getLong(1))).map(_.getSeq[Double](2).toArray),
         refineIters, pqCentroids)
-    train.unpersist(false)
-    res
-  }
+    }
 
   private[graft] def trainCodebooksLocal(nembs: Array[Array[Double]],
       refineIters: Int, pqCentroids: Int): Array[Array[Array[Double]]] = {
@@ -1220,22 +1187,14 @@ object Similarity {
     * joined back for the shortlist re-rank alone.
     */
   def pqTopK(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
-      refineIters: Int = 3, forPlanInspection: Boolean = false,
-      trainFraction: Double = TrainFraction,
-      pqCentroids: Int = PqCentroids, pqShortlist: Int = PqShortlist): DataFrame = {
+      refineIters: Int = 3, trainFraction: Double = TrainFraction,
+      pqCentroids: Int = PqCentroids, pqShortlist: Int = PqShortlist): DataFrame = Materialize { m =>
     graft.functions.GraftFunctions.register(spark)
-    val e = withNorm(embeddings(spark, dir)).cache()
-    val normed = normedOf(e).cache()
-    normed.count()
+    val e = m.cache(withNorm(embeddings(spark, dir)))
+    val normed = m.fill(normedOf(e))
     val books = trainCodebooks(normed, refineIters, trainFraction, pqCentroids)
-
-    val coded = normed.withColumn("codes", codesFor(books))
-      .select("vec_id", "codes").cache()
-    coded.count()
-
-    val out = pqQueryStage(e, normed, coded, books, k, nQueries, pqCentroids, pqShortlist)
-    if (!forPlanInspection) Dedup.materializeAndRelease(Seq(e, normed, coded), out)
-    else { Seq(e, normed, coded).foreach(_.unpersist(false)); out }
+    val coded = m.fill(normed.withColumn("codes", codesFor(books)).select("vec_id", "codes"))
+    pqQueryStage(e, normed, coded, books, k, nQueries, pqCentroids, pqShortlist)
   }
 
   /** L2-normalized embeddings with zero-norm vectors EXCLUDED. Zero norms
@@ -1317,11 +1276,10 @@ object Similarity {
     */
   def writePqIndex(spark: SparkSession, dir: String, storeDir: String,
       refineIters: Int = 3, trainFraction: Double = TrainFraction,
-      pqCentroids: Int = PqCentroids): Unit = {
+      pqCentroids: Int = PqCentroids): Unit = Materialize.releasing { m =>
     graft.functions.GraftFunctions.register(spark)
-    val e = withNorm(embeddings(spark, dir)).cache()
-    val normed = normedOf(e).cache()
-    normed.count()
+    val e = m.cache(withNorm(embeddings(spark, dir)))
+    val normed = m.fill(normedOf(e))
     val books = trainCodebooks(normed, refineIters, trainFraction, pqCentroids)
     import spark.implicits._
     books.zipWithIndex.flatMap { case (cells, s) =>
@@ -1331,8 +1289,6 @@ object Similarity {
     normed.withColumn("codes", codesFor(books))
       .select("vec_id", "codes")
       .write.mode("overwrite").parquet(s"$storeDir/codes.parquet")
-    e.unpersist(false)
-    normed.unpersist(false)
   }
 
   /** Queries a PERSISTED PQ index ([[writePqIndex]]) without retraining or
@@ -1375,7 +1331,7 @@ object Similarity {
       val exact = bruteForceTopK(spark, dir, k, nQueries).select("q_id", "neighbor_id")
       val approx = pqTopKViaStore(spark, dir, store, k, nQueries).select("q_id", "neighbor_id")
       // materialize before the temp index is deleted
-      Dedup.materializeAndRelease(Seq.empty, recallHitCounts(exact, approx))
+      Materialize(_ => recallHitCounts(exact, approx))
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(store)).deleteRecursively()
@@ -1427,31 +1383,27 @@ object Similarity {
     * bit-identical to what the IVF and PQ families build separately.
     */
   def ivfPqTopK(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
-      refineIters: Int = 2, pqRefineIters: Int = 3, forPlanInspection: Boolean = false,
+      refineIters: Int = 2, pqRefineIters: Int = 3,
       trainFraction: Double = TrainFraction,
       numCentroids: Int = NumCentroids, numProbes: Int = IvfPqProbes,
-      pqCentroids: Int = PqCentroids, pqShortlist: Int = PqShortlist): DataFrame = {
+      pqCentroids: Int = PqCentroids, pqShortlist: Int = PqShortlist): DataFrame = Materialize { m =>
     graft.functions.GraftFunctions.register(spark)
-    val e = withNorm(embeddings(spark, dir)).cache()
-    val normed = normedOf(e).cache()
-    normed.count()
+    val e = m.cache(withNorm(embeddings(spark, dir)))
+    val normed = m.fill(normedOf(e))
     // Both quantizers train on the zero-norm-excluded corpus (the PQ-family
     // contract): a zero-norm vector has no cosine cell affinity either.
-    val train = trainSample(normed, trainFraction).cache()
+    val train = m.cache(trainSample(normed, trainFraction))
     require(train.count() > 0, s"ivfPqTopK: training sample is empty (trainFraction=$trainFraction)")
     val centroids = trainIvfCentroids(train, refineIters, numCentroids)
     val books = trainCodebooks(normed, pqRefineIters, trainFraction, pqCentroids)
     // One map-only pass computes BOTH the cell assignment and the PQ code —
     // at 100 TB this is the single full-corpus scan of index construction.
-    val coded = normed
+    val coded = m.fill(normed
       .withColumn("cell", array_max(array(cellAffinities(centroids): _*)).getField("c"))
       .withColumn("codes", codesFor(books))
-      .select("vec_id", "cell", "codes").cache()
-    coded.count()
-    val out = ivfPqQueryStage(e, normed, coded, centroids, books, k, nQueries,
+      .select("vec_id", "cell", "codes"))
+    ivfPqQueryStage(e, normed, coded, centroids, books, k, nQueries,
       numProbes, pqCentroids, pqShortlist)
-    if (!forPlanInspection) Dedup.materializeAndRelease(Seq(e, normed, train, coded), out)
-    else { Seq(e, normed, train, coded).foreach(_.unpersist(false)); out }
   }
 
   /** The IVF-PQ query stage over a cell-assigned coded corpus — probe-cell
@@ -1558,13 +1510,12 @@ object Similarity {
       // of a separate function body keeps the build logic in ONE place;
       // the old writeIvfPqIndexFiltered copy had already drifted (no
       // embFrame seam, hardcoded refine iterations).
-      baseVecs: Option[Column] = None): Unit = {
+      baseVecs: Option[Column] = None): Unit = Materialize.releasing { m =>
     graft.functions.GraftFunctions.register(spark)
     val all = withNorm(embFrame.getOrElse(embeddings(spark, dir)))
-    val e = baseVecs.fold(all)(all.filter).cache()
-    val normed = normedOf(e).cache()
-    normed.count()
-    val train = trainSample(normed, trainFraction).cache()
+    val e = m.cache(baseVecs.fold(all)(all.filter))
+    val normed = m.fill(normedOf(e))
+    val train = m.cache(trainSample(normed, trainFraction))
     require(train.count() > 0,
       s"writeIvfPqIndex: training sample is empty (trainFraction=$trainFraction)")
     val centroids = trainIvfCentroids(train, refineIters, numCentroids)
@@ -1581,7 +1532,6 @@ object Similarity {
       .withColumn("codes", codesFor(books))
       .select("vec_id", "cell", "codes")
       .write.mode("overwrite").parquet(s"$storeDir/coded.parquet")
-    Seq(e, normed, train).foreach(_.unpersist(false))
   }
 
   /** INCREMENTAL INDEX MAINTENANCE (round 10): encodes ONLY the vectors
@@ -1608,13 +1558,14 @@ object Similarity {
     // embeddings. (The streaming twin, StreamAnnIngest, gets the same
     // guarantee from its versioned OVERWRITE-by-batchId layout.)
     val existing = ParquetSource.read(spark, s"$storeDir/coded.parquet").select("vec_id")
-    val fresh = encodeWithStoreModels(embeddings(spark, dir).filter(newVecs), storeDir)
-      .join(existing, Seq("vec_id"), "left_anti")
+    Materialize.releasing { m =>
       // materialize BEFORE the append opens the target for writing: the
-      // anti-join reads coded.parquet, the write replaces it — localCheckpoint
+      // anti-join reads coded.parquet, the write replaces it — a checkpoint
       // cuts the read-your-writes cycle
-      .localCheckpoint(true)
-    fresh.write.mode("append").parquet(s"$storeDir/coded.parquet")
+      m.checkpoint(encodeWithStoreModels(embeddings(spark, dir).filter(newVecs), storeDir)
+        .join(existing, Seq("vec_id"), "left_anti"))
+        .write.mode("append").parquet(s"$storeDir/coded.parquet")
+    }
   }
 
   /** Encodes a (vec_id, embedding) frame with a store's FROZEN quantizer
@@ -1693,11 +1644,10 @@ object Similarity {
     // models load once — before this the gate re-read and re-normed the
     // corpus per path and re-collected the models the store query already
     // had on the driver.
-    val emb = embeddings(spark, dir).cache()
-    val n = emb.count()
-    val splitId = n * 9 / 10
     val store = java.nio.file.Files.createTempDirectory("graft-ivfpq-append").toString
-    try {
+    try Materialize { m =>
+      val emb = m.cache(embeddings(spark, dir))
+      val splitId = emb.count() * 9 / 10
       writeIvfPqIndexFiltered(spark, dir, store, col("vec_id") < splitId,
         embFrame = Some(emb)) // the gate's cached frame feeds the build too
       appendToIvfPqIndex(spark, dir, store, col("vec_id") >= splitId)
@@ -1707,7 +1657,7 @@ object Similarity {
       val approx = ivfPqTopKViaStore(spark, dir, store, k, nQueries, embFrame = Some(emb))
         .select("q_id", "neighbor_id")
       // materialize before the temp index is deleted
-      Dedup.materializeAndRelease(Seq(emb), recallHitCounts(exact, approx))
+      recallHitCounts(exact, approx)
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(store)).deleteRecursively()
@@ -1766,9 +1716,8 @@ object Similarity {
     // one cached embeddings frame feeds the index build, the exact check
     // AND the store-backed query — before this each stage re-read and
     // re-normed the corpus from parquet.
-    val emb = embeddings(spark, dir).cache()
-    emb.count()
-    try {
+    try Materialize { m =>
+      val emb = m.fill(embeddings(spark, dir))
       writeIvfPqIndex(spark, dir, store, embFrame = Some(emb))
       val exact = bruteForceTopKFrom(emb, k, nQueries).select("q_id", "neighbor_id")
       // the gate queries THROUGH the product function (r14 review: an
@@ -1777,7 +1726,7 @@ object Similarity {
       val approx = ivfPqTopKViaStore(spark, dir, store, k, nQueries, embFrame = Some(emb))
         .select("q_id", "neighbor_id")
       // materialize before the temp index is deleted
-      Dedup.materializeAndRelease(Seq(emb), recallHitCounts(exact, approx))
+      recallHitCounts(exact, approx)
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(store)).deleteRecursively()
@@ -1868,17 +1817,13 @@ object Similarity {
     * the rest of the family.
     */
   def sqTopK(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 5,
-      sqShortlist: Int = 100, forPlanInspection: Boolean = false): DataFrame = {
+      sqShortlist: Int = 100): DataFrame = Materialize { m =>
     graft.functions.GraftFunctions.register(spark)
-    val e = withNorm(embeddings(spark, dir)).cache()
-    val normed = normedOf(e).cache()
-    if (!forPlanInspection) normed.count()
+    val e = m.cache(withNorm(embeddings(spark, dir)))
+    val normed = m.fill(normedOf(e))
     val (mn, scale) = trainSqParams(normed)
-    val coded = sqEncode(normed, mn, scale).cache()
-    if (!forPlanInspection) coded.count()
-    val out = sqQueryStage(e, normed, coded, mn, scale, k, nQueries, sqShortlist)
-    if (!forPlanInspection) Dedup.materializeAndRelease(Seq(e, normed, coded), out)
-    else { Seq(e, normed, coded).foreach(_.unpersist(false)); out }
+    val coded = m.fill(sqEncode(normed, mn, scale))
+    sqQueryStage(e, normed, coded, mn, scale, k, nQueries, sqShortlist)
   }
 
   /** Persists the SQ8 index: the per-dim quantizer (`params.parquet`,
@@ -1886,20 +1831,18 @@ object Similarity {
     * (`codes.parquet`) — the artifact a nightly build writes once and
     * every query job reads.
     */
-  def writeSqIndex(spark: SparkSession, dir: String, storeDir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val e = withNorm(embeddings(spark, dir)).cache()
-    val normed = normedOf(e).cache()
-    normed.count()
-    val (mn, scale) = trainSqParams(normed)
-    import spark.implicits._
-    mn.indices.map(d => (d, mn(d), scale(d))).toDF("dim", "mn", "scale")
-      .write.mode("overwrite").parquet(s"$storeDir/params.parquet")
-    sqEncode(normed, mn, scale)
-      .write.mode("overwrite").parquet(s"$storeDir/codes.parquet")
-    e.unpersist(false)
-    normed.unpersist(false)
-  }
+  def writeSqIndex(spark: SparkSession, dir: String, storeDir: String): Unit =
+    Materialize.releasing { m =>
+      graft.functions.GraftFunctions.register(spark)
+      val e = m.cache(withNorm(embeddings(spark, dir)))
+      val normed = m.fill(normedOf(e))
+      val (mn, scale) = trainSqParams(normed)
+      import spark.implicits._
+      mn.indices.map(d => (d, mn(d), scale(d))).toDF("dim", "mn", "scale")
+        .write.mode("overwrite").parquet(s"$storeDir/params.parquet")
+      sqEncode(normed, mn, scale)
+        .write.mode("overwrite").parquet(s"$storeDir/codes.parquet")
+    }
 
   /** Queries a PERSISTED SQ8 index without re-encoding: the 64-row
     * quantizer loads onto the driver, codes read straight from parquet,
@@ -1954,7 +1897,7 @@ object Similarity {
       val exact = bruteForceTopK(spark, dir, k, nQueries).select("q_id", "neighbor_id")
       val approx = sqTopKViaStore(spark, dir, store, k, nQueries).select("q_id", "neighbor_id")
       // materialize before the temp index is deleted
-      Dedup.materializeAndRelease(Seq.empty, recallHitCounts(exact, approx))
+      Materialize(_ => recallHitCounts(exact, approx))
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(store)).deleteRecursively()

@@ -977,17 +977,15 @@ object TextAnalysis {
     * ranking; selection needs only `kept`). Shares the plain form's oracle
     * projected to these columns.
     */
-  def domainMixScale(spark: SparkSession, dir: String,
-      forPlanInspection: Boolean = false): DataFrame = {
+  def domainMixScale(spark: SparkSession, dir: String): DataFrame = Materialize { m =>
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(spark)
     // cached: the full-text poly-hash frame feeds the histogram job AND
     // both output branches — without the cache each consumer re-hashes
     // the whole corpus
-    val d = docs(spark, dir).select(col("doc_id"), col("lang"),
+    val d = m.cache(docs(spark, dir).select(col("doc_id"), col("lang"),
       Portable.polyHashNative("coalesce(text, '')", 43, Portable.P1).as("h"))
-      .withColumn("bucket", expr(s"h div $MixBucketWidth"))
-      .cache()
+      .withColumn("bucket", expr(s"h div $MixBucketWidth")))
     // ONE aggregate reaches the driver: the (lang, bucket) histogram —
     // per-language counts (and so cap) are its per-lang sums, no second
     // corpus pass
@@ -1017,11 +1015,7 @@ object TextAnalysis {
     val onBoundary = withB.filter(col("bucket") === col("b_l"))
       .withColumn("rn", row_number().over(wB).cast("bigint"))
       .select(col("doc_id"), col("lang"), (col("rn") <= col("r_l")).as("kept"))
-    val out = offBoundary.unionByName(onBoundary)
-    // forPlanInspection=true: unmaterialized, cache released — plan-shape
-    // assertions only (PlanSpec); executing that frame re-hashes per branch
-    if (!forPlanInspection) Dedup.materializeAndRelease(Seq(d), out)
-    else { d.unpersist(false); out }
+    offBoundary.unionByName(onBoundary)
   }
 
   /** The engine's operators composed as ONE end-to-end training-data
@@ -1076,13 +1070,13 @@ object TextAnalysis {
     * a 16-byte segment hash instead of the string so the shuffle never
     * moves text (exact-string form kept here for the oracle).
     */
-  def lineDedup(spark: SparkSession, dir: String, segWords: Int = 10, minDocs: Long = 2,
-      forPlanInspection: Boolean = false): DataFrame = {
+  def lineDedup(spark: SparkSession, dir: String, segWords: Int = 10,
+      minDocs: Long = 2): DataFrame = Materialize { m =>
     // ONE segment pass feeds both the frequency count and the reassembly
     // (cached — at 100 TB this spills to disk or is recomputed; either way
-    // no third scan: the doc-level totals come out of the same aggregate).
-    val segs = segments(spark, dir, segWords).cache()
-    if (!forPlanInspection) segs.count() // eager fill before AQE fans out the two consumers
+    // no third scan: the doc-level totals come out of the same aggregate),
+    // filled before AQE fans out the two consumers.
+    val segs = m.fill(segments(spark, dir, segWords))
     val boiler = segs.groupBy("seg")
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
@@ -1090,7 +1084,7 @@ object TextAnalysis {
     // mark-then-aggregate: one size-gated equi-join + ONE groupBy yields
     // totals, kept counts, and the order-restored reassembly together
     // (collect_list skips the nulled-out boilerplate rows; no global sort)
-    val out = segs.join(boiler, Seq("seg"), "left")
+    segs.join(boiler, Seq("seg"), "left")
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_segments"),
@@ -1104,10 +1098,6 @@ object TextAnalysis {
         col("n_kept"),
         (col("n_segments") - col("n_kept")).as("n_removed"),
         md5(col("clean_text")).as("clean_md5"))
-    // forPlanInspection=true: unmaterialized, cache released — plan-shape
-    // assertions only (PlanSpec); executing that frame re-segments twice
-    if (!forPlanInspection) Dedup.materializeAndRelease(Seq(segs), out)
-    else { segs.unpersist(false); out }
   }
 
   /** The 100 TB form of [[lineDedup]] — identical output, but every
@@ -1130,17 +1120,15 @@ object TextAnalysis {
     * exchange keys (`hashpartitioning(gh`, never `hashpartitioning(seg`).
     */
   def lineDedupHashed(spark: SparkSession, dir: String, segWords: Int = 10,
-      minDocs: Long = 2, forPlanInspection: Boolean = false): DataFrame = {
+      minDocs: Long = 2): DataFrame = Materialize { m =>
     graft.functions.GraftFunctions.register(spark)
-    val segs = segments(spark, dir, segWords)
-      .withColumn("gh", graft.functions.Portable.polyHash60Native("seg"))
-      .cache()
-    if (!forPlanInspection) segs.count()
+    val segs = m.fill(segments(spark, dir, segWords)
+      .withColumn("gh", graft.functions.Portable.polyHash60Native("seg")))
     val boiler = segs.groupBy("gh")
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
       .select(col("gh"), lit(true).as("is_boiler"))
-    val out = segs.join(boiler, Seq("gh"), "left")
+    segs.join(boiler, Seq("gh"), "left")
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_segments"),
@@ -1154,8 +1142,6 @@ object TextAnalysis {
         col("n_kept"),
         (col("n_segments") - col("n_kept")).as("n_removed"),
         md5(col("clean_text")).as("clean_md5"))
-    if (!forPlanInspection) Dedup.materializeAndRelease(Seq(segs), out)
-    else { segs.unpersist(false); out }
   }
 
   /** (doc_id, pos, seg) aligned `segWords`-word segments — the shared
@@ -1238,24 +1224,23 @@ object TextAnalysis {
     * 8-byte-fingerprint equi-join (AQE-sized), the mixture is the
     * bounded-heap `graft_topk`, the rollup is one tiny exchange.
     */
-  def pipelineCurate(spark: SparkSession, dir: String, totalDocs: Long = 150L): DataFrame = {
+  def pipelineCurate(spark: SparkSession, dir: String,
+      totalDocs: Long = 150L): DataFrame = Materialize { m =>
     graft.functions.GraftFunctions.register(spark)
     val dup = substringDupScore(spark, dir)
       .filter(col("n_dup_windows") > 0).select("doc_id")
-    val survivors = docs(spark, dir).join(dup, Seq("doc_id"), "left_anti")
+    val survivors = m.cache(docs(spark, dir).join(dup, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"),
         Portable.polyHashNative("coalesce(text, '')", 43, 999999893L).as("rank_hash"),
-        size(Portable.tokens("text")).cast("bigint").as("n_tokens"))
-      .cache()
+        size(Portable.tokens("text")).cast("bigint").as("n_tokens")))
     // the mixture stage IS sampleTemperature's contract, via the shared
     // helper — the chain cannot drift from the standalone catalog row
     val mix = temperatureMix(
       survivors.select("doc_id", "lang", "rank_hash"), "lang", totalDocs)
-    val out = mix.select("doc_id", "lang")
+    mix.select("doc_id", "lang")
       .join(survivors.select("doc_id", "n_tokens"), "doc_id")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("total_tokens"))
-    Dedup.materializeAndRelease(Seq(survivors), out)
   }
 
   /** Feature-hashing text embedding (the hashing trick): each token's
@@ -1294,12 +1279,11 @@ object TextAnalysis {
     * join, map-side-combined embedding aggregation, id-only joins between
     * stages; the final per-lang rollup is a tiny exchange.
     */
-  def pipelineVectorize(spark: SparkSession, dir: String): DataFrame = {
+  def pipelineVectorize(spark: SparkSession, dir: String): DataFrame = Materialize { m =>
     // intact = docs with NO boilerplate segment — derived from the shared
     // segmenter directly (a full lineDedup call would also reassemble and
     // md5 every clean text, eagerly, just to read one flag)
-    val segs = segments(spark, dir, 10).cache()
-    segs.count()
+    val segs = m.fill(segments(spark, dir, 10))
     val boiler = segs.groupBy("seg")
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= 2)
@@ -1314,7 +1298,7 @@ object TextAnalysis {
     val l1 = hashEmbedding(spark, dir)
       .groupBy("doc_id")
       .agg(sum(abs(col("weight"))).as("l1"), count(lit(1)).as("n_dims"))
-    val out = docs(spark, dir).select(col("doc_id"), col("lang"))
+    docs(spark, dir).select(col("doc_id"), col("lang"))
       .join(intact, Seq("doc_id"))
       .join(l1, Seq("doc_id"), "left") // a whitespace-only doc has no buckets
       .groupBy("lang")
@@ -1322,7 +1306,6 @@ object TextAnalysis {
         count(lit(1)).as("n_docs"),
         sum(coalesce(col("l1"), lit(0L))).as("total_l1"),
         sum(coalesce(col("n_dims"), lit(0L))).as("total_dims"))
-    Dedup.materializeAndRelease(Seq(segs), out)
   }
 
   /** Heavy-hitter tokens via the mergeable frequent-items sketch — the
@@ -1533,11 +1516,10 @@ object TextAnalysis {
     * values then broadcast (1 row) and bucket assignment is map-only.
     */
   def pipelinePplBuckets(spark: SparkSession, dir: String,
-      maxChunks: Int = 1024, forPlanInspection: Boolean = false): DataFrame = {
+      maxChunks: Int = 1024): DataFrame = Materialize { m =>
     import org.apache.spark.sql.expressions.Window
-    val xent = lmCrossEntropy(spark, dir).cache()
     // feeds the histogram AND the final assignment
-    if (!forPlanInspection) xent.count()
+    val xent = m.fill(lmCrossEntropy(spark, dir))
     val hist0 = xent.groupBy(col("xent_micronats").as("v"))
       .agg(count(lit(1)).as("cnt"))
     val span = hist0.agg(min("v").as("mn"), max("v").as("mx"))
@@ -1547,16 +1529,13 @@ object TextAnalysis {
     // SQL tab: four identical InMemoryTableScan→agg→span-join chains).
     // Both frames are value-histogram-sized (≤ distinct xent values /
     // ≤ maxChunks rows), so the cache is bounded by construction.
-    val hist = hist0.join(broadcast(span))
+    val hist = m.fill(hist0.join(broadcast(span))
       .withColumn("cb", expr(s"(v - mn) div ((mx - mn) div $maxChunks + 1)"))
-      .select("v", "cnt", "cb")
-      .cache()
-    if (!forPlanInspection) hist.count()
+      .select("v", "cnt", "cb"))
     val wLocal = Window.partitionBy("cb").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, 0)
     val local = hist.withColumn("local_cum", sum("cnt").over(wLocal))
-    val totals = hist.groupBy("cb").agg(sum("cnt").as("tot")).cache()
-    if (!forPlanInspection) totals.count()
+    val totals = m.fill(hist.groupBy("cb").agg(sum("cnt").as("tot")))
     val bounds = totals.agg(max("cb").as("cb_max"), sum("tot").as("n"))
     val prefix = totals.join(broadcast(bounds))
       .filter(col("cb") < col("cb_max"))
@@ -1568,14 +1547,12 @@ object TextAnalysis {
       .agg(
         min(when(col("cum") * 3 >= col("n"), col("v"))).as("b1"),
         min(when(col("cum") * 3 >= col("n") * 2, col("v"))).as("b2"))
-    val out = xent.crossJoin(broadcast(boundaries))
+    xent.crossJoin(broadcast(boundaries))
       .select(
         col("doc_id"), col("n_bigrams"), col("xent_micronats"),
         when(col("xent_micronats") <= col("b1"), "head")
           .when(col("xent_micronats") <= col("b2"), "middle")
           .otherwise("tail").as("ppl_bucket"))
-    if (forPlanInspection) { Seq(xent, hist, totals).foreach(_.unpersist(false)); out }
-    else graft.operators.Dedup.materializeAndRelease(Seq(xent, hist, totals), out)
   }
 
   /** The fingerprinted bigram-occurrence relation + 1-row vocabulary —
@@ -1863,40 +1840,41 @@ object TextAnalysis {
         case None => () // vocabulary past the guard: distributed trainer below
       }
     }
-    var syms = wordTypes(docs(spark, dir))
-      // CODE-POINT split (a supplementary char is one symbol, never a
-      // surrogate half) — matching the driver reference. ASCII words (the
-      // overwhelming majority of any real vocabulary) take the cheap
-      // split('') path, which is identical there (1 byte = 1 code point);
-      // only words with non-ASCII bytes pay the regexp walk.
-      .select(col("cnt"), concat(
-        when(expr("w RLIKE '^[\\\\x01-\\\\x7F]*$'"), split(col("w"), ""))
-          .otherwise(expr("regexp_extract_all(w, '(?s).', 0)")),
-        array(lit("</w>"))).as("s"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
-    var exhausted = false // a best pair under freq 2 ends training early
-    for (rank <- 1 to numMerges if !exhausted) {
-      val best = syms
-        // a fully-merged word is ONE symbol — no pairs, and an unguarded
-        // sequence(1, 0) would DESCEND and index out of bounds
-        .filter(size(col("s")) >= 2)
-        .select(col("cnt"), explode(expr(
-          "transform(sequence(1, size(s) - 1), " +
-            "i -> struct(element_at(s, i) AS a, element_at(s, i + 1) AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("cnt").as("f"))
-        .orderBy(desc("f"), col("a"), col("b"))
-        .limit(1).collect()
-      if (best.nonEmpty && best(0).getLong(2) >= 2) {
-        val (a, b, f) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((rank, a, b, a + b, f))
-        val next = syms.withColumn("s", mergePass(col("s"), a, b))
-        syms = if (rank % 8 == 0) next.localCheckpoint(true) else next
-      } else exhausted = true
+    Materialize { m =>
+      var syms   = m.checkpoint(wordTypes(docs(spark, dir))
+        // CODE-POINT split (a supplementary char is one symbol, never a
+        // surrogate half) — matching the driver reference. ASCII words (the
+        // overwhelming majority of any real vocabulary) take the cheap
+        // split('') path, which is identical there (1 byte = 1 code point);
+        // only words with non-ASCII bytes pay the regexp walk.
+        .select(col("cnt"), concat(
+          when(expr("w RLIKE '^[\\\\x01-\\\\x7F]*$'"), split(col("w"), ""))
+            .otherwise(expr("regexp_extract_all(w, '(?s).', 0)")),
+          array(lit("</w>"))).as("s")))
+      val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
+      var exhausted = false // a best pair under freq 2 ends training early
+      for (rank <- 1 to numMerges if !exhausted) {
+        val best = syms
+          // a fully-merged word is ONE symbol — no pairs, and an unguarded
+          // sequence(1, 0) would DESCEND and index out of bounds
+          .filter(size(col("s")) >= 2)
+          .select(col("cnt"), explode(expr(
+            "transform(sequence(1, size(s) - 1), " +
+              "i -> struct(element_at(s, i) AS a, element_at(s, i + 1) AS b))")).as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum("cnt").as("f"))
+          .orderBy(desc("f"), col("a"), col("b"))
+          .limit(1).collect()
+        if (best.nonEmpty && best(0).getLong(2) >= 2) {
+          val (a, b, f) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merges += ((rank, a, b, a + b, f))
+          val next = syms.withColumn("s", mergePass(col("s"), a, b))
+          syms = if (rank % 8 == 0) m.checkpoint(next) else next
+        } else exhausted = true
+      }
+      import spark.implicits._
+      merges.toSeq.toDF("rank", "left", "right", "merged", "freq")
     }
-    import spark.implicits._
-    merges.toSeq.toDF("rank", "left", "right", "merged", "freq")
   }
 
   /** The oracle-checked gate for [[bpeMerges]]: an INDEPENDENT in-memory
@@ -2456,29 +2434,26 @@ object TextAnalysis {
     */
   def containmentJoin(spark: SparkSession, dir: String, k: Int = 12,
       tMilli: Int = 800): DataFrame = {
-    val (docsArr, cand) = containmentCandidates(spark, dir, k, tMilli)
-    // Verify arrays come STRAIGHT from the cached per-doc array frame —
-    // r17 opt: the previous form rebuilt them from the exploded postings
-    // with sort_array(collect_list(...)), a full-postings aggregate the
-    // plan then executed TWICE (once per join side, ~0.4 s each at sf0.1)
-    // — when the array is what the shingler produced in the first place
-    // (array_intersect is set-semantics, so the sort was never needed).
-    val out = cand
-      .join(docsArr.select(col("doc_id").as("a_id"), col("arr").as("a_arr")), "a_id")
-      .join(docsArr.select(col("doc_id").as("b_id"), col("arr").as("b_arr")), "b_id")
-      .select(col("a_id"), col("b_id"), col("size_a").cast("bigint").as("size_a"),
-        size(array_intersect(col("a_arr"), col("b_arr"))).cast("bigint").as("n_common"))
-      .filter(expr(s"1000 * n_common div size_a >= $tMilli"))
-      .withColumn("containment_milli", expr("1000 * n_common div size_a"))
-    Dedup.materializeAndRelease(Seq(docsArr), out)
+    Materialize { m =>
+      val (docsArr, cand)   = containmentCandidates(m, spark, dir, k, tMilli)
+      // Verify arrays come STRAIGHT from the cached per-doc array frame —
+      // r17 opt: the previous form rebuilt them from the exploded postings
+      // with sort_array(collect_list(...)), a full-postings aggregate the
+      // plan then executed TWICE (once per join side, ~0.4 s each at sf0.1)
+      // — when the array is what the shingler produced in the first place
+      // (array_intersect is set-semantics, so the sort was never needed).
+      cand
+        .join(docsArr.select(col("doc_id").as("a_id"), col("arr").as("a_arr")), "a_id")
+        .join(docsArr.select(col("doc_id").as("b_id"), col("arr").as("b_arr")), "b_id")
+        .select(col("a_id"), col("b_id"), col("size_a").cast("bigint").as("size_a"),
+          size(array_intersect(col("a_arr"), col("b_arr"))).cast("bigint").as("n_common"))
+        .filter(expr(s"1000 * n_common div size_a >= $tMilli"))
+        .withColumn("containment_milli", expr("1000 * n_common div size_a"))
+    }
   }
 
-  /** The candidate stage of [[containmentJoin]], exposed so the scale
-    * probes can pin CANDIDATE-count growth (the filter's whole point)
-    * directly rather than inferring it from wall/shuffle exponents.
-    * Returns (the cached per-doc array frame (doc_id, arr, m), candidate
-    * pairs); the caller owns releasing the cache (containmentJoin does so
-    * via materializeAndRelease).
+  /** The candidate stage of [[containmentJoin]]: (the per-doc array frame
+    * (doc_id, arr, m), filled in `mat`, candidate pairs).
     *
     * r17 opt (plan read in the SQL tab): the cache now holds ONE array row
     * per doc instead of the exploded postings — the exploded relation is
@@ -2488,8 +2463,8 @@ object TextAnalysis {
     * window, and the b-side size table is a projection instead of a
     * full-postings re-aggregation.
     */
-  private[graft] def containmentCandidates(spark: SparkSession, dir: String,
-      k: Int = 12, tMilli: Int = 800): (DataFrame, DataFrame) = {
+  private def containmentCandidates(mat: Materialize, spark: SparkSession, dir: String,
+      k: Int, tMilli: Int): (DataFrame, DataFrame) = {
     require(tMilli >= 1 && tMilli <= 1000, s"tMilli must be in [1, 1000], got $tMilli")
     graft.functions.GraftFunctions.register(spark)
     // shingles as 60-bit portable hashes, not strings: the candidate
@@ -2500,13 +2475,11 @@ object TextAnalysis {
     // the two poly hashes over the text's code points in ONE codegen pass
     // — no substring allocations, no interpreted HOF lambda; bit-identical
     // to the transform(substring)->h60 form (ExpressionsSpec).
-    val docsArr = docs(spark, dir)
+    val docsArr = mat.fill(docs(spark, dir) // eager fill before AQE fans out the consumers
       .filter(length(col("text")) >= k)
       .select(col("doc_id"),
         array_distinct(expr(s"graft_shingle_hash60(text, $k)")).as("arr"))
-      .withColumn("m", size(col("arr")).cast("bigint"))
-      .cache()
-    docsArr.count() // eager fill before AQE fans out the consumers
+      .withColumn("m", size(col("arr")).cast("bigint")))
     val shC = docsArr.select(col("doc_id"), col("m"), explode(col("arr")).as("s"))
     val df = shC.groupBy("s").agg(count(lit(1)).as("dfreq"))
     // rank each doc's shingles in the (df, shingle) total order; keep the
@@ -2634,63 +2607,61 @@ object TextAnalysis {
       s"maxDfPermille must be in [1, 1000], got $maxDfPermille")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     graft.functions.GraftFunctions.register(spark)
-    // Lean selection: the detector drops positions, so the per-window fold
-    // is a plain long MIN (no per-step struct allocation, no (pos, h)
-    // dedup pass) — the distinct h set per doc is IDENTICAL to
-    // [[winnowSelected]]'s (the window's min hash value does not depend on
-    // which position carries it; WinnowProbe asserts a zero symmetric
-    // difference at sf0.1), and the whole selection is two native codegen
-    // expressions (zero substring allocations, no interpreted HOF lambdas)
-    // — warm e2e 10.8 → ~4 s at sf0.1. The summary query keeps the full
-    // struct selection its density/checksum need.
-    val post = docs(spark, dir)
-      .filter(length(col("text")) >= k + w - 1)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        s"graft_window_min(graft_shingle_poly(text, $k, 31, " +
-          s"${graft.functions.Portable.P1}L), $w)"))).as("h"))
-      .cache()
-    post.count() // eager fill: df table, doc count, and the keep filter all read it
-    val df = post.groupBy("h").agg(count(lit(1)).as("dfreq"))
-    val nDocs = post.agg(countDistinct("doc_id").as("nd"))
-    val keep = post.join(df, "h")
-      .crossJoin(broadcast(nDocs))
-      .filter(col("dfreq") * 1000 <= col("nd") * maxDfPermille)
-      .select("doc_id", "h", "dfreq")
-    val cnt = keep.groupBy("doc_id").agg(count(lit(1)).as("c"))
-    // HOT-HASH SKEW (r14 deep-read): the df cap bounds a hash's postings
-    // by a FRACTION of the corpus (maxDfPermille·n/1000), so a hash at
-    // the cap still generates its quadratic pair stream on the single
-    // reduce task owning `h` — the disease the round cured in the LSH
-    // bucket joins, same cure here: split each hash's postings into
-    // s = ⌈dfreq/cap⌉ sub-blocks and join on the block-exchange keys;
-    // every pair meets in exactly one (bs, bo) cell (the property-tested
-    // blocked-self-join lemma), hot hashes spread over s² keys, and
-    // light hashes (s = 1, every fixture hash under the default cap)
-    // degenerate to the plain equi-join. The cap filter drops whole
-    // hashes, never individual postings, so `dfreq` IS the kept
-    // per-hash population and seeds the block count directly.
-    val blocked = keep
-      .withColumn("s", expr(s"(dfreq + ${blockCap - 1}L) div ${blockCap}L"))
-      .withColumn("bs", pmod(hash(col("doc_id")).cast("bigint"), col("s")))
-      .withColumn("bo", explode(expr("sequence(0L, s - 1L)")))
-      .select("doc_id", "h", "bs", "bo")
-      .cache()
-    blocked.count() // one subtree for both self-join sides
-    val out = blocked.as("a").join(blocked.as("b"),
-        col("a.h") === col("b.h") && col("a.bs") === col("b.bo") &&
-          col("a.bo") === col("b.bs") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      // per-doc count joins are equi-joins on the pair's own keys — the
-      // counts table is corpus-sized, so it is NOT broadcast (AQE decides)
-      .join(cnt.select(col("doc_id").as("a_id"), col("c").as("ca")), "a_id")
-      .join(cnt.select(col("doc_id").as("b_id"), col("c").as("cb")), "b_id")
-      .filter(least(col("ca"), col("cb")) >= minCount)
-      .withColumn("shared_milli", expr("1000 * n_shared div least(ca, cb)"))
-      .filter(col("shared_milli") >= minSharedMilli)
-      .select(col("a_id"), col("b_id"), col("n_shared").cast("bigint").as("n_shared"),
-        col("shared_milli").cast("bigint").as("shared_milli"))
-    Dedup.materializeAndRelease(Seq(post, blocked), out)
+    Materialize { m =>
+      // Lean selection: the detector drops positions, so the per-window fold
+      // is a plain long MIN (no per-step struct allocation, no (pos, h)
+      // dedup pass) — the distinct h set per doc is IDENTICAL to
+      // [[winnowSelected]]'s (the window's min hash value does not depend on
+      // which position carries it; WinnowProbe asserts a zero symmetric
+      // difference at sf0.1), and the whole selection is two native codegen
+      // expressions (zero substring allocations, no interpreted HOF lambdas)
+      // — warm e2e 10.8 → ~4 s at sf0.1. The summary query keeps the full
+      // struct selection its density/checksum need.
+      // eager fill: df table, doc count, and the keep filter all read it
+      val post = m.fill(docs(spark, dir)
+        .filter(length(col("text")) >= k + w - 1)
+        .select(col("doc_id"), explode(array_distinct(expr(
+          s"graft_window_min(graft_shingle_poly(text, $k, 31, " +
+            s"${graft.functions.Portable.P1}L), $w)"))).as("h")))
+      val df = post.groupBy("h").agg(count(lit(1)).as("dfreq"))
+      val nDocs = post.agg(countDistinct("doc_id").as("nd"))
+      val keep = post.join(df, "h")
+        .crossJoin(broadcast(nDocs))
+        .filter(col("dfreq") * 1000 <= col("nd") * maxDfPermille)
+        .select("doc_id", "h", "dfreq")
+      val cnt = keep.groupBy("doc_id").agg(count(lit(1)).as("c"))
+      // HOT-HASH SKEW (r14 deep-read): the df cap bounds a hash's postings
+      // by a FRACTION of the corpus (maxDfPermille·n/1000), so a hash at
+      // the cap still generates its quadratic pair stream on the single
+      // reduce task owning `h` — the disease the round cured in the LSH
+      // bucket joins, same cure here: split each hash's postings into
+      // s = ⌈dfreq/cap⌉ sub-blocks and join on the block-exchange keys;
+      // every pair meets in exactly one (bs, bo) cell (the property-tested
+      // blocked-self-join lemma), hot hashes spread over s² keys, and
+      // light hashes (s = 1, every fixture hash under the default cap)
+      // degenerate to the plain equi-join. The cap filter drops whole
+      // hashes, never individual postings, so `dfreq` IS the kept
+      // per-hash population and seeds the block count directly.
+      val blocked = m.fill(keep // one subtree for both self-join sides
+        .withColumn("s", expr(s"(dfreq + ${blockCap - 1}L) div ${blockCap}L"))
+        .withColumn("bs", pmod(hash(col("doc_id")).cast("bigint"), col("s")))
+        .withColumn("bo", explode(expr("sequence(0L, s - 1L)")))
+        .select("doc_id", "h", "bs", "bo"))
+      blocked.as("a").join(blocked.as("b"),
+          col("a.h") === col("b.h") && col("a.bs") === col("b.bo") &&
+            col("a.bo") === col("b.bs") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+        .agg(count(lit(1)).as("n_shared"))
+        // per-doc count joins are equi-joins on the pair's own keys — the
+        // counts table is corpus-sized, so it is NOT broadcast (AQE decides)
+        .join(cnt.select(col("doc_id").as("a_id"), col("c").as("ca")), "a_id")
+        .join(cnt.select(col("doc_id").as("b_id"), col("c").as("cb")), "b_id")
+        .filter(least(col("ca"), col("cb")) >= minCount)
+        .withColumn("shared_milli", expr("1000 * n_shared div least(ca, cb)"))
+        .filter(col("shared_milli") >= minSharedMilli)
+        .select(col("a_id"), col("b_id"), col("n_shared").cast("bigint").as("n_shared"),
+          col("shared_milli").cast("bigint").as("shared_milli"))
+    }
   }
 
   /** PER-SOURCE CALIBRATED QUALITY FILTER (round-10 continuation) — keep
@@ -2717,25 +2688,25 @@ object TextAnalysis {
   def qualityCalibrated(spark: SparkSession, dir: String, keepMilli: Int = 300): DataFrame = {
     require(keepMilli >= 1 && keepMilli <= 1000,
       s"keepMilli must be in [1, 1000], got $keepMilli")
-    val x = lmCrossEntropy(spark, dir)
-      .join(docs(spark, dir).select("doc_id", "source"), "doc_id")
-      .withColumn("xent_milli", expr("xent_micronats div 1000"))
-      .cache()
-    x.count() // eager fill before the histogram + assignment consumers
-    val n = x.groupBy("source").agg(count(lit(1)).as("n"))
-    val byV = org.apache.spark.sql.expressions.Window
-      .partitionBy("source").orderBy(col("xent_milli").asc)
-    val thr = x.groupBy("source", "xent_milli").agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum("c").over(
-        byV.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .join(n, "source")
-      .filter(col("cum") * 1000 >= col("n") * keepMilli)
-      .groupBy("source").agg(min("xent_milli").as("thr_milli"))
-    val out = x.join(broadcast(thr), "source")
-      .select(col("doc_id"), col("source"), col("xent_micronats"),
-        col("xent_milli"), col("thr_milli"),
-        (col("xent_milli") <= col("thr_milli")).as("kept"))
-    Dedup.materializeAndRelease(Seq(x), out)
+    Materialize { m =>
+      // eager fill before the histogram + assignment consumers
+      val x = m.fill(lmCrossEntropy(spark, dir)
+        .join(docs(spark, dir).select("doc_id", "source"), "doc_id")
+        .withColumn("xent_milli", expr("xent_micronats div 1000")))
+      val n = x.groupBy("source").agg(count(lit(1)).as("n"))
+      val byV = org.apache.spark.sql.expressions.Window
+        .partitionBy("source").orderBy(col("xent_milli").asc)
+      val thr = x.groupBy("source", "xent_milli").agg(count(lit(1)).as("c"))
+        .withColumn("cum", sum("c").over(
+          byV.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
+        .join(n, "source")
+        .filter(col("cum") * 1000 >= col("n") * keepMilli)
+        .groupBy("source").agg(min("xent_milli").as("thr_milli"))
+      x.join(broadcast(thr), "source")
+        .select(col("doc_id"), col("source"), col("xent_micronats"),
+          col("xent_milli"), col("thr_milli"),
+          (col("xent_milli") <= col("thr_milli")).as("kept"))
+    }
   }
 
   /** DISTINCT-N DIVERSITY per source (round-10 continuation) — the

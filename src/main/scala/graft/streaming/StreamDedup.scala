@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** STREAMING incremental near-dup dedup — the real-time ingest shape of
   * [[graft.operators.Dedup.incrementalNearDups]]: a stream of new
@@ -34,12 +34,16 @@ object StreamDedup {
     * failure the same batchId can be re-delivered with the same pairs, so
     * a non-idempotent sink would double-count — sinks must dedup or
     * idempotify by batchId (the standard foreachBatch contract, e.g.
-    * overwrite-by-batchId partitions or an idempotent upsert).
+    * overwrite-by-batchId partitions or an idempotent upsert). The pairs
+    * frame is valid only during the `sink` call: the batch's checkpoint is
+    * released when it returns.
     */
   def start(newDocs: DataFrame, corpusArrays: DataFrame, corpusBands: DataFrame,
       threshold: Double, checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
     VersionedStore.start(newDocs, checkpointDir) { (batch, batchId) =>
-      sink(Dedup.incrementalNearDupsFrom(batch, corpusArrays, corpusBands, threshold), batchId)
+      Materialize.releasing { _ =>
+        sink(Dedup.incrementalNearDupsFrom(batch, corpusArrays, corpusBands, threshold), batchId)
+      }
     }
 }

@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.operators.Materialize
 import graft.sources.ParquetSource
 import graft.{Bench, SessionFactory, SparkEntry}
 
@@ -30,15 +31,17 @@ import graft.{Bench, SessionFactory, SparkEntry}
   * runMain graft.tools.Probe scale   [--k=<n>] row ...
   * }}}
   *
-  *   - `profile`: wall, jobs, stages, tasks, task-s, GC, shuffle read and
+  *   - `profile`: wall, jobs, stages, tasks, task-ms, GC, shuffle read and
   *     write (KB), input and spill per row (no rows = the whole catalog). `--stages` adds one line
   *     per stage of run 2; `--show=n` prints the first n result rows.
   *   - `ab`: one A/B leg (bench/PROTOCOL.md) — a host calibration stamp,
   *     then wall and `ratio_mt` = wall / all-cores calibration per row.
-  *   - `plan`: the formatted physical plan per row.
+  *   - `plan`: the formatted physical plan per row, built under
+  *     `Materialize.inspect`, so a row that materializes its result shows
+  *     the plan behind it.
   *   - `margins`: [[GateMargins]] over the given dirs (default: the SF dir).
   *   - `scale`: runs each row on the dir and on a k× (default 8)
-  *     replication of it ([[replicate]]) and prints wall, task-s and
+  *     replication of it ([[replicate]]) and prints wall, task-ms and
   *     shuffle-write growth exponents `log(x_k / x_1) / log(k)`; ≈ 1 is
   *     linear.
   *
@@ -171,14 +174,14 @@ object Probe {
   def profile(spark: SparkSession, dir: String, rows: Seq[String],
       stages: Boolean = false, show: Int = 0): Seq[Timing] = withMeter(spark) { meter =>
     println(f"${"query"}%-36s ${"wall_s"}%8s ${"w2_s"}%8s ${"jobs"}%5s ${"stg"}%5s " +
-      f"${"tasks"}%6s ${"taskS"}%8s ${"gcS"}%6s ${"shufRK"}%8s ${"shufWK"}%8s ${"inMB"}%7s " +
+      f"${"tasks"}%6s ${"taskMs"}%8s ${"gcS"}%6s ${"shufRK"}%8s ${"shufWK"}%8s ${"inMB"}%7s " +
       f"${"spillMB"}%8s")
     rows.map { row =>
       warm(spark, row, dir)
       val t = bestOf2(spark, meter, row, dir)
       val c = t.counters
       println(f"$row%-36s ${t.wallS}%8.3f ${t.run2S}%8.3f ${c.jobs}%5d ${c.stages}%5d " +
-        f"${c.tasks}%6d ${c.taskS}%8.2f ${c.gcMs / 1e3}%6.2f " +
+        f"${c.tasks}%6d ${c.taskMs}%8d ${c.gcMs / 1e3}%6.2f " +
         f"${c.shuffleReadBytes / 1000}%8d ${c.shuffleWriteBytes / 1000}%8d ${c.inputBytes / 1e6}%7.1f " +
         f"${c.spillBytes / 1e6}%8.1f")
       if (stages) meter.stageLog.foreach(println)
@@ -210,7 +213,8 @@ object Probe {
   def plan(spark: SparkSession, dir: String, rows: Seq[String]): Unit =
     rows.foreach { row =>
       println(s"\n########## $row ##########")
-      println(SparkEntry.queries(row)(spark, dir).queryExecution.explainString(FormattedMode))
+      val df = Materialize.inspect(SparkEntry.queries(row)(spark, dir))
+      println(df.queryExecution.explainString(FormattedMode))
     }
 
   /** Writes `k` disjoint copies of every fixture table in `src` to `out`.
@@ -258,8 +262,8 @@ object Probe {
     try {
       replicate(spark, dir, k, dirK.getPath)
       withMeter(spark) { meter =>
-        println(f"${"query"}%-36s ${"wall1"}%8s ${"wallK"}%8s ${"expW"}%6s ${"taskS1"}%8s " +
-          f"${"taskSK"}%8s ${"expT"}%6s ${"shuf1MB"}%8s ${"shufKMB"}%8s ${"expS"}%6s")
+        println(f"${"query"}%-36s ${"wall1"}%8s ${"wallK"}%8s ${"expW"}%6s ${"taskMs1"}%8s " +
+          f"${"taskMsK"}%8s ${"expT"}%6s ${"shuf1MB"}%8s ${"shufKMB"}%8s ${"expS"}%6s")
         rows.map { row =>
           warm(spark, row, dir)
           val (t1, tk) = (bestOf2(spark, meter, row, dir), bestOf2(spark, meter, row, dirK.getPath))
@@ -268,7 +272,7 @@ object Probe {
           val g = Growth(row, exp(t1.wallS, tk.wallS),
             exp(t1.counters.taskS, tk.counters.taskS), exp(s1, sk))
           println(f"$row%-36s ${t1.wallS}%8.3f ${tk.wallS}%8.3f ${g.wall}%6.2f " +
-            f"${t1.counters.taskS}%8.2f ${tk.counters.taskS}%8.2f ${g.taskS}%6.2f " +
+            f"${t1.counters.taskMs}%8d ${tk.counters.taskMs}%8d ${g.taskS}%6.2f " +
             f"${s1 / 1e6}%8.2f ${sk / 1e6}%8.2f ${g.shuffleWrite}%6.2f")
           g
         }

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
 import org.apache.hadoop.fs.FileStatus
-import org.apache.spark.SparkException
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.errors.QueryExecutionErrors
 import org.apache.spark.sql.internal.SessionStateHelper
 import org.apache.spark.sql.types.StructType
 
@@ -28,14 +31,16 @@ object FooterBridge {
       inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
       nanosAsLong = conf.legacyParquetNanosAsLong,
       respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
-    val footers =
-      try ParquetFileFormat.readParquetFootersInParallel(
-        SessionStateHelper.getHadoopConf(spark), Seq(file), conf.ignoreCorruptFiles)
+    // read on the calling thread, as `readParquetFootersInParallel` reads
+    // each file, with its error handling: the schema needs no row groups
+    val footer =
+      try Some(new Footer(file.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(file, SessionStateHelper.getHadoopConf(spark)), SKIP_ROW_GROUPS)))
       catch {
-        // the pool's "Exception thrown in awaitResult" wrapper hides the
-        // footer error, which names the file
-        case e: SparkException if e.getCause.isInstanceOf[SparkException] => throw e.getCause
+        case e: RuntimeException =>
+          if (conf.ignoreCorruptFiles) None
+          else throw QueryExecutionErrors.cannotReadFooterForFileError(file.getPath, e)
       }
-    footers.headOption.map(ParquetFileFormat.readSchemaFromFooter(_, converter))
+    footer.map(ParquetFileFormat.readSchemaFromFooter(_, converter))
   }
 }

@@ -312,7 +312,7 @@ class GraphSpec extends AnyFunSuite {
     val dir = SparkSpec.testDataDir
     // the cores at gate 0 run the shuffle regime, the catalog entries the array one
     val runs = Seq[(String, () => DataFrame)](
-      "lpa shuffle" -> (() => Graph.lpaCore(spark, Graph.tradePairs(spark, dir), 3, Nil, 0L)),
+      "lpa shuffle" -> (() => Graph.lpaCore(spark, Graph.tradePairs(spark, dir), 3, 0L)),
       "reach shuffle" -> (() => Graph.reachCore(spark, Graph.tradePairs(spark, dir), seedC1, 3, 0L)),
       "lpaCommunities" -> (() => Graph.lpaCommunities(spark, dir)),
       "reachability" -> (() => Graph.reachability(spark, dir)))

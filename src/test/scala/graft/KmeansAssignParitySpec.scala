@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (d, j) tie order, same trunc(Σq/n) updates — or the scale path would
   * silently change the oracle-pinned clustering. Also pins:
   *   - the automatic switchover past LiteralAssignMaxK;
-  *   - `forPlanInspection` building the plan with ZERO Spark jobs (the
+  *   - `Materialize.inspect` building the plan with ZERO Spark jobs (the
   *     PlanSpec hint walker must not execute the clustering).
   */
 class KmeansAssignParitySpec extends AnyFunSuite {
@@ -69,7 +69,7 @@ class KmeansAssignParitySpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val df = graft.operators.Dedup.semDeDupFrom(base, forPlanInspection = true)
+      val df = graft.operators.Materialize.inspect(graft.operators.Dedup.semDeDupFrom(base))
       df.queryExecution.optimizedPlan // force analysis + optimization
       df.queryExecution.executedPlan.toString
       Thread.sleep(500) // listener bus is async; jobs (if any) post within ms

@@ -196,7 +196,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("LSH embedding dedup plan has no nested-loop product either") {
     val vecs = spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
-    val plan = graft.operators.Dedup.embeddingNearDupsLsh(vecs, 0.9, forPlanInspection = true)
+    val plan = graft.operators.Materialize.inspect(graft.operators.Dedup.embeddingNearDupsLsh(vecs, 0.9))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
     // r14: the bucket self-join must carry the skew blocks in its join key
@@ -227,7 +227,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("line dedup: boiler mark join is size-gated (no unconditional broadcast), equi-keyed") {
-    val df = graft.operators.TextAnalysis.lineDedup(spark, dir, forPlanInspection = true)
+    val df = graft.operators.Materialize.inspect(graft.operators.TextAnalysis.lineDedup(spark, dir))
     // r13 (VERDICT r12 #3): the boilerplate set grows with corpus
     // duplication, so no broadcast HINT may force it driver-side — any
     // broadcast must be AQE's runtime size call. The optimizer folds
@@ -254,33 +254,26 @@ class PlanSpec extends AnyFunSuite {
     // path (crowded prune at candidatesFrom), the sig-filtered n-gram
     // path (second crowded prune), the incremental band join, and the
     // embedding-increment bucket join.
-    val frames = Seq(
-      "dedup_minhash" -> graft.operators.Dedup.minhashNearDups(spark, dir,
-        forPlanInspection = true),
-      "dedup_ngram" -> graft.operators.Dedup.ngramNearDups(spark, dir,
-        forPlanInspection = true),
-      "dedup_jaccard_exact" -> graft.operators.Dedup.jaccardPrefixNearDups(spark, dir,
-        forPlanInspection = true),
-      "dedup_incremental" -> graft.operators.Dedup.incrementalNearDups(spark, dir,
-        forPlanInspection = true),
+    val frames = graft.operators.Materialize.inspect(Seq(
+      "dedup_minhash" -> graft.operators.Dedup.minhashNearDups(spark, dir),
+      "dedup_ngram" -> graft.operators.Dedup.ngramNearDups(spark, dir),
+      "dedup_jaccard_exact" -> graft.operators.Dedup.jaccardPrefixNearDups(spark, dir),
+      "dedup_incremental" -> graft.operators.Dedup.incrementalNearDups(spark, dir),
       "dedup_embedding_lsh" -> graft.operators.Dedup.embeddingNearDupsLsh(
         spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding")),
-        forPlanInspection = true),
+          .select(col("vec_id"), col("embedding"))),
       "dedup_embedding_incremental" -> {
         val base = spark.read.parquet(s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding"))
         graft.operators.Dedup.embeddingIncrementalFrom(base,
-          base.limit(5).withColumn("vec_id", col("vec_id") + 100000L),
-          forPlanInspection = true)
+          base.limit(5).withColumn("vec_id", col("vec_id") + 100000L))
       },
       // r14 addition: the SemDeDup within-cluster pair join — cluster
       // sizes grow with the corpus at fixed k, so neither self-join side
       // nor the cluster-count frame may be hint-forced
       "dedup_semdedup" -> graft.operators.Dedup.semDeDupFrom(
         spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding")),
-        forPlanInspection = true))
+          .select(col("vec_id"), col("embedding")))))
     for ((name, df) <- frames) {
       val hinted = df.queryExecution.optimizedPlan.collect {
         case j: Join if j.hint.leftHint.nonEmpty || j.hint.rightHint.nonEmpty => j.hint
@@ -295,8 +288,7 @@ class PlanSpec extends AnyFunSuite {
   test("r13: margin-mining IVF path is all equi-joins — no nested-loop, no cartesian, no hints") {
     // the production mining path must never inherit the exact gate's
     // query-side broadcast cross join (VERDICT r12 #6)
-    val df = graft.operators.Similarity.marginMiningIvf(spark, dir,
-      forPlanInspection = true)
+    val df = graft.operators.Materialize.inspect(graft.operators.Similarity.marginMiningIvf(spark, dir))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"IVF margin mining degraded to a non-equi join:\n$plan")
@@ -429,8 +421,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("r13: hashed line dedup shuffles key on the segment fingerprint, never segment text") {
-    val df = graft.operators.TextAnalysis.lineDedupHashed(spark, dir,
-      forPlanInspection = true)
+    val df = graft.operators.Materialize.inspect(graft.operators.TextAnalysis.lineDedupHashed(spark, dir))
     val plan = df.queryExecution.executedPlan.toString
     // the frequency count and the mark join must both exchange on gh;
     // segment strings may only cross the final reassembly exchange
@@ -460,8 +451,7 @@ class PlanSpec extends AnyFunSuite {
     // boundary search runs on the chunked value histogram; the only
     // windows are per-cb local cums — a SinglePartition window would mean
     // the whole xent distribution sorts on one task
-    val plan = graft.operators.TextAnalysis
-      .pipelinePplBuckets(spark, dir, forPlanInspection = true)
+    val plan = graft.operators.Materialize.inspect(graft.operators.TextAnalysis.pipelinePplBuckets(spark, dir))
       .queryExecution.executedPlan.toString
     val windows = plan.split("\n").filter(_.contains("Window"))
     assert(!windows.exists(_.contains("SinglePartition")),
@@ -471,8 +461,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("prefix-filter exact Jaccard join: fingerprint-keyed equi-joins, no nested loop") {
-    val plan = graft.operators.Dedup.jaccardPrefixNearDups(spark, dir, 3, 5,
-      forPlanInspection = true).queryExecution.executedPlan.toString
+    val plan = graft.operators.Materialize.inspect(graft.operators.Dedup.jaccardPrefixNearDups(spark, dir, 3, 5))
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"prefix filtering must candidate-join on the prefix fingerprint:\n$plan")
     // every exchange keys on the 60-bit gh fingerprint or doc ids — the
@@ -545,7 +535,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("incremental dedup: the new-increment side broadcasts against the corpus") {
-    val plan = graft.operators.Dedup.incrementalNearDups(spark, dir, 0.6, forPlanInspection = true)
+    val plan = graft.operators.Materialize.inspect(graft.operators.Dedup.incrementalNearDups(spark, dir, 0.6))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"new-side bands must broadcast:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
@@ -554,8 +544,7 @@ class PlanSpec extends AnyFunSuite {
   test("embedding incremental dedup: new-side buckets broadcast, no nested loop") {
     val base = spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
     val inc = base.filter(col("vec_id") < 20)
-    val plan = graft.operators.Dedup
-      .embeddingIncrementalFrom(base, inc, 0.7, forPlanInspection = true)
+    val plan = graft.operators.Materialize.inspect(graft.operators.Dedup.embeddingIncrementalFrom(base, inc, 0.7))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"new-side buckets must broadcast:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
@@ -615,16 +604,16 @@ class PlanSpec extends AnyFunSuite {
     // row_number window partitions.
     // lsh/ivf/pq materialize their results (cache-release discipline), so
     // the executed plan of the catalog entry is a Scan ExistingRDD — use
-    // the forPlanInspection variants to see the real plan shape.
+    // Materialize.inspect to see the real plan shape.
     val plans = Map(
       "ann_topk" -> executedPlan("ann_topk"),
-      "ann_lsh" -> graft.operators.Similarity.lshTopK(spark, dir, forPlanInspection = true)
+      "ann_lsh" -> graft.operators.Materialize.inspect(graft.operators.Similarity.lshTopK(spark, dir))
         .queryExecution.executedPlan.toString,
-      "ann_ivf" -> graft.operators.Similarity.ivfTopK(spark, dir, forPlanInspection = true)
+      "ann_ivf" -> graft.operators.Materialize.inspect(graft.operators.Similarity.ivfTopK(spark, dir))
         .queryExecution.executedPlan.toString,
-      "ann_pq" -> graft.operators.Similarity.pqTopK(spark, dir, forPlanInspection = true)
+      "ann_pq" -> graft.operators.Materialize.inspect(graft.operators.Similarity.pqTopK(spark, dir))
         .queryExecution.executedPlan.toString,
-      "ann_ivfpq" -> graft.operators.Similarity.ivfPqTopK(spark, dir, forPlanInspection = true)
+      "ann_ivfpq" -> graft.operators.Materialize.inspect(graft.operators.Similarity.ivfPqTopK(spark, dir))
         .queryExecution.executedPlan.toString)
     for ((q, plan) <- plans) {
       assert(!plan.contains("Window "), s"$q fell back to a window top-k:\n$plan")
@@ -749,8 +738,7 @@ class PlanSpec extends AnyFunSuite {
     // text_domain_mix_scale: the one rank window is scoped to the boundary
     // bucket — a Filter on the bucket expression sits below it (the
     // catalog entry materializes, so inspect the unmaterialized form)
-    val mix = graft.operators.TextAnalysis
-      .domainMixScale(spark, dir, forPlanInspection = true)
+    val mix = graft.operators.Materialize.inspect(graft.operators.TextAnalysis.domainMixScale(spark, dir))
       .queryExecution.executedPlan.toString
     val mixLines = mix.linesIterator.toVector
     val winIdx = mixLines.indexWhere(_.contains("Window"))

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Four rules that no compiler checks: the main tree reads parquet only
+/** Five rules that no compiler checks: the main tree reads parquet only
   * through `graft.sources.ParquetSource` (whose single-file reads skip
   * Spark's schema-inference job), the main and test trees build sessions
   * only through [[SessionFactory]] (the engine's one session
@@ -15,7 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.streaming.VersionedStore.start` (one checkpoint and output-mode
   * setup for every micro-batch sink), and the main tree uses no
   * DataSketches HLL, theta or KLL class (Spark's built-in sketch functions
-  * own those; a second copy would drift from them).
+  * own those; a second copy would drift from them), and the main tree
+  * caches, persists, unpersists and checkpoints only through
+  * `graft.operators.Materialize` (the one scope that releases what it
+  * holds, on an exception too).
   */
 class SourceHygieneSpec extends AnyFunSuite {
   import SourceHygieneSpec._
@@ -32,7 +35,12 @@ class SourceHygieneSpec extends AnyFunSuite {
   private def violations(rule: Rule, under: Path = root): Seq[String] =
     sources(under).filterNot(p => Set(rule.home, "graft/SourceHygieneSpec.scala")(
       under.relativize(p).toString)).flatMap { p =>
-      offenders(Files.readString(p), rule).map(line => s"${under.relativize(p)}:$line")
+      val file = under.relativize(p).toString
+      val src = Files.readString(p)
+      val lines = src.split("\n", -1)
+      offenders(src, rule)
+        .filterNot(line => rule.allowed.getOrElse(file, Set.empty[String])(lines(line - 1).trim))
+        .map(line => s"$file:$line")
     }
 
   test("the scanner sees a call in code and ignores one in a comment") {
@@ -67,18 +75,44 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("no DataSketches HLL, theta or KLL class in the main tree") {
     assert(violations(SketchClass).isEmpty, violations(SketchClass))
   }
+
+  test("the scanner sees a planted cache, persist, unpersist or localCheckpoint call") {
+    val src = "// df.cache()\nval a = df.cache()\nval b = m.cache(df)\n" +
+      "/** x.localCheckpoint(true) */\nval c = df.localCheckpoint(true)\n" +
+      "rdd.persist(StorageLevel.MEMORY_AND_DISK)\nval d = df\n  .unpersist(false)\n"
+    assert(offenders(src, Persistence) == Seq(2, 5, 6, 8))
+  }
+
+  test("cache, persist, unpersist and localCheckpoint appear only in Materialize") {
+    assert(sources().exists(p => root.relativize(p).toString == Persistence.home))
+    // the one exception still stands where the rule names it
+    Persistence.allowed.foreach { case (file, lines) =>
+      val src = Files.readString(root.resolve(file)).split("\n").map(_.trim).toSet
+      assert(lines.subsetOf(src), s"$file no longer has ${lines -- src}")
+    }
+    assert(violations(Persistence).isEmpty, violations(Persistence))
+  }
 }
 
 object SourceHygieneSpec {
   /** A call pattern and the one file (under `src/main/scala`) allowed to
-    * make it; no file when `home` is empty. */
-  final case class Rule(pattern: String, home: String = "")
+    * make it; no file when `home` is empty. `allowed` names single lines
+    * (trimmed) that other files may keep. */
+  final case class Rule(pattern: String, home: String = "",
+      allowed: Map[String, Set[String]] = Map.empty)
 
   val ParquetRead = Rule("""\bread\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet")""",
     "graft/sources/ParquetSource.scala")
   val SessionBuild = Rule("""\bSparkSession\s*\.\s*builder\b""", "graft/SessionFactory.scala")
   val BatchQuery = Rule("""\bforeachBatch\b""", "graft/streaming/VersionedStore.scala")
   val SketchClass = Rule("""\borg\.apache\.datasketches\.(hll|theta|kll)\b""")
+  /** The one exception: the graph array regime's edge blocks are an RDD of
+    * primitive arrays, persisted in `Graph.arraySupersteps` and
+    * unpersisted in that method's `finally`. */
+  val Persistence = Rule("""\.\s*(cache\s*\(\s*\)|persist\s*\(|unpersist\s*\()|\blocalCheckpoint\b""",
+    "graft/operators/Materialize.scala",
+    Map("graft/operators/Graph.scala" ->
+      Set("}.persist(StorageLevel.MEMORY_AND_DISK)", "blocks.unpersist(false)")))
 
   /** 1-based lines where `rule` matches in `src`, comments blanked first
     * (line breaks kept, so line numbers hold).
