@@ -592,11 +592,17 @@ object Dedup {
     * Output contract is [[incrementalNearDups]]'s.
     */
   def incrementalNearDupsFrom(newDocs: DataFrame, corpusArrays: DataFrame,
-      corpusBands: DataFrame, threshold: Double = 0.6): DataFrame = {
+      corpusBands: DataFrame, threshold: Double = 0.6): DataFrame =
+    Materialize(incrementalNearDupsFrom(_, newDocs, corpusArrays, corpusBands, threshold))
+
+  /** [[incrementalNearDupsFrom]] with its checkpoint held in `m`, and its
+    * result a lazy frame over it: valid until `m` exits. */
+  private[graft] def incrementalNearDupsFrom(m: Materialize, newDocs: DataFrame,
+      corpusArrays: DataFrame, corpusBands: DataFrame, threshold: Double): DataFrame = {
     // the increment's arrays feed BOTH banding and verification; an eager
     // checkpoint computes the tokenize+shingle pipeline once per
-    // micro-batch (released by the caller's scope: StreamDedup's batch)
-    val newArrays = Materialize.checkpoint(shingleArraysOf(newDocs))
+    // micro-batch
+    val newArrays = m.checkpoint(shingleArraysOf(newDocs))
     val newB = bandedSignatures(signaturesFrom(newArrays))
       .select(col("band"), col("k1"), col("k2"), col("doc_id").as("id_new"))
     val cand = corpusBands

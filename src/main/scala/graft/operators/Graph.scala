@@ -361,8 +361,9 @@ object Graph {
     * partitioned on `src`, so a superstep's join exchanges only the state;
     * dsts outside the node set are dropped once up front (srcs outside it
     * never meet a state row), after a `byDegree` recurrence's `outdeg` has
-    * counted them. A lazy checkpoint every `checkpointEvery` supersteps
-    * cuts lineage. The caches and checkpoints are held in `m`. */
+    * counted them. A localCheckpoint every `checkpointEvery` supersteps cuts
+    * lineage and is released with the result. The caches and checkpoints
+    * are held in `m`. */
   private def shuffleSupersteps(m: Materialize, spark: SparkSession, pairs: DataFrame,
       nodes0: DataFrame, rec: Recurrence, iters: Int, checkpointEvery: Int): DataFrame = {
     val nodes = m.cache(nodes0)
@@ -374,7 +375,7 @@ object Graph {
     var state = nodes.withColumn(rec.name, rec.init)
     for (i <- 1 to iters) {
       state = rec.step(state, edges, nodes)
-      if (i % checkpointEvery == 0 && i < iters) state = m.checkpoint(state, eager = false)
+      if (i % checkpointEvery == 0 && i < iters) state = m.checkpoint(state)
     }
     state.select(col("node").cast("bigint").as("node"), col(rec.name).cast("bigint").as(rec.name))
   }

@@ -62,10 +62,9 @@ final class Materialize private () {
     df
   }
 
-  /** A local checkpoint of `df`, released on exit: eager (one job) by
-    * default, else taken by the first action that reads it. */
-  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (inspecting) df else hold(df.localCheckpoint(eager))
+  /** An eager local checkpoint of `df` (one job), released on exit. */
+  def checkpoint(df: DataFrame): DataFrame =
+    if (inspecting) df else hold(df.localCheckpoint(true))
 
   private def hold(cp: DataFrame): DataFrame = {
     cp.queryExecution.logical match {
@@ -121,14 +120,6 @@ object Materialize {
       open.set(outer)
       m.release()
     }
-  }
-
-  /** An eager local checkpoint that the innermost open scope on this thread
-    * releases, or, outside any scope, the ContextCleaner once it is
-    * unreachable: for an operator whose lazy result reads it. */
-  def checkpoint(df: DataFrame): DataFrame = open.get match {
-    case null => if (inspecting) df else df.localCheckpoint(true)
-    case m => m.checkpoint(df)
   }
 
   private def driverLocal(p: LogicalPlan): Boolean = p match {

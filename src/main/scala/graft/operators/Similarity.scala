@@ -380,10 +380,16 @@ object Similarity {
     // cosine work. Before this the gate ran both miners end to end.
     Materialize.releasing { m =>
       val e = m.cache(withNorm(embeddings(spark, dir)))
-      val scoredAll = m.fill(exactScoredScan(e, 1L << 17)) // eager fill before the fan-out (cache-before-AQE)
-      val candPairs = marginIvfCandidates(m, e, 2, TrainFraction, numCentroids, numProbes)
-      val scoredIvf = m.fill(scoredAll.join(candPairs, Seq("xi", "yi"), "left_semi"))
-      val exact = Materialize(marginFromScored(_, scoredAll, k))
+      // the exact scan is the largest cache: its own scope releases it once
+      // the IVF side's semi-join and the exact margins are filled, before
+      // the IVF margins run
+      val (exactMargins, scoredIvf) = Materialize.releasing { all =>
+        val scoredAll = all.fill(exactScoredScan(e, 1L << 17)) // eager fill before the fan-out (cache-before-AQE)
+        val candPairs = marginIvfCandidates(m, e, 2, TrainFraction, numCentroids, numProbes)
+        val scoredIvf = m.fill(scoredAll.join(candPairs, Seq("xi", "yi"), "left_semi"))
+        (m.checkpoint(marginFromScored(all, scoredAll, k)), scoredIvf)
+      }
+      val exact = exactMargins
         .select(col("x_id"), col("y_id").as("y_exact"), col("is_mutual").as("m_exact"))
       val ivf = Materialize(marginFromScored(_, scoredIvf, k))
         .select(col("x_id"), col("y_id").as("y_ivf"), col("is_mutual").as("m_ivf"))

@@ -42,8 +42,8 @@ object StreamDedup {
       threshold: Double, checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
     VersionedStore.start(newDocs, checkpointDir) { (batch, batchId) =>
-      Materialize.releasing { _ =>
-        sink(Dedup.incrementalNearDupsFrom(batch, corpusArrays, corpusBands, threshold), batchId)
+      Materialize.releasing { m =>
+        sink(Dedup.incrementalNearDupsFrom(m, batch, corpusArrays, corpusBands, threshold), batchId)
       }
     }
 }

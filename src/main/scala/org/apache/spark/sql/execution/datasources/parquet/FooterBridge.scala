@@ -1,5 +1,7 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
+import java.io.IOException
+
 import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
@@ -32,14 +34,17 @@ object FooterBridge {
       nanosAsLong = conf.legacyParquetNanosAsLong,
       respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
     // read on the calling thread, as `readParquetFootersInParallel` reads
-    // each file, with its error handling: the schema needs no row groups
+    // each file, with its error handling: the schema needs no row groups.
+    // Spark skips only a RuntimeException under ignoreCorruptFiles; an
+    // IOException (thrift garbage or EOF inside a PAR1-framed footer)
+    // fails its schema job, so here it fails the read, naming the file.
     val footer =
       try Some(new Footer(file.getPath, ParquetFooterReader.readFooter(
         HadoopInputFile.fromStatus(file, SessionStateHelper.getHadoopConf(spark)), SKIP_ROW_GROUPS)))
       catch {
-        case e: RuntimeException =>
-          if (conf.ignoreCorruptFiles) None
-          else throw QueryExecutionErrors.cannotReadFooterForFileError(file.getPath, e)
+        case _: RuntimeException if conf.ignoreCorruptFiles => None
+        case e: RuntimeException => throw QueryExecutionErrors.cannotReadFooterForFileError(file.getPath, e)
+        case e: IOException => throw QueryExecutionErrors.cannotReadFooterForFileError(file.getPath, e)
       }
     footer.map(ParquetFileFormat.readSchemaFromFooter(_, converter))
   }
